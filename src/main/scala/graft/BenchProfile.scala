@@ -25,10 +25,8 @@ object BenchProfile {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
+      .config("spark.sql.join.preferSortMergeJoin", "true")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

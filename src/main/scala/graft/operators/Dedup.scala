@@ -715,21 +715,6 @@ object Dedup {
     * Throws rather than returning a half-merged labeling if maxIter
     * rounds don't reach the fixpoint (with star contraction that
     * would take a graph of ~2^sqrt(maxIter) chained nodes). */
-  /** In-loop checkpoint mode. Adjudicated r11 (quiet window, min-of-5
-    * at 32 cores, both run orders): EAGER is faster on all four
-    * cluster queries at sf0.1 (family min 5.60 s vs 6.35 s lazy —
-    * q_copurchase_components 0.73 vs 0.97, q_minhash_cluster 1.48 vs
-    * 1.63, q_charhash_cluster 1.72 vs 1.80, q_dedup_cluster 1.67 vs
-    * 1.95), confirming the r10 driver-bench regression was real. The
-    * lazy variant's structural saving is only 2 job-submission
-    * round-trips per round (stages and shuffles are identical), which
-    * never amortizes its measured fused-probe penalty — so eager is
-    * the default at every scale; SPARK_GRAFT_CC_EAGER=false keeps the
-    * lazy branch reachable for A/B (both are result-identical,
-    * DedupSpec pins the labeling). */
-  private def ccEagerCheckpoints: Boolean =
-    sys.env.get("SPARK_GRAFT_CC_EAGER").forall(_.toBoolean)
-
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     // Canonicalize to (child, parent) with parent <= child and
@@ -776,19 +761,17 @@ object Dedup {
       val largeMins = adj.groupBy("n")
         .agg(min("nbr").as("mn"))
         .select(col("n"), least(col("n"), col("mn")).as("m"))
-      // Per-phase EAGER checkpoints (default — see ccEagerCheckpoints
-      // for the r11 adjudication): 3 jobs/round, each phase
+      // Per-phase EAGER checkpoints: 3 jobs/round, each phase
       // materialized before the next reads it twice through sym().
-      // SPARK_GRAFT_CC_EAGER=false switches to lazy checkpoints whose
-      // single fixpoint-probe action materializes both phases in one
-      // job — structurally fewer dispatches but measured slower at
-      // every tested size; kept reachable for A/B.
+      // Lazy checkpoints (one fixpoint-probe job materializing both
+      // phases) measured slower on all four cluster queries at sf0.1
+      // (family min 6.35 s vs 5.60 s eager, 32 cores).
       val afterLarge = adj.filter(col("nbr") > col("n"))
         .join(largeMins, "n")
         .select(col("nbr").as("c"), col("m").as("p"))
         .filter(col("c") =!= col("p"))
         .distinct()
-        .localCheckpoint(ccEagerCheckpoints)
+        .localCheckpoint(eager = true)
       // small-star: node n attaches its smaller neighbors and itself
       // to the minimum of its smaller neighborhood.
       val adj2 = sym(afterLarge)
@@ -799,7 +782,7 @@ object Dedup {
         .select(col("nbr").as("c"), col("m").as("p"))
         .unionByName(smallMins.select(col("n").as("c"), col("m").as("p")))
         .distinct()
-        .localCheckpoint(ccEagerCheckpoints)
+        .localCheckpoint(eager = true)
       // EXACT fixpoint test, no hash-compare: the pointer set is a
       // star forest iff (1) every child has exactly one parent and
       // (2) no parent is itself a child — and a star forest is

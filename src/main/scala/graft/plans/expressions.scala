@@ -2180,12 +2180,15 @@ object GraftFunctions {
 }
 
 /** Config-time wiring: `.config("spark.sql.extensions",
-  * "graft.plans.GraftExtensions")` injects the native functions AND
-  * the snapshot-table SQL DML grammar
-  * ([[graft.sources.GraftSqlParser]] — DELETE/UPDATE/MERGE/INSERT/
-  * ALTER/OPTIMIZE/VACUUM/RESTORE/DESCRIBE HISTORY over graft tables,
-  * everything else delegated verbatim to Spark's parser) into every
-  * session built on that context. */
+  * "graft.plans.GraftExtensions")` injects into every session built
+  * on that context the native functions, the snapshot-table SQL
+  * surface and `FROM graft.`path`` reads. Spark's own parser reads
+  * DELETE/UPDATE/MERGE/INSERT/TRUNCATE/ALTER TABLE/CREATE TABLE/SHOW
+  * TBLPROPERTIES, and [[graft.sources.GraftRelationResolution]]
+  * rewrites them into graft commands when they target a graft table;
+  * [[graft.sources.GraftSqlParser]] pre-parses only the verbs Spark
+  * lacks (OPTIMIZE/VACUUM/RESTORE/DESCRIBE HISTORY|DETAIL/SHOW
+  * CONSTRAINTS/SHALLOW CLONE) and delegates everything else verbatim. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.registrations.foreach { case (name, builder) =>
@@ -2194,9 +2197,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     }
     ext.injectParser((session, delegate) =>
       new graft.sources.GraftSqlParser(session, delegate))
-    // `FROM graft.`/path`` in plain SQL resolves to the
-    // manifest-pruned snapshot relation (incl. VERSION/TIMESTAMP AS
-    // OF) — the read-side twin of the DML parser above. Injected into
+    // Graft-targeted DML/DDL becomes graft commands, and `FROM
+    // graft.`/path`` in plain SQL resolves to the manifest-pruned
+    // snapshot relation (incl. VERSION/TIMESTAMP AS OF). Injected into
     // the HINT-resolution batch, which runs BEFORE the resolution
     // batch: Spark's builtin ResolveSQLOnFile claims `graft.`path``
     // (graft is a registered datasource name) and fails "unsupported

@@ -12743,8 +12743,8 @@ object Queries {
       CAST(sum(CAST(c_acctbal AS DECIMAL(18,6)) * 100) AS BIGINT) AS cents
     FROM final GROUP BY 1 ORDER BY 1"""))
 
-  /** The SQL DML surface ([[graft.sources.GraftSqlParser]], injected
-    * via `spark.sql.extensions`): the ENTIRE table lifecycle driven by
+  /** The SQL DML surface ([[graft.sources.GraftRelationResolution]],
+    * injected via `spark.sql.extensions`): the ENTIRE table lifecycle driven by
     * plain `spark.sql` statements — INSERT INTO an empty `graft.`…``
     * path, scoped DELETE, scoped UPDATE, whole-row-upsert MERGE from
     * a subquery (with SQL's implicit casts), metadata-only ALTER
@@ -12806,7 +12806,7 @@ object Queries {
     FROM merged GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   /** The GENERALIZED MERGE ([[graft.sources.SnapshotTable.mergeInto]]
-    * via the SQL grammar): one statement exercising every clause kind
+    * via SQL MERGE): one statement exercising every clause kind
     * — a conditional `WHEN MATCHED … UPDATE SET col = expr` (F-status
     * rows double price and flip to 'U'), a fall-through `WHEN MATCHED
     * THEN DELETE`, a conditional `WHEN NOT MATCHED … INSERT (cols)

@@ -127,23 +127,6 @@ object SnapshotTable {
     finally sc.setJobDescription(prev)
   }
 
-  /** [[labeled]] plus ADAPTIVE EXECUTION OFF for the scope: every
-    * control-plane probe ends in a bounded `collect()` over at most a
-    * few thousand rows (affected keys, touched files, validation
-    * counts), so AQE's runtime re-optimization buys nothing — but each
-    * probe action pays its `withFinalPlanUpdate` re-planning rounds
-    * and plan-update events on the driver, the single largest
-    * driver-gap frame in the lifecycle-query profiles (multi-action
-    * queries run dozens of probes). Data-path jobs (batch writes,
-    * rewrites, reads the caller composes) keep AQE untouched — the
-    * conf flips only around the probe's own action and restores on
-    * exit. Valid at any scale: the probe result size is bounded by
-    * contract (collect caps / file counts), not by table size. */
-  /** A/B escape hatch (and production knob): set
-    * SPARK_GRAFT_PROBE_AQE=true to keep AQE on inside probes. */
-  private val ProbeAqeOff: Boolean =
-    !sys.env.get("SPARK_GRAFT_PROBE_AQE").exists(_.equalsIgnoreCase("true"))
-
   /** Depth-counted SESSION-CONF LEASE: the FIRST concurrent scope for
     * a (session, key) saves the session's value and sets the
     * override; the LAST one out restores it. Plain per-scope
@@ -198,10 +181,21 @@ object SnapshotTable {
 
   private val AqeKey = "spark.sql.adaptive.enabled"
 
+  /** [[labeled]] plus ADAPTIVE EXECUTION OFF for the scope: every
+    * control-plane probe ends in a bounded `collect()` over at most a
+    * few thousand rows (affected keys, touched files, validation
+    * counts), so AQE's runtime re-optimization buys nothing — but each
+    * probe action pays its `withFinalPlanUpdate` re-planning rounds
+    * and plan-update events on the driver, the single largest
+    * driver-gap frame in the lifecycle-query profiles (multi-action
+    * queries run dozens of probes). Data-path jobs (batch writes,
+    * rewrites, reads the caller composes) keep AQE untouched — the
+    * conf flips only around the probe's own action and restores on
+    * exit. Valid at any scale: the probe result size is bounded by
+    * contract (collect caps / file counts), not by table size. */
   private[graft] def probe[T](spark: SparkSession, tag: String)
                              (body: => T): T = labeled(spark, tag) {
-    if (!ProbeAqeOff) body
-    else withSessionConf(spark, AqeKey, "false")(body)
+    withSessionConf(spark, AqeKey, "false")(body)
   }
 
   /** Internal batch writer with the Hadoop job-commit ceremony cut
@@ -4959,14 +4953,15 @@ object SnapshotTable {
   }
 
   /** One action of a generalized [[mergeInto]] clause. Expression
-    * payloads are SQL text, resolved by Spark's analyzer against the
-    * joined target/source frame — qualify column references with the
-    * aliases passed to [[mergeInto]] where both sides share a name. */
+    * payloads are Columns (`expr("t.qty + s.d")` from SQL text),
+    * resolved by Spark's analyzer against the joined target/source
+    * frame — qualify column references with the aliases passed to
+    * [[mergeInto]] where both sides share a name. */
   sealed trait MergeAction
   object MergeAction {
     /** `UPDATE SET col = expr, …` — unassigned target columns keep
       * their value. */
-    final case class Update(assigns: Seq[(String, String)]) extends MergeAction
+    final case class Update(assigns: Seq[(String, Column)]) extends MergeAction
     /** `UPDATE SET *` — every target column the source also has takes
       * the source value; the rest keep theirs. */
     case object UpdateAll extends MergeAction
@@ -4974,17 +4969,17 @@ object SnapshotTable {
     case object Delete extends MergeAction
     /** `INSERT (cols) VALUES (exprs)` — unassigned target columns
       * land NULL. */
-    final case class Insert(assigns: Seq[(String, String)]) extends MergeAction
+    final case class Insert(assigns: Seq[(String, Column)]) extends MergeAction
     /** `INSERT *` — by name; target columns the source lacks land
       * NULL. */
     case object InsertAll extends MergeAction
   }
 
-  /** `WHEN … [AND condition] THEN action`. `condition` is SQL text
+  /** `WHEN … [AND condition] THEN action`. `condition` is a Column
     * over the joined frame (aliases in scope); None = unconditional —
     * allowed only on a group's LAST clause (an earlier unconditional
     * clause would shadow the rest). */
-  final case class MergeClause(condition: Option[String],
+  final case class MergeClause(condition: Option[Column],
                                action: MergeAction)
 
   /** Generalized copy-on-write MERGE — the full public MERGE grammar
@@ -5145,7 +5140,7 @@ object SnapshotTable {
       if (!hasFiles || notMatchedBySource.isEmpty) Seq.empty[String]
       else {
         val anyCond = notMatchedBySource
-          .map(_.condition.map(expr).getOrElse(lit(true))).reduce(_ || _)
+          .map(_.condition.getOrElse(lit(true))).reduce(_ || _)
         collectFileCol(withFile(spark, dir, base).alias(targetAlias)
           .join(srcKeys, keys, "left_anti").filter(anyCond), "__file")
           .map(manifestKey(dir, _))
@@ -5180,7 +5175,7 @@ object SnapshotTable {
     val tOnly = col(TM).isNotNull && col(SM).isNull
     val sOnly = col(TM).isNull && col(SM).isNotNull
     def branchPred(b: Column, c: MergeClause): Column =
-      c.condition.map(t => b && coalesce(expr(t), lit(false))).getOrElse(b)
+      c.condition.map(t => b && coalesce(t, lit(false))).getOrElse(b)
     val branches: Seq[(Column, MergeAction)] =
       matched.map(c => (branchPred(isM, c), c.action)) ++
       notMatchedBySource.map(c => (branchPred(tOnly, c), c.action)) ++
@@ -5189,13 +5184,12 @@ object SnapshotTable {
     def tc(c: String) = col(s"$targetAlias.`$c`")
     def scl(c: String) = col(s"$sourceAlias.`$c`")
     def valueOf(a: MergeAction, c: String): Column = a match {
-      case Update(as) => as.toMap.get(c).map(expr).getOrElse(tc(c))
+      case Update(as) => as.toMap.getOrElse(c, tc(c))
       case UpdateAll =>
         if (srcCols.contains(c)) scl(c)
         else keyPair.get(c).map(scl).getOrElse(tc(c))
       case Delete => tc(c) // row dropped; branch must still consume
-      case Insert(as) => as.toMap.get(c).map(expr)
-        .getOrElse(lit(null))
+      case Insert(as) => as.toMap.getOrElse(c, lit(null))
       case InsertAll =>
         if (srcCols.contains(c)) scl(c)
         else keyPair.get(c).map(scl).getOrElse(lit(null))

@@ -48,4 +48,22 @@ object GraftSqlBridge {
                                       ): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rows, schema, isStreaming = true)
+
+  /** A CREATE TABLE's `PARTITIONED BY (cols)` or `CLUSTERED BY (cols)
+    * [SORTED BY (cols)] INTO n BUCKETS` as (partition columns,
+    * Some((bucket columns, sort columns, n))); None for any other
+    * layout. The transform extractors are `private[sql]`. */
+  def tableLayout(ts: Seq[connector.expressions.Transform]
+                 ): Option[(Seq[String], Option[(Seq[String], Seq[String], Int)])] = {
+    import connector.expressions.{BucketTransform, IdentityTransform,
+      NamedReference}
+    def names(rs: Seq[NamedReference]) = rs.map(_.fieldNames.mkString("."))
+    ts match {
+      case Seq(BucketTransform(n, cols, sorted)) =>
+        Some((Nil, Some((names(cols), names(sorted), n))))
+      case _ =>
+        val ids = ts.collect { case IdentityTransform(r) => r }
+        if (ids.size == ts.size) Some((names(ids), None)) else None
+    }
+  }
 }

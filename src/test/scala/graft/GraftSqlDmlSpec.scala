@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.parser.ParseException
 import graft.sources.{SnapshotSql, SnapshotTable}
 
-/** The injected SQL DML surface (GraftSqlParser via
+/** The injected SQL DML surface (GraftExtensions via
   * spark.sql.extensions): every snapshot-table mutation runnable as
   * plain `spark.sql`, with non-graft SQL delegated untouched. */
 class GraftSqlDmlSpec extends AnyFunSuite {
@@ -284,13 +285,94 @@ class GraftSqlDmlSpec extends AnyFunSuite {
 
   test("non-graft SQL delegates untouched") {
     assert(spark.sql("SELECT 1 AS x").head().getInt(0) == 1)
-    // DML keywords over unbound tables reach Spark's parser/analyzer
-    intercept[Exception] { spark.sql("DELETE FROM totally_unknown_t") }
     Seq((1, 2)).toDF("a", "b").createOrReplaceTempView("sqldml_plain")
     assert(spark.sql("SELECT sum(a + b) AS s FROM sqldml_plain")
       .head().getLong(0) == 3L)
-    // UPDATE of a plain temp view is not ours: Spark's own error
-    intercept[Exception] { spark.sql("UPDATE sqldml_plain SET a = 1") }
+    // DML and DDL over unbound tables and plain views are not ours:
+    // each reaches Spark's parser/analyzer and fails with Spark's own
+    // error, never graft's
+    Seq(
+      "DELETE FROM totally_unknown_t",
+      "UPDATE sqldml_plain SET a = 1",
+      "MERGE INTO sqldml_plain t USING sqldml_plain s ON t.a = s.a " +
+        "WHEN MATCHED THEN DELETE",
+      "ALTER TABLE sqldml_plain ADD COLUMN c INT",
+      "ALTER TABLE totally_unknown_t RENAME TO other_t"
+    ).foreach { stmt =>
+      val e = intercept[Exception] { spark.sql(stmt) }
+      assert(!e.getMessage.contains("graft SQL"), s"$stmt: $e")
+    }
+    // a non-graft CTAS creates Spark's own table
+    spark.sql("CREATE TABLE sqldml_plain_ctas AS SELECT a * 10 AS x " +
+      "FROM sqldml_plain")
+    try assert(spark.table("sqldml_plain_ctas").head().getInt(0) == 10)
+    finally spark.sql("DROP TABLE sqldml_plain_ctas")
+    // `graft.<name>` holding no path names a table of a database
+    // called graft: Spark's, never a graft directory
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft")
+    try {
+      spark.sql("CREATE TABLE graft.sqldml_db_t AS SELECT 1 AS a")
+      spark.sql("INSERT INTO graft.sqldml_db_t VALUES (2)")
+      assert(spark.catalog.tableExists("graft", "sqldml_db_t"))
+      assert(spark.table("graft.sqldml_db_t").count() == 2)
+    } finally spark.sql("DROP DATABASE graft CASCADE")
+  }
+
+  test("graft-addressed shapes the commands do not serve fail with graft's message") {
+    val dir = tmp("unsupported"); mk(dir, 10L)
+    SnapshotSql.bind("sqldml_unsup", dir)
+    Seq((1L, 5L)).toDF("id", "d").createOrReplaceTempView("sqldml_unsup_src")
+    Seq(
+      s"ALTER TABLE graft.`$dir` RENAME TO sqldml_renamed",
+      "ALTER TABLE sqldml_unsup RENAME TO sqldml_renamed",
+      s"ALTER TABLE graft.`$dir` DROP COLUMNS (name, score)",
+      s"MERGE INTO graft.`$dir` t USING sqldml_unsup_src s ON t.id > s.id " +
+        "WHEN MATCHED THEN DELETE",
+      s"CREATE TABLE IF NOT EXISTS graft.`$dir` AS SELECT 1 AS id"
+    ).foreach { stmt =>
+      val e = intercept[IllegalArgumentException] { spark.sql(stmt) }
+      assert(e.getMessage.startsWith("graft SQL:"), s"$stmt: $e")
+    }
+    assert(SnapshotTable.latestVersion(spark, dir) == Some(0L))
+    assert(SnapshotTable.read(spark, dir).count() == 10)
+  }
+
+  test("UPDATE/DELETE with BETWEEN, IN, LIKE, IS NOT NULL match the API row for row") {
+    def seed(dir: String): Unit = SnapshotTable.append(
+      (0L until 40L).map(i =>
+        (i, if (i % 7 == 0) None else Some(s"v$i"), i * 10))
+        .toDF("id", "name", "score"), dir)
+    val sqlDir = tmp("preds"); val apiDir = tmp("preds-api")
+    seed(sqlDir); seed(apiDir)
+    SnapshotSql.bind("sqldml_preds", sqlDir)
+    spark.sql("UPDATE sqldml_preds SET score = score + 1 " +
+      "WHERE id BETWEEN 3 AND 8")
+    spark.sql("UPDATE sqldml_preds SET name = 'in' WHERE id IN (10, 12, 14)")
+    spark.sql("DELETE FROM sqldml_preds WHERE name LIKE 'v2%'")
+    spark.sql("UPDATE sqldml_preds SET score = 0 " +
+      "WHERE name IS NOT NULL AND id > 30")
+    spark.sql("DELETE FROM sqldml_preds WHERE id NOT BETWEEN 2 AND 36")
+    SnapshotTable.updateWhere(spark, apiDir, col("id").between(3, 8),
+      Seq("score" -> (col("score") + 1)))
+    SnapshotTable.updateWhere(spark, apiDir, col("id").isin(10, 12, 14),
+      Seq("name" -> lit("in")))
+    SnapshotTable.deleteWhere(spark, apiDir, col("name").like("v2%"))
+    SnapshotTable.updateWhere(spark, apiDir,
+      col("name").isNotNull && col("id") > 30, Seq("score" -> lit(0L)))
+    SnapshotTable.deleteWhere(spark, apiDir, !col("id").between(2, 36))
+    def rows(d: String) = SnapshotTable.read(spark, d).orderBy("id")
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)),
+        r.getLong(2))).toSeq
+    val got = rows(sqlDir)
+    assert(got == rows(apiDir), "SQL path diverged from the API path")
+    // spot checks that each predicate did its work
+    // ids 0, 1 (NOT BETWEEN) and 2 (LIKE 'v2%') are gone
+    assert(got.map(_._1).min == 3L && got.map(_._1).max == 36L)
+    assert(got.filter(r => r._1 >= 3 && r._1 <= 8)
+      .forall(r => r._3 == r._1 * 10 + 1))
+    assert(got.count(_._2.contains("in")) == 3)
+    assert(!got.exists(_._2.exists(_.startsWith("v2"))))
+    assert(got.filter(_._1 > 30).forall(r => r._2.isEmpty || r._3 == 0L))
   }
 
   test("DESCRIBE DETAIL, SHOW CONSTRAINTS, SHALLOW CLONE via SQL") {
@@ -355,10 +437,19 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     val dir = tmp("props"); mk(dir)
     SnapshotSql.bind("sqldml_props", dir)
     spark.sql("ALTER TABLE sqldml_props SET TBLPROPERTIES " +
-      "('graft.enableDeletionVectors' = 'true', 'owner' = 'etl')")
+      "('graft.enableDeletionVectors' = 'true', 'team' = 'etl')")
     assert(spark.sql("SHOW TBLPROPERTIES sqldml_props").collect()
       .map(r => (r.getString(0), r.getString(1))).toMap ==
-      Map("graft.enableDeletionVectors" -> "true", "owner" -> "etl"))
+      Map("graft.enableDeletionVectors" -> "true", "team" -> "etl"))
+    assert(spark.sql("SHOW TBLPROPERTIES sqldml_props ('team')").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("team", "etl")))
+    // Spark's parser reserves 'owner' (and provider, location, …):
+    // setting it is refused before any commit
+    val propsHead = SnapshotTable.latestVersion(spark, dir)
+    intercept[ParseException] {
+      spark.sql("ALTER TABLE sqldml_props SET TBLPROPERTIES ('owner' = 'x')") }
+    assert(SnapshotTable.latestVersion(spark, dir) == propsHead)
     val filesBefore = SnapshotTable.manifestFiles(spark, dir,
       SnapshotTable.latestVersion(spark, dir).get).toSet
     // MoR DELETE: no file rewritten, a vector lands, count exact
@@ -386,12 +477,12 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     assert(SnapshotTable.manifestDvRefs(spark, dir, v4).isEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 89)
     assert(spark.sql("SHOW TBLPROPERTIES sqldml_props").collect()
-      .map(_.getString(0)).toSeq == Seq("owner"))
+      .map(_.getString(0)).toSeq == Seq("team"))
     // properties survive a shallow clone
     val cloneDir = tmp("props-clone")
     SnapshotTable.shallowClone(spark, dir, cloneDir)
     assert(SnapshotTable.manifestProps(spark, cloneDir, 0L) ==
-      Map("owner" -> "etl"))
+      Map("team" -> "etl"))
   }
 
   test("CTAS, INSERT OVERWRITE, and TRUNCATE TABLE") {
@@ -446,17 +537,25 @@ class GraftSqlDmlSpec extends AnyFunSuite {
       "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET status = 'stale'")
     assert(SnapshotTable.read(spark, dir)
       .filter(col("status") === "stale").count() == 1) // id=2
-    intercept[IllegalArgumentException] {
+    // Spark's parser refuses an unconditional WHEN MATCHED before a
+    // conditional one, and a NOT MATCHED BY SOURCE clause written
+    // before NOT MATCHED (the standard clause order); nothing commits
+    val head = SnapshotTable.latestVersion(spark, dir)
+    intercept[ParseException] {
       spark.sql("MERGE INTO sqldml_mf t USING sqldml_mf_src s " +
         "ON t.id = s.id WHEN MATCHED THEN DELETE " +
         "WHEN MATCHED AND t.qty > 0 THEN UPDATE SET qty = 0") }
+    intercept[ParseException] {
+      spark.sql("MERGE INTO sqldml_mf t USING sqldml_mf_src s " +
+        "ON t.id = s.id WHEN NOT MATCHED BY SOURCE THEN DELETE " +
+        "WHEN NOT MATCHED THEN INSERT *") }
+    assert(SnapshotTable.latestVersion(spark, dir) == head)
   }
 
   test("MERGE clauses carry bare CASE WHEN … END in conditions, SET exprs and INSERT values") {
-    // round-9 caveat (now fixed): the WHEN/THEN boundary scanner is
-    // CASE-aware, so an unparenthesized CASE inside AND conditions or
-    // assignments never mis-splits a clause. SQL path checked
-    // row-for-row against the API path on a twin table.
+    // an unparenthesized CASE inside AND conditions or assignments
+    // never mis-splits a clause; SQL path checked row-for-row against
+    // the API path on a twin table.
     import graft.sources.SnapshotTable.{MergeAction, MergeClause}
     def seed(dir: String): Unit = SnapshotTable.append(Seq(
       (1L, 10L, "open"), (2L, 5L, "vip"), (3L, 7L, "open"))
@@ -477,13 +576,13 @@ class GraftSqlDmlSpec extends AnyFunSuite {
           CASE WHEN s.d > 8 THEN 'big' ELSE 'new' END)""")
     SnapshotTable.mergeInto(spark, apiDir, src, Seq("id"),
       matched = Seq(MergeClause(
-        Some("CASE WHEN t.status = 'vip' THEN true ELSE s.d > 2 END"),
+        Some(expr("CASE WHEN t.status = 'vip' THEN true ELSE s.d > 2 END")),
         MergeAction.Update(Seq("qty" ->
-          "t.qty + CASE WHEN s.d > 3 THEN s.d * 2 ELSE s.d END")))),
+          expr("t.qty + CASE WHEN s.d > 3 THEN s.d * 2 ELSE s.d END"))))),
       notMatched = Seq(MergeClause(
-        Some("CASE WHEN s.d > 5 THEN true ELSE false END"),
-        MergeAction.Insert(Seq("id" -> "s.id", "qty" -> "s.d",
-          "status" -> "CASE WHEN s.d > 8 THEN 'big' ELSE 'new' END")))))
+        Some(expr("CASE WHEN s.d > 5 THEN true ELSE false END")),
+        MergeAction.Insert(Seq("id" -> expr("s.id"), "qty" -> expr("s.d"),
+          "status" -> expr("CASE WHEN s.d > 8 THEN 'big' ELSE 'new' END"))))))
     def rows(d: String) = SnapshotTable.read(spark, d).orderBy("id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
     val got = rows(sqlDir)

@@ -29,15 +29,16 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     val src = Seq((1L, 3L), (3L, 4L), (5L, 9L), (6L, 0L)).toDF("id", "d")
     val v = SnapshotTable.mergeInto(spark, dir, src, Seq("id"),
       matched = Seq(
-        MergeClause(Some("t.status = 'open'"),
-          MergeAction.Update(Seq("qty" -> "t.qty + s.d"))),
+        MergeClause(Some(expr("t.status = 'open'")),
+          MergeAction.Update(Seq("qty" -> expr("t.qty + s.d")))),
         MergeClause(None, MergeAction.Delete)),
       notMatched = Seq(
-        MergeClause(Some("s.d > 0"),
+        MergeClause(Some(expr("s.d > 0")),
           MergeAction.Insert(Seq(
-            "id" -> "s.id", "qty" -> "s.d", "status" -> "'new'")))),
+            "id" -> expr("s.id"), "qty" -> expr("s.d"),
+              "status" -> expr("'new'"))))),
       notMatchedBySource = Seq(
-        MergeClause(Some("t.qty < 3"), MergeAction.Delete)))
+        MergeClause(Some(expr("t.qty < 3")), MergeAction.Delete)))
     assert(v.nonEmpty)
     // id1 matched+open → qty 13; id3 matched closed → deleted;
     // id5 unmatched d>0 → inserted; id6 unmatched d=0 → skipped;
@@ -59,13 +60,13 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     SnapshotTable.mergeInto(spark, dir,
       Seq(Tuple1(1L)).toDF("id"), Seq("id"),
       notMatchedBySource = Seq(
-        MergeClause(None, MergeAction.Update(Seq("status" -> "'stale'")))))
+        MergeClause(None, MergeAction.Update(Seq("status" -> expr("'stale'"))))))
     assert(rows(dir) == Set((1L, 99L, "a"), (2L, 20L, "stale")))
     // partial INSERT: unassigned target columns land NULL
     SnapshotTable.mergeInto(spark, dir,
       Seq(Tuple1(7L)).toDF("id"), Seq("id"),
       notMatched = Seq(MergeClause(None,
-        MergeAction.Insert(Seq("id" -> "s.id", "qty" -> "0")))))
+        MergeAction.Insert(Seq("id" -> expr("s.id"), "qty" -> expr("0"))))))
     val r7 = SnapshotTable.read(spark, dir).filter(col("id") === 7L).head()
     assert(r7.getLong(1) == 0L && r7.isNullAt(2))
   }
@@ -82,7 +83,7 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     SnapshotTable.mergeInto(spark, dir,
       Seq((5L, 1L)).toDF("id", "d"), Seq("id"),
       matched = Seq(MergeClause(None,
-        MergeAction.Update(Seq("qty" -> "t.qty + s.d")))))
+        MergeAction.Update(Seq("qty" -> expr("t.qty + s.d"))))))
     val after = SnapshotTable.manifestFiles(spark, dir,
       SnapshotTable.latestVersion(spark, dir).get).toSet
     assert((before -- after).size == 1, "exactly one file rewritten")
@@ -90,7 +91,7 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     // a by-source condition matching NO rows touches nothing → None
     assert(SnapshotTable.mergeInto(spark, dir,
       spark.emptyDataset[(Long, Long)].toDF("id", "d"), Seq("id"),
-      notMatchedBySource = Seq(MergeClause(Some("t.qty < 0"),
+      notMatchedBySource = Seq(MergeClause(Some(expr("t.qty < 0")),
         MergeAction.Delete))).isEmpty)
   }
 
@@ -131,14 +132,14 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
         Seq((1L, 1L)).toDF("id", "d"), Seq("id"),
         matched = Seq(
           MergeClause(None, MergeAction.Delete),
-          MergeClause(Some("t.qty > 0"), MergeAction.UpdateAll)))
+          MergeClause(Some(expr("t.qty > 0")), MergeAction.UpdateAll)))
     }
     // ANSI store cast: a malformed assignment fails the merge
     intercept[Exception] {
       SnapshotTable.mergeInto(spark, dir,
         Seq((1L, 1L)).toDF("id", "d"), Seq("id"),
         matched = Seq(MergeClause(None,
-          MergeAction.Update(Seq("qty" -> "'oops'")))))
+          MergeAction.Update(Seq("qty" -> expr("'oops'"))))))
     }
     assert(rows(dir) == Set((1L, 1L, "a"))) // nothing landed
   }
@@ -153,7 +154,7 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
       SnapshotTable.mergeInto(spark, dir,
         Seq((1L, 1L)).toDF("id", "d"), Seq("id"),
         matched = Seq(MergeClause(None,
-          MergeAction.Update(Seq("qty" -> "-1")))))
+          MergeAction.Update(Seq("qty" -> expr("-1"))))))
     }
     // deletes introduce nothing — they pass even with constraints on
     assert(SnapshotTable.mergeInto(spark, dir,
@@ -169,10 +170,10 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     val src = Seq((1L, 5L), (9L, 7L)).toDF("sid", "d")
     SnapshotTable.mergeInto(spark, dir, src, Seq("id"),
       matched = Seq(MergeClause(None,
-        MergeAction.Update(Seq("qty" -> "t.qty + s.d")))),
+        MergeAction.Update(Seq("qty" -> expr("t.qty + s.d"))))),
       notMatched = Seq(MergeClause(None,
-        MergeAction.Insert(Seq("id" -> "s.sid", "qty" -> "s.d",
-          "status" -> "'new'")))),
+        MergeAction.Insert(Seq("id" -> expr("s.sid"), "qty" -> expr("s.d"),
+          "status" -> expr("'new'"))))),
       sourceKeys = Seq("sid"))
     assert(rows(dir) == Set(
       (1L, 15L, "a"), (2L, 20L, "b"), (9L, 7L, "new")))
@@ -208,9 +209,10 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
       (Some(1L), 5L), (None, 7L), (None, 8L)).toDF("id", "d")
     val v = SnapshotTable.mergeInto(spark, dir, src, Seq("id"),
       matched = Seq(MergeClause(None,
-        MergeAction.Update(Seq("qty" -> "s.d")))),
+        MergeAction.Update(Seq("qty" -> expr("s.d"))))),
       notMatched = Seq(MergeClause(None, MergeAction.Insert(Seq(
-        "id" -> "s.id", "qty" -> "s.d", "status" -> "'null-key'")))))
+        "id" -> expr("s.id"), "qty" -> expr("s.d"),
+          "status" -> expr("'null-key'"))))))
     assert(v.nonEmpty)
     val got = SnapshotTable.read(spark, dir).collect().map(r =>
       (if (r.isNullAt(0)) -1L else r.getLong(0), r.getLong(1),
@@ -223,7 +225,7 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       SnapshotTable.mergeInto(spark, dir, dup, Seq("id"),
         matched = Seq(MergeClause(None,
-          MergeAction.Update(Seq("qty" -> "s.d")))))
+          MergeAction.Update(Seq("qty" -> expr("s.d"))))))
     }
     assert(e.getMessage.contains("duplicate keys"))
     // an ALL-NULL-key source still runs its inserts (emptiness counts
@@ -231,7 +233,8 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     val nullsOnly = Seq[(Option[Long], Long)]((None, 9L)).toDF("id", "d")
     assert(SnapshotTable.mergeInto(spark, dir, nullsOnly, Seq("id"),
       notMatched = Seq(MergeClause(None, MergeAction.Insert(Seq(
-        "id" -> "s.id", "qty" -> "s.d", "status" -> "'n2'"))))).nonEmpty)
+        "id" -> expr("s.id"), "qty" -> expr("s.d"),
+          "status" -> expr("'n2'")))))).nonEmpty)
     assert(SnapshotTable.read(spark, dir)
       .filter(col("status") === "n2").count() == 1)
   }
@@ -256,7 +259,8 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     val merger = new Thread(() => {
       try SnapshotTable.mergeInto(spark, dir, src, Seq("id"),
         notMatched = Seq(MergeClause(None, MergeAction.Insert(Seq(
-          "id" -> "s.id", "qty" -> "s.d", "status" -> "'ins'")))))
+          "id" -> expr("s.id"), "qty" -> expr("s.d"),
+            "status" -> expr("'ins'"))))))
       catch { case t: Throwable => err.set(t) }
     })
     merger.start()
@@ -274,7 +278,8 @@ class SnapshotMergeIntoSpec extends AnyFunSuite {
     MergeRaceGate.reset(); MergeRaceGate.proceed.countDown()
     SnapshotTable.mergeInto(spark, dir, src, Seq("id"),
       notMatched = Seq(MergeClause(None, MergeAction.Insert(Seq(
-        "id" -> "s.id", "qty" -> "s.d", "status" -> "'ins'")))))
+        "id" -> expr("s.id"), "qty" -> expr("s.d"),
+          "status" -> expr("'ins'"))))))
     assert(rows(dir) == Set((1L, 99L, "ins"), (2L, 5L, "open")))
   }
 }
