@@ -8,50 +8,7 @@ object Bench {
     // swing 1.3-8x with co-tenant noise; the min over repeats is the
     // stable signal BASELINE.md is recorded against.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Throughput-first AQE coalescing: let small post-shuffle
-      // partitions merge toward the advisory size instead of padding
-      // out to #cpus. The multi-stage candidate pipelines (near-dup
-      // family) are stage-overhead-bound at bench SFs without this,
-      // and at production scale fewer, advisory-sized partitions is
-      // the recommended throughput setting anyway.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // Every SQL execution eagerly renders its plan into the
-      // SQLExecutionStart event (even with the UI off); "formatted"
-      // explain strings on multi-action lifecycle queries are pure
-      // driver overhead — "simple" keeps the event cheap at any scale.
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: the first action on each table pays file listing +
-    // footer reads + reader init (~0.5-3s per table) — keep that out
-    // of whichever query happens to touch the table first. events is
-    // ns-timestamped, so the legacy conf must be set before listing.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Warm all tables CONCURRENTLY: the cost is listing + footer I/O
-    // per table (independent jobs), so overlapping them cuts the fixed
-    // preamble ~5x — which matters most for SPARK_GRAFT_ONLY iteration
-    // where the warm-up would otherwise dominate a one-query run.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val warm = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings").map { t =>
-      Future {
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case e: Throwable =>
-          // A missing table silently shifts its listing cost into the
-          // first query that touches it — say so instead of hiding it.
-          System.err.println(s"[bench] warm-up $t failed: ${e.getMessage}")
-        }
-      }
-    }
-    warm.foreach(Await.ready(_, Duration.Inf))
+    val spark = session(cpus, sfDir)
     val selected = SparkEntry.selectedQueries("bench")
     val results = selected.map { case (name, fn) =>
       // noop sink, NOT count(): count() lets the optimizer prune every
@@ -121,5 +78,55 @@ object Bench {
     val totalsOnly =
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir","reps":$reps,"cpus":"$cpus"}"""
     println(totalsOnly)
+  }
+
+  /** The session [[Bench]], [[BenchProfile]] and [[PlanDump]] run
+    * under, with every table of `sfDir` warmed. */
+  def session(cpus: String, sfDir: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // Throughput-first AQE coalescing: let small post-shuffle
+      // partitions merge toward the advisory size instead of padding
+      // out to #cpus. The multi-stage candidate pipelines (near-dup
+      // family) are stage-overhead-bound at bench SFs without this,
+      // and at production scale fewer, advisory-sized partitions is
+      // the recommended throughput setting anyway.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+      // Every SQL execution eagerly renders its plan into the
+      // SQLExecutionStart event (even with the UI off); "formatted"
+      // explain strings on multi-action lifecycle queries are pure
+      // driver overhead — "simple" keeps the event cheap at any scale.
+      .config("spark.sql.ui.explainMode", "simple")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // Warm-up: the first action on each table pays file listing +
+    // footer reads + reader init (~0.5-3s per table) — keep that out
+    // of whichever query happens to touch the table first. events is
+    // ns-timestamped, so the legacy conf must be set before listing.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Warm all tables CONCURRENTLY: the cost is listing + footer I/O
+    // per table (independent jobs), so overlapping them cuts the fixed
+    // preamble ~5x — which matters most for SPARK_GRAFT_ONLY iteration
+    // where the warm-up would otherwise dominate a one-query run.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val warm = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings").map { t =>
+      Future {
+        try spark.read.parquet(s"$sfDir/$t.parquet").count()
+        catch { case e: Throwable =>
+          // A missing table silently shifts its listing cost into the
+          // first query that touches it — say so instead of hiding it.
+          System.err.println(s"[bench] warm-up $t failed: ${e.getMessage}")
+        }
+      }
+    }
+    warm.foreach(Await.ready(_, Duration.Inf))
+    spark
   }
 }

@@ -1,48 +1,24 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool for the optimization rounds (guide §1): runs the
   * SPARK_GRAFT_ONLY-selected queries exactly like [[Bench]] (same
   * session config, same noop sink) but with a job-level listener, so
   * the wall-clock of each query decomposes into its Spark jobs
-  * (description, duration, task time) plus the unaccounted driver gap.
+  * (description, duration, executor run time) plus the unaccounted
+  * driver gap.
   * Reads the same env contract as Bench; never run by the driver. */
 object BenchProfile {
   private case class JobRec(id: Int, desc: String, start: Long,
                             var end: Long = 0L, var stages: Int = 0,
-                            var tasks: Int = 0, var taskTimeMs: Long = 0L)
+                            var tasks: Int = 0, var runTimeMs: Long = 0L)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.join.preferSortMergeJoin", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Same warm-up as Bench so first-touch listing cost stays out.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val warm = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings").map { t =>
-      Future {
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case _: Throwable => () }
-      }
-    }
-    warm.foreach(Await.ready(_, Duration.Inf))
+    val spark = Bench.session(cpus, sfDir)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
@@ -142,9 +118,8 @@ object BenchProfile {
           .foreach { j =>
             j.stages += 1
             j.tasks += info.numTasks
-            j.taskTimeMs += (for {
-              s <- info.submissionTime; c <- info.completionTime
-            } yield c - s).getOrElse(0L)
+            j.runTimeMs +=
+              Option(info.taskMetrics).map(_.executorRunTime).getOrElse(0L)
           }
       }
     }
@@ -177,7 +152,7 @@ object BenchProfile {
           val d = (r.end - r.start).max(0L)
           if (d >= 20)
             println(f"   job ${r.id}%3d ${d}%6dms stages=${r.stages}%2d " +
-              f"tasks=${r.tasks}%4d taskTime=${r.taskTimeMs}%6dms  ${r.desc.take(90)}")
+              f"tasks=${r.tasks}%4d runTime=${r.runTimeMs}%6dms  ${r.desc.take(90)}")
         }
         import scala.jdk.CollectionConverters._
         val gf = gapFrames.asScala.toSeq.sortBy(-_._2.intValue).take(14)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement tool: dump `.explain("formatted")`
   * for the SPARK_GRAFT_ONLY-selected queries (default: all) into the
   * directory given by SPARK_GRAFT_PLAN_DIR (default plans/out), one
@@ -14,17 +12,8 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/out")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus, sfDir)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = SparkEntry.selectedQueries("plandump")
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -25,13 +25,26 @@ import org.apache.spark.sql.DataFrame
   */
 final class CacheRegistry {
   private val live = scala.collection.mutable.ArrayBuffer[DataFrame]()
+  private val dirs = scala.collection.mutable.ArrayBuffer[String]()
 
   def track(df: DataFrame): DataFrame = synchronized { live += df; df }
 
-  /** Unpersist (non-blocking) everything tracked since the last call. */
+  /** A local temp directory a query's result still scans (e.g. the
+    * temp tables of the snapshot queries): deleted at [[releaseAll]],
+    * once the caller has materialized the result. */
+  def trackDir(dir: String): String = synchronized { dirs += dir; dir }
+
+  /** Unpersist (non-blocking) everything tracked since the last call,
+    * and delete the tracked directories. */
   def releaseAll(): Unit = synchronized {
     live.foreach(df => try df.unpersist(false) catch { case _: Throwable => () })
     live.clear()
+    dirs.foreach { d =>
+      try graft.sources.LocalStore.delete(
+        new org.apache.hadoop.fs.Path(d), recursive = true)
+      catch { case _: java.io.IOException => () }
+    }
+    dirs.clear()
   }
 }
 
@@ -40,5 +53,6 @@ object CacheRegistry {
   val global: CacheRegistry = new CacheRegistry
 
   def track(df: DataFrame): DataFrame = global.track(df)
+  def trackDir(dir: String): String = global.trackDir(dir)
   def releaseAll(): Unit = global.releaseAll()
 }

@@ -385,8 +385,6 @@ object Pq {
       throw new IllegalStateException(
         s"initIvfPqSnapshot: $dir already holds committed codes — " +
           "re-keying an index requires a rebuild into a fresh directory")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
     writeCodebookSidecar(spark, dir, codebooks)
     writeCellSidecar(spark, dir, centroids, residual)
   }
@@ -520,22 +518,16 @@ object Pq {
     val body = s"""{"quantizer":"kmeans","k":${centroids.length},""" +
       s""""dim":${centroids.head.length},"scale":65536,""" +
       s""""encoding":"$enc","centroids":"$flat"}"""
-    val p = new org.apache.hadoop.fs.Path(path, CellMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.TableIO.atomicWriteText(fs, p, body)
+    writeSidecar(spark, path, CellMetaFile, body)
   }
 
   /** The index's recorded coarse cells, if the sidecar exists. */
   def readCellSidecar(spark: SparkSession, path: String
                      ): Option[Array[Array[Long]]] = {
-    val p = new org.apache.hadoop.fs.Path(path, CellMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    "\"centroids\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map { m =>
-      m.group(1).split(';').map(_.split(',').map(_.toLong))
+    readSidecar(spark, path, CellMetaFile).flatMap { txt =>
+      "\"centroids\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map { m =>
+        m.group(1).split(';').map(_.split(',').map(_.toLong))
+      }
     }
   }
 
@@ -545,15 +537,10 @@ object Pq {
     * the same file: two object-store round trips per call). */
   private def readCellMeta(spark: SparkSession, path: String,
                            caller: String): (Array[Array[Long]], Boolean) = {
-    val p = new org.apache.hadoop.fs.Path(path, CellMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
+    val txt = readSidecar(spark, path, CellMetaFile).getOrElse(
       throw new IllegalStateException(
         s"$caller: no $CellMetaFile under $path — not a writeIvfPqIndex " +
-          "layout")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+          "layout"))
     val cents = "\"centroids\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt)
       .map(m => m.group(1).split(';').map(_.split(',').map(_.toLong)))
       .getOrElse(throw new IllegalStateException(
@@ -565,13 +552,8 @@ object Pq {
     * than raw vectors. Pre-residual sidecars lack the field → raw,
     * so old indexes keep probing exactly as built. */
   def readCellResidualFlag(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, CellMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    txt.contains("\"encoding\":\"residual\"")
+    readSidecar(spark, path, CellMetaFile)
+      .exists(_.contains("\"encoding\":\"residual\""))
   }
 
   private def writeCodebookSidecar(spark: SparkSession, path: String,
@@ -584,22 +566,30 @@ object Pq {
     val body = s"""{"quantizer":"pq","m":${codebooks.length},""" +
       s""""k":${codebooks.head.length},"dsub":${dsubOf(codebooks)},""" +
       s""""scale":65536,"codebooks":"$flat"}"""
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.TableIO.atomicWriteText(fs, p, body)
+    writeSidecar(spark, path, MetaFile, body)
   }
 
   /** The index's recorded codebooks, if the sidecar exists. */
   def readCodebookSidecar(spark: SparkSession, path: String
                          ): Option[Array[Array[Array[Long]]]] = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    "\"codebooks\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map { m =>
-      m.group(1).split('|').map(_.split(';').map(_.split(',').map(_.toLong)))
+    readSidecar(spark, path, MetaFile).flatMap { txt =>
+      "\"codebooks\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map { m =>
+        m.group(1).split('|').map(_.split(';').map(_.split(',').map(_.toLong)))
+      }
     }
+  }
+
+  private def writeSidecar(spark: SparkSession, dir: String, name: String,
+                           body: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
+      .overwrite(p, body)
+  }
+
+  private def readSidecar(spark: SparkSession, dir: String,
+                          name: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
+      .readText(p)
   }
 }

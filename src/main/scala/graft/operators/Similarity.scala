@@ -215,20 +215,15 @@ object Similarity {
   private def writeSidecarText(spark: org.apache.spark.sql.SparkSession,
                                path: String, text: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.TableIO.atomicWriteText(fs, p, text)
+    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
+      .overwrite(p, text)
   }
 
   private def readSidecarText(spark: org.apache.spark.sql.SparkSession,
                               path: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close())
-    }
+    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
+      .readText(p)
   }
 
   /** The index's recorded quantizer, if the sidecar exists. */
@@ -274,8 +269,6 @@ object Similarity {
       throw new IllegalStateException(
         s"initIvfSnapshot: $dir already holds committed vectors — " +
           "re-keying an index requires a rebuild into a fresh directory")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
     writeTrainedSidecar(spark, dir, centroids)
   }
 

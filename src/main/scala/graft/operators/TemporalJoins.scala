@@ -112,9 +112,9 @@ object TemporalJoins {
     * task (e.g. hourly for ~10⁶ events/key/hour); normal keys pay one
     * extra narrow shuffle + a broadcast-sized summary join.
     *
-    * Measured crossover (StressProbe, 32 cores): at 22M rows on one
-    * key the plain form takes 20.3 s (single-task sort) vs 7.5 s
-    * bucketed; below ~10⁶ rows/key the plain form wins because
+    * Measured crossover (BASELINE.md "Scaling probe", 32 cores): at
+    * 22M rows on one key the plain form takes 20.3 s (single-task
+    * sort) vs 7.5 s bucketed; below ~10⁶ rows/key the plain form wins because
     * bucketing pays two extra shuffles. Past one task's memory the
     * plain form spills then fails where bucketed stays bounded. */
   def asofJoinBucketed(left: DataFrame, right: DataFrame, keyCols: Seq[String],

@@ -1793,7 +1793,7 @@ case class DotLongWeights(child: Expression, w: Array[Long])
   * d=64 paid ~4k interpreted lambda element invocations per row AND
   * re-evaluated the child quantize subtree once per centroid; this is
   * one child eval + one fused loop (measured ~20× on the 1M-vector
-  * build in StressProbe). */
+  * build; BASELINE.md, "Scaling probe"). */
 case class NearestCellId(child: Expression, cents: Array[Array[Long]])
   extends UnaryExpression {
   override def dataType: DataType = IntegerType

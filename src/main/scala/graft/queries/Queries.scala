@@ -11022,13 +11022,19 @@ object Queries {
   // read), and returns a result whose oracle is the equivalent ANSI
   // SQL over the base parquet — so the differential check covers the
   // whole commit/rewrite/skipping machinery, not just the query plan.
-  // The temp table is left for the OS tmp reaper: the returned
-  // DataFrame lazily scans it, so deleting eagerly would break the
-  // caller's execution.
+  // The temp table is tracked in CacheRegistry, not deleted here: the
+  // returned DataFrame lazily scans it, so deleting eagerly would
+  // break the caller's execution. The caller's releaseAll() after
+  // the result is materialized deletes it.
   // ---------------------------------------------------------------------
 
-  private def snapTmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-q-snap").toString + "/t"
+  private def snapTmp(): String = qTmp("graft-q-snap") + "/t"
+
+  /** A fresh temp dir tracked for deletion at the caller's
+    * `CacheRegistry.releaseAll()`. */
+  private def qTmp(prefix: String): String =
+    graft.operators.CacheRegistry.trackDir(
+      java.nio.file.Files.createTempDirectory(prefix).toString)
 
   /** MERGE upsert through [[graft.sources.SnapshotTable.merge]]: the
     * customer table becomes a snapshot table; a CDC-style source sets
@@ -11282,8 +11288,7 @@ object Queries {
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val corpus = base.unionByName(planted)
       val cents = graft.operators.Kmeans.train(corpus, 8, 3)
-      val dir = java.nio.file.Files.createTempDirectory("graft-q-ivf")
-        .toString + "/idx"
+      val dir = qTmp("graft-q-ivf") + "/idx"
       graft.operators.Similarity.writeIvfIndexTrained(corpus, dir, cents)
       graft.operators.Similarity.ivfTopKIndexedTrained(s, dir,
           col("vec_id") >= 1000000L, k = 1, probes = 1)
@@ -11464,8 +11469,7 @@ object Queries {
       // Twin minimality holds for ANY codebooks, so the training
       // budget is the demo-sized one (m×iters drives the job count).
       val cbs = graft.operators.Pq.train(corpus, m = 4, k = 8, iters = 1)
-      val dir = java.nio.file.Files.createTempDirectory("graft-q-pq")
-        .toString + "/idx"
+      val dir = qTmp("graft-q-pq") + "/idx"
       graft.operators.Pq.writePqIndex(corpus, dir, cbs)
       val scored = graft.operators.Pq.pqTopK(s, dir, corpus,
         col("vec_id") >= 1000000L, k = Int.MaxValue)
@@ -11501,8 +11505,7 @@ object Queries {
       val corpus = base.unionByName(planted)
       val cents = graft.operators.Kmeans.train(corpus, 8, 1)
       val cbs = graft.operators.Pq.train(corpus, m = 2, k = 8, iters = 1)
-      val dir = java.nio.file.Files.createTempDirectory("graft-q-ivfpq")
-        .toString + "/idx"
+      val dir = qTmp("graft-q-ivfpq") + "/idx"
       graft.operators.Pq.writeIvfPqIndex(corpus, dir, cents, cbs)
       val scored = graft.operators.Pq.ivfPqTopK(s, dir, corpus,
         col("vec_id") >= 1000000L, k = Int.MaxValue, probes = 1)
@@ -11541,8 +11544,7 @@ object Queries {
       val cents = graft.operators.Kmeans.train(corpus, 8, 1)
       val cbs = graft.operators.Pq.trainResidual(corpus, cents,
         m = 2, k = 8, iters = 1)
-      val dir = java.nio.file.Files.createTempDirectory("graft-q-ivfpqr")
-        .toString + "/idx"
+      val dir = qTmp("graft-q-ivfpqr") + "/idx"
       graft.operators.Pq.writeIvfPqIndex(corpus, dir, cents, cbs,
         residual = true)
       val scored = graft.operators.Pq.ivfPqTopK(s, dir, corpus,
@@ -11578,8 +11580,7 @@ object Queries {
       val cents = graft.operators.Kmeans.train(corpus, 8, 1)
       val cbs = graft.operators.Pq.trainResidual(corpus, cents,
         m = 2, k = 8, iters = 1)
-      val dir = java.nio.file.Files.createTempDirectory("graft-q-rrk")
-        .toString + "/idx"
+      val dir = qTmp("graft-q-rrk") + "/idx"
       graft.operators.Pq.writeIvfPqIndex(corpus, dir, cents, cbs,
         residual = true)
       graft.operators.Pq.ivfPqTopKRerank(s, dir, corpus,
@@ -11772,8 +11773,7 @@ object Queries {
     "q_snapshot_stream",
     (s, d) => {
       val src = snapTmp(); val dst = snapTmp()
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-q-stream-ck").toString
+      val ckpt = qTmp("graft-q-stream-ck")
       graft.sources.GraftDataSource.enableLocalCheckpointFastPath(s)
       val base = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -11815,8 +11815,7 @@ object Queries {
     "q_snapshot_ratelimit",
     (s, d) => {
       val src = snapTmp(); val dst = snapTmp()
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-q-rate-ck").toString
+      val ckpt = qTmp("graft-q-rate-ck")
       graft.sources.GraftDataSource.enableLocalCheckpointFastPath(s)
       val base = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -13107,8 +13106,7 @@ object Queries {
     "q_snapshot_cdf",
     (s, d) => {
       val src = snapTmp(); val dst = snapTmp()
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-q-cdf-ck").toString
+      val ckpt = qTmp("graft-q-cdf-ck")
       graft.sources.GraftDataSource.enableLocalCheckpointFastPath(s)
       val base = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))

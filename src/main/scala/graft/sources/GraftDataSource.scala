@@ -271,8 +271,8 @@ private[sources] trait GraftRateLimited
   private def posPath: Option[Path] =
     if (metadataPath.isEmpty) None
     else Some(new Path(metadataPath, "graft-pos.json"))
-  private def posFs = posPath.get
-    .getFileSystem(rlSpark.sparkContext.hadoopConfiguration)
+  private def posStore =
+    TableStore(rlSpark.sparkContext.hadoopConfiguration, posPath.get)
 
   /** The furthest position this source has PLANNED (not necessarily
     * committed) — restored across restarts from the metadata file.
@@ -284,16 +284,8 @@ private[sources] trait GraftRateLimited
   protected final def lastPos: Option[Pos] = {
     if (!lastPosLoaded) {
       lastPosLoaded = true
-      lastPosOpt = posPath.flatMap { p =>
-        val f = posFs
-        if (!f.exists(p)) None
-        else {
-          val in = f.open(p)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          scala.util.Try(Pos.parse(txt.trim)).toOption
-        }
-      }
+      lastPosOpt = posPath.flatMap(posStore.readText)
+        .flatMap(txt => scala.util.Try(Pos.parse(txt.trim)).toOption)
     }
     lastPosOpt
   }
@@ -301,10 +293,7 @@ private[sources] trait GraftRateLimited
   protected final def persist(p: Pos): Unit = {
     if (lastPos.forall(lp => Pos.lt(lp, p))) {
       lastPosOpt = Some(p)
-      posPath.foreach { path =>
-        posFs.mkdirs(path.getParent)
-        TableIO.atomicWriteText(posFs, path, p.json)
-      }
+      posPath.foreach(posStore.overwrite(_, p.json))
     }
   }
 
@@ -326,8 +315,7 @@ private[sources] trait GraftRateLimited
     lastPos.isEmpty && posPath.isDefined && {
       val offsets = new Path(
         new Path(metadataPath).getParent.getParent, "offsets")
-      scala.util.Try(posFs.exists(offsets) &&
-        posFs.listStatus(offsets).nonEmpty).getOrElse(false)
+      scala.util.Try(posStore.list(offsets).nonEmpty).getOrElse(false)
     }
 
   /** The next bounded position after `base` given data through

@@ -350,21 +350,14 @@ object MaterializedAgg {
       val o = aj.addObject()
       o.put("out", a.outCol); o.put("col", a.srcCol); o.put("kind", a.kind)
     }
-    val p = new Path(dstDir, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    TableIO.atomicWriteText(fs, p, mapper.writeValueAsString(root))
+    TableStore(spark, dstDir).overwrite(new Path(dstDir, MetaFile),
+      mapper.writeValueAsString(root))
   }
 
   private def readMeta(spark: SparkSession, dstDir: String): Meta = {
-    val p = new Path(dstDir, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      throw new java.io.IOException(
-        s"MaterializedAgg: no $MetaFile under $dstDir")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    val txt = TableStore(spark, dstDir).readText(new Path(dstDir, MetaFile))
+      .getOrElse(throw new java.io.IOException(
+        s"MaterializedAgg: no $MetaFile under $dstDir"))
     val n = mapper.readTree(txt)
     val keys = (0 until n.get("keys").size).map(n.get("keys").get(_).asText)
     val aggs = (0 until n.get("aggs").size).map { i =>

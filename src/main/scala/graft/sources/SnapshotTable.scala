@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, count, expr, greatest, hash, input_file_name, least, lit, max, min, not, pmod, regexp_replace, shiftleft, shiftright, sum, when}
 import org.apache.spark.sql.types._
@@ -106,8 +106,8 @@ import org.apache.spark.sql.types._
   * transactions. */
 object SnapshotTable {
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def store(spark: SparkSession, dir: String): TableStore =
+    TableStore(spark, dir)
 
   /** Label every Spark job an internal phase launches (guide §1.5 —
     * "label your jobs"): the phase tag is APPENDED to whatever
@@ -261,17 +261,19 @@ object SnapshotTable {
   /** Latest committed version, or None for an empty/uninitialized
     * table. One directory listing of `_manifests/` — never of the
     * data. */
-  def latestVersion(spark: SparkSession, dir: String): Option[Long] = {
-    val f = fs(spark, dir)
-    val md = manifestDir(dir)
-    if (!f.exists(md)) return None
-    val vs = f.listStatus(md).toSeq
-      .map(_.getPath.getName)
+  def latestVersion(spark: SparkSession, dir: String): Option[Long] =
+    liveVersions(spark, dir).lastOption
+
+  /** The versions whose manifests are on disk, ascending. */
+  private def liveVersions(spark: SparkSession, dir: String): Seq[Long] =
+    manifestVersions(store(spark, dir).list(manifestDir(dir)))
+
+  /** The committed versions among a `_manifests/` listing, ascending. */
+  private def manifestVersions(listing: Seq[FileStatus]): Seq[Long] =
+    listing.map(_.getPath.getName)
       .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
         s.stripPrefix("v").stripSuffix(".json") }
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (vs.isEmpty) None else Some(vs.max)
-  }
+      .flatMap(s => scala.util.Try(s.toLong).toOption).sorted
 
   /** Reader features THIS code understands. A manifest written by a
     * newer engine lists the features its resolution depends on
@@ -287,15 +289,10 @@ object SnapshotTable {
 
   private def manifestNode(spark: SparkSession, dir: String,
                            v: Long): com.fasterxml.jackson.databind.JsonNode = {
-    val f = fs(spark, dir)
-    val p = manifestPath(dir, v)
-    if (!f.exists(p))
+    val txt = store(spark, dir).readText(manifestPath(dir, v)).getOrElse(
       throw new java.io.IOException(
         s"manifest v$v missing under $dir — vacuumed past the time-travel " +
-          "horizon, or the table directory was modified out of band")
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+          "horizon, or the table directory was modified out of band"))
     val node = mapper.readTree(txt)
     val unknown = strSeq(node, "features").filterNot(SupportedFeatures)
     if (unknown.nonEmpty)
@@ -395,7 +392,7 @@ object SnapshotTable {
     * a COMMIT only ever writes O(batch) bytes, not O(table). */
   private def stateOf(spark: SparkSession, dir: String,
                       v: Long): TableState = {
-    val fst = try fs(spark, dir).getFileStatus(manifestPath(dir, v))
+    val fst = try store(spark, dir).status(manifestPath(dir, v))
     catch { case _: java.io.FileNotFoundException =>
       throw new java.io.IOException(
         s"manifest v$v missing under $dir — vacuumed past the time-travel " +
@@ -566,15 +563,10 @@ object SnapshotTable {
       val hit = segmentCache.get(key)
       if (hit != null) return hit
     }
-    val f = fs(spark, dir)
-    val p = new Path(manifestDir(dir), name)
-    if (!f.exists(p))
-      throw new java.io.IOException(
+    val txt = store(spark, dir).readText(new Path(manifestDir(dir), name))
+      .getOrElse(throw new java.io.IOException(
         s"checkpoint segment $name missing under $dir — vacuumed past " +
-          "the horizon, or the table directory was modified out of band")
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+          "the horizon, or the table directory was modified out of band"))
     val n = mapper.readTree(txt)
     val seg = Segment(strSeq(n, "files"), statsOf(n), bloomRefsOf(n),
       sizesOf(n), dvRefsOf(n))
@@ -779,9 +771,9 @@ object SnapshotTable {
     * a DataFrame so it composes with SQL. Vacuumed versions are
     * simply absent — the log is exactly as durable as time travel. */
   def history(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val latest = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(s"history: no committed version under $dir"))
-    val f = fs(spark, dir)
+    val live = liveVersions(spark, dir)
+    if (live.isEmpty)
+      throw new java.io.IOException(s"history: no committed version under $dir")
     // One ASCENDING pass carrying the previous version's state: each
     // manifest is read exactly once (op and delta come from the same
     // node), and nothing routes through the global LRU state cache —
@@ -792,30 +784,28 @@ object SnapshotTable {
     // checkpoint rewrite of the oldest kept version); stateOf stays
     // as a fallback for a chain that violates that.
     var prev: Option[(Long, TableState)] = None
-    val rows = (0L to latest)
-      .filter(v => f.exists(manifestPath(dir, v)))
-      .map { v =>
-        val node = manifestNode(spark, dir, v)
-        val st =
-          if (node.get("files") != null || node.get("segments") != null ||
-              v == 0L) fullState(spark, dir, node)
-          else prev match {
-            case Some((pv, ps)) if pv == v - 1 => deltaState(ps, node)
-            case _ => stateOf(spark, dir, v)
-          }
-        val op = Option(node.get("op")).map(_.asText).getOrElse("commit")
-        val prevFiles = prev match {
-          case Some((pv, ps)) if pv == v - 1 => ps.files.toSet
-          case _ => Set.empty[String]
+    val rows = live.map { v =>
+      val node = manifestNode(spark, dir, v)
+      val st =
+        if (node.get("files") != null || node.get("segments") != null ||
+            v == 0L) fullState(spark, dir, node)
+        else prev match {
+          case Some((pv, ps)) if pv == v - 1 => deltaState(ps, node)
+          case _ => stateOf(spark, dir, v)
         }
-        prev = Some((v, st))
-        val cur = st.files.toSet
-        (v, op,
-          Option(node.get("ts")).map(t => java.lang.Long.valueOf(t.asLong))
-            .orNull.asInstanceOf[java.lang.Long],
-          (cur -- prevFiles).size.toLong, (prevFiles -- cur).size.toLong,
-          st.files.length.toLong, st.sizes.values.sum)
+      val op = Option(node.get("op")).map(_.asText).getOrElse("commit")
+      val prevFiles = prev match {
+        case Some((pv, ps)) if pv == v - 1 => ps.files.toSet
+        case _ => Set.empty[String]
       }
+      prev = Some((v, st))
+      val cur = st.files.toSet
+      (v, op,
+        Option(node.get("ts")).map(t => java.lang.Long.valueOf(t.asLong))
+          .orNull.asInstanceOf[java.lang.Long],
+        (cur -- prevFiles).size.toLong, (prevFiles -- cur).size.toLong,
+        st.files.length.toLong, st.sizes.values.sum)
+    }
     import spark.implicits._
     rows.toDF("version", "op", "commit_ts", "n_added", "n_removed",
       "n_files", "total_bytes")
@@ -868,19 +858,16 @@ object SnapshotTable {
     * `TIMESTAMP AS OF` resolves against. One manifest read per
     * surviving version — control plane. */
   def commitTimeline(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
-    val latest = latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"commitTimeline: no committed version under $dir"))
-    val f = fs(spark, dir)
+    val live = liveVersions(spark, dir)
+    if (live.isEmpty) throw new java.io.IOException(
+      s"commitTimeline: no committed version under $dir")
     var adj = Long.MinValue
-    (0L to latest)
-      .filter(v => f.exists(manifestPath(dir, v)))
-      .map { v =>
-        val raw = Option(manifestNode(spark, dir, v).get("ts"))
-          .map(_.asLong).getOrElse(Long.MinValue)
-        adj = math.max(adj + 1, raw)
-        v -> adj
-      }
+    live.map { v =>
+      val raw = Option(manifestNode(spark, dir, v).get("ts"))
+        .map(_.asLong).getOrElse(Long.MinValue)
+      adj = math.max(adj + 1, raw)
+      v -> adj
+    }
   }
 
   /** Resolve `TIMESTAMP AS OF tsMillis`: the LATEST version whose
@@ -975,11 +962,10 @@ object SnapshotTable {
       }
       root.put(file, cj)
     }
-    val p = new Path(dir, rel)
-    val f = fs(spark, dir)
     // uniquely named per batch, referenced only by the manifest
-    // committed after it — writeTextFile's no-rename contract applies
-    TableIO.writeTextFile(f, p, mapper.writeValueAsString(root))
+    // committed after it — writeNew's no-rename contract applies
+    store(spark, dir).writeNew(new Path(dir, rel),
+      mapper.writeValueAsString(root))
     blooms.keys.map(_ -> rel).toMap
   }
 
@@ -990,12 +976,9 @@ object SnapshotTable {
                               ): Map[String, Map[String, Array[Byte]]] = {
     val p = if (ref.startsWith("_blooms/")) new Path(dir, ref)
             else new Path(ref)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return Map.empty // vacuumed sidecar: un-probeable, kept
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    bloomMapOf(mapper.readTree(txt))
+    // a vacuumed sidecar is un-probeable: its files are kept
+    TableStore(spark.sparkContext.hadoopConfiguration, p).readText(p)
+      .map(txt => bloomMapOf(mapper.readTree(txt))).getOrElse(Map.empty)
   }
 
   /** Add-column schema evolution (the [[graft.catalog.Catalog]] /
@@ -1077,14 +1060,14 @@ object SnapshotTable {
         // driver-side getFileStatus per file feeds a fixed FileIndex
         // instead (the SnapshotFileIndex manifest-only-planning idea,
         // applied to the programmatic read path).
-        val f = fs(spark, dir)
+        val s = store(spark, dir)
         // Independent metadata RPCs — overlap on a bounded pool (the
         // footerSummaries pattern): serial per-file stats on an
         // object store would cost more than the listing job this
         // path removes.
         val statuses =
           if (paths.lengthCompare(4) <= 0)
-            paths.map(p => f.getFileStatus(new Path(p)))
+            paths.map(p => s.status(new Path(p)))
           else {
             val pool = java.util.concurrent.Executors.newFixedThreadPool(
               math.min(8, paths.length))
@@ -1092,7 +1075,7 @@ object SnapshotTable {
               scala.concurrent.ExecutionContext.fromExecutor(pool)
             try scala.concurrent.Await.result(
               scala.concurrent.Future.sequence(paths.map(p =>
-                scala.concurrent.Future(f.getFileStatus(new Path(p))))),
+                scala.concurrent.Future(s.status(new Path(p))))),
               scala.concurrent.duration.Duration.Inf)
             finally pool.shutdown()
           }
@@ -1393,9 +1376,7 @@ object SnapshotTable {
     putMap("sizes", sizes)(n => java.lang.Long.valueOf(n))
     putMap("dvrefs", dvRefs)(r => r)
     val name = s"seg-v$v-${java.util.UUID.randomUUID()}.json"
-    val f = fs(spark, dir)
-    f.mkdirs(manifestDir(dir))
-    TableIO.atomicWriteText(f, new Path(manifestDir(dir), name),
+    store(spark, dir).overwrite(new Path(manifestDir(dir), name),
       mapper.writeValueAsString(root))
     name
   }
@@ -1427,10 +1408,9 @@ object SnapshotTable {
                         defaultsOpt: Option[Map[String,
                           (String, Set[String])]] = None
                        ): Boolean = commitLock.synchronized {
-    val f = fs(spark, dir)
-    f.mkdirs(manifestDir(dir))
+    val s = store(spark, dir)
     val target = manifestPath(dir, v)
-    if (f.exists(target)) return false
+    if (s.exists(target)) return false
     val full = v == 0L || v % CheckpointEvery == 0L
     // None = inherit the parent's constraint set (constraints are
     // table policy — only addConstraint/dropConstraint pass Some).
@@ -1466,7 +1446,7 @@ object SnapshotTable {
       schema, bloomRefs, bloomCols, sizes, op, dvRefs, bucket,
       effConstraints, colMap = effColMap, retired = effRetired,
       props = effProps, defaults = effDefaults)
-    TableIO.createTextExclusive(f, target, body)
+    s.createExclusive(target, body)
   }
 
   /** Serialize a manifest body — full checkpoint form, or a delta
@@ -2407,14 +2387,14 @@ object SnapshotTable {
     }
     val vcs = enforceConstraints(spark, dir, df, "appendPartitioned")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val f = fs(spark, dir)
+    val s = store(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     val routed = partitionBy.foldLeft(df)((d, c) =>
       d.withColumn(s"__pv_$c", col(c)))
     internalWrite(routed, batchDir.toString,
       partitionBy.map(c => s"__pv_$c"))
-    val listed = listParquetRec(f, batchDir)
+    val listed = listParquetRec(s, batchDir)
     val added = listed.map(st => manifestKey(dir, st.getPath.toString))
     val sizes = listed.map(st =>
       manifestKey(dir, st.getPath.toString) -> st.getLen).toMap
@@ -2473,11 +2453,11 @@ object SnapshotTable {
     }
     val vcs = enforceConstraints(spark, dir, df, "appendBucketed")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val f = fs(spark, dir)
+    val s = store(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
-    writeBucketedBatch(df, f, batchDir, layout)
-    val listed = listParquetRec(f, batchDir)
+    writeBucketedBatch(df, s, batchDir, layout)
+    val listed = listParquetRec(s, batchDir)
     val added = listed.map(st => manifestKey(dir, st.getPath.toString))
     val sizes = listed.map(st =>
       manifestKey(dir, st.getPath.toString) -> st.getLen).toMap
@@ -2498,7 +2478,7 @@ object SnapshotTable {
     * and then flattened to `part-*_0000K.<ext>` names at the batch
     * root — the `.*_(\d+)(?:\..*)?$` form BucketingUtils parses the
     * bucket id from on the read side. */
-  private def writeBucketedBatch(df: DataFrame, f: FileSystem,
+  private def writeBucketedBatch(df: DataFrame, f: TableStore,
                                  batchDir: Path,
                                  layout: BucketLayout): Unit = {
     val bk = pmod(hash(layout.cols.map(col): _*), lit(layout.numBuckets))
@@ -2506,10 +2486,10 @@ object SnapshotTable {
       .repartition(layout.numBuckets, col("__bk"))
       .sortWithinPartitions(("__bk" +: layout.sortCols).map(col): _*)
     internalWrite(routed, batchDir.toString, Seq("__bk"))
-    for (d <- f.listStatus(batchDir) if d.isDirectory &&
+    for (d <- f.list(batchDir) if d.isDirectory &&
          d.getPath.getName.startsWith("__bk=")) {
       val id = d.getPath.getName.stripPrefix("__bk=").toInt
-      for (s <- f.listStatus(d.getPath)
+      for (s <- f.list(d.getPath)
            if s.isFile && s.getPath.getName.endsWith(".parquet")) {
         val name = s.getPath.getName
         val dot = name.indexOf('.')
@@ -2559,14 +2539,14 @@ object SnapshotTable {
     val vcs =
       enforceConstraints(spark, dir, df, "transactionalAppendPartitioned")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val f = fs(spark, dir)
+    val s = store(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     val routed = partitionBy.foldLeft(df)((d, c) =>
       d.withColumn(s"__pv_$c", col(c)))
     internalWrite(routed, batchDir.toString,
       partitionBy.map(c => s"__pv_$c"))
-    val listed = listParquetRec(f, batchDir)
+    val listed = listParquetRec(s, batchDir)
     val added = listed.map(st => manifestKey(dir, st.getPath.toString))
     val sizes = listed.map(st =>
       manifestKey(dir, st.getPath.toString) -> st.getLen).toMap
@@ -2579,16 +2559,8 @@ object SnapshotTable {
       validatedConstraints = vcs)
   }
 
-  private def listParquetRec(f: FileSystem, p: Path): Seq[FileStatus] = {
-    val it = f.listFiles(p, true)
-    val b = Seq.newBuilder[FileStatus]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-        b += s
-    }
-    b.result()
-  }
+  private def listParquetRec(f: TableStore, p: Path): Seq[FileStatus] =
+    f.listFiles(p).filter(_.getPath.getName.endsWith(".parquet"))
 
   /** Write `df` into a fresh unique batch dir; return (relative file
     * paths, their stats). No two writers can collide on data paths,
@@ -2673,13 +2645,13 @@ object SnapshotTable {
       case Some(c) => df.select(df.columns.map(cn =>
         col(cn).as(physName(c.colMap, cn))).toSeq: _*)
     }
-    val f = fs(spark, dir)
+    val f = store(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     labeled(spark, "write-batch:data") {
       internalWrite(physDf, batchDir.toString)
     }
-    val listed = f.listStatus(batchDir).toSeq
+    val listed = f.list(batchDir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val added = listed.map(s => s"data/$batch/${s.getPath.getName}")
     val sizes = listed.map(s =>
@@ -3454,7 +3426,7 @@ object SnapshotTable {
       "compact: bucketBy and numBuckets go together")
     require(bucketBy.nonEmpty || bucketSortBy.isEmpty,
       "compact: bucketSortBy requires bucketBy")
-    val f = fs(spark, dir)
+    val f = store(spark, dir)
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(s"compact: no committed version under $dir"))
     val old = manifestFiles(spark, dir, base)
@@ -3463,7 +3435,7 @@ object SnapshotTable {
     // Manifest sizes when recorded (every writer since r7); RPC
     // fallback per legacy file.
     val totalBytes = old.map(p => baseSizes.getOrElse(p,
-      f.getFileStatus(new Path(dir, p)).getLen)).sum
+      f.status(new Path(dir, p)).getLen)).sum
     val nTarget = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (old.length <= nTarget && clusterBy.isEmpty && zOrderBy.isEmpty &&
         bucketBy.isEmpty)
@@ -3520,11 +3492,9 @@ object SnapshotTable {
             col(c).as(physName(cm, c))).toSeq: _*)
         internalWrite(laidPhys, batchDir.toString)
     }
-    val rewritten = f.listStatus(batchDir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"data/$batch/${s.getPath.getName}")
-    val rewrittenList = f.listStatus(batchDir).toSeq
+    val rewrittenList = f.list(batchDir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    val rewritten = rewrittenList.map(s => s"data/$batch/${s.getPath.getName}")
     val rewrittenSizes = rewrittenList.map(st =>
       s"data/$batch/${st.getPath.getName}" -> st.getLen).toMap
     // strict=false: trackedBlooms is the table's RECORDED column list,
@@ -3620,10 +3590,10 @@ object SnapshotTable {
       throw new java.io.IOException(
         s"binPackSmall: no committed version under $dir"))
     val st = stateOf(spark, dir, base)
-    val f = fs(spark, dir)
+    val f = store(spark, dir)
     val candidates = st.files.filter { p =>
       st.sizes.getOrElse(p,
-        f.getFileStatus(new Path(dir, p)).getLen) < smallerThanBytes
+        f.status(new Path(dir, p)).getLen) < smallerThanBytes
     }.sorted
     compactFiles(spark, dir, base, candidates, targetBytes,
       "binPackSmall", maxRetries)
@@ -3642,9 +3612,9 @@ object SnapshotTable {
                            op: String, maxRetries: Int): Option[Long] = {
     if (candidates.isEmpty) return None
     val st = stateOf(spark, dir, base)
-    val f = fs(spark, dir)
+    val f = store(spark, dir)
     val totalBytes = candidates.map(p => st.sizes.getOrElse(p,
-      f.getFileStatus(new Path(dir, p)).getLen)).sum
+      f.status(new Path(dir, p)).getLen)).sum
     val nTarget =
       math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (candidates.length <= nTarget &&
@@ -4248,7 +4218,7 @@ object SnapshotTable {
     * rather than rolling back). */
   def restore(spark: SparkSession, dir: String, toVersion: Long,
               maxRetries: Int = 20): Option[Long] = {
-    val f = fs(spark, dir)
+    val f = store(spark, dir)
     val target = stateOf(spark, dir, toVersion) // throws once vacuumed
     val targetSchema = manifestSchema(spark, dir, toVersion)
     var attempt = 0
@@ -4315,30 +4285,46 @@ object SnapshotTable {
     * 100 TB a mis-set keepVersions is the difference between "freed
     * some orphans" and "destroyed a month of time travel". */
   def vacuumPreview(spark: SparkSession, dir: String, keepVersions: Int = 2,
-                    minAgeMs: Long = 60L * 60 * 1000): (Int, Int) = {
+                    minAgeMs: Long = 60L * 60 * 1000): (Int, Int) =
+    vacuumPlan(spark, dir, keepVersions, minAgeMs)
+      .map(pl => (pl.orphans.length, pl.expired.length)).getOrElse((0, 0))
+
+  /** What one vacuum run sees, computed once for [[vacuum]] and
+    * [[vacuumPreview]] alike: the kept versions (those on disk in the
+    * window), the expired ones below it, the age cutoff, the rest of
+    * the `_manifests/` listing, and the orphan data files —
+    * unreferenced by every kept manifest and older than the cutoff.
+    * None for a table with no committed version. */
+  private final case class VacuumPlan(keepFrom: Long, kept: Seq[Long],
+                                      expired: Seq[Long], cutoff: Long,
+                                      manifestListing: Seq[FileStatus],
+                                      orphans: Seq[FileStatus])
+
+  private def vacuumPlan(spark: SparkSession, dir: String,
+                         keepVersions: Int, minAgeMs: Long
+                        ): Option[VacuumPlan] = {
     require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val f = fs(spark, dir)
-    val latest = latestVersion(spark, dir).getOrElse(return (0, 0))
-    val keepFrom = math.max(0L, latest - (keepVersions - 1))
-    val referenced = (keepFrom to latest)
-      .filter(v => f.exists(manifestPath(dir, v)))
-      .flatMap(v => manifestFiles(spark, dir, v)).toSet
-    val dataRoot = new Path(dir, "data")
+    val s = store(spark, dir)
+    val listing = s.list(manifestDir(dir))
+    val versions = manifestVersions(listing)
+    if (versions.isEmpty) return None
+    val keepFrom = math.max(0L, versions.last - (keepVersions - 1))
+    val (expired, kept) = versions.partition(_ < keepFrom)
+    val referenced = kept.flatMap(v => manifestFiles(spark, dir, v)).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
-    var files = 0
-    if (f.exists(dataRoot)) {
-      val it = f.listFiles(dataRoot, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile &&
-            !referenced.contains(manifestKey(dir, st.getPath.toString)) &&
-            st.getModificationTime <= cutoff)
-          files += 1
-      }
+    // Recursive: appendPartitioned nests partition directories under
+    // the batch dir, so a two-level listing would silently leak
+    // partitioned orphans forever. Only files under OUR data/ are
+    // candidates; a shallowClone's foreign absolute references are
+    // never touched (they are not under this listing), and our files
+    // a clone references ARE still referenced by our own kept
+    // manifests — the clone-vs-source-vacuum contract is documented
+    // on [[shallowClone]].
+    val orphans = s.listFiles(new Path(dir, "data")).filter { st =>
+      !referenced.contains(manifestKey(dir, st.getPath.toString)) &&
+        st.getModificationTime <= cutoff
     }
-    val manifests = (0L until keepFrom)
-      .count(v => f.exists(manifestPath(dir, v)))
-    (files, manifests)
+    Some(VacuumPlan(keepFrom, kept, expired, cutoff, listing, orphans))
   }
 
   /** TIME-based retention (the public `VACUUM … RETAIN n HOURS`
@@ -4366,45 +4352,22 @@ object SnapshotTable {
 
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int = 2,
              minAgeMs: Long = 60L * 60 * 1000): Int = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val f = fs(spark, dir)
-    val latest = latestVersion(spark, dir).getOrElse(return 0)
-    val keepFrom = math.max(0L, latest - (keepVersions - 1))
-    val referenced = (keepFrom to latest)
-      .filter(v => f.exists(manifestPath(dir, v)))
-      .flatMap(v => manifestFiles(spark, dir, v)).toSet
+    val plan = vacuumPlan(spark, dir, keepVersions, minAgeMs)
+      .getOrElse(return 0)
+    import plan.{cutoff, keepFrom}
+    val s = store(spark, dir)
     val dataRoot = new Path(dir, "data")
-    if (!f.exists(dataRoot)) return 0
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    var deleted = 0
-    // Recursive walk: appendPartitioned nests partition directories
-    // under the batch dir, so a two-level listing would silently leak
-    // partitioned orphans forever. Only files under OUR data/ are
-    // candidates; a shallowClone's foreign absolute references are
-    // never touched (they are not under this listing), and our files
-    // a clone references ARE still referenced by our own kept
-    // manifests — the clone-vs-source-vacuum contract is documented
-    // on [[shallowClone]].
-    val it = f.listFiles(dataRoot, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        val key = manifestKey(dir, st.getPath.toString)
-        if (!referenced.contains(key) && st.getModificationTime <= cutoff) {
-          if (f.delete(st.getPath, false)) deleted += 1
-        }
-      }
-    }
+    val deleted = plan.orphans.count(st => s.delete(st.getPath))
     def pruneEmptyDirs(p: Path): Boolean = { // true = now empty+removed
-      val children = f.listStatus(p)
+      val children = s.list(p)
       val allGone = children.forall { c =>
         c.isDirectory && pruneEmptyDirs(c.getPath)
       }
       if (allGone && children.nonEmpty || children.isEmpty) {
-        if (p != dataRoot) f.delete(p, false) else false
+        if (p != dataRoot) s.delete(p) else false
       } else false
     }
-    pruneEmptyDirs(dataRoot)
+    if (s.exists(dataRoot)) pruneEmptyDirs(dataRoot)
     // Before the pre-window manifests go, the window's OLDEST version
     // must become self-contained: a delta-form manifest at keepFrom
     // would need the very chain being deleted to reconstruct. Rewrite
@@ -4441,19 +4404,16 @@ object SnapshotTable {
           // place — no instant at which v<keepFrom> is missing for a
           // concurrent reader, who takes no lock). Filesystems whose
           // rename refuses an existing destination (HDFS-class) fall
-          // back inside atomicWriteText to delete+rename — the only
+          // back inside HadoopStore.overwrite to delete+rename — the only
           // remaining (store-imposed) window.
-          TableIO.atomicWriteText(f, manifestPath(dir, keepFrom), body)
+          s.overwrite(manifestPath(dir, keepFrom), body)
         }
       }
     }
     // Old manifests: anything before the keep window. Cached states
     // below the horizon are dropped too — a vacuumed version must
     // fail loudly, not serve stale file lists whose data is gone.
-    (0L until keepFrom).foreach { v =>
-      val p = manifestPath(dir, v)
-      if (f.exists(p)) f.delete(p, false)
-    }
+    plan.expired.foreach(v => s.delete(manifestPath(dir, v)))
     val dirKey = new Path(dir).toUri.getPath
     stateCache.synchronized {
       val it = stateCache.keySet.iterator()
@@ -4462,51 +4422,46 @@ object SnapshotTable {
         if (d == dirKey && v < keepFrom) it.remove()
       }
     }
+    // States of the kept window, read AFTER the checkpoint rewrite:
+    // the rewritten keepFrom no longer references its old segments.
+    val keptStates = plan.kept.map(stateOf(spark, dir, _))
     // Checkpoint SEGMENTS referenced by no kept manifest are orphans
     // (superseded by later checkpoints' folds, lost commit races,
-    // vacuumed versions). Age-guarded: a segment written by an
-    // in-flight checkpoint that has not CAS'd its manifest yet must
-    // survive. Segment names are UUID-fresh, so a kept reference can
-    // never be confused with an orphan.
-    val keptSegs = (keepFrom to latest)
-      .filter(v => f.exists(manifestPath(dir, v)))
-      .flatMap(v => stateOf(spark, dir, v).segments.map(_._1)).toSet
-    f.listStatus(manifestDir(dir)).foreach { s =>
-      val nm = s.getPath.getName
-      if (s.isFile && nm.startsWith("seg-") && nm.endsWith(".json") &&
-          !keptSegs.contains(nm) && s.getModificationTime <= cutoff)
-        f.delete(s.getPath, false)
+    // vacuumed versions), and so are the hidden `.<name>.tmp` files a
+    // writer killed between its temp write and the publish leaves in
+    // `_manifests/`. Age-guarded: a segment written by an in-flight
+    // checkpoint that has not CAS'd its manifest yet — or a temp
+    // that is still being published — must survive. Segment names are
+    // UUID-fresh, so a kept reference can never be confused with an
+    // orphan.
+    val keptSegs = keptStates.flatMap(_.segments.map(_._1)).toSet
+    plan.manifestListing.foreach { st =>
+      val nm = st.getPath.getName
+      val orphanSeg = nm.startsWith("seg-") && nm.endsWith(".json") &&
+        !keptSegs.contains(nm)
+      val deadTemp = nm.startsWith(".") && nm.endsWith(".tmp")
+      if (st.isFile && (orphanSeg || deadTemp) &&
+          st.getModificationTime <= cutoff)
+        s.delete(st.getPath)
     }
     // Bloom sidecars referenced by NO kept manifest are orphans too
     // (crashed appends, vacuumed batches). Age-guarded like data
     // files: a written-not-yet-committed sidecar must survive.
-    val bloomRoot = new Path(dir, "_blooms")
-    if (f.exists(bloomRoot)) {
-      val keptRefs = (keepFrom to latest)
-        .filter(v => f.exists(manifestPath(dir, v)))
-        .flatMap(v => stateOf(spark, dir, v).bloomRefs.values).toSet
-      f.listStatus(bloomRoot).foreach { s =>
-        val rel = s"_blooms/${s.getPath.getName}"
-        if (s.isFile && !keptRefs.contains(rel) &&
-            s.getModificationTime <= cutoff)
-          f.delete(s.getPath, false)
-      }
+    val keptRefs = keptStates.flatMap(_.bloomRefs.values).toSet
+    s.list(new Path(dir, "_blooms")).foreach { st =>
+      if (st.isFile && !keptRefs.contains(s"_blooms/${st.getPath.getName}") &&
+          st.getModificationTime <= cutoff)
+        s.delete(st.getPath)
     }
     // Deletion-vector sidecars (parquet DIRECTORIES under _dv/): same
     // orphan rule — superseded vectors (a later MoR delete replaced
     // the file's ref) and vectors of vacuumed versions GC once no
     // kept manifest references them.
-    val dvRoot = new Path(dir, "_dv")
-    if (f.exists(dvRoot)) {
-      val keptDvRefs = (keepFrom to latest)
-        .filter(v => f.exists(manifestPath(dir, v)))
-        .flatMap(v => stateOf(spark, dir, v).dvRefs.values).toSet
-      f.listStatus(dvRoot).foreach { s =>
-        val rel = s"_dv/${s.getPath.getName}"
-        if (s.isDirectory && !keptDvRefs.contains(rel) &&
-            s.getModificationTime <= cutoff)
-          f.delete(s.getPath, true)
-      }
+    val keptDvRefs = keptStates.flatMap(_.dvRefs.values).toSet
+    s.list(new Path(dir, "_dv")).foreach { st =>
+      if (st.isDirectory && !keptDvRefs.contains(s"_dv/${st.getPath.getName}") &&
+          st.getModificationTime <= cutoff)
+        s.delete(st.getPath, recursive = true)
     }
     deleted
   }

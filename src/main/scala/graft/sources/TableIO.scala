@@ -20,129 +20,6 @@ object TableIO {
 
   val Formats: Seq[String] = Seq("parquet", "orc", "json", "csv")
 
-  /** The `file:` scheme's java.nio handle for `p`, or None off the
-    * local filesystem — the per-filesystem LogStore specialization
-    * (the public Delta/Iceberg design: each store gets the cheapest
-    * primitive that honors the same contract). Hadoop's local
-    * FileSystem without native libs FORKS a chmod process per
-    * create/mkdir (Shell.runCommand — measured 25-100 ms of driver
-    * wall per table commit) and layers checksum sidecars; java.nio
-    * performs the identical create+rename contract in-process.
-    * Non-local filesystems keep the Hadoop path untouched. */
-  private def localNioPath(fs: org.apache.hadoop.fs.FileSystem,
-                           p: org.apache.hadoop.fs.Path
-                          ): Option[java.nio.file.Path] =
-    if (fs.getScheme == "file" && p.toUri.getPath != null &&
-        p.toUri.getPath.startsWith("/"))
-      Some(java.nio.file.Paths.get(p.toUri.getPath))
-    else None
-
-  /** A previous Hadoop-path write may have left a checksum sidecar;
-    * after an NIO overwrite it would be stale and fail a checksummed
-    * re-read — drop it (best effort). */
-  private def dropCrcSidecar(t: java.nio.file.Path): Unit =
-    try java.nio.file.Files.deleteIfExists(
-      t.resolveSibling("." + t.getFileName.toString + ".crc"))
-    catch { case _: java.io.IOException => () }
-
-  /** Content-atomic small-file write (index sidecars, metadata): the
-    * body lands fully in a hidden temp name, then RENAMES into place —
-    * a reader racing a rebuild sees the old content or the new,
-    * never a truncated prefix (a cleanly truncated matrix string can
-    * parse as a SHORTER valid matrix and probe with the wrong
-    * quantizer — silent wrong neighbors, not a loud parse error).
-    * POSIX/local rename overwrites in place; filesystems whose rename
-    * refuses an existing destination fall back to delete+rename. */
-  def atomicWriteText(fs: org.apache.hadoop.fs.FileSystem,
-                      target: org.apache.hadoop.fs.Path,
-                      text: String): Unit = localNioPath(fs, target) match {
-    case Some(t) =>
-      java.nio.file.Files.createDirectories(t.getParent)
-      val tmp = t.resolveSibling(
-        s".${t.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmp, text.getBytes("UTF-8"))
-      // rename(2): atomically replaces an existing target in place
-      java.nio.file.Files.move(tmp, t,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      dropCrcSidecar(t)
-    case None =>
-      val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-        s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, false)
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-      val direct = try fs.rename(tmp, target)
-      catch { case _: java.io.IOException => false }
-      if (!direct) {
-        fs.delete(target, false)
-        if (!fs.rename(tmp, target)) {
-          fs.delete(tmp, false)
-          throw new java.io.IOException(
-            s"atomicWriteText: rename to $target failed")
-        }
-      }
-  }
-
-  /** Exclusive-create commit primitive: land `text` at `target`
-    * atomically, FAILING (false) when the target already exists — the
-    * manifest-commit race arbitration. Local path: write a temp file
-    * and hard-LINK it into place (link(2) fails EEXIST atomically —
-    * strictly stronger than the Hadoop exists-check+rename, which has
-    * a cross-process window); elsewhere the Hadoop create+rename the
-    * commit protocol always used. */
-  def createTextExclusive(fs: org.apache.hadoop.fs.FileSystem,
-                          target: org.apache.hadoop.fs.Path,
-                          text: String): Boolean =
-    localNioPath(fs, target) match {
-      case Some(t) =>
-        java.nio.file.Files.createDirectories(t.getParent)
-        val tmp = t.resolveSibling(
-          s".${t.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-        java.nio.file.Files.write(tmp, text.getBytes("UTF-8"))
-        val ok =
-          try { java.nio.file.Files.createLink(t, tmp); true }
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-            case _: UnsupportedOperationException =>
-              // no hard links on this mount: exists-check + move, the
-              // same window the Hadoop path has
-              if (java.nio.file.Files.exists(t)) false
-              else {
-                try { java.nio.file.Files.move(tmp, t); true }
-                catch {
-                  case _: java.nio.file.FileAlreadyExistsException => false
-                }
-              }
-          }
-        java.nio.file.Files.deleteIfExists(tmp)
-        ok
-      case None =>
-        if (fs.exists(target)) return false
-        val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-          s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
-        val out = fs.create(tmp, false)
-        try out.write(text.getBytes("UTF-8")) finally out.close()
-        val ok = try fs.rename(tmp, target)
-        catch { case _: java.io.IOException => false }
-        if (!ok) fs.delete(tmp, false)
-        ok
-    }
-
-  /** Plain small-file write of a NEVER-OVERWRITTEN, uniquely-named
-    * file (per-batch sidecars referenced only by a manifest committed
-    * afterwards — partial content is unreachable by construction).
-    * Local path skips the Hadoop create's fork. */
-  def writeTextFile(fs: org.apache.hadoop.fs.FileSystem,
-                    target: org.apache.hadoop.fs.Path,
-                    text: String): Unit = localNioPath(fs, target) match {
-    case Some(t) =>
-      java.nio.file.Files.createDirectories(t.getParent)
-      java.nio.file.Files.write(t, text.getBytes("UTF-8"))
-    case None =>
-      fs.mkdirs(target.getParent)
-      val out = fs.create(target, false)
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
-
   def write(df: DataFrame, path: String, format: String,
             mode: String = "overwrite"): Unit = {
     val w = df.write.mode(mode).format(format)

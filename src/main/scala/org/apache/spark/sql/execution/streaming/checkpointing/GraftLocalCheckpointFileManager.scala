@@ -1,15 +1,17 @@
 package org.apache.spark.sql.execution.streaming.checkpointing
 
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path, PathFilter}
+import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path, PathFilter, UnsupportedFileSystemException}
+
+import graft.sources.{LocalStore, TableStore}
 
 import CheckpointFileManager.CancellableFSDataOutputStream
 
 /** Streaming-checkpoint file manager with a java.nio fast path for
-  * `file:` checkpoints — the same per-filesystem LogStore discipline
-  * graft's own manifest commits use (TableIO). Hadoop's local
+  * `file:` checkpoints — the same store choice graft's own manifest
+  * commits make ([[graft.sources.TableStore]]). Hadoop's local
   * FileSystem/FileContext without native libs FORKS a chmod process
   * per create/rename (Shell.runCommand under
   * FileContextBasedCheckpointFileManager.createTempFile/renameTempFile
@@ -17,21 +19,22 @@ import CheckpointFileManager.CancellableFSDataOutputStream
   * paid twice per batch for the offset and commit logs); java.nio
   * performs the identical create-temp + atomic-rename contract
   * in-process. Non-local checkpoint locations delegate verbatim to
-  * Spark's default [[FileContextBasedCheckpointFileManager]], so
-  * enabling this class session-wide changes nothing on HDFS-class
-  * stores. Selected via the public
-  * `spark.sql.streaming.checkpointFileManagerClass` plugin conf. */
+  * Spark's default manager — FileContext-based, or FileSystem-based
+  * for a scheme with no AbstractFileSystem, the same fallback as
+  * `CheckpointFileManager.create` — so enabling this class
+  * session-wide changes nothing on HDFS-class stores. Selected via
+  * the public `spark.sql.streaming.checkpointFileManagerClass` plugin
+  * conf. */
 class GraftLocalCheckpointFileManager(root: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
   import GraftLocalCheckpointFileManager.NioAtomicStream
 
-  private val local = {
-    val s = root.toUri.getScheme
-    (s == null || s == "file") && root.toUri.getPath != null
-  }
+  private val local = TableStore(hadoopConf, root) eq LocalStore
   private lazy val delegate =
-    new FileContextBasedCheckpointFileManager(root, hadoopConf)
-  // reads/lists/deletes never fork — the Hadoop path is fine for them
+    try new FileContextBasedCheckpointFileManager(root, hadoopConf)
+    catch { case _: UnsupportedFileSystemException =>
+      new FileSystemBasedCheckpointFileManager(root, hadoopConf) }
+  // reads and lists never fork — the Hadoop path is fine for them
   private lazy val fs = root.getFileSystem(hadoopConf)
 
   private def nio(p: Path): java.nio.file.Path = Paths.get(p.toUri.getPath)
@@ -58,14 +61,11 @@ class GraftLocalCheckpointFileManager(root: Path, hadoopConf: Configuration)
     else { Files.createDirectories(nio(path)); () }
 
   override def exists(path: Path): Boolean =
-    if (!local) delegate.exists(path) else Files.exists(nio(path))
+    if (!local) delegate.exists(path) else LocalStore.exists(path)
 
   override def delete(path: Path): Unit =
     if (!local) delegate.delete(path)
-    else {
-      try { fs.delete(path, true); () }
-      catch { case _: java.io.FileNotFoundException => () }
-    }
+    else { LocalStore.delete(path, recursive = true); () }
 
   override def isLocal: Boolean = local
 
@@ -77,8 +77,8 @@ class GraftLocalCheckpointFileManager(root: Path, hadoopConf: Configuration)
 
 object GraftLocalCheckpointFileManager {
 
-  /** Write-to-temp + atomic-rename-on-close, all java.nio. The engine
-    * races batch commits on purpose and catches Hadoop's
+  /** Write-to-temp + publish-on-close through [[LocalStore.publish]].
+    * The engine races batch commits on purpose and catches Hadoop's
     * FileAlreadyExistsException — non-overwrite collisions translate
     * to exactly that type. */
   private final class NioAtomicStream(tmp: java.nio.file.Path,
@@ -92,35 +92,11 @@ object GraftLocalCheckpointFileManager {
     override def close(): Unit = synchronized {
       if (terminated) return
       terminated = true
-      super.close()
-      if (overwriteIfPossible) {
-        // rename(2): atomically replaces an existing destination
-        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      } else {
-        // link(2) fails EEXIST atomically — the exclusive-commit shape
-        try { Files.createLink(dst, tmp); Files.delete(tmp) }
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            Files.deleteIfExists(tmp)
-            throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-              s"rename destination $dst already exists")
-          case _: UnsupportedOperationException =>
-            // no hard links on this mount: the same exists+move window
-            // the default manager has
-            if (Files.exists(dst)) {
-              Files.deleteIfExists(tmp)
-              throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-                s"rename destination $dst already exists")
-            }
-            try Files.move(tmp, dst)
-            catch {
-              case _: java.nio.file.FileAlreadyExistsException =>
-                Files.deleteIfExists(tmp)
-                throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-                  s"rename destination $dst already exists")
-            }
-        }
-      }
+      try super.close()
+      catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+      if (!LocalStore.publish(tmp, dst, overwriteIfPossible))
+        throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+          s"rename destination $dst already exists")
     }
 
     override def cancel(): Unit = synchronized {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -16,8 +15,8 @@ class GraftDataSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-ds-$tag").toString + "/t"
+  private def tmp(tag: String, scheme: String = "file"): String =
+    SparkTestBase.tmpRoot(s"graft-ds-$tag", scheme) + "/t"
 
   test("batch read: format(graft) resolves via service loader, versionAsOf time-travels") {
     val dir = tmp("read")
@@ -164,9 +163,10 @@ class GraftDataSourceSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("mutually exclusive")))
   }
 
-  test("streaming sink: exactly-once landing through the txn ledger, appId required") {
-    val dir = tmp("sink")
-    val ckpt = Files.createTempDirectory("graft-ds-ckpt").toString
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("streaming sink: exactly-once landing through the txn ledger, appId required" + tag) {
+    val dir = tmp("sink", scheme)
+    val ckpt = SparkTestBase.tmpRoot("graft-ds-ckpt", scheme)
     val input = MemoryStream[Long](spark)
     val q = input.toDF().toDF("id")
       .writeStream.format("graft")
@@ -292,10 +292,11 @@ class GraftDataSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("graft-to-graft pipe: source table streams into sink table exactly once") {
-    val src = tmp("pipe-src")
-    val dst = tmp("pipe-dst")
-    val ckpt = Files.createTempDirectory("graft-ds-pipe").toString
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("graft-to-graft pipe: source table streams into sink table exactly once" + tag) {
+    val src = tmp("pipe-src", scheme)
+    val dst = tmp("pipe-dst", scheme)
+    val ckpt = SparkTestBase.tmpRoot("graft-ds-pipe", scheme)
     SnapshotTable.append(spark.range(0, 20).toDF(), src)
     val q = spark.readStream.format("graft").load(src)
       .writeStream.format("graft")

@@ -14,8 +14,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-rate-$tag").toString + "/t"
+  private def tmp(tag: String, scheme: String = "file"): String =
+    SparkTestBase.tmpRoot(s"graft-rate-$tag", scheme) + "/t"
 
   /** `n` more single-row files with ids starting at `from`. */
   private def mkFiles(dir: String, n: Int, from: Long = 0L): Unit =
@@ -58,9 +58,10 @@ class GraftRateLimitSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).select("id").distinct().count() == 10)
   }
 
-  test("restart mid-drain continues from the checkpoint, no dupes/gaps") {
-    val dir = tmp("restart"); mkFiles(dir, 6)
-    val ckpt = Files.createTempDirectory("rate-ck2").toString
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("restart mid-drain continues from the checkpoint, no dupes/gaps" + tag) {
+    val dir = tmp("restart", scheme); mkFiles(dir, 6)
+    val ckpt = SparkTestBase.tmpRoot("rate-ck2", scheme)
     val out = Files.createTempDirectory("rate-out2").toString + "/p"
     // first run: ONE trigger only, then stop mid-drain
     var first: Option[Long] = None

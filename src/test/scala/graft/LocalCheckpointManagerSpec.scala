@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -11,36 +9,53 @@ import org.apache.spark.sql.functions._
 /** The java.nio streaming-checkpoint manager: same createAtomic /
   * rename contract as Spark's default, no process forks on local
   * filesystems, and end-to-end stream recovery over a checkpoint it
-  * wrote. */
+  * wrote. Every case also runs on `graftfs:`, where the manager
+  * delegates to Spark's own (FileContext-based) manager. */
 class LocalCheckpointManagerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private def mgr(dir: String) =
-    new GraftLocalCheckpointFileManager(new Path(dir), new Configuration())
+  private def conf(afs: Boolean = true): Configuration = {
+    val c = new Configuration()
+    GraftTestFs.Conf.filter(kv => afs || !kv._1.contains("AbstractFileSystem"))
+      .foreach { case (k, v) => c.set(k, v) }
+    c
+  }
 
-  test("createAtomic overwrite: content lands atomically and replaces") {
-    val dir = Files.createTempDirectory("graft-ckpt-mgr").toString
+  private def mgr(dir: String, afs: Boolean = true) =
+    new GraftLocalCheckpointFileManager(new Path(dir), conf(afs))
+
+  private def read(m: GraftLocalCheckpointFileManager, p: Path): String = {
+    val in = m.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  for ((scheme, tag) <- SparkTestBase.Schemes) {
+  def tmp(prefix: String) = SparkTestBase.tmpRoot(prefix, scheme)
+
+  test("createAtomic overwrite: content lands atomically and replaces" + tag) {
+    val dir = tmp("graft-ckpt-mgr")
     val m = mgr(dir)
+    assert(m.isLocal == (scheme == "file"))
     val p = new Path(dir, "offsets/0")
+    m.mkdirs(p.getParent) // as Spark's metadata logs do
     val out = m.createAtomic(p, overwriteIfPossible = true)
     out.write("v1".getBytes("UTF-8")); out.close()
     assert(m.exists(p))
     val out2 = m.createAtomic(p, overwriteIfPossible = true)
     out2.write("v2".getBytes("UTF-8")); out2.close()
-    val in = m.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    assert(txt == "v2")
+    assert(read(m, p) == "v2")
     // no temp litter
     assert(m.list(new Path(dir, "offsets")).map(_.getPath.getName).toSeq ==
       Seq("0"))
   }
 
   test("createAtomic non-overwrite: second writer loses with Hadoop's " +
-      "FileAlreadyExistsException (the engine's race contract)") {
-    val dir = Files.createTempDirectory("graft-ckpt-mgr").toString
+      "FileAlreadyExistsException (the engine's race contract)" + tag) {
+    val dir = tmp("graft-ckpt-mgr")
     val m = mgr(dir)
     val p = new Path(dir, "commits/0")
+    m.mkdirs(p.getParent) // as Spark's metadata logs do
     val out = m.createAtomic(p, overwriteIfPossible = false)
     out.write("winner".getBytes("UTF-8")); out.close()
     val loser = m.createAtomic(p, overwriteIfPossible = false)
@@ -48,16 +63,14 @@ class LocalCheckpointManagerSpec extends AnyFunSuite {
     intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
       loser.close()
     }
-    val in = m.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    assert(txt == "winner")
+    assert(read(m, p) == "winner")
   }
 
-  test("cancel leaves nothing behind") {
-    val dir = Files.createTempDirectory("graft-ckpt-mgr").toString
+  test("cancel leaves nothing behind" + tag) {
+    val dir = tmp("graft-ckpt-mgr")
     val m = mgr(dir)
     val p = new Path(dir, "state/x")
+    m.mkdirs(p.getParent) // as Spark's metadata logs do
     val out = m.createAtomic(p, overwriteIfPossible = false)
     out.write("partial".getBytes("UTF-8"))
     out.cancel()
@@ -66,12 +79,12 @@ class LocalCheckpointManagerSpec extends AnyFunSuite {
   }
 
   test("stream restart over a checkpoint the manager wrote resumes " +
-      "without re-emitting (exactly-once end to end)") {
+      "without re-emitting (exactly-once end to end)" + tag) {
     graft.sources.GraftDataSource.enableLocalCheckpointFastPath(spark)
     try {
-      val src = Files.createTempDirectory("graft-ckpt-src").toString
-      val dst = Files.createTempDirectory("graft-ckpt-dst").toString
-      val ckpt = Files.createTempDirectory("graft-ckpt-ck").toString
+      val src = tmp("graft-ckpt-src")
+      val dst = tmp("graft-ckpt-dst")
+      val ckpt = tmp("graft-ckpt-ck")
       import spark.implicits._
       val rows = (0L until 100L).toDF("k")
       graft.sources.SnapshotTable.append(
@@ -92,5 +105,22 @@ class LocalCheckpointManagerSpec extends AnyFunSuite {
       assert(landed.count() == 100L)
       assert(landed.select(sum("k")).as[Long].head() == (0L until 100L).sum)
     } finally spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+  }
+  }
+
+  test("a scheme with no AbstractFileSystem falls back to Spark's " +
+      "FileSystem-based manager") {
+    val dir = SparkTestBase.tmpRoot("graft-ckpt-mgr", GraftTestFs.Scheme)
+    val m = mgr(dir, afs = false)
+    val p = new Path(dir, "commits/0")
+    val out = m.createAtomic(p, overwriteIfPossible = false)
+    out.write("winner".getBytes("UTF-8")); out.close()
+    assert(read(m, p) == "winner")
+    val loser = m.createAtomic(p, overwriteIfPossible = false)
+    loser.write("loser".getBytes("UTF-8"))
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      loser.close()
+    }
+    assert(read(m, p) == "winner")
   }
 }

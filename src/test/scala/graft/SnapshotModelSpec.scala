@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
@@ -18,8 +17,8 @@ class SnapshotModelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-model").toString + "/t"
+  private def tmp(scheme: String = "file"): String =
+    SparkTestBase.tmpRoot("graft-model", scheme) + "/t"
 
   private def snap(dir: String, v: Option[Long] = None): Map[Long, Long] =
     SnapshotTable.read(spark, dir, v).select("id", "v").collect()
@@ -341,8 +340,9 @@ class SnapshotModelSpec extends AnyFunSuite {
       }
   }
 
+  for ((scheme, tag) <- SparkTestBase.Schemes)
   test("CONCURRENT writers: 4 threads of mixed row ops + a compaction " +
-      "chaos thread against ONE table; per-thread linearized models") {
+      "chaos thread against ONE table; per-thread linearized models" + tag) {
     // Each thread owns a disjoint id range, so its semantic effects
     // commute with every other thread's — the final table must equal
     // the union of the per-thread models, where each model folds
@@ -351,7 +351,7 @@ class SnapshotModelSpec extends AnyFunSuite {
     // must be perfectly atomic: no manifest, no effect). The chaos
     // thread compacts concurrently, deliberately mixing threads' rows
     // into shared files so row ops and rewrites really do collide.
-    val dir = tmp()
+    val dir = tmp(scheme)
     SnapshotTable.append(Seq((-1L, -1L)).toDF("id", "v"), dir,
       statsCols = Seq("id"))
     val T = 4; val OPS = 10
@@ -445,7 +445,8 @@ class SnapshotModelSpec extends AnyFunSuite {
         s"only-model: ${(expected.toSet -- got.toSet).take(5)}")
     // chain integrity: every surviving version parses and history walks
     val head = SnapshotTable.latestVersion(spark, dir).get
-    val manifests = new java.io.File(dir, "_manifests").list().sorted.toSeq
+    val manifests = new java.io.File(SparkTestBase.localPath(dir),
+      "_manifests").list().sorted.toSeq
     assert(SnapshotTable.history(spark, dir).count() == head + 1,
       s"gap in the version chain — manifests: $manifests")
     // metadata-only COUNT(*) == scan count — the invariant this stress
@@ -458,9 +459,10 @@ class SnapshotModelSpec extends AnyFunSuite {
       "metadata count diverged from the scan")
   }
 
+  for ((scheme, tag) <- SparkTestBase.Schemes)
   test("100 seeded metadata-commit interleavings: the ledger CAS admits " +
-      "exactly one winner, policy and data commits converge") {
-    val dir = tmp()
+      "exactly one winner, policy and data commits converge" + tag) {
+    val dir = tmp(scheme)
     SnapshotTable.append((0L until 20L).map(i => (i, i))
       .toDF("id", "v"), dir, statsCols = Seq("id"))
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()

@@ -13,11 +13,15 @@ class SnapshotTableSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  private def tmp(prefix: String, scheme: String): String =
+    SparkTestBase.tmpRoot(prefix, scheme) + "/t"
+
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet
 
-  test("append/read roundtrip, versions advance, time travel pins the snapshot") {
-    val dir = Files.createTempDirectory("graft-snap").toString + "/t"
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("append/read roundtrip, versions advance, time travel pins the snapshot" + tag) {
+    val dir = tmp("graft-snap", scheme)
     assert(SnapshotTable.latestVersion(spark, dir).isEmpty)
     val v0 = SnapshotTable.append(spark.range(0, 10).toDF(), dir)
     val v1 = SnapshotTable.append(spark.range(10, 25).toDF(), dir)
@@ -27,13 +31,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     // even after later commits.
     assert(ids(SnapshotTable.read(spark, dir, Some(0L))) == (0L until 10L).toSet)
     intercept[java.io.IOException] {
-      SnapshotTable.read(spark, Files.createTempDirectory("graft-snap-e")
-        .toString + "/none")
+      SnapshotTable.read(spark, tmp("graft-snap-e", scheme))
     }
   }
 
-  test("concurrent appends both commit (optimistic retry), no rows lost") {
-    val dir = Files.createTempDirectory("graft-snap-c").toString + "/t"
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("concurrent appends both commit (optimistic retry), no rows lost" + tag) {
+    val dir = tmp("graft-snap-c", scheme)
     SnapshotTable.append(spark.range(0, 5).toDF(), dir)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -50,8 +54,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(ids(SnapshotTable.read(spark, dir)) == want)
   }
 
-  test("uncommitted data files are invisible; vacuum retires them after the age floor") {
-    val dir = Files.createTempDirectory("graft-snap-o").toString + "/t"
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("uncommitted data files are invisible; vacuum retires them after the age floor" + tag) {
+    val dir = tmp("graft-snap-o", scheme)
     SnapshotTable.append(spark.range(0, 10).toDF(), dir)
     // A crashed append: data written, manifest never committed.
     spark.range(500, 510).toDF().write
@@ -65,6 +70,17 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.vacuum(spark, dir, keepVersions = 2,
       minAgeMs = 0) > 0)
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 10L).toSet)
+    // A table whose path holds spaces, every file referenced: each
+    // listed file must match its manifest key, so vacuum loses nothing.
+    val spaced = SparkTestBase.tmpRoot("graft snap sp", scheme) + "/t t"
+    SnapshotTable.append(spark.range(0, 10).toDF(), spaced)
+    SnapshotTable.append(spark.range(10, 20).toDF(), spaced)
+    val live = SnapshotTable.manifestFiles(spark, spaced, 1L)
+    assert(SnapshotTable.vacuum(spark, spaced, keepVersions = 1,
+      minAgeMs = 0) == 0)
+    live.foreach(f => assert(new java.io.File(
+      SparkTestBase.localPath(spaced), f).exists, s"vacuum deleted $f"))
+    assert(ids(SnapshotTable.read(spark, spaced)) == (0L until 20L).toSet)
   }
 
   test("compact: new snapshot, identical rows, old version readable until vacuum") {
@@ -93,8 +109,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 60L).toSet)
   }
 
-  test("transactionalAppend: replayed batches are no-ops, racing replays commit once") {
-    val dir = Files.createTempDirectory("graft-snap-t").toString + "/t"
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("transactionalAppend: replayed batches are no-ops, racing replays commit once" + tag) {
+    val dir = tmp("graft-snap-t", scheme)
     assert(SnapshotTable.transactionalAppend(
       spark.range(0, 10).toDF(), dir, "app1", 0L).contains(0L))
     // Exact replay of batch 0: no-op, rows unchanged.
@@ -478,8 +495,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
   }
 
-  test("vacuum reaches partitioned (nested) orphans after compaction") {
-    val dir = Files.createTempDirectory("graft-snap-vp").toString + "/t"
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("vacuum reaches partitioned (nested) orphans after compaction" + tag) {
+    val dir = tmp("graft-snap-vp", scheme)
     SnapshotTable.appendPartitioned(
       spark.range(0, 100).toDF().withColumn("day", ($"id" % 4).cast("int")),
       dir, Seq("day"))
@@ -487,7 +505,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
         else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-      walk(new java.io.File(s"$dir/data"))
+      walk(new java.io.File(SparkTestBase.localPath(dir), "data"))
     }
     val before = nestedParquets().size
     assert(before >= 4, s"partitioned layout expected, got $before files")
@@ -670,7 +688,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(got == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
   }
 
-  test("mixed concurrent appends, merges, compactions: no lost, phantom, or stale rows") {
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("mixed concurrent appends, merges, compactions: no lost, phantom, or stale rows" + tag) {
     // Four writers race on one table: two appenders on disjoint
     // keyspaces, a compactor in a loop, and a merger upserting its
     // own keyspace sequentially (retrying the documented
@@ -679,7 +698,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // union of appended rows, the merger's keys at their LAST upsert
     // value — no row lost to a commit race, none duplicated, none
     // resurrected at a stale value.
-    val dir = Files.createTempDirectory("graft-snap-mx").toString + "/t"
+    val dir = tmp("graft-snap-mx", scheme)
     SnapshotTable.append(
       (30000L until 30050L).map(i => (i, "m0")).toDF("id", "v"), dir)
     import scala.concurrent.{Await, Future}
@@ -735,13 +754,14 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
   }
 
-  test("compact races a concurrent appender: every committed row survives") {
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("compact races a concurrent appender: every committed row survives" + tag) {
     // Real concurrency: one thread compacts while another appends.
     // Whatever interleave the scheduler picks, the final snapshot must
     // contain the union of all committed rows — the re-base path in
     // compact's commit loop is what carries a concurrently-appended
     // file forward instead of dropping it.
-    val dir = Files.createTempDirectory("graft-snap-r").toString + "/t"
+    val dir = tmp("graft-snap-r", scheme)
     (0 until 6).foreach { i =>
       SnapshotTable.append(
         spark.range(10L * i, 10L * i + 10).repartition(3).toDF(), dir)
@@ -879,8 +899,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(total == 25 && sel.size == 1)
   }
 
-  test("vacuum across a delta chain: horizon checkpointed, window readable, below throws") {
-    val dir = Files.createTempDirectory("graft-snap-vd").toString + "/t"
+  for ((scheme, tag) <- SparkTestBase.Schemes)
+  test("vacuum across a delta chain: horizon checkpointed, window readable, below throws" + tag) {
+    val dir = tmp("graft-snap-vd", scheme)
     (0 until 15).foreach { i =>
       SnapshotTable.append(
         spark.range(10L * i, 10L * i + 10).coalesce(1).toDF(), dir)
@@ -890,7 +911,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     // it must first rewrite v12 in self-contained checkpoint form.
     SnapshotTable.vacuum(spark, dir, keepVersions = 3, minAgeMs = 0L)
     val kept = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_manifests", "v12.json")), "UTF-8")
+      java.nio.file.Paths.get(SparkTestBase.localPath(dir), "_manifests",
+        "v12.json")), "UTF-8")
     assert(kept.contains("\"files\""),
       "vacuum must checkpoint the oldest kept version before deleting its chain")
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 150L).toSet)

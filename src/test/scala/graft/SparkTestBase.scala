@@ -6,15 +6,33 @@ import org.apache.spark.sql.SparkSession
   * so this JVM is dedicated to the test run). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftTestFs.Conf.foldLeft(b) { case (b, (k, v)) =>
+      b.config(s"spark.hadoop.$k", v) }.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The table-root schemes the storage specs run under, each with the
+    * suffix its test names carry: `file:` paths (LocalStore, the
+    * original test names) and `graftfs:` ([[GraftTestFs]], HadoopStore). */
+  val Schemes: Seq[(String, String)] =
+    Seq("file" -> "", GraftTestFs.Scheme -> s" [${GraftTestFs.Scheme}]")
+
+  /** A fresh temp directory, as a root under `scheme`: a plain local
+    * path for `file`, a `graftfs:///…` URI otherwise. */
+  def tmpRoot(prefix: String, scheme: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    if (scheme == "file") d else s"$scheme://$d"
+  }
+
+  /** The local filesystem path behind a [[tmpRoot]] root. */
+  def localPath(root: String): String =
+    new org.apache.hadoop.fs.Path(root).toUri.getPath
 }
