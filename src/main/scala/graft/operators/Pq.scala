@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.TableStore
 
 /** PRODUCT QUANTIZATION (Jégou et al. 2011, the public IVF-PQ
   * design every billion-vector ANN system descends from): vectors
@@ -518,13 +520,14 @@ object Pq {
     val body = s"""{"quantizer":"kmeans","k":${centroids.length},""" +
       s""""dim":${centroids.head.length},"scale":65536,""" +
       s""""encoding":"$enc","centroids":"$flat"}"""
-    writeSidecar(spark, path, CellMetaFile, body)
+    TableStore(spark, path).overwrite(new Path(path, CellMetaFile), body)
   }
 
   /** The index's recorded coarse cells, if the sidecar exists. */
   def readCellSidecar(spark: SparkSession, path: String
                      ): Option[Array[Array[Long]]] = {
-    readSidecar(spark, path, CellMetaFile).flatMap { txt =>
+    val cells = new Path(path, CellMetaFile)
+    TableStore(spark, path).readText(cells).flatMap { txt =>
       "\"centroids\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map { m =>
         m.group(1).split(';').map(_.split(',').map(_.toLong))
       }
@@ -537,7 +540,8 @@ object Pq {
     * the same file: two object-store round trips per call). */
   private def readCellMeta(spark: SparkSession, path: String,
                            caller: String): (Array[Array[Long]], Boolean) = {
-    val txt = readSidecar(spark, path, CellMetaFile).getOrElse(
+    val cells = new Path(path, CellMetaFile)
+    val txt = TableStore(spark, path).readText(cells).getOrElse(
       throw new IllegalStateException(
         s"$caller: no $CellMetaFile under $path — not a writeIvfPqIndex " +
           "layout"))
@@ -552,7 +556,7 @@ object Pq {
     * than raw vectors. Pre-residual sidecars lack the field → raw,
     * so old indexes keep probing exactly as built. */
   def readCellResidualFlag(spark: SparkSession, path: String): Boolean = {
-    readSidecar(spark, path, CellMetaFile)
+    TableStore(spark, path).readText(new Path(path, CellMetaFile))
       .exists(_.contains("\"encoding\":\"residual\""))
   }
 
@@ -566,30 +570,16 @@ object Pq {
     val body = s"""{"quantizer":"pq","m":${codebooks.length},""" +
       s""""k":${codebooks.head.length},"dsub":${dsubOf(codebooks)},""" +
       s""""scale":65536,"codebooks":"$flat"}"""
-    writeSidecar(spark, path, MetaFile, body)
+    TableStore(spark, path).overwrite(new Path(path, MetaFile), body)
   }
 
   /** The index's recorded codebooks, if the sidecar exists. */
   def readCodebookSidecar(spark: SparkSession, path: String
                          ): Option[Array[Array[Array[Long]]]] = {
-    readSidecar(spark, path, MetaFile).flatMap { txt =>
+    TableStore(spark, path).readText(new Path(path, MetaFile)).flatMap { txt =>
       "\"codebooks\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map { m =>
         m.group(1).split('|').map(_.split(';').map(_.split(',').map(_.toLong)))
       }
     }
-  }
-
-  private def writeSidecar(spark: SparkSession, dir: String, name: String,
-                           body: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
-      .overwrite(p, body)
-  }
-
-  private def readSidecar(spark: SparkSession, dir: String,
-                          name: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
-      .readText(p)
   }
 }

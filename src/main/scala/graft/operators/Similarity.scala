@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.TableStore
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -195,7 +197,8 @@ object Similarity {
 
   private def writeMetaSidecar(spark: org.apache.spark.sql.SparkSession,
                                path: String, cellBits: Int): Unit =
-    writeSidecarText(spark, path, s"""{"cellBits":$cellBits}""")
+    TableStore(spark, path).overwrite(new Path(path, MetaFile),
+      s"""{"cellBits":$cellBits}""")
 
   /** Trained-quantizer sidecar: the FULL centroid matrix rides with
     * the index (k×d longs — control-plane-sized for production k of
@@ -206,30 +209,16 @@ object Similarity {
                                   path: String,
                                   centroids: Array[Array[Long]]): Unit = {
     val flat = centroids.map(_.mkString(",")).mkString(";")
-    writeSidecarText(spark, path,
+    TableStore(spark, path).overwrite(new Path(path, MetaFile),
       s"""{"quantizer":"kmeans","k":${centroids.length},""" +
         s""""dim":${centroids.head.length},"scale":65536,""" +
         s""""centroids":"$flat"}""")
   }
 
-  private def writeSidecarText(spark: org.apache.spark.sql.SparkSession,
-                               path: String, text: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
-      .overwrite(p, text)
-  }
-
-  private def readSidecarText(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    graft.sources.TableStore(spark.sparkContext.hadoopConfiguration, p)
-      .readText(p)
-  }
-
   /** The index's recorded quantizer, if the sidecar exists. */
   def readQuantizer(spark: org.apache.spark.sql.SparkSession,
                     path: String): Option[IvfQuantizer] =
-    readSidecarText(spark, path).map { txt =>
+    TableStore(spark, path).readText(new Path(path, MetaFile)).map { txt =>
       "\"centroids\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt) match {
         case Some(m) =>
           TrainedQuantizer(m.group(1).split(';')

@@ -106,9 +106,6 @@ import org.apache.spark.sql.types._
   * transactions. */
 object SnapshotTable {
 
-  private def store(spark: SparkSession, dir: String): TableStore =
-    TableStore(spark, dir)
-
   /** Label every Spark job an internal phase launches (guide §1.5 —
     * "label your jobs"): the phase tag is APPENDED to whatever
     * description the caller already set, so a profiler/UI reading
@@ -266,7 +263,7 @@ object SnapshotTable {
 
   /** The versions whose manifests are on disk, ascending. */
   private def liveVersions(spark: SparkSession, dir: String): Seq[Long] =
-    manifestVersions(store(spark, dir).list(manifestDir(dir)))
+    manifestVersions(TableStore(spark, dir).list(manifestDir(dir)))
 
   /** The committed versions among a `_manifests/` listing, ascending. */
   private def manifestVersions(listing: Seq[FileStatus]): Seq[Long] =
@@ -289,7 +286,7 @@ object SnapshotTable {
 
   private def manifestNode(spark: SparkSession, dir: String,
                            v: Long): com.fasterxml.jackson.databind.JsonNode = {
-    val txt = store(spark, dir).readText(manifestPath(dir, v)).getOrElse(
+    val txt = TableStore(spark, dir).readText(manifestPath(dir, v)).getOrElse(
       throw new java.io.IOException(
         s"manifest v$v missing under $dir — vacuumed past the time-travel " +
           "horizon, or the table directory was modified out of band"))
@@ -392,7 +389,7 @@ object SnapshotTable {
     * a COMMIT only ever writes O(batch) bytes, not O(table). */
   private def stateOf(spark: SparkSession, dir: String,
                       v: Long): TableState = {
-    val fst = try store(spark, dir).status(manifestPath(dir, v))
+    val fst = try TableStore(spark, dir).status(manifestPath(dir, v))
     catch { case _: java.io.FileNotFoundException =>
       throw new java.io.IOException(
         s"manifest v$v missing under $dir — vacuumed past the time-travel " +
@@ -563,7 +560,7 @@ object SnapshotTable {
       val hit = segmentCache.get(key)
       if (hit != null) return hit
     }
-    val txt = store(spark, dir).readText(new Path(manifestDir(dir), name))
+    val txt = TableStore(spark, dir).readText(new Path(manifestDir(dir), name))
       .getOrElse(throw new java.io.IOException(
         s"checkpoint segment $name missing under $dir — vacuumed past " +
           "the horizon, or the table directory was modified out of band"))
@@ -964,7 +961,7 @@ object SnapshotTable {
     }
     // uniquely named per batch, referenced only by the manifest
     // committed after it — writeNew's no-rename contract applies
-    store(spark, dir).writeNew(new Path(dir, rel),
+    TableStore(spark, dir).writeNew(new Path(dir, rel),
       mapper.writeValueAsString(root))
     blooms.keys.map(_ -> rel).toMap
   }
@@ -1060,7 +1057,7 @@ object SnapshotTable {
         // driver-side getFileStatus per file feeds a fixed FileIndex
         // instead (the SnapshotFileIndex manifest-only-planning idea,
         // applied to the programmatic read path).
-        val s = store(spark, dir)
+        val s = TableStore(spark, dir)
         // Independent metadata RPCs — overlap on a bounded pool (the
         // footerSummaries pattern): serial per-file stats on an
         // object store would cost more than the listing job this
@@ -1376,7 +1373,7 @@ object SnapshotTable {
     putMap("sizes", sizes)(n => java.lang.Long.valueOf(n))
     putMap("dvrefs", dvRefs)(r => r)
     val name = s"seg-v$v-${java.util.UUID.randomUUID()}.json"
-    store(spark, dir).overwrite(new Path(manifestDir(dir), name),
+    TableStore(spark, dir).overwrite(new Path(manifestDir(dir), name),
       mapper.writeValueAsString(root))
     name
   }
@@ -1408,7 +1405,7 @@ object SnapshotTable {
                         defaultsOpt: Option[Map[String,
                           (String, Set[String])]] = None
                        ): Boolean = commitLock.synchronized {
-    val s = store(spark, dir)
+    val s = TableStore(spark, dir)
     val target = manifestPath(dir, v)
     if (s.exists(target)) return false
     val full = v == 0L || v % CheckpointEvery == 0L
@@ -2387,7 +2384,7 @@ object SnapshotTable {
     }
     val vcs = enforceConstraints(spark, dir, df, "appendPartitioned")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val s = store(spark, dir)
+    val s = TableStore(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     val routed = partitionBy.foldLeft(df)((d, c) =>
@@ -2453,7 +2450,7 @@ object SnapshotTable {
     }
     val vcs = enforceConstraints(spark, dir, df, "appendBucketed")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val s = store(spark, dir)
+    val s = TableStore(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     writeBucketedBatch(df, s, batchDir, layout)
@@ -2539,7 +2536,7 @@ object SnapshotTable {
     val vcs =
       enforceConstraints(spark, dir, df, "transactionalAppendPartitioned")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val s = store(spark, dir)
+    val s = TableStore(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     val routed = partitionBy.foldLeft(df)((d, c) =>
@@ -2645,7 +2642,7 @@ object SnapshotTable {
       case Some(c) => df.select(df.columns.map(cn =>
         col(cn).as(physName(c.colMap, cn))).toSeq: _*)
     }
-    val f = store(spark, dir)
+    val f = TableStore(spark, dir)
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     labeled(spark, "write-batch:data") {
@@ -3426,7 +3423,7 @@ object SnapshotTable {
       "compact: bucketBy and numBuckets go together")
     require(bucketBy.nonEmpty || bucketSortBy.isEmpty,
       "compact: bucketSortBy requires bucketBy")
-    val f = store(spark, dir)
+    val f = TableStore(spark, dir)
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(s"compact: no committed version under $dir"))
     val old = manifestFiles(spark, dir, base)
@@ -3590,7 +3587,7 @@ object SnapshotTable {
       throw new java.io.IOException(
         s"binPackSmall: no committed version under $dir"))
     val st = stateOf(spark, dir, base)
-    val f = store(spark, dir)
+    val f = TableStore(spark, dir)
     val candidates = st.files.filter { p =>
       st.sizes.getOrElse(p,
         f.status(new Path(dir, p)).getLen) < smallerThanBytes
@@ -3612,7 +3609,7 @@ object SnapshotTable {
                            op: String, maxRetries: Int): Option[Long] = {
     if (candidates.isEmpty) return None
     val st = stateOf(spark, dir, base)
-    val f = store(spark, dir)
+    val f = TableStore(spark, dir)
     val totalBytes = candidates.map(p => st.sizes.getOrElse(p,
       f.status(new Path(dir, p)).getLen)).sum
     val nTarget =
@@ -4218,7 +4215,7 @@ object SnapshotTable {
     * rather than rolling back). */
   def restore(spark: SparkSession, dir: String, toVersion: Long,
               maxRetries: Int = 20): Option[Long] = {
-    val f = store(spark, dir)
+    val f = TableStore(spark, dir)
     val target = stateOf(spark, dir, toVersion) // throws once vacuumed
     val targetSchema = manifestSchema(spark, dir, toVersion)
     var attempt = 0
@@ -4304,7 +4301,7 @@ object SnapshotTable {
                          keepVersions: Int, minAgeMs: Long
                         ): Option[VacuumPlan] = {
     require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val s = store(spark, dir)
+    val s = TableStore(spark, dir)
     val listing = s.list(manifestDir(dir))
     val versions = manifestVersions(listing)
     if (versions.isEmpty) return None
@@ -4355,7 +4352,7 @@ object SnapshotTable {
     val plan = vacuumPlan(spark, dir, keepVersions, minAgeMs)
       .getOrElse(return 0)
     import plan.{cutoff, keepFrom}
-    val s = store(spark, dir)
+    val s = TableStore(spark, dir)
     val dataRoot = new Path(dir, "data")
     val deleted = plan.orphans.count(st => s.delete(st.getPath))
     def pruneEmptyDirs(p: Path): Boolean = { // true = now empty+removed
@@ -4403,9 +4400,10 @@ object SnapshotTable {
           // Rename OVER the target (POSIX/local rename overwrites in
           // place — no instant at which v<keepFrom> is missing for a
           // concurrent reader, who takes no lock). Filesystems whose
-          // rename refuses an existing destination (HDFS-class) fall
-          // back inside HadoopStore.overwrite to delete+rename — the only
-          // remaining (store-imposed) window.
+          // rename refuses an existing destination (HDFS-class) swap
+          // inside HadoopStore.overwrite — the only remaining
+          // (store-imposed) window; a failed swap restores the old
+          // manifest, and the expired ones below are not yet deleted.
           s.overwrite(manifestPath(dir, keepFrom), body)
         }
       }

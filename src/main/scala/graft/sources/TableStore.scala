@@ -305,18 +305,27 @@ final class HadoopStore(fs: FileSystem) extends TableStore {
   def createExclusive(p: Path, text: String): Boolean =
     !fs.exists(p) && staged(p, text)(tryRename(_, p))
 
-  /** POSIX-style rename overwrites in place; filesystems whose rename
-    * refuses an existing destination fall back to delete + rename —
-    * the one remaining (store-imposed) window in which `p` is absent. */
+  /** POSIX-style rename overwrites in place. A filesystem whose rename
+    * refuses an existing destination (HDFS, the FileSystem spec) gets
+    * a swap instead: the old file moves aside, the new one in, and the
+    * old one back if that fails. `p` is absent only in between — the
+    * one remaining (store-imposed) window — and a failed rename never
+    * deletes the last copy of the old content. An IOException from the
+    * first rename leaves `p` untouched. */
   def overwrite(p: Path, text: String): Unit = {
-    staged(p, text) { tmp =>
-      tryRename(tmp, p) || {
-        fs.delete(p, false)
-        fs.rename(tmp, p) ||
-          (throw new IOException(s"overwrite: rename to $p failed"))
+    val done = staged(p, text) { tmp =>
+      fs.rename(tmp, p) || fs.exists(p) && {
+        val aside = new Path(p.getParent, TableStore.tempName(p.getName))
+        fs.rename(p, aside) && {
+          val swapped = tryRename(tmp, p)
+          // restored, or a concurrent writer's whole file is in place
+          if (swapped || tryRename(aside, p) || fs.exists(p))
+            fs.delete(aside, false)
+          swapped
+        }
       }
     }
-    ()
+    if (!done) throw new IOException(s"overwrite: rename to $p failed")
   }
 
   def rename(src: Path, dst: Path): Boolean = fs.rename(src, dst)

@@ -20,10 +20,11 @@ import org.apache.hadoop.util.Progressable
   *     unlink of the source), as the Hadoop FileSystem spec and HDFS
   *     require; RawLocalFileSystem silently replaces the destination,
   *     which would test a store graft does not claim to support.
-  *   - [[GraftTestFs.failing]] injects a crash: an operation (`create`,
-  *     `rename`, `delete`) on a matching path throws
-  *     [[GraftTestFs.Killed]] — not an IOException, so no IO error path
-  *     mistakes it for a recoverable failure. */
+  *   - [[GraftTestFs.failingWhen]] injects a fault: an operation
+  *     (`create`, `rename`, `delete`) on a matching path throws — by
+  *     default [[GraftTestFs.Killed]], a crash that is not an
+  *     IOException, so no IO error path mistakes it for a recoverable
+  *     failure. */
 class GraftTestFs extends RawLocalFileSystem {
   override def getUri: URI = GraftTestFs.Uri
   override def getScheme: String = GraftTestFs.Scheme
@@ -92,14 +93,19 @@ object GraftTestFs {
   /** An injected crash. */
   final class Killed(msg: String) extends RuntimeException(msg)
 
-  @volatile private var failing: (String, Path) => Boolean = (_, _) => false
+  @volatile private var failing: (String, Path) => Option[Throwable] =
+    (_, _) => None
 
   private def check(op: String, p: Path): Unit =
-    if (failing(op, p)) throw new Killed(s"injected kill: $op $p")
+    failing(op, p).foreach(e => throw e)
 
-  /** Run `body` with every `op` on a path matching `when` failing. */
-  def failingWhen[T](when: (String, Path) => Boolean)(body: => T): T = {
-    failing = when
-    try body finally failing = (_, _) => false
+  /** Run `body` with every `op` on a path matching `when` throwing
+    * `error` of a message naming the operation. */
+  def failingWhen[T](when: (String, Path) => Boolean,
+                     error: String => Throwable = new Killed(_))
+                    (body: => T): T = {
+    failing = (op, p) =>
+      if (when(op, p)) Some(error(s"injected fault: $op $p")) else None
+    try body finally failing = (_, _) => None
   }
 }

@@ -38,7 +38,9 @@ class LocalCheckpointManagerSpec extends AnyFunSuite {
     val m = mgr(dir)
     assert(m.isLocal == (scheme == "file"))
     val p = new Path(dir, "offsets/0")
-    m.mkdirs(p.getParent) // as Spark's metadata logs do
+    // Spark's FileContext manager does not create parents (its
+    // metadata logs mkdirs first); the local one must
+    if (scheme != "file") m.mkdirs(p.getParent)
     val out = m.createAtomic(p, overwriteIfPossible = true)
     out.write("v1".getBytes("UTF-8")); out.close()
     assert(m.exists(p))
@@ -55,7 +57,9 @@ class LocalCheckpointManagerSpec extends AnyFunSuite {
     val dir = tmp("graft-ckpt-mgr")
     val m = mgr(dir)
     val p = new Path(dir, "commits/0")
-    m.mkdirs(p.getParent) // as Spark's metadata logs do
+    // Spark's FileContext manager does not create parents (its
+    // metadata logs mkdirs first); the local one must
+    if (scheme != "file") m.mkdirs(p.getParent)
     val out = m.createAtomic(p, overwriteIfPossible = false)
     out.write("winner".getBytes("UTF-8")); out.close()
     val loser = m.createAtomic(p, overwriteIfPossible = false)
@@ -70,7 +74,9 @@ class LocalCheckpointManagerSpec extends AnyFunSuite {
     val dir = tmp("graft-ckpt-mgr")
     val m = mgr(dir)
     val p = new Path(dir, "state/x")
-    m.mkdirs(p.getParent) // as Spark's metadata logs do
+    // Spark's FileContext manager does not create parents (its
+    // metadata logs mkdirs first); the local one must
+    if (scheme != "file") m.mkdirs(p.getParent)
     val out = m.createAtomic(p, overwriteIfPossible = false)
     out.write("partial".getBytes("UTF-8"))
     out.cancel()

@@ -10,7 +10,8 @@ import graft.sources.SnapshotTable
   * [[GraftTestFs]]): a writer or a vacuum killed at each point of the
   * commit protocol leaves the table readable at a whole version, the
   * next commit succeeds, and `vacuum(…, minAgeMs = 0)` reclaims what
-  * the kill left behind. */
+  * the kill left behind. A failed (not killed) rename in vacuum's
+  * manifest rewrite loses no manifest. */
 class StoreCrashSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -113,5 +114,39 @@ class StoreCrashSpec extends AnyFunSuite {
     assert(dataFiles(dir) ==
       SnapshotTable.manifestFiles(spark, dir, head + 1).toSet)
     assert(ids(dir) == (0L until 50L).toSet)
+  }
+
+  test("a failed rename in vacuum's manifest rewrite keeps the old " +
+      "manifest; the next vacuum completes") {
+    val dir = tmp()
+    (0 until 12).foreach { i =>
+      SnapshotTable.append(spark.range(10L * i, 10L * i + 10).toDF(), dir)
+    }
+    // v11 is a delta on the v10 checkpoint: keeping one version makes
+    // vacuum rewrite it in full. On graftfs the rename onto the live
+    // v11 is refused, so the store swaps: v11 aside, the temp in (the
+    // rename failed here), v11 back.
+    val renames = new AtomicInteger()
+    GraftTestFs.failingWhen((op, p) => op == "rename" &&
+        p.getName.startsWith(".v11.json.") && renames.incrementAndGet() == 2,
+        new java.io.IOException(_)) {
+      intercept[java.io.IOException](
+        SnapshotTable.vacuum(spark, dir, keepVersions = 1, minAgeMs = 0L))
+    }
+    assert(renames.get() >= 2, "vacuum never retried the rename")
+    assert(manifestTemps(dir).isEmpty, filesUnder(dir, "_manifests"))
+    val all = (0L until 120L).toSet
+    assert(ids(dir) == all)
+    assert(ids(dir, Some(11L)) == all)
+    assert(ids(dir, Some(10L)) == (0L until 110L).toSet)
+    SnapshotTable.vacuum(spark, dir, keepVersions = 1, minAgeMs = 0L)
+    val v11 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(SparkTestBase.localPath(dir), "_manifests",
+        "v11.json")), "UTF-8")
+    assert(v11.contains("\"files\""), "v11 not rewritten in full")
+    assert(SnapshotTable.latestVersion(spark, dir).contains(11L))
+    assert(ids(dir) == all)
+    intercept[java.io.IOException](SnapshotTable.read(spark, dir, Some(10L)))
+    assert(SnapshotTable.append(spark.range(120, 130).toDF(), dir) == 12L)
   }
 }
