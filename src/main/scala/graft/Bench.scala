@@ -4,6 +4,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // The machine's core count beside the requested local[cpus]:
+    // tools/check_bench.py warns when either differs from the core
+    // count the MIN table was taken at.
+    val nproc = Runtime.getRuntime.availableProcessors
     // Min-of-N per query: single-shot timings on a shared container
     // swing 1.3-8x with co-tenant noise; the min over repeats is the
     // stable signal BASELINE.md is recorded against.
@@ -44,7 +48,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = ms(results.values.filter(_ > 0).sum)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"cpus":"$cpus"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"cpus":"$cpus","nproc":$nproc}"""
     println(line)
     // Durable per-query artifacts: the driver's bounded stdout tail
     // only preserved 75/267 timings in r6, so the drift gate
@@ -76,7 +80,7 @@ object Bench {
     // driver keeps, this one always survives and parses. The full
     // per-query map still precedes it for humans / drift tooling.
     val totalsOnly =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir","reps":$reps,"cpus":"$cpus"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir","reps":$reps,"cpus":"$cpus","nproc":$nproc}"""
     println(totalsOnly)
   }
 

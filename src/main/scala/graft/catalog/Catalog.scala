@@ -1,8 +1,10 @@
 package graft.catalog
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import graft.functions.Inference
+import graft.sources.{SnapshotTable, TableStore}
 
 /** KPI metadata for one confirmed field (reference main.py:486-494:
   * name, sanitized column name, inferred logical type). */
@@ -314,12 +316,89 @@ object Catalog {
       kpiNames.sorted.map(KpiMeta(_, "string")))
   }
 
-  /** Schema-evolving read of an appended table (O16 read side): every
-    * parquet footer in the directory is merged, so rows written before
-    * a column existed surface it as NULL (main.py:273-291 ADD COLUMN
-    * semantics, without the 2s DDL stall). */
+  /** Schema-evolving read of an appended table (O16 read side): the
+    * union of every data file's schema, so rows written before a
+    * column existed surface it as NULL (main.py:273-291 ADD COLUMN
+    * semantics, without the 2s DDL stall) — and columns no current
+    * KPI names stay visible: a re-train that drops a KPI, or a second
+    * folder whose sanitized name shares this table, keeps its columns
+    * and values, as the reference's BigQuery table does
+    * (main.py:256-351). So the read schema is the files', never
+    * `meta.schema`.
+    *
+    * The schema is exactly what Spark's `mergeSchema` inference
+    * builds, without its footer-reading Spark job: the table's visible
+    * parquet files are listed once through [[TableStore]] (Spark's
+    * file-index rules for hidden names), each file's footer schema is
+    * read on the driver and cached by (path, length, mtime), and the
+    * schemas merge in path order with Spark's own `StructType.merge`
+    * (a column typed two ways fails the read, CANNOT_MERGE_SCHEMAS).
+    * A new file — a landed wave, a rewritten partition — misses the
+    * cache and is read; a file gone from the listing leaves it. Only
+    * footers that carry Spark's schema are cached: any other file's
+    * schema depends on session confs and is converted on every read.
+    * `_batch_id` is left to Spark's partition inference, so its type
+    * is the inferred one. A table with no visible data file, or with
+    * parquet summary files, takes Spark's own `mergeSchema` read.
+    * Spark lists the directory again to scan it; a file a concurrent
+    * writer lands between the two listings is read under the schema
+    * of the files listed here. */
   def readTable(spark: SparkSession, warehouseDir: String,
-                meta: FolderMeta): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(s"$warehouseDir/${meta.tableName}")
+                meta: FolderMeta): DataFrame = {
+    val dir = s"$warehouseDir/${meta.tableName}"
+    mergedFileSchema(spark, dir).fold(
+      spark.read.option("mergeSchema", "true").parquet(dir))(
+      spark.read.schema(_).parquet(dir))
+  }
+
+  /** A footer schema [[readTable]] has read, with the length and mtime
+    * of the file it was read from. */
+  private final case class FooterSchema(len: Long, mtime: Long,
+                                        schema: StructType)
+
+  /** Per table directory: its files' cached footer schemas, by path. */
+  private val footerSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, FooterSchema]]()
+
+  private def mergedFileSchema(spark: SparkSession,
+                               dir: String): Option[StructType] = {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val qualified = root.getFileSystem(conf).makeQualified(root)
+    def visible(p: Path): Boolean = p.depth <= qualified.depth ||
+      (!GraftSqlBridge.hiddenFromFileIndex(p.getName) && visible(p.getParent))
+    val files = TableStore(conf, root).listFiles(root)
+      .filter(f => visible(f.getPath)).sortBy(_.getPath.toString)
+    val summary = Set("_metadata", "_common_metadata")
+    if (files.isEmpty || files.exists(f => summary(f.getPath.getName)))
+      return None
+    val key = qualified.toString
+    val cached = footerSchemas.getOrDefault(key, Map.empty)
+    def hit(f: FileStatus) = cached.get(f.getPath.toString)
+      .filter(c => c.len == f.getLen && c.mtime == f.getModificationTime)
+    val sqlConf = spark.sessionState.conf
+    // path -> (schema, whether the footer carries Spark's own schema)
+    val fresh = SnapshotTable.readFooters(conf, files.filter(hit(_).isEmpty)) {
+      (st, rd) =>
+        val footer = rd.getFooter
+        st.getPath.toString -> (FooterSchema(st.getLen, st.getModificationTime,
+          ParquetFileFormat.readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(st.getPath, footer),
+            new ParquetToSparkSchemaConverter(sqlConf))),
+          footer.getFileMetaData.getKeyValueMetaData
+            .containsKey(ParquetReadSupport.SPARK_METADATA_KEY))
+    }.toMap
+    val schemas = files.map { f =>
+      val p = f.getPath.toString
+      p -> hit(f).getOrElse(fresh(p)._1)
+    }
+    footerSchemas.put(key,
+      schemas.filterNot { case (p, _) => fresh.get(p).exists(!_._2) }.toMap)
+    val caseSensitive = sqlConf.caseSensitiveAnalysis
+    Some(schemas.map(_._2.schema)
+      .reduceLeft(GraftSqlBridge.mergeFileSchemas(_, _, caseSensitive)))
+  }
 }

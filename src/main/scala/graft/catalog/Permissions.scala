@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   *  - O21 nested-loop scan over ALL tenants probing for folder_id
   *    (main.py:784-791, O(tenants) RPCs with early exit) → inverted
   *    into one filtered scan;
+  *  - O20 point check ([[canAccess]]) → two pruned lookups in the
+  *    reference's order (main.py:539-545), no union, join or
+  *    dedup: on in-memory metadata both fold to local scans and
+  *    launch ZERO Spark jobs; on file-backed metadata they are
+  *    filter-pushdown scans;
   *  - O20/O22 permission predicate — faithfully the reference's:
   *    `uid == owner ∨ uid ∈ shared_with ∨ ∃ share-doc(folder, owner)`
   *    (main.py:539-545, 798-801). NOTE the third arm: the reference
@@ -54,7 +59,8 @@ object Permissions {
   def accessibleFolders(folders: DataFrame, shares: DataFrame,
                         uid: String): DataFrame = {
     val owned = folders.filter(col("owner_uid") === uid)
-    val sharedArray = folders.filter(array_contains(col("shared_with"), uid))
+    val sharedArray =
+      folders.filter(array_contains(col("shared_with"), typedLit(uid)))
     val sharedDoc = folders.join(
       shares.select(col("owner_id").as("s_owner"), col("folder_id").as("s_fid")),
       col("owner_uid") === col("s_owner") && col("folder_id") === col("s_fid"),
@@ -64,12 +70,32 @@ object Permissions {
   }
 
   /** O20/O22 as a point check (the reference's per-request gate):
-    * true iff `uid` may read `folderId`. */
+    * true iff `uid` may read `folderId` — exactly
+    * `accessibleFolders(folders, shares, uid)` containing `folderId`,
+    * answered by two pruned lookups in the reference's order
+    * (main.py:539-545) instead of building that whole set:
+    *  1. the `folderId` rows of `folders`, projected to `owner_uid`
+    *     and the ownership-or-shared_with predicate — evaluated by
+    *     Spark, so SQL NULL semantics are the set form's — grant if
+    *     any row's predicate is true;
+    *  2. otherwise, when owners matched, grant iff a share doc exists
+    *     for (one of those owners, `folderId`).
+    * On in-memory metadata (a LocalRelation, e.g. `createDataFrame`)
+    * both lookups fold to local table scans and launch no Spark job;
+    * on file-backed metadata they are filter-pushdown scans. */
   def canAccess(folders: DataFrame, shares: DataFrame,
-                uid: String, folderId: String): Boolean =
-    !accessibleFolders(folders, shares, uid)
-      .filter(col("folder_id") === folderId)
-      .isEmpty
+                uid: String, folderId: String): Boolean = {
+    val rows = folders.filter(col("folder_id") === folderId)
+      .select(col("owner_uid"),
+        (col("owner_uid") === uid ||
+          array_contains(col("shared_with"), typedLit(uid))).as("granted"))
+      .collect()
+    rows.exists(r => !r.isNullAt(1) && r.getBoolean(1)) || {
+      val owners = rows.collect { case r if !r.isNullAt(0) => r.get(0) }
+      owners.nonEmpty && !shares.filter(col("folder_id") === folderId &&
+        col("owner_id").isin(owners.distinct.toSeq: _*)).isEmpty
+    }
+  }
 
   /** O23 (main.py:459): reshape an extracted map column to the
     * reference's [{key, value}] list-of-structs form. Pure Column API —

@@ -1809,15 +1809,37 @@ object SnapshotTable {
     * map. */
   private def footerRowCounts(spark: SparkSession, dir: String,
                               statuses: Seq[FileStatus]
-                             ): Map[String, Map[String, ColStat]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    statuses.map { st =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      val cnt = try rd.getRecordCount finally rd.close()
+                             ): Map[String, Map[String, ColStat]] =
+    readFooters(spark.sparkContext.hadoopConfiguration, statuses) { (st, rd) =>
+      val cnt = rd.getRecordCount
       manifestKey(dir, st.getPath.toString) ->
         Map(RowsCol -> ColStat("num", cnt.toString, cnt.toString))
     }.toMap
+
+  /** Open each file's parquet FOOTER and apply `f` to the open reader
+    * — driver-side metadata reads (no executor job, no data pages).
+    * Footer opens are independent, so more than one overlap on a
+    * bounded pool (a 32-file batch's serial opens were ~100ms of
+    * driver wall per commit). Results come back in `statuses` order. */
+  private[graft] def readFooters[A](
+      conf: org.apache.hadoop.conf.Configuration, statuses: Seq[FileStatus])(
+      f: (FileStatus, org.apache.parquet.hadoop.ParquetFileReader) => A
+     ): Seq[A] = {
+    def one(st: FileStatus): A = {
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try f(st, rd) finally rd.close()
+    }
+    if (statuses.length <= 1) return statuses.map(one)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(8, statuses.length))
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try scala.concurrent.Await.result(
+      scala.concurrent.Future.traverse(statuses)(st =>
+        scala.concurrent.Future(one(st))),
+      scala.concurrent.duration.Duration.Inf)
+    finally pool.shutdown()
   }
 
   /** One column chunk's (tag, min, max) rendered EXACTLY as
@@ -1911,82 +1933,64 @@ object SnapshotTable {
     val caseInsensitive = !spark.sessionState.conf.caseSensitiveAnalysis
     val unsupported =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    // Footer opens are independent metadata reads — overlap them
-    // (bounded pool; a 32-file batch's serial opens were ~100ms of
-    // driver wall per commit).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, statuses.length)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val perFileFutures = statuses.map { st =>
-      scala.concurrent.Future {
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try {
-        val cnt = rd.getRecordCount
-        val blocks = rd.getFooter.getBlocks
-        // per column: fold chunk stats across row groups in the stat
-        // domain; any unusable chunk drops the column for this file
-        val colStats = wanted.flatMap { c =>
-          var tag: String = null
-          var mn: String = null
-          var mx: String = null
-          var ok = true
-          val it = blocks.iterator()
-          while (ok && it.hasNext) {
-            val block = it.next()
-            if (block.getRowCount > 0) {
-              val chunk = {
-                val cit = block.getColumns.iterator()
-                var exact: org.apache.parquet.hadoop.metadata
-                  .ColumnChunkMetaData = null
-                var ci: org.apache.parquet.hadoop.metadata
-                  .ColumnChunkMetaData = null
-                var ciAmbiguous = false
-                while (exact == null && cit.hasNext) {
-                  val cc = cit.next()
-                  if (cc.getPath.size == 1) {
-                    val n = cc.getPath.toDotString
-                    if (n == c) exact = cc
-                    else if (caseInsensitive && n.equalsIgnoreCase(c)) {
-                      if (ci == null) ci = cc else ciAmbiguous = true
-                    }
+    val perFile = readFooters(conf, statuses) { (st, rd) =>
+      val cnt = rd.getRecordCount
+      val blocks = rd.getFooter.getBlocks
+      // per column: fold chunk stats across row groups in the stat
+      // domain; any unusable chunk drops the column for this file
+      val colStats = wanted.flatMap { c =>
+        var tag: String = null
+        var mn: String = null
+        var mx: String = null
+        var ok = true
+        val it = blocks.iterator()
+        while (ok && it.hasNext) {
+          val block = it.next()
+          if (block.getRowCount > 0) {
+            val chunk = {
+              val cit = block.getColumns.iterator()
+              var exact: org.apache.parquet.hadoop.metadata
+                .ColumnChunkMetaData = null
+              var ci: org.apache.parquet.hadoop.metadata
+                .ColumnChunkMetaData = null
+              var ciAmbiguous = false
+              while (exact == null && cit.hasNext) {
+                val cc = cit.next()
+                if (cc.getPath.size == 1) {
+                  val n = cc.getPath.toDotString
+                  if (n == c) exact = cc
+                  else if (caseInsensitive && n.equalsIgnoreCase(c)) {
+                    if (ci == null) ci = cc else ciAmbiguous = true
                   }
                 }
-                if (exact != null) exact
-                else if (ciAmbiguous) null
-                else ci
               }
-              if (chunk == null) ok = false
-              else chunkStat(chunk) match {
-                case Left(()) => unsupported.add(c); ok = false
-                case Right(None) => ok = false
-                case Right(Some((t, lo, hi))) =>
-                  if (tag == null) { tag = t; mn = lo; mx = hi }
-                  else if (tag != t) ok = false
-                  else {
-                    (statCompare(tag, lo, mn), statCompare(tag, hi, mx)) match {
-                      case (Some(a), Some(b)) =>
-                        if (a < 0) mn = lo
-                        if (b > 0) mx = hi
-                      case _ => ok = false
-                    }
+              if (exact != null) exact
+              else if (ciAmbiguous) null
+              else ci
+            }
+            if (chunk == null) ok = false
+            else chunkStat(chunk) match {
+              case Left(()) => unsupported.add(c); ok = false
+              case Right(None) => ok = false
+              case Right(Some((t, lo, hi))) =>
+                if (tag == null) { tag = t; mn = lo; mx = hi }
+                else if (tag != t) ok = false
+                else {
+                  (statCompare(tag, lo, mn), statCompare(tag, hi, mx)) match {
+                    case (Some(a), Some(b)) =>
+                      if (a < 0) mn = lo
+                      if (b > 0) mx = hi
+                    case _ => ok = false
                   }
-              }
+                }
             }
           }
-          if (ok && tag != null) Some(c -> ColStat(tag, mn, mx)) else None
-        }.toMap
-        manifestKey(dir, st.getPath.toString) ->
-          (colStats + (RowsCol -> ColStat("num", cnt.toString, cnt.toString)))
-      } finally rd.close()
-      }
-    }
-    val perFile =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(perFileFutures),
-        scala.concurrent.duration.Duration.Inf).toMap
-      finally pool.shutdown()
+        }
+        if (ok && tag != null) Some(c -> ColStat(tag, mn, mx)) else None
+      }.toMap
+      manifestKey(dir, st.getPath.toString) ->
+        (colStats + (RowsCol -> ColStat("num", cnt.toString, cnt.toString)))
+    }.toMap
     import scala.jdk.CollectionConverters._
     val unsup = unsupported.asScala.toSet
     // a column that fell back to the scan must not ALSO carry partial

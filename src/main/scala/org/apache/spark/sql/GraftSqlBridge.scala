@@ -66,4 +66,21 @@ object GraftSqlBridge {
         if (ids.size == ts.size) Some((names(ids), None)) else None
     }
   }
+
+  /** Spark's own parquet schema merge — the `StructType.merge`
+    * (`private[sql]`) that `mergeSchema` inference folds file schemas
+    * with — failing with the same CANNOT_MERGE_SCHEMAS error when a
+    * column's types conflict. */
+  def mergeFileSchemas(left: types.StructType, right: types.StructType,
+                       caseSensitive: Boolean): types.StructType =
+    try left.merge(right, caseSensitive)
+    catch { case e: org.apache.spark.SparkException =>
+      throw errors.QueryExecutionErrors.failedMergingSchemaError(left, right, e)
+    }
+
+  /** Whether Spark's file index skips a file or directory of this name
+    * (`_SUCCESS`, `.crc` sidecars, `_temporary` and `.spark-staging`
+    * dirs; `k=v` partition dirs are kept). */
+  def hiddenFromFileIndex(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -3,25 +3,15 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.Catalog
+import graft.catalog.{Catalog, FolderMeta}
 import graft.extract.DeterministicExtractor
 import graft.streaming.Ingest
 
 /** End-to-end streaming ingest test (FIXTURES.md §B.8): landing dir →
   * admission → extraction → typed casts → schema-evolving append →
   * archive, with checkpoint replay asserting exactly-once. */
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
-
-  /** Recursive delete with the directory stream CLOSED (an unclosed
-    * Files.list leaks a handle per directory for the JVM's life). */
-  private def rmAll(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(child => rmAll(child)) finally s.close()
-    }
-    Files.deleteIfExists(p); ()
-  }
 
   private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
     val s = Files.walk(from)
@@ -39,7 +29,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("ingest e2e: typed append, rejects, archive, evolution, replay") {
-    val root = Files.createTempDirectory("graft-ingest").toString
+    val root = tempDir("graft-ingest")
     val landing = s"$root/landing"
     val warehouse = s"$root/warehouse"
     val processed = s"$root/processed"
@@ -118,7 +108,7 @@ class IngestSpec extends AnyFunSuite {
     // document must land EXACTLY like its plain-text twin — same
     // typed KPIs — while non-PDF payloads are untouched by the
     // normalization.
-    val root = Files.createTempDirectory("graft-ingest-pdf").toString
+    val root = tempDir("graft-ingest-pdf")
     val master = DeterministicExtractor.discover("master.pdf",
       "Total=$10\nStatus=Active".getBytes(StandardCharsets.UTF_8))
     val meta = Catalog.train("u1", "f1", "pdf docs", master)
@@ -148,7 +138,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("volume: 300 files, 3 folders, bounded micro-batches, no dups") {
-    val root = Files.createTempDirectory("graft-ingest-vol").toString
+    val root = tempDir("graft-ingest-vol")
     val folders = Seq("f1", "f2", "f3")
     val catalog = folders.foldLeft(Catalog.empty) { (c, f) =>
       c.add(Catalog.train("u1", f, "bulk", Map("Amount" -> "$10")))
@@ -178,7 +168,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("catalog save/load round-trips through the warehouse (Firestore analog)") {
-    val root = Files.createTempDirectory("graft-cat").toString
+    val root = tempDir("graft-cat")
     val c = Catalog.empty
       .add(Catalog.train("u1", "f1", "hint one",
         Map("Total Revenue ($)" -> "$1,234.56", "Status" -> "Active")))
@@ -195,7 +185,7 @@ class IngestSpec extends AnyFunSuite {
     // one BigQuery table the same way, main.py:262-264); their writes
     // are serialized within the table group so the shared dynamic
     // overwrite can't race, and both folders' rows land.
-    val root = Files.createTempDirectory("graft-ingest-collide").toString
+    val root = tempDir("graft-ingest-collide")
     val m1 = Catalog.train("u1", "a.b", "x", Map("Amount" -> "$10"))
     val m2 = Catalog.train("u1", "a_b", "x", Map("Amount" -> "$10"))
     assert(m1.tableName == m2.tableName)
@@ -213,7 +203,7 @@ class IngestSpec extends AnyFunSuite {
   test("legacy all-STRING path: name-only training ingests untyped columns") {
     // reference main.py:319-351: no samples → every KPI column STRING,
     // values land raw (sentinel-normalized only, no casts).
-    val root = Files.createTempDirectory("graft-ingest-legacy").toString
+    val root = tempDir("graft-ingest-legacy")
     val meta = Catalog.trainLegacy("u1", "f1", "x", Seq("Amount", "Status"))
     assert(meta.kpis.forall(_.logicalType == "string"))
     assert(meta.schema("kpi_amount").dataType ==
@@ -233,13 +223,13 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("catalog read-back fast path: cached reads don't re-scan the store") {
-    val root = Files.createTempDirectory("graft-cat-fast").toString
+    val root = tempDir("graft-cat-fast")
     val c = Catalog.empty.add(Catalog.train("u1", "f1", "h", Map("A" -> "$1")))
     Catalog.save(spark, c, root)          // save primes the cache
     assert(Catalog.loadCached(spark, root) == c)
     // Destroy the persisted store: a cached re-read must still serve
     // the metadata — proof no scan happens (main.py:551-560 fast path).
-    rmAll(Paths.get(root, "_catalog"))
+    SparkTestBase.deleteTree(Paths.get(root, "_catalog"))
     assert(Catalog.loadCached(spark, root) == c)
     // Invalidate → next read goes to disk and fails (store is gone).
     Catalog.invalidate(root)
@@ -251,12 +241,12 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("loadCachedFresh detects an external store update; unchanged store serves cache") {
-    val root = Files.createTempDirectory("graft-cat-fresh").toString
+    val root = tempDir("graft-cat-fresh")
     val c1 = Catalog.empty.add(Catalog.train("u1", "f1", "h", Map("A" -> "$1")))
     Catalog.save(spark, c1, root)
     // Stash c1's persisted form, then let an "external writer" (same
     // serialization, cache forcibly reverted) change the store.
-    val stash = Files.createTempDirectory("graft-cat-stash")
+    val stash = Paths.get(tempDir("graft-cat-stash"))
     copyTree(Paths.get(root, "_catalog"), stash.resolve("_catalog"))
     val c2 = c1.add(Catalog.train("u2", "f2", "", Map("B" -> "2")))
     Catalog.save(spark, c2, root)
@@ -265,7 +255,7 @@ class IngestSpec extends AnyFunSuite {
     // External change BEHIND the JVM's back: restore c1's files over
     // the store. The zero-RPC path must still serve c2 (documented),
     // the fresh path must notice the listing change and reload c1.
-    rmAll(Paths.get(root, "_catalog"))
+    SparkTestBase.deleteTree(Paths.get(root, "_catalog"))
     copyTree(stash.resolve("_catalog"), Paths.get(root, "_catalog"))
     assert(Catalog.loadCached(spark, root) == c2, "zero-RPC path: cached")
     assert(Catalog.loadCachedFresh(spark, root) == c1,
@@ -275,7 +265,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("per-folder staleness: touching one folder reloads only that folder") {
-    val root = Files.createTempDirectory("graft-cat-folder").toString
+    val root = tempDir("graft-cat-folder")
     val mA = Catalog.train("u1", "fa", "ha", Map("A" -> "$1"))
     val mB = Catalog.train("u2", "fb", "hb", Map("B" -> "2"))
     Catalog.save(spark, Catalog.empty.add(mA).add(mB), root)
@@ -315,7 +305,7 @@ class IngestSpec extends AnyFunSuite {
     // "a.b" and "a_b" share one TABLE by documented contract, but they
     // are distinct folders — the per-folder store must keep BOTH
     // metadata files (the file name embeds a digest of the raw pair).
-    val root = Files.createTempDirectory("graft-cat-collide").toString
+    val root = tempDir("graft-cat-collide")
     val m1 = Catalog.train("u1", "a.b", "h1", Map("A" -> "$1"))
     val m2 = Catalog.train("u1", "a_b", "h2", Map("B" -> "2"))
     assert(m1.tableName == m2.tableName, "fixture must actually collide")
@@ -327,7 +317,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("saveFolder migrates pre-digest per-folder files (no stale twin left)") {
-    val root = Files.createTempDirectory("graft-cat-predigest").toString
+    val root = tempDir("graft-cat-predigest")
     val dir = Paths.get(root, "_catalog")
     Files.createDirectories(dir)
     // A per-folder file named WITHOUT the digest suffix (the layout of
@@ -350,7 +340,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("saveFolder migrates a legacy single-file catalog store") {
-    val root = Files.createTempDirectory("graft-cat-legacy").toString
+    val root = tempDir("graft-cat-legacy")
     val dir = Paths.get(root, "_catalog")
     Files.createDirectories(dir)
     // The pre-per-folder layout: one Spark-written part file holding
@@ -373,7 +363,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("a throwing extractor degrades to NULL KPIs instead of killing the batch") {
-    val root = Files.createTempDirectory("graft-ingest-err").toString
+    val root = tempDir("graft-ingest-err")
     val meta = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10"))
     write(root + "/landing", "incoming/u1/f1/batch/bad.pdf", "Amount=$500")
     val throwing = new graft.extract.Extractor {
@@ -394,7 +384,7 @@ class IngestSpec extends AnyFunSuite {
     // engine replays it — with the landing files already moved to
     // processed/. The replay must neither fail (missing files) nor
     // lose/duplicate the rows the crashed attempt wrote.
-    val root = Files.createTempDirectory("graft-ingest-replay").toString
+    val root = tempDir("graft-ingest-replay")
     val meta = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10"))
     val catalog = Catalog.empty.add(meta)
     write(root + "/landing", "incoming/u1/f1/batch/a.pdf", "Amount=$100")
@@ -443,7 +433,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("ingest e2e through the batched-RPC extractor, with failure injection") {
     import graft.extract.{BatchedRpcExtractor, ExtractionClient}
-    val root = Files.createTempDirectory("graft-ingest-rpc").toString
+    val root = tempDir("graft-ingest-rpc")
     val meta = Catalog.train("u1", "f1", "x",
       Map("Amount" -> "$10", "Status" -> "Active"))
     val catalog = Catalog.empty.add(meta)
@@ -494,6 +484,97 @@ class IngestSpec extends AnyFunSuite {
     assert(cRow.isNullAt(cRow.fieldIndex("kpi_amount")))
     assert(cRow.isNullAt(cRow.fieldIndex("kpi_status")))
     assert(Files.exists(Paths.get(root, "processed/incoming/u1/f1/batch/c.pdf")))
+  }
+
+  /** Land `docs` ((folder, file) -> body, all under uid u1) and run one
+    * AvailableNow ingest wave over `root`'s landing zone. */
+  private def wave(root: String, catalog: Catalog,
+                   docs: ((String, String), String)*): Unit = {
+    docs.foreach { case ((folder, file), body) =>
+      write(s"$root/landing", s"incoming/u1/$folder/batch/$file", body) }
+    Ingest.start(spark, s"$root/landing", s"$root/warehouse", s"$root/processed",
+      s"$root/checkpoint", catalog, DeterministicExtractor).awaitTermination()
+  }
+
+  /** The same table read through Spark's own footer-merging inference —
+    * the schema every union-schema pin below expects. */
+  private def mergeSchemaRead(root: String, meta: FolderMeta) =
+    spark.read.option("mergeSchema", "true")
+      .parquet(s"$root/warehouse/${meta.tableName}")
+
+  test("union schema: colliding folders with different KPI sets each see both folders' columns") {
+    val root = tempDir("graft-union-collide")
+    val m1 = Catalog.train("u1", "a.b", "x", Map("Amount" -> "$10"))
+    val m2 = Catalog.train("u1", "a_b", "x",
+      Map("Amount" -> "$10", "Status" -> "Active"))
+    wave(root, Catalog.empty.add(m1).add(m2),
+      ("a.b", "x.pdf") -> "Amount=$100",
+      ("a_b", "y.pdf") -> "Amount=$200\nStatus=Closed")
+    Seq(m1, m2).foreach { m =>
+      val t = Catalog.readTable(spark, s"$root/warehouse", m)
+      assert(t.schema == mergeSchemaRead(root, m).schema)
+      val got = t.select("file_name", "kpi_amount", "kpi_status").collect()
+        .map(r => (r.getString(0), r.getDouble(1), Option(r.getString(2)))).toSet
+      assert(got == Set(("x.pdf", 100.0, None), ("y.pdf", 200.0, Some("Closed"))),
+        s"${m.folder} must see both folders' columns")
+    }
+  }
+
+  test("union schema: a re-train that drops a KPI still shows the old column with its values") {
+    val root = tempDir("graft-union-drop")
+    val m1 = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10", "Status" -> "Active"))
+    wave(root, Catalog.empty.add(m1), ("f1", "a.pdf") -> "Amount=$100\nStatus=Open")
+    val m2 = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10"))
+    assert(!m2.schema.fieldNames.contains("kpi_status"))
+    wave(root, Catalog.empty.add(m2), ("f1", "b.pdf") -> "Amount=$200\nStatus=Dropped")
+    val t = Ingest.readTable(spark, s"$root/warehouse", m2)
+    assert(t.schema == mergeSchemaRead(root, m2).drop("_batch_id").schema)
+    val got = t.select("file_name", "kpi_amount", "kpi_status").collect()
+      .map(r => (r.getString(0), r.getDouble(1), Option(r.getString(2)))).toSet
+    assert(got == Set(("a.pdf", 100.0, Some("Open")), ("b.pdf", 200.0, None)))
+  }
+
+  test("union schema: a wave landed after a cached read adds its new column on the next read") {
+    val root = tempDir("graft-union-cache")
+    val wh = s"$root/warehouse"
+    val m1 = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10"))
+    wave(root, Catalog.empty.add(m1), ("f1", "a.pdf") -> "Amount=$100")
+    assert(Catalog.readTable(spark, wh, m1).count() == 1)
+    assert(!Catalog.readTable(spark, wh, m1).columns.contains("kpi_region"))
+    val m2 = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10", "Region" -> "EMEA"))
+    wave(root, Catalog.empty.add(m2), ("f1", "b.pdf") -> "Amount=$200\nRegion=APAC")
+    // Read with the STALE metadata: the new column comes from the
+    // files, not from the catalog.
+    val t = Catalog.readTable(spark, wh, m1)
+    assert(t.schema == mergeSchemaRead(root, m1).schema)
+    val got = t.select("file_name", "kpi_region").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(got == Map("a.pdf" -> None, "b.pdf" -> Some("APAC")))
+  }
+
+  test("union schema: _batch_id keeps its partition-inferred type in Catalog.readTable") {
+    val root = tempDir("graft-union-batchid")
+    val m = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10"))
+    wave(root, Catalog.empty.add(m), ("f1", "a.pdf") -> "Amount=$100")
+    wave(root, Catalog.empty.add(m), ("f1", "b.pdf") -> "Amount=$200")
+    val t = Catalog.readTable(spark, s"$root/warehouse", m)
+    assert(t.schema == mergeSchemaRead(root, m).schema)
+    assert(t.schema.last == org.apache.spark.sql.types.StructField(
+      "_batch_id", org.apache.spark.sql.types.IntegerType))
+    assert(t.select("_batch_id").collect().map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
+  }
+
+  test("union schema: two files typing one column differently fail the read") {
+    import spark.implicits._
+    val root = tempDir("graft-union-conflict")
+    val m = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10"))
+    val table = s"$root/warehouse/${m.tableName}"
+    Seq(("r1", 1.0)).toDF("row_id", "kpi_amount").write.parquet(s"$table/_batch_id=0")
+    Seq(("r2", "1")).toDF("row_id", "kpi_amount").write.parquet(s"$table/_batch_id=1")
+    val e = intercept[org.apache.spark.SparkException] {
+      Catalog.readTable(spark, s"$root/warehouse", m).collect()
+    }
+    assert(e.getCondition == "CANNOT_MERGE_SCHEMAS", e.getMessage)
   }
 
   test("admit implements the B.6 admission vectors") {

@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, LinkOption, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared local session for the whole test JVM (Test / fork := true,
   * so this JVM is dedicated to the test run). */
@@ -35,4 +38,34 @@ object SparkTestBase {
   /** The local filesystem path behind a [[tmpRoot]] root. */
   def localPath(root: String): String =
     new org.apache.hadoop.fs.Path(root).toUri.getPath
+
+  /** Recursive delete with every directory stream CLOSED (an unclosed
+    * Files.list leaks a handle per directory for the JVM's life);
+    * symbolic links are removed, never followed. */
+  def deleteTree(p: Path): Unit = {
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
+      val s = Files.list(p)
+      try s.forEach(child => deleteTree(child)) finally s.close()
+    }
+    Files.deleteIfExists(p); ()
+  }
+}
+
+/** Temp directories a suite makes through [[tempDir]]; all of them are
+  * deleted when the suite ends, so a test run leaves nothing in the
+  * temp dir. */
+trait TempDirs extends BeforeAndAfterAll { self: Suite =>
+  private val made =
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory named `prefix…`, deleted after the suite. */
+  protected def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    made.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try made.forEach(d => SparkTestBase.deleteTree(d))
+    finally super.afterAll()
 }

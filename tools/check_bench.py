@@ -9,6 +9,11 @@ Usage: python3 tools/check_bench.py <bench.json> [drift=1.5]
 "tail" field embeds the (possibly head-truncated) per-query line — the
 tool scavenges every "q_name":sec pair it can find in the tail.
 
+Prints the run's requested `cpus` (local[N]) and the machine's `nproc`
+next to the core count the MIN table was taken at (BASELINE_CORES.json,
+kept by tools/update_baseline.py) and warns when they differ: a MIN
+taken on other cores is no like-for-like bound.
+
 Exit 0 when nothing drifts; exit 1 with the violator table otherwise.
 >1.5x growth of a per-query MIN is the regression signal BASELINE.md
 documents (totals drift with container noise; MINs do not). Dev-only
@@ -18,10 +23,19 @@ import json, re, sys, os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE = os.path.join(ROOT, "BASELINE_QUERIES.json")
+CORES = os.path.join(ROOT, "BASELINE_CORES.json")
 
 
-def parse_bench(path):
-    got = {}
+def parse_cores(text):
+    """The run's (cpus, nproc) as recorded on graft.Bench's total line;
+    None for a field the run did not record."""
+    cpus = re.search(r'"cpus":"?(\d+)', text)
+    nproc = re.search(r'"nproc":(\d+)', text)
+    return (int(cpus.group(1)) if cpus else None,
+            int(nproc.group(1)) if nproc else None)
+
+
+def read_text(path):
     text = open(path).read()
     # Driver artifact: JSON object with a "tail" capture.
     try:
@@ -30,6 +44,11 @@ def parse_bench(path):
             text = d["tail"]
     except ValueError:
         pass
+    return text
+
+
+def parse_bench(text):
+    got = {}
     for line in text.splitlines():
         line = line.strip()
         if line.startswith("{"):
@@ -54,9 +73,18 @@ def main():
         sys.exit(__doc__)
     drift = float(sys.argv[2]) if len(sys.argv) > 2 else 1.5
     mins = json.load(open(BASE))
-    got = parse_bench(sys.argv[1])
+    text = read_text(sys.argv[1])
+    got = parse_bench(text)
     if not got:
         sys.exit(f"no per-query timings found in {sys.argv[1]}")
+    cpus, nproc = parse_cores(text)
+    base_cores = (json.load(open(CORES))["cpus"]
+                  if os.path.exists(CORES) else None)
+    print(f"run: cpus={cpus} nproc={nproc}; MIN table: cpus={base_cores}")
+    for name, n in (("cpus", cpus), ("nproc", nproc)):
+        if n is not None and base_cores is not None and n != base_cores:
+            print(f"WARNING: run {name}={n} differs from the MIN table's "
+                  f"{base_cores} cores; drift below compares unlike runs")
     bad, new = [], []
     for name, sec in sorted(got.items()):
         if name not in mins:

@@ -16,12 +16,32 @@ per-query MIN across quiet-window runs is the comparison basis
 BASELINE.md documents (single shots swing 1.3-8x with co-tenant noise).
 Queries new to the baseline are added; failed runs (negative sentinel)
 are ignored. Dev-only helper; the shipped library is pure Scala.
+
+The table's core count — the `local[N]` every MIN was taken at — lives
+in BASELINE_CORES.json ({"cpus": N}). --from-md reads it from
+BASELINE.md's Config line; a run recorded at another core count is
+reported and NOT merged, so the MINs never mix core counts.
 """
 import json, re, sys, os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(ROOT, "BASELINE_QUERIES.json")
+CORES = os.path.join(ROOT, "BASELINE_CORES.json")
 MD = os.path.join(ROOT, "BASELINE.md")
+
+
+def load_cores():
+    """The MIN table's core count, or None when none is recorded."""
+    if os.path.exists(CORES):
+        with open(CORES) as f:
+            return int(json.load(f)["cpus"])
+    return None
+
+
+def save_cores(cpus):
+    with open(CORES, "w") as f:
+        json.dump({"cpus": cpus}, f)
+        f.write("\n")
 
 
 def load():
@@ -41,12 +61,16 @@ def save(mins):
 def main():
     args = sys.argv[1:]
     mins = load()
+    cores = load_cores()
     if "--from-md" in args:
-        rows = re.findall(r"^\| (q_[a-z_0-9]+) \| ([0-9.]+) \|$",
-                          open(MD).read(), re.M)
+        md = open(MD).read()
+        rows = re.findall(r"^\| (q_[a-z_0-9]+) \| ([0-9.]+) \|$", md, re.M)
         for name, sec in rows:
             v = float(sec)
             mins[name] = min(mins.get(name, v), v)
+        m = re.search(r"\*\*Config\*\*: `local\[(\d+)\]`", md)
+        if m and cores is None:
+            cores = int(m.group(1))
         args = [a for a in args if a != "--from-md"]
     for path in args:
         for line in open(path):
@@ -54,13 +78,24 @@ def main():
             if not line.startswith("{"):
                 continue
             d = json.loads(line)
-            for name, sec in d.get("queries", {}).items():
+            if "queries" not in d:
+                continue
+            cpus = int(d.get("cpus", 0)) or None
+            if cores is None:
+                cores = cpus
+            elif cpus != cores:
+                print(f"skipped a run in {path}: taken at cpus={cpus}, "
+                      f"the MIN table at cpus={cores}")
+                continue
+            for name, sec in d["queries"].items():
                 if sec <= 0:  # failed-run sentinel
                     continue
                 mins[name] = min(mins.get(name, sec), sec)
     if not mins:
         sys.exit("nothing to record — pass --from-md or bench json files")
     save(mins)
+    if cores is not None:
+        save_cores(cores)
 
 
 if __name__ == "__main__":
