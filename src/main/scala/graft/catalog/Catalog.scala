@@ -52,9 +52,12 @@ final case class Catalog(folders: Map[(String, String), FolderMeta]) {
 object Catalog {
   val empty: Catalog = Catalog(Map.empty)
 
-  private final case class KpiRow(name: String, logicalType: String)
-  private final case class FolderRow(uid: String, folder: String,
-                                     contextHint: String, kpis: Seq[KpiRow])
+  // package-private, not private: the typed projection `load` compiles
+  // must call their constructors, which a Scala-private class hides
+  private[catalog] final case class KpiRow(name: String, logicalType: String)
+  private[catalog] final case class FolderRow(uid: String, folder: String,
+                                              contextHint: String,
+                                              kpis: Seq[KpiRow])
 
   /** Persist the catalog under the warehouse (the rebuild's Firestore
     * analog — reference main.py:497-503 persists folder metadata on

@@ -1842,8 +1842,8 @@ object SnapshotTable {
     finally pool.shutdown()
   }
 
-  /** One column chunk's (tag, min, max) rendered EXACTLY as
-    * [[computeStats]]/[[statStr]] would render the same values, or
+  /** One column chunk's (tag, min, max) rendered EXACTLY as the scan
+    * in [[batchSummaries]] ([[statStr]]) renders the same values, or
     * Left(()) when the column's physical encoding carries no usable
     * footer statistics (INT96 timestamps — Spark's default parquet
     * timestamp encoding — and any exotic annotation), or Right(None)
@@ -2012,54 +2012,25 @@ object SnapshotTable {
   private def summarizeBatch(spark: SparkSession, dir: String,
                              batchDir: Path, listed: Seq[FileStatus],
                              statsCols: Seq[String],
-                             bloomCols: Seq[String], strictBlooms: Boolean
+                             bloomCols: Seq[String]
                             ): (Map[String, Map[String, ColStat]],
                                 Map[String, Map[String, Array[Byte]]]) = {
     val (footer, scanCols) =
       footerSummaries(spark, dir, listed, statsCols)
-    val (scanStats, blooms) = batchSummaries(spark, batchDir,
-      scanCols.toSeq, bloomCols, strictBlooms)
+    val (scanStats, blooms) =
+      batchSummaries(spark, batchDir, scanCols.toSeq, bloomCols)
     (withRowCounts(scanStats, footer), blooms)
   }
 
   /** Outer per-file merge of a batch's column stats with its
-    * [[RowsCol]] counts (computeStats drops stat-less files; counts
-    * cover every file). */
+    * [[RowsCol]] counts (the scan drops stat-less files; counts cover
+    * every file). */
   private def withRowCounts(stats: Map[String, Map[String, ColStat]],
                             rows: Map[String, Map[String, ColStat]]
                            ): Map[String, Map[String, ColStat]] =
     (stats.keySet ++ rows.keySet).iterator.map(f =>
       f -> (stats.getOrElse(f, Map.empty) ++ rows.getOrElse(f, Map.empty))
     ).toMap
-
-  /** Per-file min/max of `statsCols` for every parquet file under
-    * `batchDir` — ONE column-pruned scan of the freshly written batch,
-    * aggregated per input file. The collect is file-count-bounded
-    * control-plane (one row per written file). */
-  private def computeStats(spark: SparkSession, batchDir: Path,
-                           statsCols: Seq[String]
-                          ): Map[String, Map[String, ColStat]] = {
-    if (statsCols.isEmpty) return Map.empty
-    val df = spark.read.parquet(batchDir.toString)
-    val typed = statsCols.distinct
-      .filter(df.columns.contains)
-      .flatMap(c => statTag(df.schema(c).dataType).map(c -> _))
-    if (typed.isEmpty) return Map.empty
-    val aggs = typed.flatMap { case (c, _) =>
-      Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")) }
-    val rows = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val tableDir = batchDir.getParent.getParent.toString
-    rows.flatMap { r =>
-      val rel = manifestKey(tableDir, r.getString(0))
-      val cols = typed.flatMap { case (c, tag) =>
-        val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
-        if (mn == null || mx == null) None
-        else Some(c -> ColStat(tag, statStr(tag, mn), statStr(tag, mx)))
-      }.toMap
-      if (cols.isEmpty) None else Some(rel -> cols)
-    }.toMap
-  }
 
   /** Bloom sizing — part of the on-disk contract (a committed bitset
     * is only probeable at the same m and k). 16384 bits / 6 probes:
@@ -2081,78 +2052,30 @@ object SnapshotTable {
     case _ => false
   }
 
-  /** Per-file Bloom bitsets of `bloomCols` over the freshly written
-    * batch — same one-scan shape as [[computeStats]]. The key is the
-    * column CAST TO STRING: exactly reproducible on the probe side via
-    * `value.toString` for the [[bloomEligible]] (string/integral)
-    * point-lookup types, which are REQUIRED at build time. */
-  private def computeBlooms(spark: SparkSession, batchDir: Path,
-                            bloomCols: Seq[String],
-                            strict: Boolean = true
-                           ): Map[String, Map[String, Array[Byte]]] = {
-    if (bloomCols.isEmpty) return Map.empty
-    val df = spark.read.parquet(batchDir.toString)
-    // strict (user-supplied bloomCols on a NEW write): an ineligible
-    // column is a caller error — fail loudly. Non-strict (rewrite
-    // paths re-tracking a table's RECORDED bloom columns): a legacy
-    // manifest may track a column the eligibility rules have since
-    // rejected; drop it rather than wedge every compact/delete/merge
-    // of a pre-r7 table.
-    val (ok, dropped) = bloomCols.distinct.filter(df.columns.contains)
-      .partition(c => bloomEligible(df.schema(c).dataType))
-    dropped.foreach { c =>
-      require(!strict,
-        s"bloomCols: column $c (${df.schema(c).dataType.simpleString}) is " +
-          "not bloom-eligible; only string and integral key columns probe " +
-          "consistently (build casts to string, probe renders via toString)")
-      // (non-strict) un-track: the column simply stops carrying
-      // bitsets for the rewritten files — pruning degrades,
-      // correctness does not.
-    }
-    val present = ok
-    if (present.isEmpty) return Map.empty
-    val aggs = present.map { c =>
-      graft.plans.GraftFunctions.bloomFilterBits(
-        col(c).cast("string"), BloomBits, BloomProbes).as(s"__bf_$c") }
-    val rows = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val tableDir = batchDir.getParent.getParent.toString
-    rows.map { r =>
-      manifestKey(tableDir, r.getString(0)) ->
-        present.map(c => c -> r.getAs[Array[Byte]](s"__bf_$c")).toMap
-    }.toMap
-  }
-
-  /** [[computeStats]] + [[computeBlooms]] fused into ONE scan of the
-    * freshly written batch: both are per-input-file aggregations over
-    * the same files, so computing them separately pays a second full
-    * read of every byte just written — on a stats+Bloom table that
-    * second pass is pure waste on every append and every CoW rewrite.
-    * The fused plan aggregates min/max and bitsets in one
-    * groupBy(input_file_name); semantics (type filtering, bloom
-    * eligibility, strictness) are exactly the two helpers', which
-    * remain for single-summary callers. */
+  /** Per-file min/max of `statsCols` and Bloom bitsets of `bloomCols`
+    * for every parquet file under `batchDir`, in ONE column-pruned
+    * scan of the freshly written batch aggregated per input file
+    * (`groupBy(input_file_name)`); no scan at all when neither list
+    * names a column. The collect is file-count-bounded control plane
+    * (one row per written file). A Bloom key is the column CAST TO
+    * STRING, reproducible on the probe side via `value.toString` for
+    * the [[bloomEligible]] types. Caller-supplied Bloom columns were
+    * already checked by [[inheritTracking]]; an ineligible column
+    * here is a RECORDED legacy one the rules have since rejected, and
+    * it stops carrying bitsets (pruning degrades, correctness does
+    * not) rather than wedge every rewrite of an old table. */
   private def batchSummaries(spark: SparkSession, batchDir: Path,
                              statsCols: Seq[String],
-                             bloomCols: Seq[String],
-                             strictBlooms: Boolean
+                             bloomCols: Seq[String]
                             ): (Map[String, Map[String, ColStat]],
                                 Map[String, Map[String, Array[Byte]]]) = {
-    if (statsCols.isEmpty || bloomCols.isEmpty)
-      return (computeStats(spark, batchDir, statsCols),
-        computeBlooms(spark, batchDir, bloomCols, strictBlooms))
+    if (statsCols.isEmpty && bloomCols.isEmpty) return (Map.empty, Map.empty)
     val df = spark.read.parquet(batchDir.toString)
     val typed = statsCols.distinct
       .filter(df.columns.contains)
       .flatMap(c => statTag(df.schema(c).dataType).map(c -> _))
-    val (bOk, bDropped) = bloomCols.distinct.filter(df.columns.contains)
-      .partition(c => bloomEligible(df.schema(c).dataType))
-    bDropped.foreach { c =>
-      require(!strictBlooms,
-        s"bloomCols: column $c (${df.schema(c).dataType.simpleString}) is " +
-          "not bloom-eligible; only string and integral key columns probe " +
-          "consistently (build casts to string, probe renders via toString)")
-    }
+    val bOk = bloomCols.distinct.filter(df.columns.contains)
+      .filter(c => bloomEligible(df.schema(c).dataType))
     if (typed.isEmpty && bOk.isEmpty) return (Map.empty, Map.empty)
     val aggs =
       typed.flatMap { case (c, _) =>
@@ -2197,9 +2120,9 @@ object SnapshotTable {
     * silently strip file-skipping from every file it lands (at 100 TB
     * that's an unprunable stripe in the middle of the table, invisible
     * until someone profiles the scans). Caller-passed bloom columns
-    * keep the strict eligibility check here (a typo fails loudly);
-    * the downstream compute runs non-strict so INHERITED legacy
-    * columns degrade instead of wedging the append. */
+    * get the eligibility check here, before any write (a typo fails
+    * loudly); INHERITED legacy columns the rules have since rejected
+    * just stop carrying bitsets in [[batchSummaries]]. */
   private def inheritTracking(spark: SparkSession, dir: String,
                               df: DataFrame, statsCols: Seq[String],
                               bloomCols: Seq[String])
@@ -2239,14 +2162,9 @@ object SnapshotTable {
       .foreach(evolveSchema(_, df.schema))
     val vcs = enforceConstraints(spark, dir, df, "append")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val wb = labeled(spark, "append") {
-      writeBatch(df, dir, sCols, bCols, strictBlooms = false)
-    }
-    commitAppend(spark, dir, df.schema, wb.added, wb.stats, wb.refs,
-      wb.bloomCols, maxRetries, "append",
-      addedSizes = wb.sizes,
-      validatedConstraints = vcs,
-      claim = wb.claim).get // non-txn append never no-ops
+    val wb = labeled(spark, "append") { writeBatch(df, dir, sCols, bCols) }
+    commitAppend(spark, dir, df.schema, wb, maxRetries, "append",
+      validatedConstraints = vcs).get // non-txn append never no-ops
   }
 
   /** Atomic REPLACE: commit a snapshot containing ONLY `df`'s freshly
@@ -2265,7 +2183,7 @@ object SnapshotTable {
     // table POLICY (tracked stats/bloom columns) survives a replace,
     // same as constraints do — one overwrite must not strip pruning
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val wb = writeBatch(df, dir, sCols, bCols, strictBlooms = false)
+    val wb = writeBatch(df, dir, sCols, bCols)
     var attempt = 0
     while (attempt < maxRetries) {
       val base = latestVersion(spark, dir)
@@ -2288,29 +2206,25 @@ object SnapshotTable {
       s"overwrite: lost the commit race $maxRetries times under $dir")
   }
 
-  /** The optimistic append commit loop, shared by every
-    * already-written-batch committer: union the current file list
-    * with `added`, carry txns/stats/bloom refs forward, evolve the
-    * schema, retry on a lost race. */
+  /** The optimistic append commit loop, shared by every append-shaped
+    * committer: union the current file list with the written batch,
+    * carry txns/stats/bloom refs forward, evolve the schema, retry on
+    * a lost race. With `txn`, a head that already records the appId
+    * at or above its version is a no-op (None). */
   private def commitAppend(spark: SparkSession, dir: String,
-                           dfSchema: StructType, added: Seq[String],
-                           addedStats: Map[String, Map[String, ColStat]],
-                           addedRefs: Map[String, String],
-                           addedBloomCols: Seq[String],
+                           dfSchema: StructType, wb: WrittenBatch,
                            maxRetries: Int, op: String,
                            txn: Option[(String, Long)] = None,
-                           addedSizes: Map[String, Long] = Map.empty,
                            bucket: Option[BucketLayout] = None,
                            validatedConstraints: Map[String, String] =
-                             Map.empty,
-                           claim: Option[MapClaim] = None
+                             Map.empty
                           ): Option[Long] = {
     var validated = validatedConstraints
     var attempt = 0
     while (attempt < maxRetries) {
       val base = latestVersion(spark, dir)
       val st = base.map(stateOf(spark, dir, _))
-      checkMapClaim(st, claim, op)
+      checkMapClaim(st, wb.claim, op)
       // A bucketing claim only survives the commit if whatever table
       // state this attempt lands on still supports it (empty, or
       // bucketed with the SAME spec) — a racing unbucketed writer
@@ -2325,27 +2239,57 @@ object SnapshotTable {
       }
       val stats = st.map(_.stats).getOrElse(Map.empty)
       val refs = st.map(_.bloomRefs).getOrElse(Map.empty)
-      val bcols = (st.map(_.bloomCols).getOrElse(Nil) ++ addedBloomCols).distinct
+      val bcols = (st.map(_.bloomCols).getOrElse(Nil) ++ wb.bloomCols).distinct
       val unified = st.flatMap(_.schema)
         .map(evolveSchema(_, dfSchema))
         .getOrElse(evolveSchema(new StructType(), dfSchema))
       // a concurrently-added constraint must gate THIS batch too
       validated = recheckConstraints(spark, dir,
         st.map(_.constraints).getOrElse(Map.empty), validated,
-        added, Some(unified), op, claim.map(_.colMap).getOrElse(Map.empty))
+        wb.added, Some(unified), op,
+        wb.claim.map(_.colMap).getOrElse(Map.empty))
       val v = base.getOrElse(-1L) + 1
-      if (tryCommit(spark, dir, v, prev ++ added,
-          txn.fold(txns)(txns + _), stats ++ addedStats,
-          Some(unified), refs ++ addedRefs, bcols,
-          st.map(_.sizes).getOrElse(Map.empty) ++ addedSizes, op,
+      if (tryCommit(spark, dir, v, prev ++ wb.added,
+          txn.fold(txns)(txns + _), stats ++ wb.stats,
+          Some(unified), refs ++ wb.refs, bcols,
+          st.map(_.sizes).getOrElse(Map.empty) ++ wb.sizes, op,
           st.map(_.dvRefs).getOrElse(Map.empty), effBucket,
-          colMapOpt = claim.map(c => (c.colMap, c.retired))))
+          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
         return Some(v)
       attempt += 1 // lost the race: re-read the new latest and retry
     }
     throw new java.io.IOException(
       s"$op: lost the commit race $maxRetries times under $dir")
   }
+
+  /** The cheap replay pre-check of the exactly-once appends: true when
+    * the head already records `txn`'s appId at or above its version,
+    * so a replay skips its data write. The authoritative check re-runs
+    * inside [[commitAppend]]'s loop. */
+  private def alreadyCommitted(spark: SparkSession, dir: String,
+                               txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (appId, tv) =>
+      latestVersion(spark, dir).exists(v =>
+        manifestTxns(spark, dir, v).getOrElse(appId, Long.MinValue) >= tv)
+    }
+
+  /** Before any data is written, a name-derived layout writer (hidden
+    * partitions, buckets) runs the schema pre-flight and refuses a
+    * column-mapped table: its layout comes from column names, which a
+    * mapping decouples from the files. Returns the head state. */
+  private def layoutPreflight(spark: SparkSession, dir: String,
+                              df: DataFrame, op: String,
+                              writer: String): Option[TableState] =
+    latestVersion(spark, dir).map { v =>
+      manifestSchema(spark, dir, v).foreach(evolveSchema(_, df.schema))
+      val cur = stateOf(spark, dir, v)
+      require(cur.colMap.isEmpty && cur.retired.isEmpty,
+        s"$op: not supported on a column-mapped table — the $writer " +
+          "writer derives its layout from column names; use append " +
+          "(pruning stats still inherit), or recreate the table " +
+          "without a mapping")
+      cur
+    }
 
   /** Partition-disciplined append — HIDDEN partitioning (the public
     * Iceberg idea): readers prune through per-file stats in the
@@ -2367,44 +2311,57 @@ object SnapshotTable {
                         partitionBy: Seq[String],
                         statsCols: Seq[String] = Nil,
                         bloomCols: Seq[String] = Nil,
-                        maxRetries: Int = 20): Long = {
+                        maxRetries: Int = 20): Long =
+    partitionedAppend(df, dir, partitionBy, statsCols, bloomCols,
+      maxRetries, txn = None).get // non-txn append never no-ops
+
+  /** EXACTLY-ONCE [[appendPartitioned]] — the transactional-ledger
+    * twin ([[transactionalAppend]]'s contract) for partitioned
+    * layouts: a replayed (appId, txnVersion) is a manifest no-op
+    * (None; its data files stay as vacuumable orphans), so a
+    * Structured Streaming foreachBatch that routes rows into
+    * partition-disciplined files lands each micro-batch exactly once
+    * across checkpoint-recovery replays. The shape the streaming ANN
+    * index needs: cells as hidden partitions, replays no-ops. */
+  def transactionalAppendPartitioned(df: DataFrame, dir: String,
+                                     partitionBy: Seq[String],
+                                     appId: String, txnVersion: Long,
+                                     statsCols: Seq[String] = Nil,
+                                     bloomCols: Seq[String] = Nil,
+                                     maxRetries: Int = 20): Option[Long] = {
+    require(appId.nonEmpty,
+      "transactionalAppendPartitioned: appId must be non-empty")
+    partitionedAppend(df, dir, partitionBy, statsCols, bloomCols,
+      maxRetries, txn = Some(appId -> txnVersion))
+  }
+
+  /** The one body of [[appendPartitioned]] (`txn` None) and
+    * [[transactionalAppendPartitioned]]. */
+  private def partitionedAppend(df: DataFrame, dir: String,
+                                partitionBy: Seq[String],
+                                statsCols: Seq[String],
+                                bloomCols: Seq[String], maxRetries: Int,
+                                txn: Option[(String, Long)]
+                               ): Option[Long] = {
+    val op =
+      if (txn.isEmpty) "appendPartitioned" else "transactionalAppendPartitioned"
     require(partitionBy.nonEmpty,
-      "appendPartitioned: at least one partition column required")
+      s"$op: at least one partition column required")
+    val spark = df.sparkSession
+    if (alreadyCommitted(spark, dir, txn)) return None
     partitionBy.foreach { c =>
-      require(df.columns.contains(c), s"appendPartitioned: no such column $c")
+      require(df.columns.contains(c), s"$op: no such column $c")
       require(statTag(df.schema(c).dataType).nonEmpty,
-        s"appendPartitioned: column $c (${df.schema(c).dataType.simpleString})" +
+        s"$op: column $c (${df.schema(c).dataType.simpleString})" +
           " cannot carry pruning stats")
     }
-    val spark = df.sparkSession
-    latestVersion(spark, dir).foreach { v =>
-      manifestSchema(spark, dir, v).foreach(evolveSchema(_, df.schema))
-      val cur = stateOf(spark, dir, v)
-      require(cur.colMap.isEmpty && cur.retired.isEmpty,
-        "appendPartitioned: not supported on a column-mapped table — " +
-          "the hive-routed writer derives its layout from column names; " +
-          "use append (pruning stats still inherit), or recreate the " +
-          "table without a mapping")
-    }
-    val vcs = enforceConstraints(spark, dir, df, "appendPartitioned")
+    layoutPreflight(spark, dir, df, op, "hive-routed")
+    val vcs = enforceConstraints(spark, dir, df, op)
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val s = TableStore(spark, dir)
-    val batch = java.util.UUID.randomUUID().toString
-    val batchDir = new Path(dir, s"data/$batch")
-    val routed = partitionBy.foldLeft(df)((d, c) =>
-      d.withColumn(s"__pv_$c", col(c)))
-    internalWrite(routed, batchDir.toString,
-      partitionBy.map(c => s"__pv_$c"))
-    val listed = listParquetRec(s, batchDir)
-    val added = listed.map(st => manifestKey(dir, st.getPath.toString))
-    val sizes = listed.map(st =>
-      manifestKey(dir, st.getPath.toString) -> st.getLen).toMap
-    val (stats, blooms) = summarizeBatch(spark, dir, batchDir, listed,
-      (partitionBy ++ sCols).distinct, bCols, strictBlooms = false)
-    val refs = writeBloomSidecar(spark, dir, batch, blooms)
-    commitAppend(spark, dir, df.schema, added, stats, refs, bCols,
-      maxRetries, "appendPartitioned", addedSizes = sizes,
-      validatedConstraints = vcs).get // non-txn append never no-ops
+    val wb = writeBatch(df, dir, sCols, bCols,
+      layout = PartitionedBatch(partitionBy))
+    commitAppend(spark, dir, df.schema, wb, maxRetries, op, txn,
+      validatedConstraints = vcs)
   }
 
   /** BUCKETED append — the shuffle-elimination layout (the public
@@ -2441,44 +2398,28 @@ object SnapshotTable {
       require(df.columns.contains(c), s"appendBucketed: no such column $c") }
     val spark = df.sparkSession
     val layout = BucketLayout(numBuckets, bucketBy, sortBy)
-    latestVersion(spark, dir).foreach { v =>
-      manifestSchema(spark, dir, v).foreach(evolveSchema(_, df.schema))
-      val cur = stateOf(spark, dir, v)
-      require(cur.colMap.isEmpty && cur.retired.isEmpty,
-        "appendBucketed: not supported on a column-mapped table — the " +
-          "bucketed writer derives its layout from column names; use " +
-          "append, or recreate the table without a mapping")
-      require(cur.files.isEmpty || cur.bucket.contains(layout),
-        s"appendBucketed: table under $dir is not bucketed as $layout " +
-          s"(found ${cur.bucket.orNull}) — overwrite or compact first")
+    layoutPreflight(spark, dir, df, "appendBucketed", "bucketed").foreach {
+      cur =>
+        require(cur.files.isEmpty || cur.bucket.contains(layout),
+          s"appendBucketed: table under $dir is not bucketed as $layout " +
+            s"(found ${cur.bucket.orNull}) — overwrite or compact first")
     }
     val vcs = enforceConstraints(spark, dir, df, "appendBucketed")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val s = TableStore(spark, dir)
-    val batch = java.util.UUID.randomUUID().toString
-    val batchDir = new Path(dir, s"data/$batch")
-    writeBucketedBatch(df, s, batchDir, layout)
-    val listed = listParquetRec(s, batchDir)
-    val added = listed.map(st => manifestKey(dir, st.getPath.toString))
-    val sizes = listed.map(st =>
-      manifestKey(dir, st.getPath.toString) -> st.getLen).toMap
-    val (stats, blooms) = summarizeBatch(spark, dir, batchDir, listed,
-      sCols, bCols, strictBlooms = false)
-    val refs = writeBloomSidecar(spark, dir, batch, blooms)
-    commitAppend(spark, dir, df.schema, added, stats, refs, bCols,
-      maxRetries, "appendBucketed", addedSizes = sizes,
+    val wb = writeBatch(df, dir, sCols, bCols, layout = BucketedBatch(layout))
+    commitAppend(spark, dir, df.schema, wb, maxRetries, "appendBucketed",
       bucket = Some(layout),
       validatedConstraints = vcs).get // non-txn append never no-ops
   }
 
-  /** The bucketed data write shared by [[appendBucketed]] and
-    * [[compact]]`(bucketBy=…)`: rows route to `layout.numBuckets`
-    * files by Spark's bucket id (`pmod(hash(cols), n)` — all rows of
-    * a bucket land in ONE task, so the write emits exactly one file
-    * per non-empty bucket), written through the hive layout writer
-    * and then flattened to `part-*_0000K.<ext>` names at the batch
-    * root — the `.*_(\d+)(?:\..*)?$` form BucketingUtils parses the
-    * bucket id from on the read side. */
+  /** The bucketed data write of [[BucketedBatch]]: rows route to
+    * `layout.numBuckets` files by Spark's bucket id
+    * (`pmod(hash(cols), n)` — all rows of a bucket land in ONE task,
+    * so the write emits exactly one file per non-empty bucket),
+    * written through the hive layout writer and then flattened to
+    * `part-*_0000K.<ext>` names at the batch root — the
+    * `.*_(\d+)(?:\..*)?$` form BucketingUtils parses the bucket id
+    * from on the read side. */
   private def writeBucketedBatch(df: DataFrame, f: TableStore,
                                  batchDir: Path,
                                  layout: BucketLayout): Unit = {
@@ -2504,68 +2445,9 @@ object SnapshotTable {
     }
   }
 
-  /** EXACTLY-ONCE [[appendPartitioned]] — the transactional-ledger
-    * twin ([[transactionalAppend]]'s contract) for partitioned
-    * layouts: a replayed (appId, txnVersion) is a manifest no-op
-    * (None; its data files stay as vacuumable orphans), so a
-    * Structured Streaming foreachBatch that routes rows into
-    * partition-disciplined files lands each micro-batch exactly once
-    * across checkpoint-recovery replays. The shape the streaming ANN
-    * index needs: cells as hidden partitions, replays no-ops. */
-  def transactionalAppendPartitioned(df: DataFrame, dir: String,
-                                     partitionBy: Seq[String],
-                                     appId: String, txnVersion: Long,
-                                     statsCols: Seq[String] = Nil,
-                                     bloomCols: Seq[String] = Nil,
-                                     maxRetries: Int = 20): Option[Long] = {
-    require(appId.nonEmpty,
-      "transactionalAppendPartitioned: appId must be non-empty")
-    require(partitionBy.nonEmpty,
-      "transactionalAppendPartitioned: at least one partition column required")
-    val spark = df.sparkSession
-    // Cheap pre-check saves the data write on the common replay path;
-    // the authoritative check re-runs inside the commit loop.
-    val pre = latestVersion(spark, dir)
-      .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
-    if (pre.getOrElse(appId, Long.MinValue) >= txnVersion) return None
-    partitionBy.foreach { c =>
-      require(df.columns.contains(c),
-        s"transactionalAppendPartitioned: no such column $c")
-      require(statTag(df.schema(c).dataType).nonEmpty,
-        s"transactionalAppendPartitioned: column $c " +
-          s"(${df.schema(c).dataType.simpleString}) cannot carry pruning stats")
-    }
-    latestVersion(spark, dir).flatMap(manifestSchema(spark, dir, _))
-      .foreach(evolveSchema(_, df.schema))
-    val vcs =
-      enforceConstraints(spark, dir, df, "transactionalAppendPartitioned")
-    val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val s = TableStore(spark, dir)
-    val batch = java.util.UUID.randomUUID().toString
-    val batchDir = new Path(dir, s"data/$batch")
-    val routed = partitionBy.foldLeft(df)((d, c) =>
-      d.withColumn(s"__pv_$c", col(c)))
-    internalWrite(routed, batchDir.toString,
-      partitionBy.map(c => s"__pv_$c"))
-    val listed = listParquetRec(s, batchDir)
-    val added = listed.map(st => manifestKey(dir, st.getPath.toString))
-    val sizes = listed.map(st =>
-      manifestKey(dir, st.getPath.toString) -> st.getLen).toMap
-    val (stats, blooms) = summarizeBatch(spark, dir, batchDir, listed,
-      (partitionBy ++ sCols).distinct, bCols, strictBlooms = false)
-    val refs = writeBloomSidecar(spark, dir, batch, blooms)
-    commitAppend(spark, dir, df.schema, added, stats, refs, bCols,
-      maxRetries, "transactionalAppendPartitioned",
-      txn = Some(appId -> txnVersion), addedSizes = sizes,
-      validatedConstraints = vcs)
-  }
-
   private def listParquetRec(f: TableStore, p: Path): Seq[FileStatus] =
     f.listFiles(p).filter(_.getPath.getName.endsWith(".parquet"))
 
-  /** Write `df` into a fresh unique batch dir; return (relative file
-    * paths, their stats). No two writers can collide on data paths,
-    * so data writes need no coordination at all. */
   /** The column-mapping state a batch was written under: the head
     * mapping observed at write time (`base*` — commit loops fail
     * loudly if a concurrent rename/drop moved it, because the batch's
@@ -2585,18 +2467,37 @@ object SnapshotTable {
     else Iterator.from(1).map(i => s"${logical}_p$i")
       .find(c => !taken(c)).get
 
-  /** Write `df`'s rows as a new data batch. `df` carries LOGICAL
-    * column names; under an active mapping the files are written with
-    * PHYSICAL names (stable across renames), and `statsCols`/
-    * `bloomCols` are interpreted as PHYSICAL names (the recorded
-    * tracking lists — public entry points translate caller-supplied
-    * logical names in [[inheritTracking]]); entries naming a NEW
-    * logical column are re-pointed at the fresh physical name chosen
-    * here (a re-added column's tracking must key the column it
-    * actually lands in). Returns the batch's files/stats/refs/sizes
-    * plus the [[MapClaim]] the commit must thread (None when the
-    * table has no mapping — the legacy path is byte-identical to
-    * before), and the possibly-repointed stats/bloom lists.
+  /** How [[writeBatch]] lays a batch's rows out in files. */
+  private sealed trait BatchLayout
+  /** One plain Spark write of the frame. */
+  private case object PlainBatch extends BatchLayout
+  /** HIDDEN partitioning ([[appendPartitioned]]): the hive writer
+    * routes rows over duplicated `__pv_<c>` columns, so every file
+    * holds one value combination of `cols`; `cols` join the stats
+    * list, so each file's min == max prunes exactly. */
+  private final case class PartitionedBatch(cols: Seq[String])
+      extends BatchLayout
+  /** One file per non-empty bucket ([[writeBucketedBatch]]). */
+  private final case class BucketedBatch(layout: BucketLayout)
+      extends BatchLayout
+
+  /** Write `df`'s rows as a new data batch under a fresh unique
+    * `data/<uuid>` dir — the one place every writer lands data: write,
+    * list the parquet files, record their sizes, summarize them
+    * ([[summarizeBatch]]) and write the Bloom sidecar. No two writers
+    * can collide on data paths, so data writes need no coordination.
+    *
+    * `df` carries LOGICAL column names; under an active mapping the
+    * files are written with PHYSICAL names (stable across renames),
+    * and `statsCols`/`bloomCols` are interpreted as PHYSICAL names
+    * (the recorded tracking lists — public entry points translate
+    * caller-supplied logical names in [[inheritTracking]]); entries
+    * naming a NEW logical column are re-pointed at the fresh physical
+    * name chosen here (a re-added column's tracking must key the
+    * column it actually lands in). Returns the batch's
+    * files/stats/refs/sizes plus the [[MapClaim]] the commit must
+    * thread (None when the table has no mapping — the legacy path is
+    * byte-identical to before), and the possibly-repointed bloom list.
     *
     * `basis`: the table state `df`'s LOGICAL column names were
     * resolved against. CoW/MoR rewrites MUST pass their base state —
@@ -2607,16 +2508,24 @@ object SnapshotTable {
     * every read). With the base as the claim's compare point, the
     * commit loop's [[checkMapClaim]] turns that race into a loud
     * ConcurrentModificationException. Appends (frame authored by the
-    * caller against the current table) default to the head. */
+    * caller against the current table) default to the head.
+    *
+    * `layout`: [[PlainBatch]] (the default), [[PartitionedBatch]] or
+    * [[BucketedBatch]]. The latter two derive their files from column
+    * names, so they write `df` as named and claim no mapping: their
+    * callers refuse a mapped table up front ([[layoutPreflight]],
+    * compact's bucketBy check), and a mapping that lands after that
+    * fails the commit's [[checkMapClaim]]. */
   private def writeBatch(df: DataFrame, dir: String,
                          statsCols: Seq[String],
                          bloomCols: Seq[String] = Nil,
-                         strictBlooms: Boolean = true,
-                         basis: Option[TableState] = None
+                         basis: Option[TableState] = None,
+                         layout: BatchLayout = PlainBatch
                         ): WrittenBatch = {
     val spark = df.sparkSession
-    val baseSt = basis.orElse(
-      latestVersion(spark, dir).map(stateOf(spark, dir, _)))
+    val baseSt =
+      if (layout != PlainBatch) None
+      else basis.orElse(latestVersion(spark, dir).map(stateOf(spark, dir, _)))
     val baseMap = baseSt.map(_.colMap).getOrElse(Map.empty)
     val baseRet = baseSt.map(_.retired).getOrElse(Seq.empty)
     var sCols = statsCols
@@ -2650,15 +2559,24 @@ object SnapshotTable {
     val batch = java.util.UUID.randomUUID().toString
     val batchDir = new Path(dir, s"data/$batch")
     labeled(spark, "write-batch:data") {
-      internalWrite(physDf, batchDir.toString)
+      layout match {
+        case PlainBatch => internalWrite(physDf, batchDir.toString)
+        case PartitionedBatch(cols) =>
+          internalWrite(
+            cols.foldLeft(physDf)((d, c) => d.withColumn(s"__pv_$c", col(c))),
+            batchDir.toString, cols.map(c => s"__pv_$c"))
+        case BucketedBatch(bl) => writeBucketedBatch(physDf, f, batchDir, bl)
+      }
     }
-    val listed = f.list(batchDir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val added = listed.map(s => s"data/$batch/${s.getPath.getName}")
-    val sizes = listed.map(s =>
-      s"data/$batch/${s.getPath.getName}" -> s.getLen).toMap
+    val listed = listParquetRec(f, batchDir)
+    val added = listed.map(s => manifestKey(dir, s.getPath.toString))
+    val sizes = added.zip(listed.map(_.getLen)).toMap
+    val summaryCols = layout match {
+      case PartitionedBatch(cols) => (cols ++ sCols).distinct
+      case _ => sCols
+    }
     val (stats, blooms) = labeled(spark, "write-batch:summaries") {
-      summarizeBatch(spark, dir, batchDir, listed, sCols, bCols, strictBlooms)
+      summarizeBatch(spark, dir, batchDir, listed, summaryCols, bCols)
     }
     // Bitsets land in the batch's sidecar file; the manifest only ever
     // carries the path-sized refs.
@@ -2713,46 +2631,13 @@ object SnapshotTable {
                           maxRetries: Int = 20): Option[Long] = {
     require(appId.nonEmpty, "transactionalAppend: appId must be non-empty")
     val spark = df.sparkSession
-    // Cheap pre-check saves the data write on the common replay path;
-    // the authoritative check re-runs inside the commit loop.
-    val pre = latestVersion(spark, dir)
-      .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
-    if (pre.getOrElse(appId, Long.MinValue) >= txnVersion) return None
-    var validated = enforceConstraints(spark, dir, df, "transactionalAppend")
+    val txn = Some(appId -> txnVersion)
+    if (alreadyCommitted(spark, dir, txn)) return None
+    val vcs = enforceConstraints(spark, dir, df, "transactionalAppend")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
-    val wb = writeBatch(df, dir, sCols, bCols, strictBlooms = false)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(spark, dir)
-      val st = base.map(stateOf(spark, dir, _))
-      checkMapClaim(st, wb.claim, "transactionalAppend")
-      val prev = st.map(_.files).getOrElse(Nil)
-      val txns = st.map(_.txns).getOrElse(Map.empty)
-      val stats = st.map(_.stats).getOrElse(Map.empty)
-      val refs = st.map(_.bloomRefs).getOrElse(Map.empty)
-      val bcols = (st.map(_.bloomCols).getOrElse(Nil) ++ wb.bloomCols).distinct
-      if (txns.getOrElse(appId, Long.MinValue) >= txnVersion)
-        return None // a racing replay won; our files stay orphaned
-      val unified = st.flatMap(_.schema)
-        .map(evolveSchema(_, df.schema))
-        .getOrElse(evolveSchema(new StructType(), df.schema))
-      validated = recheckConstraints(spark, dir,
-        st.map(_.constraints).getOrElse(Map.empty), validated,
-        wb.added, Some(unified), "transactionalAppend",
-        wb.claim.map(_.colMap).getOrElse(Map.empty))
-      val v = base.getOrElse(-1L) + 1
-      if (tryCommit(spark, dir, v, prev ++ wb.added,
-          txns + (appId -> txnVersion), stats ++ wb.stats,
-          Some(unified), refs ++ wb.refs, bcols,
-          st.map(_.sizes).getOrElse(Map.empty) ++ wb.sizes,
-          "transactionalAppend",
-          st.map(_.dvRefs).getOrElse(Map.empty),
-          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return Some(v)
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"transactionalAppend: lost the commit race $maxRetries times under $dir")
+    val wb = writeBatch(df, dir, sCols, bCols)
+    commitAppend(spark, dir, df.schema, wb, maxRetries,
+      "transactionalAppend", txn, validatedConstraints = vcs)
   }
 
   /** Initialize an EMPTY table: one v0 manifest recording `schema`
@@ -3430,12 +3315,12 @@ object SnapshotTable {
     val f = TableStore(spark, dir)
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(s"compact: no committed version under $dir"))
-    val old = manifestFiles(spark, dir, base)
+    val baseSt = stateOf(spark, dir, base)
+    val old = baseSt.files
     if (old.isEmpty) return None
-    val baseSizes = stateOf(spark, dir, base).sizes
     // Manifest sizes when recorded (every writer since r7); RPC
     // fallback per legacy file.
-    val totalBytes = old.map(p => baseSizes.getOrElse(p,
+    val totalBytes = old.map(p => baseSt.sizes.getOrElse(p,
       f.status(new Path(dir, p)).getLen)).sum
     val nTarget = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (old.length <= nTarget && clusterBy.isEmpty && zOrderBy.isEmpty &&
@@ -3444,35 +3329,28 @@ object SnapshotTable {
     // Column mapping: layout columns arrive LOGICAL (they drive
     // repartition/sort on the logical frame below); the recorded
     // stats/bloom tracking is PHYSICAL — translate before merging.
-    val cm = stateOf(spark, dir, base).colMap
-    val cRet = stateOf(spark, dir, base).retired
-    require(bucketBy.isEmpty || (cm.isEmpty && cRet.isEmpty),
+    val cm = baseSt.colMap
+    require(bucketBy.isEmpty || (cm.isEmpty && baseSt.retired.isEmpty),
       "compact(bucketBy): not supported on a column-mapped table — " +
         "the bucketed writer derives file layout from column names; " +
         "drop the mapping (recreate the table) or skip bucketing")
     val trackedCols =
-      (manifestStats(spark, dir, base).values.flatMap(_.keys).toSeq ++
+      (baseSt.stats.values.flatMap(_.keys).toSeq ++
         (clusterBy ++ zOrderBy ++ bucketBy ++ bucketSortBy)
           .map(physName(cm, _))).distinct
-    val trackedBlooms = stateOf(spark, dir, base).bloomCols
-    val batch = java.util.UUID.randomUUID().toString
-    val batchDir = new Path(dir, s"data/$batch")
     // Deletion vectors applied: the rewrite MATERIALIZES merge-on-read
     // deletes — compaction is also the vector-purge operation.
-    val baseDv = stateOf(spark, dir, base).dvRefs
-    val src = readFilesWithDv(spark, dir, old,
-      manifestSchema(spark, dir, base), baseDv,
-      stateOf(spark, dir, base).colMap,
-      stateOf(spark, dir, base).defaults)
+    val src = readFilesWithDv(spark, dir, old, baseSt.schema, baseSt.dvRefs,
+      cm, baseSt.defaults)
     val bucketLayout = if (bucketBy.isEmpty) None
       else Some(BucketLayout(numBuckets, bucketBy, bucketSortBy))
-    bucketLayout match {
+    val (laid, layout) = bucketLayout match {
       // BUCKETING compaction — the in-place conversion TO (or re-
       // establishment of) a bucketed layout: the full rewrite routes
       // through the bucketed writer, and the commit (re-)asserts the
       // claim — how an existing 100 TB table earns zero-Exchange
       // joins without a second copy.
-      case Some(bl) => writeBucketedBatch(src, f, batchDir, bl)
+      case Some(bl) => (src, BucketedBatch(bl))
       case None =>
         val laid =
           if (zOrderBy.nonEmpty) {
@@ -3485,36 +3363,20 @@ object SnapshotTable {
           else if (clusterBy.isEmpty) src.coalesce(nTarget)
           else src.repartitionByRange(nTarget, clusterBy.map(col): _*)
             .sortWithinPartitions(clusterBy.map(col): _*)
-        // Data files always carry PHYSICAL names — layout ran on the
-        // logical frame; rename in one atomic select before writing.
-        val laidPhys =
-          if (cm.isEmpty) laid
-          else laid.select(laid.columns.map(c =>
-            col(c).as(physName(cm, c))).toSeq: _*)
-        internalWrite(laidPhys, batchDir.toString)
+        (laid, PlainBatch)
     }
-    val rewrittenList = f.list(batchDir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val rewritten = rewrittenList.map(s => s"data/$batch/${s.getPath.getName}")
-    val rewrittenSizes = rewrittenList.map(st =>
-      s"data/$batch/${st.getPath.getName}" -> st.getLen).toMap
-    // strict=false: trackedBlooms is the table's RECORDED column list,
-    // which on a pre-r7 table may include since-rejected types —
-    // compaction must complete, dropping those bitsets, not throw.
-    val (rewrittenStats, rwBlooms) = summarizeBatch(spark, dir, batchDir,
-      rewrittenList, trackedCols, trackedBlooms, strictBlooms = false)
-    val rewrittenRefs = writeBloomSidecar(spark, dir, batch, rwBlooms)
+    // The layout ran on the logical frame; writeBatch renames to
+    // PHYSICAL names against the base mapping, which its claim pins.
+    val wb = writeBatch(laid, dir, trackedCols, baseSt.bloomCols,
+      basis = Some(baseSt), layout = layout)
     var attempt = 0
     while (attempt < maxRetries) {
       val cur = latestVersion(spark, dir).get
       val curSt = stateOf(spark, dir, cur)
-      if (curSt.colMap != cm || curSt.retired != cRet)
-        throw new java.util.ConcurrentModificationException(
-          "compact: the table's column mapping changed during the " +
-            "rewrite (a concurrent renameColumn/dropColumn) — retry")
+      checkMapClaim(Some(curSt), wb.claim, "compact")
       // A deletion vector advanced on a compacted file since our read
       // would be silently dropped by the rewrite — conflict, loudly.
-      val dvMoved = old.filter(f => curSt.dvRefs.get(f) != baseDv.get(f))
+      val dvMoved = old.filter(f => curSt.dvRefs.get(f) != baseSt.dvRefs.get(f))
       if (dvMoved.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"compact: deletion vectors advanced concurrently on " +
@@ -3522,20 +3384,20 @@ object SnapshotTable {
       // Re-base: keep files that appeared after our read; drop only
       // the ones we actually rewrote. The txn ledger carries forward
       // untouched — compaction commits no writer transaction.
-      val next = curSt.files.filterNot(old.toSet) ++ rewritten
+      val next = curSt.files.filterNot(old.toSet) ++ wb.added
       // The bucketing claim only holds when the rewrite IS the whole
       // table — files a concurrent writer landed since our read are
       // carried forward unbucketed, so the claim degrades to None
       // (and any prior claim clears: this rewrite renamed files).
       val effBucket = bucketLayout.filter(_ =>
-        next.toSet == rewritten.toSet)
+        next.toSet == wb.added.toSet)
       if (tryCommit(spark, dir, cur + 1, next,
           curSt.txns,
-          curSt.stats ++ rewrittenStats,
+          curSt.stats ++ wb.stats,
           curSt.schema,
-          curSt.bloomRefs ++ rewrittenRefs,
+          curSt.bloomRefs ++ wb.refs,
           curSt.bloomCols,
-          curSt.sizes ++ rewrittenSizes, "compact",
+          curSt.sizes ++ wb.sizes, "compact",
           curSt.dvRefs -- old, effBucket))
         return Some(cur + 1)
       attempt += 1
@@ -4565,22 +4427,59 @@ object SnapshotTable {
                   maxRetries: Int = 20): Option[Long] = {
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(s"deleteWhere: no committed version under $dir"))
-    if (manifestFiles(spark, dir, base).isEmpty) return None
-    val touched = probe(spark, "delete-where:touched-probe") {
+    val baseSt = stateOf(spark, dir, base)
+    touchedRows(spark, dir, base, condition, "delete-where").flatMap {
+      case (touched, rows) =>
+        commitRewrite(spark, dir, touched, rows.filter(not(condition)),
+          trackedStatsCols(spark, dir, base), baseSt.bloomCols, maxRetries,
+          "deleteWhere", baseDv = baseSt.dvRefs, basis = Some(baseSt))
+    }
+  }
+
+  /** The copy-on-write read of [[deleteWhere]] and [[updateWhere]]:
+    * the files at `base` holding a row that matches `condition` (one
+    * `<tag>:touched-probe` job), sorted, with those files' live rows,
+    * logically named. None when the table is empty or nothing
+    * matched. */
+  private def touchedRows(spark: SparkSession, dir: String, base: Long,
+                          condition: Column, tag: String
+                         ): Option[(Seq[String], DataFrame)] = {
+    val st = stateOf(spark, dir, base)
+    if (st.files.isEmpty) return None
+    val touched = probe(spark, s"$tag:touched-probe") {
       collectFileCol(withFile(spark, dir, base).filter(condition), "__file")
         .map(manifestKey(dir, _)).sorted
     }
-    if (touched.isEmpty) return None
-    val baseDv = stateOf(spark, dir, base).dvRefs
-    val survivors =
-      readFilesWithDv(spark, dir, touched, manifestSchema(spark, dir, base),
-        baseDv, stateOf(spark, dir, base).colMap,
-        stateOf(spark, dir, base).defaults)
-        .filter(not(condition))
-    commitRewrite(spark, dir, touched, survivors,
-      trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base), maxRetries, "deleteWhere",
-      baseDv = baseDv, basis = Some(stateOf(spark, dir, base)))
+    if (touched.isEmpty) None
+    else Some(touched -> readFilesWithDv(spark, dir, touched, st.schema,
+      st.dvRefs, st.colMap, st.defaults))
+  }
+
+  /** The SET-list guards of [[updateWhere]] and [[updateWhereMor]]: at
+    * least one column, no column twice (SQL UPDATE rejects duplicate
+    * assignments; a map would silently keep the last), and every
+    * column already in the table at `base` (add-column evolution is
+    * [[append]]'s job; a typo'd SET column must not silently fork the
+    * schema or no-op the update). Returns the table's columns at
+    * `base`. */
+  private def checkSetColumns(spark: SparkSession, dir: String, base: Long,
+                              set: Seq[(String, Column)],
+                              op: String): Seq[String] = {
+    require(set.nonEmpty, s"$op: at least one SET column required")
+    val names = set.map(_._1)
+    require(names.distinct.length == names.length,
+      s"$op: duplicate SET columns: " +
+        s"${names.diff(names.distinct).distinct.mkString(", ")}")
+    // Pre-schema-recording manifests (schema == None) fall back to the
+    // table's read schema, so the guard holds on them too.
+    val fieldNames = manifestSchema(spark, dir, base).map(_.fieldNames.toSeq)
+      .getOrElse(read(spark, dir, Some(base)).columns.toSeq)
+    names.foreach { c =>
+      require(fieldNames.contains(c),
+        s"$op: SET column $c does not exist (columns: " +
+          s"${fieldNames.mkString(", ")})")
+    }
+    fieldNames
   }
 
   /** Copy-on-write row UPDATE — the remaining corner of the CRUD
@@ -4589,59 +4488,35 @@ object SnapshotTable {
     * files containing a matching row; within them, matched rows take
     * the SET expressions (evaluated against the pre-update row, as
     * SQL UPDATE defines) and unmatched rows carry byte-unchanged.
-    * SET columns must already exist (add-column evolution is
-    * [[append]]'s job; a typo'd SET column must not silently fork the
-    * schema). Same conflict surface as deleteWhere: a touched file
-    * rewritten concurrently throws ConcurrentModificationException.
+    * SET columns must already exist ([[checkSetColumns]]). Same
+    * conflict surface as deleteWhere: a touched file rewritten
+    * concurrently throws ConcurrentModificationException.
     * Returns the new version, or None when nothing matched. */
   def updateWhere(spark: SparkSession, dir: String, condition: Column,
                   set: Seq[(String, Column)],
                   maxRetries: Int = 20): Option[Long] = {
-    require(set.nonEmpty, "updateWhere: at least one SET column required")
-    // SQL UPDATE rejects duplicate assignments; set.toMap below would
-    // otherwise silently keep only the last one.
-    require(set.map(_._1).distinct.length == set.length,
-      s"updateWhere: duplicate SET columns: " +
-        s"${set.map(_._1).diff(set.map(_._1).distinct).distinct.mkString(", ")}")
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(s"updateWhere: no committed version under $dir"))
-    val schema = manifestSchema(spark, dir, base)
-    // Typo'd-SET guard must hold on pre-schema-recording manifests
-    // too (schema == None): fall back to the table's read schema —
-    // otherwise a misspelled column silently no-ops the update.
-    val fieldNames = schema.map(_.fieldNames.toSeq)
-      .getOrElse(read(spark, dir, Some(base)).columns.toSeq)
-    set.foreach { case (c, _) =>
-      require(fieldNames.contains(c),
-        s"updateWhere: SET column $c does not exist (columns: " +
-          s"${fieldNames.mkString(", ")})")
+    checkSetColumns(spark, dir, base, set, "updateWhere")
+    val baseSt = stateOf(spark, dir, base)
+    touchedRows(spark, dir, base, condition, "update-where").flatMap {
+      case (touched, src) =>
+        // All SET expressions see the PRE-update row: project them in
+        // one select, not a fold of withColumn (which would let later
+        // SETs read earlier SETs' outputs — not SQL UPDATE semantics).
+        val setMap = set.toMap
+        val rewritten = src.select(src.columns.map { c =>
+          setMap.get(c) match {
+            case Some(v) => when(condition, v).otherwise(col(c)).as(c)
+            case None => col(c)
+          }
+        }: _*)
+        val vcs = enforceConstraints(spark, dir, rewritten, "updateWhere")
+        commitRewrite(spark, dir, touched, rewritten,
+          trackedStatsCols(spark, dir, base), baseSt.bloomCols, maxRetries,
+          "updateWhere", baseDv = baseSt.dvRefs, checkConstraints = Some(vcs),
+          basis = Some(baseSt))
     }
-    if (manifestFiles(spark, dir, base).isEmpty) return None
-    val touched = probe(spark, "update-where:touched-probe") {
-      collectFileCol(withFile(spark, dir, base).filter(condition), "__file")
-        .map(manifestKey(dir, _)).sorted
-    }
-    if (touched.isEmpty) return None
-    val baseDv = stateOf(spark, dir, base).dvRefs
-    val src = readFilesWithDv(spark, dir, touched, schema, baseDv,
-      stateOf(spark, dir, base).colMap,
-      stateOf(spark, dir, base).defaults)
-    // All SET expressions see the PRE-update row: project them in one
-    // select, not a fold of withColumn (which would let later SETs
-    // read earlier SETs' outputs — not SQL UPDATE semantics).
-    val setMap = set.toMap
-    val rewritten = src.select(src.columns.map { c =>
-      setMap.get(c) match {
-        case Some(v) => when(condition, v).otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }: _*)
-    val vcs = enforceConstraints(spark, dir, rewritten, "updateWhere")
-    commitRewrite(spark, dir, touched, rewritten,
-      trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base), maxRetries, "updateWhere",
-      baseDv = baseDv, checkConstraints = Some(vcs),
-      basis = Some(stateOf(spark, dir, base)))
   }
 
   /** MERGE-ON-READ row DELETE — the write-cheap sibling of
@@ -4681,46 +4556,12 @@ object SnapshotTable {
       .select(col("__file").as("file"), col("__row_index").as("row_index"))
       .persist()
     try {
-    val affected = probe(spark, "delete-mor:affected-probe") {
-      collectFileCol(matches, "file").sorted
-    }
-    if (affected.isEmpty) return None
-    // Cumulative vector per affected file: previous positions ∪ new.
-    val prior = dvRows(spark, dir, baseSt.dvRefs, affected)
-      .map(_.filter(col("__dv_file").isin(affected: _*))
-        .select(col("__dv_file").as("file"),
-          col("__dv_rowidx").as("row_index")))
-    val vector = prior.map(matches.unionByName(_).distinct())
-      .getOrElse(matches)
-    val batch = java.util.UUID.randomUUID().toString
-    val ref = s"_dv/$batch"
-    labeled(spark, "delete-mor:vector-write") {
-      internalWrite(vector, new Path(dir, ref).toString)
-    }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val curSt = stateOf(spark, dir, cur)
-      val missing = affected.filterNot(curSt.files.toSet)
-      if (missing.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"deleteWhereMor: affected files rewritten concurrently: " +
-            missing.take(3).mkString(", "))
-      val dvMoved = affected.filter(f =>
-        curSt.dvRefs.get(f) != baseSt.dvRefs.get(f))
-      if (dvMoved.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"deleteWhereMor: deletion vectors advanced concurrently on " +
-            s"${dvMoved.take(3).mkString(", ")}")
-      if (tryCommit(spark, dir, cur + 1, curSt.files, curSt.txns,
-          curSt.stats, curSt.schema, curSt.bloomRefs, curSt.bloomCols,
-          curSt.sizes, "deleteMor",
-          curSt.dvRefs ++ affected.map(_ -> ref)))
-        return Some(cur + 1)
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"deleteWhereMor: lost the commit race $maxRetries times under $dir")
+      val affected = probe(spark, "delete-mor:affected-probe") {
+        collectFileCol(matches, "file").sorted
+      }
+      if (affected.isEmpty) None
+      else Some(commitVectors(spark, dir, baseSt, affected, matches,
+        "delete-mor", "deleteWhereMor", "deleteMor", maxRetries))
     } finally matches.unpersist(false)
   }
 
@@ -4744,23 +4585,12 @@ object SnapshotTable {
   def updateWhereMor(spark: SparkSession, dir: String, condition: Column,
                      set: Seq[(String, Column)],
                      maxRetries: Int = 20): Option[Long] = {
-    require(set.nonEmpty, "updateWhereMor: at least one SET column required")
-    require(set.map(_._1).distinct.length == set.length,
-      s"updateWhereMor: duplicate SET columns: " +
-        s"${set.map(_._1).diff(set.map(_._1).distinct).distinct.mkString(", ")}")
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(
         s"updateWhereMor: no committed version under $dir"))
+    val fieldNames = checkSetColumns(spark, dir, base, set, "updateWhereMor")
     val baseSt = stateOf(spark, dir, base)
     if (baseSt.files.isEmpty) return None
-    val schema = manifestSchema(spark, dir, base)
-    val fieldNames = schema.map(_.fieldNames.toSeq)
-      .getOrElse(read(spark, dir, Some(base)).columns.toSeq)
-    set.foreach { case (c, _) =>
-      require(fieldNames.contains(c),
-        s"updateWhereMor: SET column $c does not exist (columns: " +
-          s"${fieldNames.mkString(", ")})")
-    }
     // Matches among LIVE rows only, carrying their physical
     // positions. PERSISTED: the affected-files collect, the new-file
     // write, the vector write and any constraint probes all derive
@@ -4769,68 +4599,91 @@ object SnapshotTable {
     // rows pitch.
     val matches = withFile(spark, dir, base).filter(condition).persist()
     try {
-    val positions = matches.select(col("__file").as("file"),
-      col("__row_index").as("row_index"))
-    val affected = probe(spark, "update-mor:affected-probe") {
-      collectFileCol(positions, "file").sorted
-    }
-    if (affected.isEmpty) return None
-    // The updated forms: every row here matched, so the SET columns
-    // project unconditionally — all against the PRE-update row.
-    val setMap = set.toMap
-    val updated = matches.select(fieldNames.map(c =>
-      setMap.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    var validated = enforceConstraints(spark, dir, updated, "updateWhereMor")
-    // basis = base state: `updated` carries base-version logical names
-    val wb = writeBatch(updated, dir, trackedStatsCols(spark, dir, base),
-        trackedBloomCols(spark, dir, base), strictBlooms = false,
-        basis = Some(baseSt))
-    // Cumulative vector per affected file: previous positions ∪ new.
+      val positions = matches.select(col("__file").as("file"),
+        col("__row_index").as("row_index"))
+      val affected = probe(spark, "update-mor:affected-probe") {
+        collectFileCol(positions, "file").sorted
+      }
+      if (affected.isEmpty) return None
+      // The updated forms: every row here matched, so the SET columns
+      // project unconditionally — all against the PRE-update row.
+      val setMap = set.toMap
+      val updated = matches.select(fieldNames.map(c =>
+        setMap.get(c).map(_.as(c)).getOrElse(col(c))): _*)
+      val vcs = enforceConstraints(spark, dir, updated, "updateWhereMor")
+      // basis = base state: `updated` carries base-version logical names
+      val wb = writeBatch(updated, dir, trackedStatsCols(spark, dir, base),
+        baseSt.bloomCols, basis = Some(baseSt))
+      Some(commitVectors(spark, dir, baseSt, affected, positions,
+        "update-mor", "updateWhereMor", "updateMor", maxRetries,
+        Some((wb, updated.schema, vcs))))
+    } finally matches.unpersist(false)
+  }
+
+  /** The merge-on-read commit of [[deleteWhereMor]] and
+    * [[updateWhereMor]]: write each affected file's cumulative vector
+    * (its positions at `baseSt` ∪ `positions`) as one `_dv/<uuid>`
+    * sidecar (a `<tag>:vector-write` job), then commit the vectors —
+    * with the update's written batch, its frame schema and validated
+    * constraints when `batch` is given. An affected file rewritten or
+    * re-vectored since `baseSt` throws ConcurrentModificationException;
+    * so does (with a batch) a column mapping that moved. Returns the
+    * committed version. */
+  private def commitVectors(spark: SparkSession, dir: String,
+                            baseSt: TableState, affected: Seq[String],
+                            positions: DataFrame, tag: String, op: String,
+                            manifestOp: String, maxRetries: Int,
+                            batch: Option[(WrittenBatch, StructType,
+                              Map[String, String])] = None): Long = {
     val prior = dvRows(spark, dir, baseSt.dvRefs, affected)
       .map(_.filter(col("__dv_file").isin(affected: _*))
         .select(col("__dv_file").as("file"),
           col("__dv_rowidx").as("row_index")))
     val vector = prior.map(positions.unionByName(_).distinct())
       .getOrElse(positions)
-    val batch = java.util.UUID.randomUUID().toString
-    val ref = s"_dv/$batch"
-    labeled(spark, "update-mor:vector-write") {
+    val ref = s"_dv/${java.util.UUID.randomUUID()}"
+    labeled(spark, s"$tag:vector-write") {
       internalWrite(vector, new Path(dir, ref).toString)
     }
+    // the delete commits no batch: nothing added, no mapping claimed
+    val wb = batch.fold(WrittenBatch(Nil, Map.empty, Map.empty, Map.empty,
+      None, Nil))(_._1)
+    var validated = batch.fold(Map.empty[String, String])(_._3)
     var attempt = 0
     while (attempt < maxRetries) {
       val cur = latestVersion(spark, dir).get
       val curSt = stateOf(spark, dir, cur)
-      checkMapClaim(Some(curSt), wb.claim, "updateWhereMor")
+      if (batch.nonEmpty) checkMapClaim(Some(curSt), wb.claim, op)
       val missing = affected.filterNot(curSt.files.toSet)
       if (missing.nonEmpty)
         throw new java.util.ConcurrentModificationException(
-          s"updateWhereMor: affected files rewritten concurrently: " +
+          s"$op: affected files rewritten concurrently: " +
             missing.take(3).mkString(", "))
       val dvMoved = affected.filter(f =>
         curSt.dvRefs.get(f) != baseSt.dvRefs.get(f))
       if (dvMoved.nonEmpty)
         throw new java.util.ConcurrentModificationException(
-          s"updateWhereMor: deletion vectors advanced concurrently on " +
+          s"$op: deletion vectors advanced concurrently on " +
             s"${dvMoved.take(3).mkString(", ")}")
-      val nextSchema = Some(curSt.schema
-        .map(evolveSchema(_, updated.schema))
-        .getOrElse(evolveSchema(new StructType(), updated.schema)))
-      validated = recheckConstraints(spark, dir, curSt.constraints,
-        validated, wb.added, nextSchema, "updateWhereMor",
-        wb.claim.map(_.colMap).getOrElse(Map.empty))
+      val nextSchema = batch.fold(curSt.schema) { case (_, schema, _) =>
+        Some(curSt.schema.map(evolveSchema(_, schema))
+          .getOrElse(evolveSchema(new StructType(), schema)))
+      }
+      if (batch.nonEmpty)
+        validated = recheckConstraints(spark, dir, curSt.constraints,
+          validated, wb.added, nextSchema, op,
+          wb.claim.map(_.colMap).getOrElse(Map.empty))
       if (tryCommit(spark, dir, cur + 1, curSt.files ++ wb.added,
           curSt.txns, curSt.stats ++ wb.stats, nextSchema,
           curSt.bloomRefs ++ wb.refs, (curSt.bloomCols ++ wb.bloomCols).distinct,
-          curSt.sizes ++ wb.sizes, "updateMor",
+          curSt.sizes ++ wb.sizes, manifestOp,
           curSt.dvRefs ++ affected.map(_ -> ref),
           colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return Some(cur + 1)
+        return cur + 1
       attempt += 1
     }
     throw new java.io.IOException(
-      s"updateWhereMor: lost the commit race $maxRetries times under $dir")
-    } finally matches.unpersist(false)
+      s"$op: lost the commit race $maxRetries times under $dir")
   }
 
   /** Copy-on-write MERGE (upsert): for key-matched rows the source row
@@ -5507,14 +5360,10 @@ object SnapshotTable {
                             basis: Option[TableState] = None,
                             readOnly: Seq[String] = Nil
                            ): Option[Long] = {
-    // strictBlooms=false: bloomCols here is the table's RECORDED
-    // tracking list — legacy ineligible entries drop, never wedge a
-    // row-level op on a pre-r7 table. basis = the state the rewrite
-    // frame's logical names were resolved against (see writeBatch's
-    // column-mapping race contract).
+    // basis = the state the rewrite frame's logical names were
+    // resolved against (see writeBatch's column-mapping race contract).
     val wb = labeled(spark, op) {
-      writeBatch(rewrite, dir, statsCols, bloomCols,
-        strictBlooms = false, basis = basis)
+      writeBatch(rewrite, dir, statsCols, bloomCols, basis = basis)
     }
     val (added, addedStats, addedRefs, addedSizes, claim) =
       (wb.added, wb.stats, wb.refs, wb.sizes, wb.claim)

@@ -174,7 +174,13 @@ class IngestSpec extends AnyFunSuite with TempDirs {
         Map("Total Revenue ($)" -> "$1,234.56", "Status" -> "Active")))
       .add(Catalog.train("u2", "f9", "", Map("Date" -> "2024-01-15")))
     Catalog.save(spark, c, root)
-    val back = Catalog.load(spark, root)
+    // CODEGEN_ONLY turns a whole-stage codegen failure of load's
+    // typed projection into an error instead of a silent fallback
+    val mode = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(mode)
+    spark.conf.set(mode, "CODEGEN_ONLY")
+    val back = try Catalog.load(spark, root)
+      finally prev.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
     assert(back == c)
     assert(back.get("u1", "f1").get.schema == c.get("u1", "f1").get.schema)
     assert(back.get("u2", "f9").get.kpis.head.logicalType == "date")

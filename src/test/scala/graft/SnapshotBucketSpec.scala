@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.{SnapshotSql, SnapshotTable}
@@ -12,12 +11,12 @@ import graft.sources.SnapshotTable.BucketLayout
   * co-bucketed joins plan with zero Exchange through the SQL
   * surfaces, and any commit that can't uphold the claim CLEARS it
   * rather than mis-co-locating a join. */
-class SnapshotBucketSpec extends AnyFunSuite {
+class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-bk-$tag").toString + "/t"
+    tempDir(s"graft-bk-$tag") + "/t"
 
   test("appendBucketed: files carry bucket ids and rows honor Spark's bucket hash") {
     val dir = tmp("hash")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.{SnapshotSql, SnapshotTable}
@@ -12,12 +11,12 @@ import graft.sources.{SnapshotSql, SnapshotTable}
   * are physical); dropped columns must never resurrect; time travel,
   * restore, clone, vacuum and the change feed must resolve each
   * version under the right mapping. */
-class SnapshotColumnMapSpec extends AnyFunSuite {
+class SnapshotColumnMapSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-colmap-$tag").toString + "/t"
+    tempDir(s"graft-colmap-$tag") + "/t"
 
   private def rows(df: org.apache.spark.sql.DataFrame,
                    idCol: String, vCol: String): Set[(Long, String)] =
@@ -184,8 +183,8 @@ class SnapshotColumnMapSpec extends AnyFunSuite {
     assert(spark.read.format("graft").option("versionAsOf", "1").load(dir)
       .columns.toSeq == Seq("id", "name", "score"))
     // streaming: initial snapshot + a post-rename append, logical names
-    val ckpt = Files.createTempDirectory("graft-colmap-ck").toString
-    val out = Files.createTempDirectory("graft-colmap-out").toString
+    val ckpt = tempDir("graft-colmap-ck")
+    val out = tempDir("graft-colmap-out")
     val q = spark.readStream.format("graft").load(dir)
       .writeStream.format("parquet")
       .option("checkpointLocation", ckpt)
@@ -230,6 +229,19 @@ class SnapshotColumnMapSpec extends AnyFunSuite {
       SnapshotTable.appendPartitioned(
         Seq((300L, "y", 1L)).toDF("id", "label", "score"), dir, Seq("id")) }
     assert(e5.getMessage.contains("column-mapped"))
+    // the exactly-once twin refuses too, before writing any data
+    def dataFiles = {
+      val d = new java.io.File(dir, "data")
+      d.listFiles.toSeq.flatMap(b => Option(b.listFiles).toSeq.flatten)
+        .map(_.getPath).toSet
+    }
+    val before = dataFiles
+    val e6 = intercept[IllegalArgumentException] {
+      SnapshotTable.transactionalAppendPartitioned(
+        Seq((300L, "y", 1L)).toDF("id", "label", "score"), dir, Seq("id"),
+        "guard-app", 0L) }
+    assert(e6.getMessage.contains("column-mapped"))
+    assert(dataFiles == before)
   }
 
   test("restore rolls the mapping back; clone carries it; vacuum's " +

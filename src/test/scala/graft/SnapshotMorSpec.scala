@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.{MaterializedAgg, SnapshotSql, SnapshotTable}
@@ -10,12 +9,12 @@ import graft.sources.{MaterializedAgg, SnapshotSql, SnapshotTable}
   * moving zero data bytes; vectors must compose, survive clones,
   * flow through the change feed, purge on compaction, and conflict
   * loudly. */
-class SnapshotMorSpec extends AnyFunSuite {
+class SnapshotMorSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-mor-$tag").toString + "/t"
+    tempDir(s"graft-mor-$tag") + "/t"
 
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet

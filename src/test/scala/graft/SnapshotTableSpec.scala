@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -9,12 +8,12 @@ import graft.sources.SnapshotTable
 /** Manifest-committed table format: atomic commits, snapshot
   * isolation, time travel, race-free compaction, vacuum with the
   * in-flight-append age guard. */
-class SnapshotTableSpec extends AnyFunSuite {
+class SnapshotTableSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(prefix: String, scheme: String): String =
-    SparkTestBase.tmpRoot(prefix, scheme) + "/t"
+    tempRoot(prefix, scheme) + "/t"
 
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet
@@ -72,7 +71,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 10L).toSet)
     // A table whose path holds spaces, every file referenced: each
     // listed file must match its manifest key, so vacuum loses nothing.
-    val spaced = SparkTestBase.tmpRoot("graft snap sp", scheme) + "/t t"
+    val spaced = tempRoot("graft snap sp", scheme) + "/t t"
     SnapshotTable.append(spark.range(0, 10).toDF(), spaced)
     SnapshotTable.append(spark.range(10, 20).toDF(), spaced)
     val live = SnapshotTable.manifestFiles(spark, spaced, 1L)
@@ -84,7 +83,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("compact: new snapshot, identical rows, old version readable until vacuum") {
-    val dir = Files.createTempDirectory("graft-snap-k").toString + "/t"
+    val dir = tempDir("graft-snap-k") + "/t"
     (0 until 6).foreach { i =>
       SnapshotTable.append(
         spark.range(10L * i, 10L * i + 10).repartition(3).toDF(), dir)
@@ -148,7 +147,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("file stats: readWhere prunes to intersecting files, result == full-scan filter") {
-    val dir = Files.createTempDirectory("graft-snap-s").toString + "/t"
+    val dir = tempDir("graft-snap-s") + "/t"
     // Four appends with DISJOINT id ranges → per-file [min,max] are
     // disjoint and a narrow predicate must open one file.
     (0 until 4).foreach { i =>
@@ -175,7 +174,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("clusterBy compaction turns an unprunable layout into a prunable one") {
-    val dir = Files.createTempDirectory("graft-snap-z").toString + "/t"
+    val dir = tempDir("graft-snap-z") + "/t"
     // Round-robin appends: every file spans the FULL id range, so
     // stats exist but prune nothing.
     (0 until 4).foreach { i =>
@@ -200,7 +199,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("deleteWhere rewrites only touched files; time travel keeps deleted rows") {
-    val dir = Files.createTempDirectory("graft-snap-d").toString + "/t"
+    val dir = tempDir("graft-snap-d") + "/t"
     (0 until 4).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).coalesce(1).toDF(),
@@ -230,7 +229,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("merge upserts matched keys, inserts new ones, rewrites only touched files") {
-    val dir = Files.createTempDirectory("graft-snap-m").toString + "/t"
+    val dir = tempDir("graft-snap-m") + "/t"
     (0 until 3).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).toDF()
@@ -269,7 +268,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("bloom skipping: equality probes prune files min/max stats cannot") {
-    val dir = Files.createTempDirectory("graft-snap-b").toString + "/t"
+    val dir = tempDir("graft-snap-b") + "/t"
     // Interleaved appends: every file's [min,max] spans the whole id
     // range — range stats are useless for a point lookup here; the
     // per-file Bloom bitset is what prunes.
@@ -301,7 +300,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("changeFeed: exact row-level deltas from changed files only") {
-    val dir = Files.createTempDirectory("graft-snap-cf").toString + "/t"
+    val dir = tempDir("graft-snap-cf") + "/t"
     (0 until 3).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).toDF()
@@ -326,7 +325,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("changeFeed: commit-kind shortcuts equal the generic multiset diff") {
-    val dir = Files.createTempDirectory("graft-snap-cfop").toString + "/t"
+    val dir = tempDir("graft-snap-cfop") + "/t"
     (0 until 3).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).toDF()
@@ -348,7 +347,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("changeFeed: deleteMor position-delta shortcut equals the generic diff") {
-    val dir = Files.createTempDirectory("graft-snap-cfdv").toString + "/t"
+    val dir = tempDir("graft-snap-cfdv") + "/t"
     (0 until 2).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).toDF()
@@ -381,7 +380,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("zOrder compaction: one layout serves range predicates on BOTH columns") {
-    val dir = Files.createTempDirectory("graft-snap-zo").toString + "/t"
+    val dir = tempDir("graft-snap-zo") + "/t"
     // 64x64 grid appended interleaved on id%4: every file spans the
     // full range of BOTH x and y — nothing prunes.
     (0 until 4).foreach { i =>
@@ -415,12 +414,20 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, dir).count() == 4096)
   }
 
-  test("appendPartitioned: hidden partitioning — single-valued files, exact pruning") {
-    val dir = Files.createTempDirectory("graft-snap-hp").toString + "/t"
+  for (txn <- Seq(false, true))
+  test("appendPartitioned: hidden partitioning — single-valued files, exact pruning" +
+      (if (txn) " [transactionalAppendPartitioned]" else "")) {
+    val dir = tempDir("graft-snap-hp") + "/t"
+    // both entry points; the exactly-once one as app "hp", txn 0, 1, …
+    def appendP(df: org.apache.spark.sql.DataFrame, by: Seq[String],
+                txnVersion: Long, statsCols: Seq[String] = Nil): Unit =
+      if (txn) assert(SnapshotTable.transactionalAppendPartitioned(df, dir,
+        by, "hp", txnVersion, statsCols = statsCols).isDefined)
+      else SnapshotTable.appendPartitioned(df, dir, by, statsCols = statsCols)
     val df = spark.range(0, 400).toDF()
       .withColumn("day", ($"id" % 8).cast("int"))
       .withColumn("v", concat(lit("r"), $"id"))
-    SnapshotTable.appendPartitioned(df, dir, Seq("day"))
+    appendP(df, Seq("day"), 0L)
     val v0 = SnapshotTable.latestVersion(spark, dir).get
     // Every data file holds exactly one day (min == max in stats).
     val stats = SnapshotTable.manifestStats(spark, dir, v0)
@@ -441,21 +448,29 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(got == (0L until 400L).filter(_ % 8 == 3).toSet)
     // Partition evolution: a later append partitioned DIFFERENTLY
     // coexists; pruning stays per-file-true for both populations.
-    SnapshotTable.appendPartitioned(
+    appendP(
       spark.range(400, 430).toDF()
         .withColumn("day", lit(99).cast("int"))
         .withColumn("v", concat(lit("r"), $"id")),
-      dir, Seq("v"), statsCols = Seq("day")) // partitioned by v now, not day
+      Seq("v"), 1L, statsCols = Seq("day")) // partitioned by v now, not day
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 430L).toSet)
     val (sel99, _) = SnapshotTable.pruneFilesEq(spark, dir, "day", 3)
     assert(sel99.toSet == sel.toSet,
       "day=3 pruning unaffected by the day-less second append? " +
         s"${sel99.size} vs ${sel.size}")
+    if (txn) {
+      // a replayed (appId, txnVersion) is a no-op: None, nothing committed
+      val head = SnapshotTable.latestVersion(spark, dir)
+      assert(SnapshotTable.transactionalAppendPartitioned(df, dir,
+        Seq("day"), "hp", 1L).isEmpty)
+      assert(SnapshotTable.latestVersion(spark, dir) == head)
+      assert(ids(SnapshotTable.read(spark, dir)) == (0L until 430L).toSet)
+    }
   }
 
   test("shallowClone: zero-copy branch — diverges via CoW, promote via compact") {
-    val src = Files.createTempDirectory("graft-snap-cs").toString + "/s"
-    val dst = Files.createTempDirectory("graft-snap-cd").toString + "/d"
+    val src = tempDir("graft-snap-cs") + "/s"
+    val dst = tempDir("graft-snap-cd") + "/d"
     (0 until 3).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).toDF()
@@ -520,7 +535,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("applyChanges: one-commit CDC apply — upserts, pure deletes, update collapse") {
-    val dir = Files.createTempDirectory("graft-snap-ac").toString + "/t"
+    val dir = tempDir("graft-snap-ac") + "/t"
     SnapshotTable.append(
       spark.range(0, 10).toDF().withColumn("v", lit("base")), dir)
     // update 3 (delete+insert pair), pure-delete 7, fresh insert 100.
@@ -554,8 +569,8 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("replicate: exactly-once CDC pipe, ledger cursor, incremental files only") {
-    val src = Files.createTempDirectory("graft-snap-rs").toString + "/s"
-    val dst = Files.createTempDirectory("graft-snap-rd").toString + "/d"
+    val src = tempDir("graft-snap-rs") + "/s"
+    val dst = tempDir("graft-snap-rd") + "/d"
     (0 until 3).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).toDF()
@@ -588,8 +603,8 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("replicate append-only mode: inserts stream through, deletes refuse") {
-    val src = Files.createTempDirectory("graft-snap-ra").toString + "/s"
-    val dst = Files.createTempDirectory("graft-snap-rb").toString + "/d"
+    val src = tempDir("graft-snap-ra") + "/s"
+    val dst = tempDir("graft-snap-rb") + "/d"
     SnapshotTable.append(spark.range(0, 50).toDF(), src)
     val Some((v1, _)) = SnapshotTable.replicate(spark, src, dst, Nil, "evt")
     assert(v1 == 0L)
@@ -605,7 +620,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("readWhereAll: conjunctive pruning intersects per-column decisions") {
-    val dir = Files.createTempDirectory("graft-snap-ma").toString + "/t"
+    val dir = tempDir("graft-snap-ma") + "/t"
     // Z-ordered 64x64 grid: per-file hyper-rectangles on both dims.
     (0 until 4).foreach { i =>
       SnapshotTable.append(
@@ -636,7 +651,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("schema evolution: added columns NULL-backfill, type conflicts fail loudly") {
-    val dir = Files.createTempDirectory("graft-snap-e2").toString + "/t"
+    val dir = tempDir("graft-snap-e2") + "/t"
     SnapshotTable.append(spark.range(0, 5).toDF(), dir)
     // Add-column append: old rows surface NULL for the new column.
     SnapshotTable.append(
@@ -666,7 +681,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("transactionalMerge: exactly-once CDC apply, replays are no-ops") {
-    val dir = Files.createTempDirectory("graft-snap-tm").toString + "/t"
+    val dir = tempDir("graft-snap-tm") + "/t"
     // First batch initializes the table (insert-only merge).
     assert(SnapshotTable.transactionalMerge(spark, dir,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"),
@@ -790,7 +805,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // A diverging pair would FALSE-NEGATIVE the probe and silently
     // skip files with matching rows, so ineligible types must refuse
     // loudly at build time.
-    val dir = Files.createTempDirectory("graft-snap-bt").toString + "/t"
+    val dir = tempDir("graft-snap-bt") + "/t"
     val df = spark.range(0, 10).toDF()
       .withColumn("ts", current_timestamp())
       .withColumn("d", col("id").cast("double"))
@@ -815,7 +830,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // code-unit probe of FULLWIDTH Z (U+FF5A) compares ABOVE the
     // surrogate-led max and would skip the file even though the row
     // is inside it. The fixed comparator must keep the file.
-    val dir = Files.createTempDirectory("graft-snap-u8").toString + "/t"
+    val dir = tempDir("graft-snap-u8") + "/t"
     val rows = Seq("Ａ", "ｚ", new String(Character.toChars(0x1F600)))
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }
     SnapshotTable.append(rows.toDF("id", "v").coalesce(1), dir,
@@ -836,7 +851,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // deterministically: merge A commits normally; merge B replays
     // A's race position via commitRewrite with B's pre-A base file
     // set and key-conflict guard — it must throw, not commit.
-    val dir = Files.createTempDirectory("graft-snap-kc").toString + "/t"
+    val dir = tempDir("graft-snap-kc") + "/t"
     SnapshotTable.append(Seq((1L, "a")).toDF("id", "v"), dir)
     val baseFiles = SnapshotTable.manifestFiles(spark, dir, 0L).toSet
     // Merge A lands key 99.
@@ -867,7 +882,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // carrying only its own adds — so commit cost stays flat as the
     // table grows, the property that keeps 100 TB commit latency
     // bounded. Readers replay checkpoint+deltas transparently.
-    val dir = Files.createTempDirectory("graft-snap-dm").toString + "/t"
+    val dir = tempDir("graft-snap-dm") + "/t"
     (0 until 25).foreach { i =>
       SnapshotTable.append(
         spark.range(10L * i, 10L * i + 10).coalesce(1).toDF(), dir,
@@ -924,7 +939,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("bloom sidecars: clone carries refs, vacuum GCs orphans, probes survive both") {
-    val src = Files.createTempDirectory("graft-snap-bs").toString + "/s"
+    val src = tempDir("graft-snap-bs") + "/s"
     (0 until 3).foreach { i =>
       SnapshotTable.append(
         spark.range(0, 300).filter($"id" % 3 === i).coalesce(1).toDF(),
@@ -939,7 +954,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       java.nio.file.Paths.get(src, "_blooms")).iterator().asScala
       .count(_.getFileName.toString.endsWith(".json")) == 3)
     // A clone probes through the SOURCE's sidecars (absolute refs).
-    val dst = Files.createTempDirectory("graft-snap-bs2").toString + "/c"
+    val dst = tempDir("graft-snap-bs2") + "/c"
     SnapshotTable.shallowClone(spark, src, dst)
     val (sel, total) = SnapshotTable.pruneFilesEq(spark, dst, "id", 121L)
     assert(total == 3 && sel.size == 1,
@@ -961,7 +976,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("updateWhere: CoW semantics, pre-update RHS, touched-files-only, typo rejection") {
-    val dir = Files.createTempDirectory("graft-snap-up").toString + "/t"
+    val dir = tempDir("graft-snap-up") + "/t"
     // Two files on disjoint key ranges; the update hits only file 1.
     SnapshotTable.append(
       (0L until 10L).map(i => (i, i * 10, "x")).toDF("id", "a", "tag")
@@ -1001,7 +1016,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("manifest records per-file sizes: planners need zero filesystem RPCs") {
-    val dir = Files.createTempDirectory("graft-snap-sz").toString + "/t"
+    val dir = tempDir("graft-snap-sz") + "/t"
     (0 until 3).foreach { i =>
       SnapshotTable.append(
         spark.range(100L * i, 100L * i + 100).coalesce(1).toDF(), dir)
@@ -1018,14 +1033,14 @@ class SnapshotTableSpec extends AnyFunSuite {
       assert(sizes(k) == actual, s"$k: manifest ${sizes(k)} != disk $actual")
     }
     // Sizes survive the delta-chain replay AND a clone (absolutized).
-    val dst = Files.createTempDirectory("graft-snap-szc").toString + "/c"
+    val dst = tempDir("graft-snap-szc") + "/c"
     SnapshotTable.shallowClone(spark, dir, dst)
     assert(SnapshotTable.manifestSizes(spark, dst, 0L).values.toSeq.sorted ==
       sizes.values.toSeq.sorted)
   }
 
   test("a table rebuilt at the same path is never served from the state cache") {
-    val dir = Files.createTempDirectory("graft-snap-rb").toString + "/t"
+    val dir = tempDir("graft-snap-rb") + "/t"
     SnapshotTable.append(spark.range(0, 5).toDF(), dir)
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 5L).toSet)
     // Drop the WHOLE table directory and recreate a different table at
@@ -1042,7 +1057,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("rewrite paths drop a legacy ineligible bloom column instead of wedging") {
-    val dir = Files.createTempDirectory("graft-snap-lb").toString + "/t"
+    val dir = tempDir("graft-snap-lb") + "/t"
     SnapshotTable.append(
       Seq((1L, 1.5), (2L, 2.5), (3L, 3.5)).toDF("id", "d"), dir,
       statsCols = Seq("id"))
@@ -1066,7 +1081,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("applyChanges rejects NULL _change tags instead of dropping the rows") {
-    val dir = Files.createTempDirectory("graft-snap-nc").toString + "/t"
+    val dir = tempDir("graft-snap-nc") + "/t"
     SnapshotTable.append(Seq((1L, "a")).toDF("id", "v"), dir)
     val changes = Seq((2L, "b", "insert"), (3L, "c", null))
       .toDF("id", "v", "_change")
@@ -1077,7 +1092,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("initial defaults serve on stream, CDF, clone, changeFeed; compact drains them") {
-    val dir = Files.createTempDirectory("graft-defs").toString + "/t"
+    val dir = tempDir("graft-defs") + "/t"
     SnapshotTable.append((0L until 8L).map(i => (i, s"v$i"))
       .toDF("id", "v").coalesce(2), dir)                        // v0
     SnapshotTable.addColumn(spark, dir, "score",
@@ -1095,7 +1110,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       .filter(col("_change") === "insert").drop("_change")) ==
       Map(100L -> 5L))
     // shallow clone serves the SOURCE's defaults (absolutized keys)
-    val cl = Files.createTempDirectory("graft-defs-cl").toString + "/t"
+    val cl = tempDir("graft-defs-cl") + "/t"
     SnapshotTable.shallowClone(spark, dir, cl)
     assert(scores(SnapshotTable.read(spark, cl)) == expect)
     // streaming source: the snapshot batch serves defaults
@@ -1103,7 +1118,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val q = spark.readStream.format("graft").load(dir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-defs-ck").toString)
+        tempDir("graft-defs-ck"))
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         got ++= scores(b); ()
       }
@@ -1118,7 +1133,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       .load(dir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-defs-ck2").toString)
+        tempDir("graft-defs-ck2"))
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         gotCdf ++= scores(b.filter(col("_change") === "insert")
           .drop("_change", "_commit_version")); ()
@@ -1136,7 +1151,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("timestamp stat columns get FOOTER stats: no post-write summary scan, pruning equivalent") {
-    val dir = Files.createTempDirectory("graft-snap-ts").toString + "/t"
+    val dir = tempDir("graft-snap-ts") + "/t"
     // Count write-batch:summaries jobs — the scan-based fallback that
     // TIMESTAMP_MICROS internal writes are supposed to delete (INT96
     // carries no usable footer statistics; MICROS does).

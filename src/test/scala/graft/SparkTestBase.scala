@@ -30,10 +30,12 @@ object SparkTestBase {
 
   /** A fresh temp directory, as a root under `scheme`: a plain local
     * path for `file`, a `graftfs:///…` URI otherwise. */
-  def tmpRoot(prefix: String, scheme: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    if (scheme == "file") d else s"$scheme://$d"
-  }
+  def tmpRoot(prefix: String, scheme: String): String =
+    rootUnder(java.nio.file.Files.createTempDirectory(prefix).toString, scheme)
+
+  /** Local directory `dir` as a root under `scheme`. */
+  def rootUnder(dir: String, scheme: String): String =
+    if (scheme == "file") dir else s"$scheme://$dir"
 
   /** The local filesystem path behind a [[tmpRoot]] root. */
   def localPath(root: String): String =
@@ -64,6 +66,11 @@ trait TempDirs extends BeforeAndAfterAll { self: Suite =>
     made.add(d)
     d.toString
   }
+
+  /** A [[tempDir]] as a root under `scheme` (see
+    * [[SparkTestBase.tmpRoot]]), deleted after the suite. */
+  protected def tempRoot(prefix: String, scheme: String): String =
+    SparkTestBase.rootUnder(tempDir(prefix), scheme)
 
   override protected def afterAll(): Unit =
     try made.forEach(d => SparkTestBase.deleteTree(d))
