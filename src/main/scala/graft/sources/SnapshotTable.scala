@@ -1378,96 +1378,95 @@ object SnapshotTable {
     name
   }
 
-  /** Try to commit the COMPLETE target state (`files`, `stats`,
-    * `bloomRefs`) as version `v`. True iff this writer won the
-    * publish race for v<N>. What lands on disk is a DELTA against
-    * v-1 (adds/removes + adds' stats/bloom refs — O(batch) bytes)
-    * except every [[CheckpointEvery]]-th version and v0, which write
-    * the full checkpoint form; readers reconstruct via [[stateOf]].
-    * Content-atomic: the body is fully written to a hidden temp file,
-    * then renamed into place — a reader can never observe a
-    * partially-written manifest. */
+  /** The state a table's first commit builds on. */
+  private val EmptyState = TableState(Nil, Map.empty, Map.empty, Map.empty,
+    Nil, Map.empty, None, Map.empty)
+
+  /** The optimistic commit protocol every writer shares (the Delta
+    * log's): read the head, let `step` compute the COMPLETE next state
+    * from the head's version and state, and publish it as head + 1
+    * only if no other writer published that version first. A lost
+    * race re-reads the new head and runs `step` again, up to
+    * `maxRetries` attempts. `step` throws on a conflict and returns
+    * None for a no-op (a replayed txn, a restore whose target is the
+    * head), which commits nothing. The next state is written as
+    * given, every field of it: a step builds it with `cur.copy(…)`
+    * and clears a field by setting it. `manifestOp` names the commit
+    * in the manifest when that differs from `op`. Returns the
+    * committed version. */
+  private def commitLoop(spark: SparkSession, dir: String, op: String,
+                         maxRetries: Int,
+                         manifestOp: Option[String] = None)(
+      step: (Option[Long], Option[TableState]) => Option[TableState]
+     ): Option[Long] = {
+    @scala.annotation.tailrec
+    def attempt(n: Int): Option[Long] =
+      if (n >= maxRetries) throw new java.io.IOException(
+        s"$op: lost the commit race $maxRetries times under $dir")
+      else {
+        val head = latestVersion(spark, dir)
+        val cur = head.map(stateOf(spark, dir, _))
+        step(head, cur) match {
+          case None => None
+          case Some(next) =>
+            val v = head.fold(0L)(_ + 1)
+            if (tryCommit(spark, dir, v, cur, next, manifestOp.getOrElse(op)))
+              Some(v)
+            else attempt(n + 1)
+        }
+      }
+    attempt(0)
+  }
+
+  /** [[commitLoop]] for a metadata commit on an existing table, which
+    * always lands: `f` maps the head's state to the next one, throwing
+    * on a conflict. Returns the committed version. */
+  private def commitOnHead(spark: SparkSession, dir: String, op: String,
+                           maxRetries: Int)(f: TableState => TableState
+                          ): Long =
+    commitLoop(spark, dir, op, maxRetries) { (_, st) =>
+      Some(f(st.getOrElse(throw new java.io.IOException(
+        s"$op: no committed version under $dir"))))
+    }.get
+
+  /** Try to commit the COMPLETE state `next` as version `v` on top of
+    * `parent`, the state at v-1 (None for v0). True iff this writer
+    * won the publish race for v<N>. What lands on disk is a DELTA
+    * against the parent (adds/removes + adds' stats/bloom refs —
+    * O(batch) bytes) except every [[CheckpointEvery]]-th version and
+    * v0, which write the full checkpoint form; readers reconstruct via
+    * [[stateOf]]. Column defaults PRUNE to `next`'s live files here: a
+    * rewritten pre-ADD file materialized its default, so its entry
+    * (and, eventually, the whole column's) retires. Content-atomic:
+    * the body is fully written to a hidden temp file, then renamed
+    * into place — a reader can never observe a partially-written
+    * manifest. */
   private def tryCommit(spark: SparkSession, dir: String, v: Long,
-                        files: Seq[String],
-                        txns: Map[String, Long] = Map.empty,
-                        stats: Map[String, Map[String, ColStat]] = Map.empty,
-                        schema: Option[StructType] = None,
-                        bloomRefs: Map[String, String] = Map.empty,
-                        bloomCols: Seq[String] = Nil,
-                        sizes: Map[String, Long] = Map.empty,
-                        op: String = "commit",
-                        dvRefs: Map[String, String] = Map.empty,
-                        bucket: Option[BucketLayout] = None,
-                        constraints: Option[Map[String, String]] = None,
-                        colMapOpt: Option[(Map[String, String],
-                          Seq[String])] = None,
-                        propsOpt: Option[Map[String, String]] = None,
-                        defaultsOpt: Option[Map[String,
-                          (String, Set[String])]] = None
-                       ): Boolean = commitLock.synchronized {
+                        parent: Option[TableState], next: TableState,
+                        op: String): Boolean = commitLock.synchronized {
     val s = TableStore(spark, dir)
     val target = manifestPath(dir, v)
     if (s.exists(target)) return false
-    val full = v == 0L || v % CheckpointEvery == 0L
-    // None = inherit the parent's constraint set (constraints are
-    // table policy — only addConstraint/dropConstraint pass Some).
-    val effConstraints = constraints.getOrElse(
-      if (v == 0L) Map.empty[String, String]
-      else scala.util.Try(stateOf(spark, dir, v - 1).constraints)
-        .getOrElse(Map.empty[String, String]))
-    // Table properties inherit identically (None = parent's set;
-    // only setProperties/unsetProperties/clone pass Some).
-    val effProps = propsOpt.getOrElse(
-      if (v == 0L) Map.empty[String, String]
-      else scala.util.Try(stateOf(spark, dir, v - 1).props)
-        .getOrElse(Map.empty[String, String]))
-    // Column mapping inherits identically (None = parent's mapping;
-    // only renameColumn/dropColumn/restore/clone and the evolving
-    // append commits pass Some).
-    val (effColMap, effRetired) = colMapOpt.getOrElse(
-      if (v == 0L) (Map.empty[String, String], Seq.empty[String])
-      else scala.util.Try(stateOf(spark, dir, v - 1))
-        .map(p => (p.colMap, p.retired))
-        .getOrElse((Map.empty[String, String], Seq.empty[String])))
-    // Column defaults inherit like colmap (None = parent's; only
-    // addColumn/restore/clone pass Some) — and PRUNE to this commit's
-    // live files: a rewritten pre-ADD file materialized its default,
-    // so its entry (and, eventually, the whole column's) retires.
-    val effDefaults = defaultsOpt.getOrElse(
-      if (v == 0L) Map.empty[String, (String, Set[String])]
-      else scala.util.Try(stateOf(spark, dir, v - 1).defaults)
-        .getOrElse(Map.empty[String, (String, Set[String])]))
-      .map { case (c, (dv, pre)) => c -> (dv, pre.intersect(files.toSet)) }
+    val live = next.files.toSet
+    val defaults = next.defaults
+      .map { case (c, (dv, pre)) => c -> (dv, pre.intersect(live)) }
       .filter(_._2._2.nonEmpty)
-    val body = manifestBody(spark, dir, v, full, files, txns, stats,
-      schema, bloomRefs, bloomCols, sizes, op, dvRefs, bucket,
-      effConstraints, colMap = effColMap, retired = effRetired,
-      props = effProps, defaults = effDefaults)
-    s.createExclusive(target, body)
+    s.createExclusive(target, manifestBody(spark, dir, v, parent,
+      next.copy(defaults = defaults), op,
+      full = v == 0L || v % CheckpointEvery == 0L))
   }
 
-  /** Serialize a manifest body — full checkpoint form, or a delta
-    * against the (already committed, hence stable) state at v-1. */
+  /** Serialize `next` as the manifest body of version `v` — full
+    * checkpoint form, or a delta against `parent` (the already
+    * committed, hence stable, state at v-1). A segmented checkpoint
+    * reuses the parent's intact segments. */
   private def manifestBody(spark: SparkSession, dir: String, v: Long,
-                           full: Boolean, files: Seq[String],
-                           txns: Map[String, Long],
-                           stats: Map[String, Map[String, ColStat]],
-                           schema: Option[StructType],
-                           bloomRefs: Map[String, String],
-                           bloomCols: Seq[String],
-                           sizes: Map[String, Long],
-                           op: String = "commit",
-                           dvRefs: Map[String, String] = Map.empty,
-                           bucket: Option[BucketLayout] = None,
-                           constraints: Map[String, String] = Map.empty,
+                           parent: Option[TableState], next: TableState,
+                           op: String, full: Boolean,
                            tsOverride: Option[Long] = None,
-                           stampTs: Boolean = true,
-                           colMap: Map[String, String] = Map.empty,
-                           retired: Seq[String] = Nil,
-                           props: Map[String, String] = Map.empty,
-                           defaults: Map[String, (String, Set[String])] =
-                             Map.empty
-                          ): String = {
+                           stampTs: Boolean = true): String = {
+    import next.{bloomCols, bloomRefs, bucket, colMap, constraints,
+      defaults, dvRefs, files, props, retired, schema, sizes, stats, txns}
     val root = new java.util.LinkedHashMap[String, Object]()
     root.put("version", java.lang.Long.valueOf(v))
     // Commit wall-clock — what TIMESTAMP AS OF resolves against
@@ -1592,9 +1591,6 @@ object SnapshotTable {
       // O(batch + churn), never O(table). Segment count is bounded by
       // folding the smallest reusable segments into the new one
       // (log-structured merging — amortized O(batch·log) bytes).
-      val parent =
-        if (v == 0L) None
-        else scala.util.Try(stateOf(spark, dir, v - 1)).toOption
       val parentSegs = parent.map(_.segments).getOrElse(Nil)
       val dirty = parent.map(p => p.dvDirty ++
         files.filter(f => dvRefs.get(f) != p.dvRefs.get(f)))
@@ -1629,10 +1625,11 @@ object SnapshotTable {
       putSizes(sizes.view.filterKeys(fileSet).toMap)
       putRefMap("dvrefs", dvRefs.view.filterKeys(fileSet).toMap)
     } else {
-      val parent = stateOf(spark, dir, v - 1)
-      val parentSet = parent.files.toSet
+      val p = parent.getOrElse(throw new IllegalStateException(
+        s"manifest v$v: a delta needs the state at v${v - 1}"))
+      val parentSet = p.files.toSet
       val adds = files.filterNot(parentSet)
-      val removes = parent.files.filterNot(fileSet)
+      val removes = p.files.filterNot(fileSet)
       val aj = new java.util.ArrayList[String]()
       adds.sorted.foreach(aj.add)
       root.put("adds", aj)
@@ -1646,12 +1643,12 @@ object SnapshotTable {
       // the entries that changed vs the parent (new files' vectors
       // and MoR-superseded vectors of carried files).
       putRefMap("dvrefs", dvRefs.view.filterKeys(fileSet)
-        .filter { case (f, r) => !parent.dvRefs.get(f).contains(r) }.toMap)
+        .filter { case (f, r) => !p.dvRefs.get(f).contains(r) }.toMap)
       // A CARRIED file whose vector is DROPPED (restore to a
       // pre-vector version) needs an explicit remove record — an
       // override map alone can't say "no vector anymore".
-      val dvRemoves = parent.files.filter(f => fileSet(f) &&
-        parent.dvRefs.contains(f) && !dvRefs.contains(f)).sorted
+      val dvRemoves = p.files.filter(f => fileSet(f) &&
+        p.dvRefs.contains(f) && !dvRefs.contains(f)).sorted
       if (dvRemoves.nonEmpty) {
         val dj = new java.util.ArrayList[String]()
         dvRemoves.foreach(dj.add)
@@ -1660,16 +1657,16 @@ object SnapshotTable {
       // constraints in a delta only when the set CHANGED — a
       // present-but-empty object is an explicit clear, absence
       // inherits (see deltaState).
-      if (constraints != parent.constraints) putConstraints(constraints)
+      if (constraints != p.constraints) putConstraints(constraints)
       // column mapping in a delta only when it CHANGED (same
       // discipline: present = replace, explicit-empty = clear).
-      if (colMap != parent.colMap || retired != parent.retired) putColMap()
+      if (colMap != p.colMap || retired != p.retired) putColMap()
       // properties: same change-only discipline. No reader feature
       // guard — props never change READ semantics, only write routing.
-      if (props != parent.props) putProps(props)
+      if (props != p.props) putProps(props)
       // column defaults: change-only (present = replace, explicit
       // empty = clear — the last-pre-file-rewritten case)
-      if (defaults != parent.defaults) putDefaults(defaults)
+      if (defaults != p.defaults) putDefaults(defaults)
     }
     // Stamp exactly the reader features this manifest's resolution
     // depends on (see [[SupportedFeatures]]); a plain manifest stays
@@ -2184,33 +2181,29 @@ object SnapshotTable {
     // same as constraints do — one overwrite must not strip pruning
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
     val wb = writeBatch(df, dir, sCols, bCols)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(spark, dir)
-      val st = base.map(stateOf(spark, dir, _))
+    commitLoop(spark, dir, "overwrite", maxRetries) { (_, st) =>
       checkMapClaim(st, wb.claim, "overwrite")
-      val txns = st.map(_.txns).getOrElse(Map.empty)
-      validated = recheckConstraints(spark, dir,
-        st.map(_.constraints).getOrElse(Map.empty), validated,
+      val cur = st.getOrElse(EmptyState)
+      validated = recheckConstraints(spark, dir, cur.constraints, validated,
         wb.added, Some(df.schema), "overwrite",
         wb.claim.map(_.colMap).getOrElse(Map.empty))
-      val v = base.getOrElse(-1L) + 1
-      if (tryCommit(spark, dir, v, wb.added, txns, wb.stats,
-          Some(StructType(df.schema.fields.map(_.copy(nullable = true)))),
-          wb.refs, wb.bloomCols, wb.sizes, "overwrite",
-          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return v
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"overwrite: lost the commit race $maxRetries times under $dir")
+      // A new table body: files, summaries, schema and tracking are the
+      // batch's; vectors and the bucket claim clear; the ledger and the
+      // table policy (constraints, properties, mapping) carry forward.
+      Some(cur.copy(files = wb.added, stats = wb.stats,
+        bloomRefs = wb.refs, bloomCols = wb.bloomCols, sizes = wb.sizes,
+        schema = Some(StructType(df.schema.fields.map(_.copy(nullable = true)))),
+        dvRefs = Map.empty, bucket = None,
+        colMap = wb.claim.fold(cur.colMap)(_.colMap),
+        retired = wb.claim.fold(cur.retired)(_.retired)))
+    }.get
   }
 
-  /** The optimistic append commit loop, shared by every append-shaped
-    * committer: union the current file list with the written batch,
-    * carry txns/stats/bloom refs forward, evolve the schema, retry on
-    * a lost race. With `txn`, a head that already records the appId
-    * at or above its version is a no-op (None). */
+  /** The append commit, shared by every append-shaped committer: on
+    * each [[commitLoop]] attempt, land the written batch on the head,
+    * carry txns/stats/bloom refs forward and evolve the schema. With
+    * `txn`, a head that already records the appId at or above its
+    * version is a no-op (None). */
   private def commitAppend(spark: SparkSession, dir: String,
                            dfSchema: StructType, wb: WrittenBatch,
                            maxRetries: Int, op: String,
@@ -2220,47 +2213,50 @@ object SnapshotTable {
                              Map.empty
                           ): Option[Long] = {
     var validated = validatedConstraints
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(spark, dir)
-      val st = base.map(stateOf(spark, dir, _))
+    commitLoop(spark, dir, op, maxRetries) { (_, st) =>
       checkMapClaim(st, wb.claim, op)
-      // A bucketing claim only survives the commit if whatever table
-      // state this attempt lands on still supports it (empty, or
-      // bucketed with the SAME spec) — a racing unbucketed writer
-      // degrades the claim instead of corrupting co-location.
-      val effBucket = bucket.filter(b =>
-        st.forall(s => s.files.isEmpty || s.bucket.contains(b)))
-      val prev = st.map(_.files).getOrElse(Nil)
-      val txns = st.map(_.txns).getOrElse(Map.empty)
-      txn.foreach { case (appId, tv) =>
-        if (txns.getOrElse(appId, Long.MinValue) >= tv)
-          return None // a racing replay won; our files stay orphaned
+      val cur = st.getOrElse(EmptyState)
+      // a racing replay won: no commit, our files stay orphaned
+      if (replayed(cur, txn)) None
+      else {
+        val unified = evolveSchema(cur.schema.getOrElse(new StructType()),
+          dfSchema)
+        // a concurrently-added constraint must gate THIS batch too
+        validated = recheckConstraints(spark, dir, cur.constraints,
+          validated, wb.added, Some(unified), op,
+          wb.claim.map(_.colMap).getOrElse(Map.empty))
+        // A bucketing claim only survives the commit if whatever table
+        // state this attempt lands on still supports it (empty, or
+        // bucketed with the SAME spec) — a racing unbucketed writer
+        // degrades the claim instead of corrupting co-location.
+        Some(landed(cur, wb).copy(schema = Some(unified),
+          txns = cur.txns ++ txn,
+          bucket = bucket.filter(b =>
+            cur.files.isEmpty || cur.bucket.contains(b))))
       }
-      val stats = st.map(_.stats).getOrElse(Map.empty)
-      val refs = st.map(_.bloomRefs).getOrElse(Map.empty)
-      val bcols = (st.map(_.bloomCols).getOrElse(Nil) ++ wb.bloomCols).distinct
-      val unified = st.flatMap(_.schema)
-        .map(evolveSchema(_, dfSchema))
-        .getOrElse(evolveSchema(new StructType(), dfSchema))
-      // a concurrently-added constraint must gate THIS batch too
-      validated = recheckConstraints(spark, dir,
-        st.map(_.constraints).getOrElse(Map.empty), validated,
-        wb.added, Some(unified), op,
-        wb.claim.map(_.colMap).getOrElse(Map.empty))
-      val v = base.getOrElse(-1L) + 1
-      if (tryCommit(spark, dir, v, prev ++ wb.added,
-          txn.fold(txns)(txns + _), stats ++ wb.stats,
-          Some(unified), refs ++ wb.refs, bcols,
-          st.map(_.sizes).getOrElse(Map.empty) ++ wb.sizes, op,
-          st.map(_.dvRefs).getOrElse(Map.empty), effBucket,
-          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return Some(v)
-      attempt += 1 // lost the race: re-read the new latest and retry
     }
-    throw new java.io.IOException(
-      s"$op: lost the commit race $maxRetries times under $dir")
   }
+
+  /** True when `st` already records `txn`'s appId at or above its
+    * version: the exactly-once writers' replay test. */
+  private def replayed(st: TableState, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (appId, tv) =>
+      st.txns.getOrElse(appId, Long.MinValue) >= tv }
+
+  /** `cur` with the batch `wb` landed in place of the files `removed`:
+    * the batch's files, summaries, Bloom columns and mapping claim in;
+    * the removed files' summaries and deletion vectors out. */
+  private def landed(cur: TableState, wb: WrittenBatch,
+                     removed: Set[String] = Set.empty): TableState =
+    cur.copy(
+      files = cur.files.filterNot(removed) ++ wb.added,
+      stats = (cur.stats -- removed) ++ wb.stats,
+      bloomRefs = (cur.bloomRefs -- removed) ++ wb.refs,
+      bloomCols = (cur.bloomCols ++ wb.bloomCols).distinct,
+      sizes = (cur.sizes -- removed) ++ wb.sizes,
+      dvRefs = cur.dvRefs -- removed,
+      colMap = wb.claim.fold(cur.colMap)(_.colMap),
+      retired = wb.claim.fold(cur.retired)(_.retired))
 
   /** The cheap replay pre-check of the exactly-once appends: true when
     * the head already records `txn`'s appId at or above its version,
@@ -2268,10 +2264,8 @@ object SnapshotTable {
     * inside [[commitAppend]]'s loop. */
   private def alreadyCommitted(spark: SparkSession, dir: String,
                                txn: Option[(String, Long)]): Boolean =
-    txn.exists { case (appId, tv) =>
-      latestVersion(spark, dir).exists(v =>
-        manifestTxns(spark, dir, v).getOrElse(appId, Long.MinValue) >= tv)
-    }
+    txn.nonEmpty && latestVersion(spark, dir)
+      .exists(v => replayed(stateOf(spark, dir, v), txn))
 
   /** Before any data is written, a name-derived layout writer (hidden
     * partitions, buckets) runs the schema pre-flight and refuses a
@@ -2651,8 +2645,8 @@ object SnapshotTable {
     require(schema.nonEmpty, "createEmpty: schema must have columns")
     latestVersion(spark, dir).foreach(v => throw new IllegalStateException(
       s"createEmpty: a snapshot table already exists under $dir (v$v)"))
-    if (!tryCommit(spark, dir, 0L, Nil, schema = Some(schema),
-        op = "create"))
+    if (!tryCommit(spark, dir, 0L, None,
+        EmptyState.copy(schema = Some(schema)), "create"))
       throw new java.io.IOException(
         s"createEmpty: lost the v0 commit race under $dir")
     0L
@@ -2668,22 +2662,13 @@ object SnapshotTable {
   def advanceTxn(spark: SparkSession, dir: String, appId: String,
                  txnVersion: Long, maxRetries: Int = 20): Option[Long] = {
     require(appId.nonEmpty, "advanceTxn: appId must be non-empty")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).getOrElse(
-        throw new java.io.IOException(
-          s"advanceTxn: no committed version under $dir"))
-      val st = stateOf(spark, dir, cur)
-      if (st.txns.getOrElse(appId, Long.MinValue) >= txnVersion) return None
-      if (tryCommit(spark, dir, cur + 1, st.files,
-          st.txns + (appId -> txnVersion), st.stats, st.schema,
-          st.bloomRefs, st.bloomCols, st.sizes, "advanceTxn", st.dvRefs,
-          st.bucket, colMapOpt = Some((st.colMap, st.retired))))
-        return Some(cur + 1)
-      attempt += 1
+    val txn = Some(appId -> txnVersion)
+    commitLoop(spark, dir, "advanceTxn", maxRetries) { (_, st) =>
+      val cur = st.getOrElse(throw new java.io.IOException(
+        s"advanceTxn: no committed version under $dir"))
+      if (replayed(cur, txn)) None
+      else Some(cur.copy(txns = cur.txns ++ txn))
     }
-    throw new java.io.IOException(
-      s"advanceTxn: lost the commit race $maxRetries times under $dir")
   }
 
   // ------------------------------------------------------------------
@@ -3369,14 +3354,12 @@ object SnapshotTable {
     // PHYSICAL names against the base mapping, which its claim pins.
     val wb = writeBatch(laid, dir, trackedCols, baseSt.bloomCols,
       basis = Some(baseSt), layout = layout)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val curSt = stateOf(spark, dir, cur)
-      checkMapClaim(Some(curSt), wb.claim, "compact")
+    commitLoop(spark, dir, "compact", maxRetries) { (_, st) =>
+      val cur = st.get
+      checkMapClaim(st, wb.claim, "compact")
       // A deletion vector advanced on a compacted file since our read
       // would be silently dropped by the rewrite — conflict, loudly.
-      val dvMoved = old.filter(f => curSt.dvRefs.get(f) != baseSt.dvRefs.get(f))
+      val dvMoved = old.filter(f => cur.dvRefs.get(f) != baseSt.dvRefs.get(f))
       if (dvMoved.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"compact: deletion vectors advanced concurrently on " +
@@ -3384,26 +3367,14 @@ object SnapshotTable {
       // Re-base: keep files that appeared after our read; drop only
       // the ones we actually rewrote. The txn ledger carries forward
       // untouched — compaction commits no writer transaction.
-      val next = curSt.files.filterNot(old.toSet) ++ wb.added
+      val next = landed(cur, wb, old.toSet).copy(bloomCols = cur.bloomCols)
       // The bucketing claim only holds when the rewrite IS the whole
       // table — files a concurrent writer landed since our read are
       // carried forward unbucketed, so the claim degrades to None
       // (and any prior claim clears: this rewrite renamed files).
-      val effBucket = bucketLayout.filter(_ =>
-        next.toSet == wb.added.toSet)
-      if (tryCommit(spark, dir, cur + 1, next,
-          curSt.txns,
-          curSt.stats ++ wb.stats,
-          curSt.schema,
-          curSt.bloomRefs ++ wb.refs,
-          curSt.bloomCols,
-          curSt.sizes ++ wb.sizes, "compact",
-          curSt.dvRefs -- old, effBucket))
-        return Some(cur + 1)
-      attempt += 1
+      Some(next.copy(bucket = bucketLayout.filter(_ =>
+        next.files.toSet == wb.added.toSet)))
     }
-    throw new java.io.IOException(
-      s"compact: lost the commit race $maxRetries times under $dir")
   }
 
   /** SCOPED compaction — the public `OPTIMIZE … WHERE` shape: rewrite
@@ -3583,11 +3554,13 @@ object SnapshotTable {
     // initial defaults for its referenced files
     val defaults = st.defaults.map { case (c, (dv, pre)) =>
       c -> (dv, pre.map(absolutize)) }
-    if (!tryCommit(spark, dstDir, 0L, files, Map.empty, stats, st.schema,
-        refs, st.bloomCols, sizes, "clone", dvRefs,
-        colMapOpt = Some((st.colMap, st.retired)),
-        propsOpt = Some(st.props),
-        defaultsOpt = Some(defaults)))
+    // The clone starts its own ledger and its own policy: no txns, no
+    // constraints, no bucket claim; properties and mapping come along.
+    if (!tryCommit(spark, dstDir, 0L, None, EmptyState.copy(files = files,
+        stats = stats, schema = st.schema, bloomRefs = refs,
+        bloomCols = st.bloomCols, sizes = sizes, dvRefs = dvRefs,
+        colMap = st.colMap, retired = st.retired, props = st.props,
+        defaults = defaults), "clone"))
       throw new java.io.IOException(
         s"shallowClone: destination $dstDir committed concurrently")
     0L
@@ -3629,22 +3602,12 @@ object SnapshotTable {
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"addConstraint: existing rows violate $name ($exprSql), e.g. " +
         bad.head.mkString(","))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
-      require(!st.constraints.contains(name),
+    commitOnHead(spark, dir, "addConstraint", maxRetries) { cur =>
+      require(!cur.constraints.contains(name),
         s"addConstraint: constraint $name already exists " +
-          s"(${st.constraints(name)})")
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          st.schema, st.bloomRefs, st.bloomCols, st.sizes,
-          "addConstraint", st.dvRefs, st.bucket,
-          Some(st.constraints + (name -> exprSql))))
-        return cur + 1
-      attempt += 1
+          s"(${cur.constraints(name)})")
+      cur.copy(constraints = cur.constraints + (name -> exprSql))
     }
-    throw new java.io.IOException(
-      s"addConstraint: lost the commit race $maxRetries times under $dir")
   }
 
   /** Drop a recorded CHECK constraint. Returns the committed
@@ -3656,19 +3619,9 @@ object SnapshotTable {
         s"dropConstraint: no committed version under $dir"))
     require(stateOf(spark, dir, base).constraints.contains(name),
       s"dropConstraint: no such constraint $name")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          st.schema, st.bloomRefs, st.bloomCols, st.sizes,
-          "dropConstraint", st.dvRefs, st.bucket,
-          Some(st.constraints - name)))
-        return cur + 1
-      attempt += 1
+    commitOnHead(spark, dir, "dropConstraint", maxRetries) { cur =>
+      cur.copy(constraints = cur.constraints - name)
     }
-    throw new java.io.IOException(
-      s"dropConstraint: lost the commit race $maxRetries times under $dir")
   }
 
   // ------------------------------------------------------------------
@@ -3711,24 +3664,10 @@ object SnapshotTable {
 
   private def commitProps(spark: SparkSession, dir: String,
                           f: Map[String, String] => Map[String, String],
-                          op: String, maxRetries: Int): Long = {
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(s"$op: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          st.schema, st.bloomRefs, st.bloomCols, st.sizes, op,
-          st.dvRefs, st.bucket,
-          colMapOpt = Some((st.colMap, st.retired)),
-          propsOpt = Some(f(st.props))))
-        return cur + 1
-      attempt += 1
+                          op: String, maxRetries: Int): Long =
+    commitOnHead(spark, dir, op, maxRetries) { cur =>
+      cur.copy(props = f(cur.props))
     }
-    throw new java.io.IOException(
-      s"$op: lost the commit race $maxRetries times under $dir")
-  }
 
   // ------------------------------------------------------------------
   // Column mapping admin ops (metadata-only RENAME / DROP COLUMN)
@@ -3774,13 +3713,7 @@ object SnapshotTable {
                    to: String, maxRetries: Int = 20): Long = {
     require(to.nonEmpty, "renameColumn: target name must be non-empty")
     require(from != to, s"renameColumn: $from -> $to is a no-op")
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"renameColumn: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+    commitOnHead(spark, dir, "renameColumn", maxRetries) { st =>
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"renameColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then rename"))
@@ -3802,28 +3735,11 @@ object SnapshotTable {
       val newBucket = st.bucket.map(b => b.copy(
         cols = b.cols.map(c => if (c == from) to else c),
         sortCols = b.sortCols.map(c => if (c == from) to else c)))
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs, st.bloomCols, st.sizes,
-          "renameColumn", st.dvRefs, newBucket,
-          colMapOpt = Some((newMap, st.retired))))
-        return cur + 1
-      attempt += 1
+      st.copy(schema = Some(newSchema), bucket = newBucket,
+        colMap = newMap)
     }
-    throw new java.io.IOException(
-      s"renameColumn: lost the commit race $maxRetries times under $dir")
   }
 
-  /** METADATA-ONLY type widening (`ALTER COLUMN … TYPE`, the public
-    * Delta type-widening design): one manifest commit moves the
-    * column to a wider type from the [[widens]] lattice; existing
-    * data files keep their narrower pages and every read upcasts
-    * through the explicit scan schema (Spark's vectorized parquet
-    * reader does int32→bigint natively), so a 100 TB table widens
-    * with zero rewrite. Appends may keep arriving at EITHER width
-    * ([[evolveSchema]] accepts widening-compatible columns; the
-    * manifest schema stays wide). Stats and Bloom summaries remain
-    * valid by the lattice's construction. Time travel serves each
-    * version under its own type. Returns the committed version. */
   /** METADATA-ONLY column ADD: one manifest commit appends a NULLABLE
     * column to the logical schema — zero rewrite at any table size;
     * every existing file NULL-backfills on read (the parquet
@@ -3853,10 +3769,7 @@ object SnapshotTable {
         s"addColumn: default '$str' does not cast to ${dt.simpleString}")
       str
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+    commitOnHead(spark, dir, "addColumn", maxRetries) { st =>
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"addColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then add"))
@@ -3868,37 +3781,34 @@ object SnapshotTable {
         StructField(column, dt, nullable = true))
       // mapped tables: route the new logical name through the same
       // fresh-physical discipline as append-evolution
-      val colMapOpt =
-        if (st.colMap.isEmpty && st.retired.isEmpty)
-          Some((st.colMap, st.retired))
+      val colMap =
+        if (st.colMap.isEmpty && st.retired.isEmpty) st.colMap
         else {
           val taken = schema.fieldNames
             .map(physName(st.colMap, _)).toSet ++ st.retired
           val p = freshPhys(column, taken)
-          val m = if (p != column) st.colMap + (column -> p) else st.colMap
-          Some((m, st.retired))
+          if (p != column) st.colMap + (column -> p) else st.colMap
         }
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs, st.bloomCols, st.sizes,
-          "addColumn", st.dvRefs, st.bucket, colMapOpt = colMapOpt,
-          defaultsOpt = defStr.map(d =>
-            st.defaults + (column -> (d, st.files.toSet)))))
-        return cur + 1
-      attempt += 1
+      st.copy(schema = Some(newSchema), colMap = colMap,
+        defaults = st.defaults ++
+          defStr.map(d => column -> (d, st.files.toSet)))
     }
-    throw new java.io.IOException(
-      s"addColumn: lost the commit race $maxRetries times under $dir")
   }
 
+  /** METADATA-ONLY type widening (`ALTER COLUMN … TYPE`, the public
+    * Delta type-widening design): one manifest commit moves the
+    * column to a wider type from the [[widens]] lattice; existing
+    * data files keep their narrower pages and every read upcasts
+    * through the explicit scan schema (Spark's vectorized parquet
+    * reader does int32→bigint natively), so a 100 TB table widens
+    * with zero rewrite. Appends may keep arriving at EITHER width
+    * ([[evolveSchema]] accepts widening-compatible columns; the
+    * manifest schema stays wide). Stats and Bloom summaries remain
+    * valid by the lattice's construction. Time travel serves each
+    * version under its own type. Returns the committed version. */
   def widenColumn(spark: SparkSession, dir: String, column: String,
-                  to: DataType, maxRetries: Int = 20): Long = {
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"widenColumn: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+                  to: DataType, maxRetries: Int = 20): Long =
+    commitOnHead(spark, dir, "widenColumn", maxRetries) { st =>
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"widenColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then widen"))
@@ -3921,16 +3831,8 @@ object SnapshotTable {
           "the bucket layout first")
       val newSchema = StructType(schema.fields.map(f =>
         if (f.name == column) f.copy(dataType = to) else f))
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs, st.bloomCols, st.sizes,
-          "widenColumn", st.dvRefs, st.bucket,
-          colMapOpt = Some((st.colMap, st.retired))))
-        return cur + 1
-      attempt += 1
+      st.copy(schema = Some(newSchema))
     }
-    throw new java.io.IOException(
-      s"widenColumn: lost the commit race $maxRetries times under $dir")
-  }
 
   /** METADATA-ONLY column drop: one manifest commit removes the
     * column from the logical schema and RETIRES its physical name —
@@ -3946,14 +3848,8 @@ object SnapshotTable {
     * longer be asserted over the visible schema). Returns the
     * committed version. */
   def dropColumn(spark: SparkSession, dir: String, column: String,
-                 maxRetries: Int = 20): Long = {
-    latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"dropColumn: no committed version under $dir"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val st = stateOf(spark, dir, cur)
+                 maxRetries: Int = 20): Long =
+    commitOnHead(spark, dir, "dropColumn", maxRetries) { st =>
       val schema = st.schema.getOrElse(throw new IllegalStateException(
         s"dropColumn: table under $dir records no schema (legacy " +
           "manifest) — append once to record one, then drop"))
@@ -3973,17 +3869,10 @@ object SnapshotTable {
       val newSchema = StructType(schema.fields.filterNot(_.name == column))
       val newBucket = st.bucket.filterNot(b =>
         b.cols.contains(column) || b.sortCols.contains(column))
-      if (tryCommit(spark, dir, cur + 1, st.files, st.txns, st.stats,
-          Some(newSchema), st.bloomRefs,
-          st.bloomCols.filterNot(_ == phys), st.sizes,
-          "dropColumn", st.dvRefs, newBucket,
-          colMapOpt = Some((newMap, newRetired))))
-        return cur + 1
-      attempt += 1
+      st.copy(schema = Some(newSchema),
+        bloomCols = st.bloomCols.filterNot(_ == phys), bucket = newBucket,
+        colMap = newMap, retired = newRetired)
     }
-    throw new java.io.IOException(
-      s"dropColumn: lost the commit race $maxRetries times under $dir")
-  }
 
   /** Enforce the table's recorded CHECK constraints on a batch (or a
     * rewrite that can introduce new values) BEFORE it lands: one
@@ -4083,15 +3972,12 @@ object SnapshotTable {
               maxRetries: Int = 20): Option[Long] = {
     val f = TableStore(spark, dir)
     val target = stateOf(spark, dir, toVersion) // throws once vacuumed
-    val targetSchema = manifestSchema(spark, dir, toVersion)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).getOrElse(
-        throw new java.io.IOException(
-          s"restore: no committed version under $dir"))
+    commitLoop(spark, dir, "restore", maxRetries) { (head, st) =>
+      val cur = head.getOrElse(throw new java.io.IOException(
+        s"restore: no committed version under $dir"))
       require(toVersion <= cur,
         s"restore: target v$toVersion is beyond the head v$cur")
-      val curSt = stateOf(spark, dir, cur)
+      val curSt = st.get
       // The no-op check covers exactly the state a restore REINSTATES
       // (files, vectors, schema, mapping, bucket). Constraints/props
       // deliberately inherit FORWARD from the current head (policy
@@ -4100,47 +3986,30 @@ object SnapshotTable {
       // otherwise commit a version identical to itself.
       if (curSt.files.toSet == target.files.toSet &&
           curSt.dvRefs == target.dvRefs &&
-          manifestSchema(spark, dir, cur) == targetSchema &&
+          curSt.schema == target.schema &&
           curSt.colMap == target.colMap &&
           curSt.retired == target.retired &&
           curSt.defaults == target.defaults &&
-          curSt.bucket == target.bucket) return None
-      val gone = target.files.filterNot(curSt.files.toSet)
-        .filterNot { p =>
-          f.exists(if (p.startsWith("data/")) new Path(dir, p)
-                   else new Path(p))
-        }
-      if (gone.nonEmpty) throw new java.io.IOException(
-        s"restore: v$toVersion data files already vacuumed: " +
-          gone.take(3).mkString(", "))
-      if (tryCommit(spark, dir, cur + 1, target.files, curSt.txns,
-          target.stats, targetSchema, target.bloomRefs,
-          target.bloomCols, target.sizes, "restore", target.dvRefs,
-          target.bucket,
-          // the TARGET's column mapping reinstates with its state — a
-          // restore across a rename/drop rolls the names back too
-          // (explicit empty = clear, for pre-mapping targets);
-          // column defaults are schema-adjacent structure and roll
-          // back the same way
-          colMapOpt = Some((target.colMap, target.retired)),
-          defaultsOpt = Some(target.defaults)))
-        return Some(cur + 1)
-      attempt += 1
+          curSt.bucket == target.bucket) None
+      else {
+        val gone = target.files.filterNot(curSt.files.toSet)
+          .filterNot { p =>
+            f.exists(if (p.startsWith("data/")) new Path(dir, p)
+                     else new Path(p))
+          }
+        if (gone.nonEmpty) throw new java.io.IOException(
+          s"restore: v$toVersion data files already vacuumed: " +
+            gone.take(3).mkString(", "))
+        // The target's state reinstates whole — files, summaries,
+        // vectors, schema, bucket claim, and its column mapping and
+        // defaults (a restore across a rename/drop rolls the names
+        // back too); the head's ledger and policy carry forward.
+        Some(target.copy(txns = curSt.txns,
+          constraints = curSt.constraints, props = curSt.props))
+      }
     }
-    throw new java.io.IOException(
-      s"restore: lost the commit race $maxRetries times under $dir")
   }
 
-  /** Retire data files referenced by NO manifest among the latest
-    * `keepVersions` (orphans from crashed appends included), and drop
-    * the manifests older than that window. Time travel shrinks to the
-    * kept window; the latest snapshot is never touched. `minAgeMs`
-    * guards the append-in-flight race: a writer that has written data
-    * files but not yet committed its manifest looks exactly like a
-    * crashed append, so only unreferenced files older than the age
-    * floor are deleted — pick it longer than any plausible
-    * write-to-commit gap (the Delta retention discipline). Returns
-    * the number of data files deleted. */
   /** READ-ONLY [[vacuum]] preview — what the same (keepVersions,
     * minAgeMs) run would retire, without touching anything: (data
     * files eligible for deletion, manifests below the keep window).
@@ -4213,6 +4082,16 @@ object SnapshotTable {
     math.max(1, (latest - keepFrom + 1).toInt)
   }
 
+  /** Retire data files referenced by NO manifest among the latest
+    * `keepVersions` (orphans from crashed appends included), and drop
+    * the manifests older than that window. Time travel shrinks to the
+    * kept window; the latest snapshot is never touched. `minAgeMs`
+    * guards the append-in-flight race: a writer that has written data
+    * files but not yet committed its manifest looks exactly like a
+    * crashed append, so only unreferenced files older than the age
+    * floor are deleted — pick it longer than any plausible
+    * write-to-commit gap (the Delta retention discipline). Returns
+    * the number of data files deleted. */
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int = 2,
              minAgeMs: Long = 60L * 60 * 1000): Int = {
     val plan = vacuumPlan(spark, dir, keepVersions, minAgeMs)
@@ -4245,23 +4124,15 @@ object SnapshotTable {
       if (node.get("files") == null && node.get("segments") == null) {
         val origOp = Option(node.get("op")).map(_.asText)
           .getOrElse("commit")
-        // The rewrite must carry the COMPLETE state — including the
-        // bucket claim and CHECK constraints, which the original
-        // delta-form manifest asserted/inherited; omitting either
-        // would silently strip table policy at the keepFrom version.
+        // The rewrite carries the COMPLETE resolved state (policy and
+        // mapping included). The state is its own parent: the segments
+        // it resolved through are the ones a segmented rewrite reuses.
         val origTs = Option(node.get("ts")).map(_.asLong)
-        val body = manifestBody(spark, dir, keepFrom, full = true,
-          st.files, st.txns, st.stats, st.schema, st.bloomRefs, st.bloomCols,
-          st.sizes, origOp, st.dvRefs, st.bucket, st.constraints,
-          tsOverride = origTs,
+        val body = manifestBody(spark, dir, keepFrom, Some(st), st, origOp,
+          full = true, tsOverride = origTs,
           // a legacy stampless manifest stays stampless — see
           // manifestBody's ts discipline
-          stampTs = origTs.isDefined,
-          // the column mapping is table state like bucket/constraints
-          // — stripping it here would serve physical names (or
-          // resurrect dropped columns) at the keepFrom version
-          colMap = st.colMap, retired = st.retired,
-          props = st.props, defaults = st.defaults)
+          stampTs = origTs.isDefined)
         commitLock.synchronized {
           // Rename OVER the target (POSIX/local rename overwrites in
           // place — no instant at which v<keepFrom> is missing for a
@@ -4649,11 +4520,9 @@ object SnapshotTable {
     val wb = batch.fold(WrittenBatch(Nil, Map.empty, Map.empty, Map.empty,
       None, Nil))(_._1)
     var validated = batch.fold(Map.empty[String, String])(_._3)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir).get
-      val curSt = stateOf(spark, dir, cur)
-      if (batch.nonEmpty) checkMapClaim(Some(curSt), wb.claim, op)
+    commitLoop(spark, dir, op, maxRetries, Some(manifestOp)) { (_, st) =>
+      val curSt = st.get
+      if (batch.nonEmpty) checkMapClaim(st, wb.claim, op)
       val missing = affected.filterNot(curSt.files.toSet)
       if (missing.nonEmpty)
         throw new java.util.ConcurrentModificationException(
@@ -4673,17 +4542,10 @@ object SnapshotTable {
         validated = recheckConstraints(spark, dir, curSt.constraints,
           validated, wb.added, nextSchema, op,
           wb.claim.map(_.colMap).getOrElse(Map.empty))
-      if (tryCommit(spark, dir, cur + 1, curSt.files ++ wb.added,
-          curSt.txns, curSt.stats ++ wb.stats, nextSchema,
-          curSt.bloomRefs ++ wb.refs, (curSt.bloomCols ++ wb.bloomCols).distinct,
-          curSt.sizes ++ wb.sizes, manifestOp,
-          curSt.dvRefs ++ affected.map(_ -> ref),
-          colMapOpt = wb.claim.map(c => (c.colMap, c.retired))))
-        return cur + 1
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"$op: lost the commit race $maxRetries times under $dir")
+      // the bucket claim clears, even for a delete that lands no file
+      Some(landed(curSt, wb).copy(schema = nextSchema,
+        dvRefs = curSt.dvRefs ++ affected.map(_ -> ref), bucket = None))
+    }.get
   }
 
   /** Copy-on-write MERGE (upsert): for key-matched rows the source row
@@ -5365,90 +5227,69 @@ object SnapshotTable {
     val wb = labeled(spark, op) {
       writeBatch(rewrite, dir, statsCols, bloomCols, basis = basis)
     }
-    val (added, addedStats, addedRefs, addedSizes, claim) =
-      (wb.added, wb.stats, wb.refs, wb.sizes, wb.claim)
+    val (added, claim) = (wb.added, wb.claim)
     val touchedSet = touched.toSet
     val addedSet = added.toSet
     // None = this op introduces no new values (delete/compaction);
     // Some(v) = the set the caller validated — recheck on rebase.
     var validated = checkConstraints
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = latestVersion(spark, dir)
-      val curSt = cur.map(stateOf(spark, dir, _))
-      checkMapClaim(curSt, claim, op)
-      val curFiles = curSt.map(_.files).getOrElse(Nil)
-      val curTxns = curSt.map(_.txns).getOrElse(Map.empty)
-      txn.foreach { case (appId, tv) =>
-        if (curTxns.getOrElse(appId, Long.MinValue) >= tv)
-          return None // a racing replay won; our files stay orphaned
-      }
-      val guarded = touched ++ readOnly
-      val missing = guarded.filterNot(curFiles.toSet)
-      if (missing.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"$op: touched/read files rewritten concurrently: ${missing.take(3).mkString(", ")}")
-      // A deletion vector committed on a touched file AFTER our base
-      // read means our rewrite (built from the base vector state)
-      // would resurrect those freshly-deleted rows — same write-write
-      // conflict as a vanished file, same loud surface. Read-only
-      // decision inputs (insert-suppression holders) get the same
-      // guard: their rows decided what this commit suppresses.
-      val dvMoved = guarded.filter(f =>
-        curSt.map(_.dvRefs).getOrElse(Map.empty).get(f) != baseDv.get(f))
-      if (dvMoved.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"$op: deletion vectors advanced concurrently on touched " +
-            s"files: ${dvMoved.take(3).mkString(", ")}")
-      keyConflict.foreach { case (baseFiles, keys, srcKeys) =>
-        val newSinceBase = curFiles
-          .filterNot(baseFiles).filterNot(addedSet).filterNot(touchedSet)
-        if (newSinceBase.nonEmpty) {
-          // keys are logical; concurrently-added files are physical —
-          // probe through the rename under an active mapping.
-          val cm = claim.map(_.colMap).getOrElse(Map.empty)
-          val probeFrame =
-            if (cm.isEmpty) readFiles(spark, dir, newSinceBase,
-              curSt.flatMap(_.schema))
-            else {
-              val logical = curSt.flatMap(_.schema).getOrElse(
-                throw new IllegalStateException(
-                  s"$op: column mapping active under $dir but no schema"))
-              toLogicalFrame(readFiles(spark, dir, newSinceBase,
-                Some(physSchemaOf(cm, logical))), cm, logical)
-            }
-          val clash = probeFrame
-            .join(srcKeys, keys, "left_semi").limit(1).collect()
-          if (clash.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"$op: a concurrent commit added rows for key " +
-                s"${clash.head.mkString(",")} — committing would duplicate it")
+    commitLoop(spark, dir, op, maxRetries) { (_, st) =>
+      checkMapClaim(st, claim, op)
+      val cur = st.getOrElse(EmptyState)
+      // a racing replay won: no commit, our files stay orphaned
+      if (replayed(cur, txn)) None
+      else {
+        val guarded = touched ++ readOnly
+        val missing = guarded.filterNot(cur.files.toSet)
+        if (missing.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"$op: touched/read files rewritten concurrently: ${missing.take(3).mkString(", ")}")
+        // A deletion vector committed on a touched file AFTER our base
+        // read means our rewrite (built from the base vector state)
+        // would resurrect those freshly-deleted rows — same write-write
+        // conflict as a vanished file, same loud surface. Read-only
+        // decision inputs (insert-suppression holders) get the same
+        // guard: their rows decided what this commit suppresses.
+        val dvMoved = guarded.filter(f => cur.dvRefs.get(f) != baseDv.get(f))
+        if (dvMoved.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"$op: deletion vectors advanced concurrently on touched " +
+              s"files: ${dvMoved.take(3).mkString(", ")}")
+        keyConflict.foreach { case (baseFiles, keys, srcKeys) =>
+          val newSinceBase = cur.files
+            .filterNot(baseFiles).filterNot(addedSet).filterNot(touchedSet)
+          if (newSinceBase.nonEmpty) {
+            // keys are logical; concurrently-added files are physical —
+            // probe through the rename under an active mapping.
+            val cm = claim.map(_.colMap).getOrElse(Map.empty)
+            val probeFrame =
+              if (cm.isEmpty) readFiles(spark, dir, newSinceBase, cur.schema)
+              else {
+                val logical = cur.schema.getOrElse(
+                  throw new IllegalStateException(
+                    s"$op: column mapping active under $dir but no schema"))
+                toLogicalFrame(readFiles(spark, dir, newSinceBase,
+                  Some(physSchemaOf(cm, logical))), cm, logical)
+              }
+            val clash = probeFrame
+              .join(srcKeys, keys, "left_semi").limit(1).collect()
+            if (clash.nonEmpty)
+              throw new java.util.ConcurrentModificationException(
+                s"$op: a concurrent commit added rows for key " +
+                  s"${clash.head.mkString(",")} — committing would duplicate it")
+          }
         }
+        val schema = Some(evolveSchema(cur.schema.getOrElse(new StructType()),
+          rewrite.schema))
+        validated = validated.map(v => recheckConstraints(spark, dir,
+          cur.constraints, v, added, schema, op,
+          claim.map(_.colMap).getOrElse(Map.empty)))
+        // Rewritten files physically exclude their masked rows, so their
+        // vectors retire with them; the new files aren't bucket-routed,
+        // so the claim clears.
+        Some(landed(cur, wb, touchedSet).copy(schema = schema,
+          txns = cur.txns ++ txn, bucket = None))
       }
-      val schema = Some(curSt.flatMap(_.schema)
-        .map(evolveSchema(_, rewrite.schema))
-        .getOrElse(evolveSchema(new StructType(), rewrite.schema)))
-      validated = validated.map(v => recheckConstraints(spark, dir,
-        curSt.map(_.constraints).getOrElse(Map.empty), v,
-        added, schema, op, claim.map(_.colMap).getOrElse(Map.empty)))
-      val next = curFiles.filterNot(touchedSet) ++ added
-      if (tryCommit(spark, dir, cur.getOrElse(-1L) + 1, next,
-          txn.fold(curTxns)(curTxns + _),
-          (curSt.map(_.stats).getOrElse(Map.empty) -- touched) ++ addedStats,
-          schema,
-          (curSt.map(_.bloomRefs).getOrElse(Map.empty) -- touched)
-            ++ addedRefs,
-          (curSt.map(_.bloomCols).getOrElse(Nil) ++ wb.bloomCols).distinct,
-          (curSt.map(_.sizes).getOrElse(Map.empty) -- touched) ++ addedSizes,
-          op,
-          // rewritten files physically exclude their masked rows, so
-          // their vectors retire with them
-          curSt.map(_.dvRefs).getOrElse(Map.empty) -- touched,
-          colMapOpt = claim.map(c => (c.colMap, c.retired))))
-        return Some(cur.getOrElse(-1L) + 1)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"$op: lost the commit race $maxRetries times under $dir")
   }
 }

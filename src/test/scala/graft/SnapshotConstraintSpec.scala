@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
@@ -9,12 +8,12 @@ import graft.sources.SnapshotTable
   * existing rows at add time and enforced on every value-introducing
   * write path before data lands. SQL semantics — a row violates only
   * when the expression is FALSE; NULL passes. */
-class SnapshotConstraintSpec extends AnyFunSuite {
+class SnapshotConstraintSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-ck-$tag").toString + "/t"
+    tempDir(s"graft-ck-$tag") + "/t"
 
   test("addConstraint validates existing rows; enforcement blocks bad appends pre-write") {
     val dir = tmp("basic")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
@@ -10,12 +9,12 @@ import graft.sources.SnapshotTable.{MergeAction, MergeClause}
   * conditional multi-clause semantics (first-match-wins), DELETE,
   * NOT MATCHED BY SOURCE, touched-file scoping, cardinality and cast
   * discipline, and constraint enforcement on introduced rows. */
-class SnapshotMergeIntoSpec extends AnyFunSuite {
+class SnapshotMergeIntoSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-mi-$tag").toString + "/t"
+    tempDir(s"graft-mi-$tag") + "/t"
 
   private def rows(dir: String): Set[(Long, Long, String)] =
     SnapshotTable.read(spark, dir).orderBy("id").collect()

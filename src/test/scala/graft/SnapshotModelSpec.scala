@@ -13,12 +13,12 @@ import graft.sources.SnapshotTable
   * few dozen steps; the dvremoves gap restore exposed is exactly the
   * class this hunts). Time travel is checked against the model's own
   * per-version history, which restore also draws targets from. */
-class SnapshotModelSpec extends AnyFunSuite {
+class SnapshotModelSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(scheme: String = "file"): String =
-    SparkTestBase.tmpRoot("graft-model", scheme) + "/t"
+    tempRoot("graft-model", scheme) + "/t"
 
   private def snap(dir: String, v: Option[Long] = None): Map[Long, Long] =
     SnapshotTable.read(spark, dir, v).select("id", "v").collect()

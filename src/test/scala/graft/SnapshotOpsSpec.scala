@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
@@ -10,12 +9,12 @@ import graft.sources.SnapshotTable
   * commit), and scoped compaction (compactWhere / binPackSmall —
   * rewrite only the files in scope, carry everything else forward
   * by reference). */
-class SnapshotOpsSpec extends AnyFunSuite {
+class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-ops-$tag").toString + "/t"
+    tempDir(s"graft-ops-$tag") + "/t"
 
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet

@@ -12,12 +12,12 @@ import graft.sources.{SnapshotSql, SnapshotTable}
   * AS-IS (zero rewrite), so a commit writes O(batch + churn) manifest
   * bytes, never O(table). Small tables stay in the inline form
   * (every other suite pins that path). */
-class SnapshotSegmentsSpec extends AnyFunSuite {
+class SnapshotSegmentsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-seg-$tag").toString + "/t"
+    tempDir(s"graft-seg-$tag") + "/t"
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

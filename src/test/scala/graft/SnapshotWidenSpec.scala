@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,12 +8,12 @@ import graft.sources.{SnapshotSql, SnapshotTable}
 /** Metadata-only type widening (ALTER COLUMN … TYPE): existing files
   * keep their narrow pages, reads upcast through the scan schema,
   * summaries stay valid, appends may arrive at either width. */
-class SnapshotWidenSpec extends AnyFunSuite {
+class SnapshotWidenSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-widen-$tag").toString + "/t"
+    tempDir(s"graft-widen-$tag") + "/t"
 
   test("int->long: zero rewrite, reads upcast, mixed-width appends, " +
       "stats + Bloom pruning intact, time travel serves the old type") {

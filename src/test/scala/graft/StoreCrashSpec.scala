@@ -12,12 +12,12 @@ import graft.sources.SnapshotTable
   * next commit succeeds, and `vacuum(…, minAgeMs = 0)` reclaims what
   * the kill left behind. A failed (not killed) rename in vacuum's
   * manifest rewrite loses no manifest. */
-class StoreCrashSpec extends AnyFunSuite {
+class StoreCrashSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(): String =
-    SparkTestBase.tmpRoot("graft-crash", GraftTestFs.Scheme) + "/t"
+    tempRoot("graft-crash", GraftTestFs.Scheme) + "/t"
 
   private def ids(dir: String, v: Option[Long] = None): Set[Long] =
     SnapshotTable.read(spark, dir, v).select("id").as[Long].collect().toSet
