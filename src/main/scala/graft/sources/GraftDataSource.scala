@@ -1,14 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
-  LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset,
   SerializedOffset}
@@ -590,24 +583,24 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
   private def filesAsBatch(files: Seq[String],
                            sizes: Map[String, Long],
                            atVersion: Long): DataFrame = {
-    // Under an active column mapping the files carry PHYSICAL names:
-    // scan physically, rename to the stream's captured (logical)
-    // schema on top (a projection keeps the plan streaming). Schema
-    // changes the captured schema cannot absorb fail LOUDLY with a
-    // restart hint — a column renamed or dropped mid-stream (the
-    // retired-only case counts: a pure drop leaves the map empty but
-    // `retired` set, and silently re-serving the dropped column would
-    // resurrect retired bytes under ignoreChanges), or a column
-    // WIDENED mid-stream (new files carry the wider pages; scanning
-    // them with the captured narrow schema would throw a raw parquet
-    // conversion error with no hint). Restarting re-captures.
-    val colMap = SnapshotTable.manifestColMap(spark, dir, atVersion)
-    val retired = SnapshotTable.manifestRetired(spark, dir, atVersion)
-    val liveSchema = SnapshotTable.manifestSchema(spark, dir, atVersion)
-    liveSchema.foreach { ls =>
+    // The scan ([[SnapshotTable.readFilesWithDv]]) masks the END
+    // version's vectors, renames a column mapping to the stream's
+    // captured schema and serves its defaults, all as streaming
+    // projections and stream-static joins. Schema changes the captured
+    // schema cannot absorb fail LOUDLY with a restart hint — a column
+    // renamed or dropped mid-stream (the retired-only case counts: a
+    // pure drop leaves the map empty but `retired` set, and silently
+    // re-serving the dropped column would resurrect retired bytes
+    // under ignoreChanges), or a column WIDENED mid-stream (new files
+    // carry the wider pages; scanning them with the captured narrow
+    // schema would throw a raw parquet conversion error with no hint).
+    // Restarting re-captures.
+    val (_, st) = SnapshotTable.resolve(spark, dir, Some(atVersion),
+      "graft streaming source")
+    st.schema.foreach { ls =>
       val liveTypes = ls.fields.map(f => f.name -> f.dataType).toMap
       val gone = schema.fieldNames.filterNot(liveTypes.contains)
-      if (gone.nonEmpty && (colMap.nonEmpty || retired.nonEmpty))
+      if (gone.nonEmpty && (st.colMap.nonEmpty || st.retired.nonEmpty))
         throw new IllegalStateException(
           s"graft streaming source: column(s) ${gone.mkString(", ")} were " +
             "renamed or dropped mid-stream — restart the stream to " +
@@ -621,56 +614,11 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
           " changed type mid-stream (widenColumn) — restart the stream " +
           "to capture the current schema")
     }
-    val scanSchema =
-      if (colMap.isEmpty) schema
-      else SnapshotTable.physSchemaOf(colMap, schema)
-    val attrs = DataTypeUtils.toAttributes(scanSchema)
-    def buildSlice(fs: Seq[String]): DataFrame = {
-      val plan =
-        if (fs.isEmpty) LocalRelation(attrs, Nil, isStreaming = true)
-        else {
-          val index = new ExactFilesIndex(spark, dir, fs, sizes)
-          val rel = HadoopFsRelation(index, new StructType(), scanSchema,
-            None, new ParquetFileFormat(), Map.empty)(spark)
-          LogicalRelation(rel, attrs, None, isStreaming = true, None)
-        }
-      val base = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
-      // Deletion vectors mask FIRST (the anti-join keys on
-      // `_metadata`, which only the bare file relation exposes — a
-      // stream-static left-anti join, a supported incremental shape);
-      // the logical rename projects on top and keeps the plan
-      // streaming.
-      val masked = SnapshotTable.dvMaskOver(spark, dir,
-        SnapshotTable.manifestDvRefs(spark, dir, atVersion), fs, base)
-      if (colMap.isEmpty) masked
-      else masked.select(schema.fields.map(f =>
-        col(SnapshotTable.physName(colMap, f.name)).as(f.name)).toSeq: _*)
-    }
-    // initial DEFAULTS: the same group-split the batch readers take —
-    // pre-ADD file groups replace the defaulted columns with the
-    // recorded literal on top of the logical frame (a projection,
-    // plan stays streaming). Columns the stream's captured schema
-    // does not carry are skipped (the stream serves its
-    // registration-time columns by contract).
-    val defaults =
-      (if (files.isEmpty || atVersion < 0)
-         Map.empty[String, (String, Set[String])]
-       else SnapshotTable.manifestDefaults(spark, dir, atVersion))
-        .filter { case (c, (_, pre)) =>
-          schema.fieldNames.contains(c) && files.exists(pre) }
-    if (defaults.isEmpty) buildSlice(files)
-    else files
-      .groupBy(f => defaults.keySet.filter(c => defaults(c)._2(f)))
-      .toSeq.sortBy(_._2.headOption.getOrElse(""))
-      .map { case (cols, fs) =>
-        val part = buildSlice(fs)
-        if (cols.isEmpty) part
-        else part.select(schema.fields.map { f =>
-          if (cols.contains(f.name))
-            lit(defaults(f.name)._1).cast(f.dataType).as(f.name)
-          else col(f.name)
-        }.toIndexedSeq: _*)
-      }.reduce(_ unionByName _)
+    // a slice may emit files of earlier versions in the range: their
+    // sizes come from their own manifests
+    SnapshotTable.readFilesWithDv(spark, dir,
+      st.copy(sizes = sizes ++ st.sizes), files, Some(schema),
+      streaming = true)
   }
 
   override def stop(): Unit = ()
@@ -860,46 +808,10 @@ final class GraftCdfStreamSource(spark: SparkSession, dir: String,
     * vectors, so a slice reads exactly what the full snapshot read
     * would have emitted for those files. */
   private def sliceInserts(files: Seq[String], v: Long): DataFrame = {
-    val dataSchema = stripCdfColumns(schema)
-    val colMap = SnapshotTable.manifestColMap(spark, dir, v)
-    val scanSchema =
-      if (colMap.isEmpty) dataSchema
-      else SnapshotTable.physSchemaOf(colMap, dataSchema)
-    val sizes = SnapshotTable.manifestSizes(spark, dir, v)
-    def buildSlice(fs: Seq[String]): DataFrame = {
-      val index = new ExactFilesIndex(spark, dir, fs, sizes)
-      val rel = HadoopFsRelation(index, new StructType(), scanSchema, None,
-        new ParquetFileFormat(), Map.empty)(spark)
-      val plan = LogicalRelation(rel,
-        DataTypeUtils.toAttributes(scanSchema), None,
-        isStreaming = false, None)
-      val base = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
-      val masked = SnapshotTable.dvMaskOver(spark, dir,
-        SnapshotTable.manifestDvRefs(spark, dir, v), fs, base)
-      if (colMap.isEmpty) masked
-      else masked.select(dataSchema.fields.map(f =>
-        col(SnapshotTable.physName(colMap, f.name)).as(f.name)).toSeq: _*)
-    }
-    // initial DEFAULTS — same group-split as every other read surface,
-    // so a CDF consumer sees the served values, not scan NULLs
-    val defaults = SnapshotTable.manifestDefaults(spark, dir, v)
-      .filter { case (c, (_, pre)) =>
-        dataSchema.fieldNames.contains(c) && files.exists(pre) }
-    val logical =
-      if (defaults.isEmpty) buildSlice(files)
-      else files
-        .groupBy(f => defaults.keySet.filter(c => defaults(c)._2(f)))
-        .toSeq.sortBy(_._2.headOption.getOrElse(""))
-        .map { case (cols, fs) =>
-          val part = buildSlice(fs)
-          if (cols.isEmpty) part
-          else part.select(dataSchema.fields.map { f =>
-            if (cols.contains(f.name))
-              lit(defaults(f.name)._1).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }.toIndexedSeq: _*)
-        }.reduce(_ unionByName _)
-    withCdfColumns(logical, v)
+    val (_, st) = SnapshotTable.resolve(spark, dir, Some(v),
+      "graft CDF source")
+    withCdfColumns(SnapshotTable.readFilesWithDv(spark, dir, st, files,
+      Some(stripCdfColumns(schema))), v)
   }
 
   override def stop(): Unit = ()
@@ -979,35 +891,4 @@ final class DvMaskedRelation(spark: SparkSession, dir: String, v: Long,
   }
 
   override def toString: String = s"DvMaskedRelation[$dir@v$v]"
-}
-
-/** [[FileIndex]] over an exact, pre-resolved file list — the
-  * micro-batch planning shape (no pruning: a batch IS its files).
-  * Statuses build from manifest-recorded sizes where present — zero
-  * per-file filesystem RPCs — with a getFileStatus fallback for
-  * legacy files. */
-private[sources] final class ExactFilesIndex(spark: SparkSession, dir: String,
-                                             files: Seq[String],
-                                             sizes: Map[String, Long]
-                                            ) extends FileIndex {
-  private val fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val statuses: Array[FileStatus] = files.sorted.map { key =>
-    val p = if (key.startsWith("data/")) new Path(dir, key) else new Path(key)
-    sizes.get(key)
-      .map(len => new FileStatus(len, false, 1, len, 0L, p))
-      .getOrElse(fs.getFileStatus(p))
-  }.toArray
-
-  override def rootPaths: Seq[Path] = Seq(new Path(dir))
-  override def partitionSchema: StructType = new StructType()
-  override def inputFiles: Array[String] =
-    statuses.map(_.getPath.toString)
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = statuses.map(_.getLen).sum
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]
-                        ): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, statuses))
 }

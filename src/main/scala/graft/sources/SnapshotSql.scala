@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /** The SQL read surface of [[SnapshotTable]] — the difference between
@@ -174,104 +173,33 @@ object SnapshotSql {
         s"SnapshotSql.$op: no active SparkSession — use $op(spark, …)"))
 
   /** The manifest-pruned parquet relation over a pinned snapshot —
-    * shared by [[dataFrame]] (temp-view surface) and
-    * [[GraftDataSource]] (`spark.read.format("graft")` surface; a
-    * HadoopFsRelation IS a V1 BaseRelation, the public
-    * Delta-connector layering). */
+    * [[GraftDataSource]]'s bare `spark.read.format("graft")` relation
+    * (a HadoopFsRelation IS a V1 BaseRelation, the public
+    * Delta-connector layering), with the scan schema physical and the
+    * returned StructType logical. */
   private[sources] def relation(spark: SparkSession, dir: String,
-                                version: Option[Long],
-                                only: Option[Seq[String]] = None
+                                version: Option[Long]
                                ): (HadoopFsRelation, StructType, Long) = {
-    val v = version.orElse(SnapshotTable.latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"SnapshotSql: no committed version under $dir"))
-    val schema = SnapshotTable.manifestSchema(spark, dir, v).getOrElse(
-      SnapshotTable.read(spark, dir, Some(v)).schema)
-    // Under an active column mapping the SCAN reads the files'
-    // PHYSICAL names; [[dataFrame]] renames to the logical schema on
-    // top. The returned StructType stays LOGICAL (what callers serve).
-    val colMap = SnapshotTable.manifestColMap(spark, dir, v)
-    val scanSchema =
-      if (colMap.isEmpty) schema
-      else SnapshotTable.physSchemaOf(colMap, schema)
-    val index = new SnapshotFileIndex(spark, dir, v, scanSchema, only)
-    // A manifest-recorded bucketing claim becomes Spark's BucketSpec:
-    // FileSourceScanExec then reports HashPartitioning(cols, n) and a
-    // join/agg on the bucket columns plans with ZERO Exchange. The
-    // claim is only ever present when every live file was written by
-    // appendBucketed under this exact spec (see BucketLayout); its
-    // columns are logical — the physical scan needs physical names.
-    val bucketSpec = SnapshotTable.manifestBucket(spark, dir, v).map(b =>
-      org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        b.numBuckets, b.cols.map(SnapshotTable.physName(colMap, _)),
-        b.sortCols.map(SnapshotTable.physName(colMap, _))))
-    (HadoopFsRelation(index, new StructType(), scanSchema, bucketSpec,
-      new ParquetFileFormat(), Map.empty)(spark), schema, v)
+    val (v, st) = SnapshotTable.resolve(spark, dir, version, "SnapshotSql")
+    val schema = SnapshotTable.logicalSchemaOf(spark, dir, st)
+    (SnapshotTable.snapshotRelation(spark, dir, st, st.files,
+      SnapshotTable.physSchemaOf(st.colMap, schema), sqlSurface = true),
+      schema, v)
   }
 
   /** Build a DataFrame over a snapshot whose scans prune through the
-    * manifest. `version` pins time travel (default: latest). A
-    * snapshot carrying merge-on-read deletion vectors gets them
-    * applied ON TOP of the pruned relation (a broadcast anti-join on
-    * `_metadata.row_index` — [[SnapshotTable.dvMaskOver]]): filters a
-    * query pushes against the view still reach
-    * [[SnapshotFileIndex.listFiles]] through the anti-join's left
-    * side, so manifest pruning and vector masking compose. */
+    * manifest: [[SnapshotTable.readFilesWithDv]] over the whole
+    * snapshot, with [[SnapshotFileIndex]] pruning on the query's
+    * pushed filters and the table's bucket claim reported to Spark.
+    * `version` pins time travel (default: latest). Deletion vectors
+    * mask ON TOP of the pruned relation, so filters a query pushes
+    * still reach [[SnapshotFileIndex.listFiles]] through the
+    * anti-join's left side. */
   def dataFrame(spark: SparkSession, dir: String,
                 version: Option[Long] = None): DataFrame = {
-    val v0 = version.orElse(SnapshotTable.latestVersion(spark, dir))
-      .getOrElse(throw new java.io.IOException(
-        s"SnapshotSql: no committed version under $dir"))
-    // ADD COLUMN initial DEFAULTS take the same group-split shape as
-    // the programmatic readers: one pruned relation per group of
-    // files sharing a default signature, the pre-ADD groups replacing
-    // those columns with the recorded literal, unioned. Tables
-    // without live defaults take the single-relation path below.
-    val defaults = SnapshotTable.manifestDefaults(spark, dir, v0)
-    val allFiles = SnapshotTable.manifestFiles(spark, dir, v0)
-    val relevant = defaults.filter { case (_, (_, pre)) =>
-      allFiles.exists(pre) }
-    if (relevant.nonEmpty) {
-      import org.apache.spark.sql.functions.{col, lit}
-      return allFiles
-        .groupBy(f => relevant.keySet.filter(c => relevant(c)._2(f)))
-        .toSeq.sortBy(_._2.head)
-        .map { case (cols, fs) =>
-          val part = dataFrameOver(spark, dir, v0, Some(fs))
-          if (cols.isEmpty) part
-          else part.select(part.schema.fields.map { f =>
-            if (cols.contains(f.name))
-              lit(relevant(f.name)._1).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }.toIndexedSeq: _*)
-        }.reduce(_ unionByName _)
-    }
-    dataFrameOver(spark, dir, v0, None)
-  }
-
-  /** One manifest-pruned relation over (a subset of) a pinned
-    * snapshot — [[dataFrame]]'s single-group body. */
-  private def dataFrameOver(spark: SparkSession, dir: String, v0: Long,
-                            only: Option[Seq[String]]): DataFrame = {
-    val (rel, schema, v) = relation(spark, dir, Some(v0), only)
-    val plan = LogicalRelation(rel,
-      DataTypeUtils.toAttributes(rel.dataSchema), None,
-      isStreaming = false, None)
-    val base = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
-    val files = only.getOrElse(SnapshotTable.manifestFiles(spark, dir, v))
-    val dvRefs = SnapshotTable.manifestDvRefs(spark, dir, v)
-      .view.filterKeys(files.toSet).toMap
-    val masked =
-      if (dvRefs.isEmpty) base
-      else SnapshotTable.dvMaskOver(spark, dir, dvRefs, files, base)
-    // Rename the physical scan to the logical schema LAST (after DV
-    // masking, which needs `_metadata`); filters a query pushes
-    // against logical names travel through the aliases down to the
-    // physical scan and its file pruning.
-    val colMap = SnapshotTable.manifestColMap(spark, dir, v)
-    if (colMap.isEmpty) masked
-    else masked.select(schema.fields.map(f =>
-      org.apache.spark.sql.functions
-        .col(SnapshotTable.physName(colMap, f.name)).as(f.name)).toSeq: _*)
+    val (_, st) = SnapshotTable.resolve(spark, dir, version, "SnapshotSql")
+    SnapshotTable.readFilesWithDv(spark, dir, st, st.files,
+      sqlSurface = true)
   }
 
   /** Register the current (or pinned) snapshot as a temp view, so
@@ -279,8 +207,7 @@ object SnapshotSql {
     * the pinned version. */
   def register(spark: SparkSession, name: String, dir: String,
                version: Option[Long] = None): Long = {
-    val v = version.orElse(SnapshotTable.latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"SnapshotSql: no committed version under $dir"))
+    val (v, _) = SnapshotTable.resolve(spark, dir, version, "SnapshotSql")
     val df = dataFrame(spark, dir, Some(v))
     df.createOrReplaceTempView(name)
     // no explicit bind: the binding is keyed by THIS view's plan
@@ -306,14 +233,11 @@ object SnapshotSql {
     * view keeps serving its registration-time columns — re-register
     * to surface new ones). */
   def dataFrameLive(spark: SparkSession, dir: String): DataFrame = {
-    val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"SnapshotSql: no committed version under $dir"))
-    val schema = SnapshotTable.manifestSchema(spark, dir, v).getOrElse(
-      SnapshotTable.read(spark, dir, Some(v)).schema)
-    val rel = new LiveSnapshotRelation(spark, dir, schema)
+    val (_, st) = SnapshotTable.resolve(spark, dir, None, "SnapshotSql")
+    val rel = new LiveSnapshotRelation(spark, dir,
+      SnapshotTable.logicalSchemaOf(spark, dir, st))
     val plan = LogicalRelation(rel,
-      DataTypeUtils.toAttributes(schema), None, isStreaming = false, None)
+      DataTypeUtils.toAttributes(rel.schema), None, isStreaming = false, None)
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
   }
 
@@ -412,34 +336,28 @@ object LiveSnapshotRelation {
     }
 }
 
-/** Manifest-backed [[FileIndex]] over one pinned snapshot version.
+/** The [[FileIndex]] of every snapshot scan: `files` of one pinned
+  * snapshot state, with statuses built from the MANIFEST's recorded
+  * per-file sizes — zero filesystem RPCs on the planning path (the
+  * manifest-only-planning property object stores need; modification
+  * time is irrelevant to a pinned-snapshot read and stamps 0). Files a
+  * pre-sizes writer committed fall back to one getFileStatus each.
+  * With `prune` (the SQL surfaces) [[listFiles]] intersects `files`
+  * with the manifest's min/max and Bloom decisions for the query's
+  * pushed filters; without it a scan IS its files.
   * Thread-safety: the pruning inputs are immutable snapshot state;
   * `lastDecision` is advisory observability for specs. */
-final class SnapshotFileIndex(spark: SparkSession, dir: String, version: Long,
-                              schema: StructType,
-                              only: Option[Seq[String]] = None
-                             ) extends FileIndex {
+final class SnapshotFileIndex private[sources] (
+    spark: SparkSession, dir: String, st: SnapshotTable.TableState,
+    files: Seq[String], prune: Boolean) extends FileIndex {
 
-  private val fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Manifest-relative key → FileStatus, built from the MANIFEST's
-    * recorded per-file sizes — zero filesystem RPCs on the planning
-    * path (the manifest-only-planning property object stores need;
-    * modification time is irrelevant to a pinned-snapshot read and
-    * stamps 0). Files a pre-sizes writer committed fall back to one
-    * getFileStatus each. `only` restricts the index to a subset (the
-    * per-group scans a defaults-split [[SnapshotSql.dataFrame]]
-    * builds); manifest pruning then intersects within it. */
-  private val statuses: Map[String, FileStatus] = {
-    val sizes = SnapshotTable.manifestSizes(spark, dir, version)
-    only.getOrElse(SnapshotTable.manifestFiles(spark, dir, version)).map { key =>
-      val p = if (key.startsWith("data/")) new Path(dir, key) else new Path(key)
-      key -> sizes.get(key)
-        .map(len => new FileStatus(len, false, 1, len, 0L, p))
-        .getOrElse(fs.getFileStatus(p))
-    }.toMap
-  }
+  private val statuses: Map[String, FileStatus] = files.map { key =>
+    val p = SnapshotTable.absPath(dir, key)
+    key -> st.sizes.get(key)
+      .map(len => new FileStatus(len, false, 1, len, 0L, p))
+      .getOrElse(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p))
+  }.toMap
 
   /** (selected, total) of the most recent listFiles pruning decision —
     * the observability hook PlanSpec pins file-level skipping on. */
@@ -460,7 +378,7 @@ final class SnapshotFileIndex(spark: SparkSession, dir: String, version: Long,
     // the selections intersect; anything else is ignored (kept files,
     // never dropped — pruning stays conservative, Spark applies the
     // full residual).
-    val conjuncts = dataFilters.flatMap(splitAnd)
+    val conjuncts = if (prune) dataFilters.flatMap(splitAnd) else Nil
     var selected: Set[String] = statuses.keySet
     // Attribute names here come from the SCAN schema — PHYSICAL under
     // an active column mapping — so the probe must go through the
@@ -468,10 +386,10 @@ final class SnapshotFileIndex(spark: SparkSession, dir: String, version: Long,
     conjuncts.foreach {
       case Eq(c, v) =>
         selected = selected.intersect(
-          SnapshotTable.pruneFilesEqPhys(spark, dir, c, v, version)._1.toSet)
+          SnapshotTable.pruneFilesEqPhys(spark, dir, c, v, st)._1.toSet)
       case Range(c, lo, hi) =>
-        selected = selected.intersect(SnapshotTable.pruneFilesBoundsPhys(
-          spark, dir, c, lo, hi, version)._1.toSet)
+        selected = selected.intersect(
+          SnapshotTable.pruneFilesBoundsPhys(st, c, lo, hi)._1.toSet)
       case _ => () // unrecognized shape: never prunes
     }
     lastDecision = (selected.size, statuses.size)

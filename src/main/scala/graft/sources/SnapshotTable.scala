@@ -358,9 +358,11 @@ object SnapshotTable {
     * Spark-parseable bucket ids, and each file holds exactly the rows
     * whose `pmod(hash(cols), n)` equals its id (Spark's own
     * HashPartitioning.partitionIdExpression). The claim is recorded
-    * per-manifest and CLEARS on any commit that does not re-assert it
-    * (plain appends, CoW rewrites, compaction) — a stale claim could
-    * silently co-locate a join wrong, so absence is always safe. */
+    * per-manifest and CLEARS on any commit that lands files without
+    * re-asserting it (plain appends, CoW rewrites, merge-on-read
+    * updates, compaction) — a stale claim could silently co-locate a
+    * join wrong, so absence is always safe. A merge-on-read delete
+    * lands no file and carries it. */
   final case class BucketLayout(numBuckets: Int, cols: Seq[String],
                                 sortCols: Seq[String])
 
@@ -409,6 +411,18 @@ object SnapshotTable {
       else deltaState(stateOf(spark, dir, v - 1), node)
     stateCache.synchronized { stateCache.put(key, st); () }
     st
+  }
+
+  /** The version a reader serves — `version`, else the head — and its
+    * state, resolved ONCE: pruning, schema, mapping and vectors must
+    * all come from the same snapshot, or a commit landing between two
+    * lookups would mix versions. */
+  private[sources] def resolve(spark: SparkSession, dir: String,
+                               version: Option[Long],
+                               op: String): (Long, TableState) = {
+    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
+      throw new java.io.IOException(s"$op: no committed version under $dir"))
+    (v, stateOf(spark, dir, v))
   }
 
   private def strSeq(n: com.fasterxml.jackson.databind.JsonNode,
@@ -704,13 +718,20 @@ object SnapshotTable {
   def manifestBlooms(spark: SparkSession, dir: String,
                      v: Long): Map[String, Map[String, Array[Byte]]] = {
     val st = stateOf(spark, dir, v)
-    val bySidecar = st.bloomRefs.groupBy(_._2)
-    val fromSidecars = bySidecar.flatMap { case (ref, fileRefs) =>
-      val side = loadBloomSidecar(spark, dir, ref)
-      fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
-    }
-    st.legacyBlooms ++ fromSidecars
+    bloomsOf(spark, dir, st, st.bloomRefs.keySet)
   }
+
+  /** The Bloom bitsets of `files` at `st`: inline legacy bitsets plus
+    * the entries of the sidecars those files reference, each sidecar
+    * loaded once. */
+  private def bloomsOf(spark: SparkSession, dir: String, st: TableState,
+                       files: Set[String]
+                      ): Map[String, Map[String, Array[Byte]]] =
+    st.legacyBlooms ++ st.bloomRefs.view.filterKeys(files).toMap
+      .groupBy(_._2).flatMap { case (ref, fileRefs) =>
+        val side = loadBloomSidecar(spark, dir, ref)
+        fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
+      }
 
   /** Find `file`'s entry in a sidecar. A shallow clone absolutizes
     * both the file key and the sidecar ref, but the sidecar's OWN
@@ -818,26 +839,22 @@ object SnapshotTable {
     * SnapshotOpsSpec and oracle-checked by q_snapshot_count. */
   def countRows(spark: SparkSession, dir: String,
                 version: Option[Long] = None): Long = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"countRows: no committed version under $dir"))
-    val st = stateOf(spark, dir, v)
-    if (st.files.isEmpty) return 0L
+    val (_, st) = resolve(spark, dir, version, "countRows")
     val (counted, uncounted) = st.files.partition(f =>
       st.stats.get(f).exists(_.contains(RowsCol)))
-    val base = counted.iterator
-      .map(f => st.stats(f)(RowsCol).min.toLong).sum +
-      (if (uncounted.isEmpty) 0L
-       else readFiles(spark, dir, uncounted,
-         manifestSchema(spark, dir, v)).count())
+    // legacy files (no recorded count) are scanned, vectors applied
+    val scanned =
+      if (uncounted.isEmpty) 0L
+      else readFilesWithDv(spark, dir, st, uncounted).count()
     // distinct() is load-bearing here (COUNT is duplicate-sensitive):
     // dvRows serves raw sidecar rows, unique by writer invariant, but
     // exactness of the subtraction must not rest on that invariant
     // alone — a hand-edited or foreign sidecar with a duplicate
     // position must still count each masked row once.
-    val masked = dvRows(spark, dir, st.dvRefs, st.files)
+    val masked = dvRows(spark, dir, st.dvRefs, counted)
       .map(_.distinct().count()).getOrElse(0L)
-    base - masked
+    counted.iterator.map(f => st.stats(f)(RowsCol).min.toLong).sum -
+      masked + scanned
   }
 
   /** The raw commit wall-clock of version `v` (epoch millis); None for
@@ -1026,89 +1043,34 @@ object SnapshotTable {
       case _ => false
     }
 
-  /** Read exactly `files` (relative paths), under the table schema
-    * when the manifest records one — an explicit schema makes parquet
-    * surface NULL for columns a file predates, which is what lets one
-    * scan span an evolving file population. */
-  /** Above this many explicit files, [[readFiles]] hands path
-    * resolution back to Spark's (distributed) listing machinery; at
-    * or below it, the scan plans from driver-side statuses with zero
-    * listing jobs. Manifest-driven reads pass bounded file subsets
-    * (touched files, pruned candidates), so the fast path is the
-    * norm; a full-table read of a million-file table still gets the
-    * parallel listing it needs. */
-  private val ExplicitIndexMaxFiles = 4096
+  /** The options of every snapshot relation. A file the manifest
+    * references must be read, whatever the session's
+    * `spark.sql.files.ignoreMissingFiles` says: skipping a lost file
+    * would silently serve a snapshot without its committed rows. */
+  private val ScanOptions = Map("ignoreMissingFiles" -> "false")
 
-  private def readFiles(spark: SparkSession, dir: String,
-                        files: Seq[String],
-                        schema: Option[StructType]): DataFrame = {
-    // Relative entries live under THIS table; absolute entries are a
-    // shallow clone's references into its source table.
-    val paths = files.map(p => if (p.startsWith("data/")) s"$dir/$p" else p)
-    schema match {
-      case Some(st) if files.nonEmpty &&
-          files.length <= ExplicitIndexMaxFiles =>
-        // EXPLICIT-FILE relation: the caller already knows the exact
-        // file set from the manifest, so handing the paths to
-        // spark.read.parquet — which re-stats every one and, above
-        // spark.sql.sources.parallelPartitionDiscovery.threshold
-        // (32), launches a whole LISTING JOB per read — is pure
-        // overhead on every probe, rewrite and feed read. One
-        // driver-side getFileStatus per file feeds a fixed FileIndex
-        // instead (the SnapshotFileIndex manifest-only-planning idea,
-        // applied to the programmatic read path).
-        val s = TableStore(spark, dir)
-        // Independent metadata RPCs — overlap on a bounded pool (the
-        // footerSummaries pattern): serial per-file stats on an
-        // object store would cost more than the listing job this
-        // path removes.
-        val statuses =
-          if (paths.lengthCompare(4) <= 0)
-            paths.map(p => s.status(new Path(p)))
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(8, paths.length))
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutor(pool)
-            try scala.concurrent.Await.result(
-              scala.concurrent.Future.sequence(paths.map(p =>
-                scala.concurrent.Future(s.status(new Path(p))))),
-              scala.concurrent.duration.Duration.Inf)
-            finally pool.shutdown()
-          }
-        val index = new ExplicitFileIndex(new Path(dir), statuses)
-        val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          index, new StructType(), st, None,
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetFileFormat(), Map.empty)(spark)
-        org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-          org.apache.spark.sql.execution.datasources.LogicalRelation(
-            rel, org.apache.spark.sql.catalyst.types.DataTypeUtils
-              .toAttributes(rel.dataSchema), None, isStreaming = false, None))
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-  }
-
-  /** Fixed file set as a [[org.apache.spark.sql.execution.datasources
-    * .FileIndex]]: no directory listing, no refresh — the statuses
-    * ARE the table subset being read (see [[readFiles]]). */
-  private final class ExplicitFileIndex(
-      root: Path, statuses: Seq[FileStatus])
-    extends org.apache.spark.sql.execution.datasources.FileIndex {
-    override def rootPaths: Seq[Path] = Seq(root)
-    override def partitionSchema: StructType = new StructType()
-    override def inputFiles: Array[String] =
-      statuses.map(_.getPath.toString).toArray
-    override def refresh(): Unit = ()
-    override def sizeInBytes: Long = statuses.map(_.getLen).sum
-    override def listFiles(
-        partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-        dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] =
-      Seq(org.apache.spark.sql.execution.datasources.PartitionDirectory(
-        org.apache.spark.sql.catalyst.InternalRow.empty,
-        statuses.toArray[FileStatus]))
+  /** The parquet relation over `files` of snapshot `st`, scanning
+    * `scanSchema` (the files' physical names) through one
+    * [[SnapshotFileIndex]]. With `sqlSurface` the index also prunes on
+    * the query's pushed filters and the relation reports the table's
+    * bucket claim as Spark's `BucketSpec`, so joins and aggregations
+    * on the bucket columns plan without an Exchange; programmatic and
+    * internal reads pass files they already pruned and plan without
+    * buckets. */
+  private[sources] def snapshotRelation(spark: SparkSession, dir: String,
+      st: TableState, files: Seq[String], scanSchema: StructType,
+      sqlSurface: Boolean): org.apache.spark.sql.execution.datasources
+      .HadoopFsRelation = {
+    // the claim's columns are logical; the scan needs physical names
+    val bucketSpec = st.bucket.filter(_ => sqlSurface).map(b =>
+      org.apache.spark.sql.catalyst.catalog.BucketSpec(b.numBuckets,
+        b.cols.map(physName(st.colMap, _)),
+        b.sortCols.map(physName(st.colMap, _))))
+    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      new SnapshotFileIndex(spark, dir, st, files, prune = sqlSurface),
+      new StructType(), scanSchema, bucketSpec,
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat(), ScanOptions)(spark)
   }
 
   // ------------------------------------------------------------------
@@ -1188,36 +1150,6 @@ object SnapshotTable {
     Some(frames.reduce(_ unionByName _))
   }
 
-  /** Apply the deletion vectors covering `files` to ANY frame whose
-    * scan exposes `_metadata` (a parquet file relation — programmatic
-    * [[readFiles]], [[SnapshotFileIndex]] SQL relations, and
-    * streaming micro-batch file relations alike): rows whose
-    * (file, row position) appear in a covering vector are filtered
-    * out by a BROADCAST anti-join on `_metadata.row_index` — vectors
-    * are deleted-row-count-sized, orders of magnitude under the data
-    * they mask (that asymmetry is the whole point of merge-on-read).
-    * Files without a vector pass through untouched; no covering
-    * vector at all returns `base` unchanged. For a STREAMING `base`
-    * this is a stream-static left-anti join (a supported shape), so
-    * the SQL/format and streaming surfaces honor vectors instead of
-    * refusing DV'd snapshots. */
-  private[sources] def dvMaskOver(spark: SparkSession, dir: String,
-                                  dvRefs: Map[String, String],
-                                  files: Seq[String],
-                                  base: DataFrame): DataFrame =
-    dvRows(spark, dir, dvRefs, files) match {
-      case None => base
-      case Some(dv) =>
-        val cols = base.columns.map(col)
-        base.select(cols :+
-            fileKeyExpr(dir, col("_metadata.file_path")).as("__dv_fp") :+
-            col("_metadata.row_index").as("__dv_ri"): _*)
-          .join(broadcast(dv),
-            col("__dv_fp") === col("__dv_file") &&
-              col("__dv_ri") === col("__dv_rowidx"), "left_anti")
-          .select(cols: _*)
-    }
-
   // ------------------------------------------------------------------
   // Column mapping (logical ↔ physical names)
   // ------------------------------------------------------------------
@@ -1238,73 +1170,119 @@ object SnapshotTable {
   /** Rename a physical-named frame to its logical names in ONE atomic
     * select — pairwise withColumnRenamed would collide on swapped
     * names. Extra (non-schema) columns in `df` are preserved as-is,
-    * appended after the logical fields. */
+    * appended after the logical fields. Unmapped: `df` itself. */
   private def toLogicalFrame(df: DataFrame, colMap: Map[String, String],
-                             logical: StructType): DataFrame = {
-    val physToExtra = {
+                             logical: StructType): DataFrame =
+    if (colMap.isEmpty) df
+    else {
       val phys = logical.fields.map(f => physName(colMap, f.name)).toSet
-      df.columns.filterNot(phys)
+      df.select(logical.fields.map(f =>
+        col(physName(colMap, f.name)).as(f.name)).toSeq ++
+        df.columns.filterNot(phys).map(col): _*)
     }
-    df.select(logical.fields.map(f =>
-      col(physName(colMap, f.name)).as(f.name)).toSeq ++
-      physToExtra.map(col): _*)
+
+  /** The one builder of snapshot rows: `files` of snapshot `st` as
+    * logical rows under `schema` (default: the snapshot's own). Every
+    * read surface comes through here — the programmatic readers, the
+    * SQL relation and `format("graft")` ([[SnapshotSql.dataFrame]]),
+    * both stream sources' slices, and the commit-time probes.
+    *
+    *   - One [[snapshotRelation]] per scan: file statuses come from
+    *     the manifest's recorded sizes, and a file the store lost
+    *     fails the read.
+    *   - DELETION VECTORS mask each scan by a BROADCAST anti-join on
+    *     (`_metadata.file_path`, `_metadata.row_index`) — vectors are
+    *     deleted-row-count-sized, orders of magnitude under the data
+    *     they mask. For a `streaming` scan this is a stream-static
+    *     left-anti join, a supported incremental shape.
+    *   - COLUMN MAPPING: the files are scanned under their PHYSICAL
+    *     names and renamed to the logical schema last (after masking,
+    *     which needs `_metadata`); filters a query pushes against
+    *     logical names travel through the aliases to the scan.
+    *   - ADD COLUMN DEFAULTS: files are grouped by WHICH default
+    *     columns consider them pre-ADD, each group scans once, and the
+    *     pre-ADD groups serve the recorded literal (cast to the column
+    *     type) — a union of a handful of scans, no per-row file
+    *     comparisons. Defaults of columns outside `schema` (a stream's
+    *     captured schema) are skipped.
+    *
+    * No files gives the schema's empty frame: a `LocalRelation`,
+    * streaming when `streaming`. `sqlSurface` is
+    * [[snapshotRelation]]'s. */
+  private[graft] def readFilesWithDv(spark: SparkSession, dir: String,
+                                     st: TableState, files: Seq[String],
+                                     schema: Option[StructType] = None,
+                                     streaming: Boolean = false,
+                                     sqlSurface: Boolean = false
+                                    ): DataFrame = {
+    val logical = schema.getOrElse(logicalSchemaOf(spark, dir, st))
+    def scan(fs: Seq[String]): DataFrame = {
+      val base = physicalScan(spark, dir, st, fs,
+        physSchemaOf(st.colMap, logical), streaming, sqlSurface)
+      val masked = dvRows(spark, dir, st.dvRefs, fs) match {
+        case None => base
+        case Some(dv) =>
+          val cols = base.columns.map(col)
+          base.select(cols :+
+              fileKeyExpr(dir, col("_metadata.file_path")).as("__dv_fp") :+
+              col("_metadata.row_index").as("__dv_ri"): _*)
+            .join(broadcast(dv),
+              col("__dv_fp") === col("__dv_file") &&
+                col("__dv_ri") === col("__dv_rowidx"), "left_anti")
+            .select(cols: _*)
+      }
+      toLogicalFrame(masked, st.colMap, logical)
+    }
+    val relevant = st.defaults.filter { case (c, (_, pre)) =>
+      logical.fieldNames.contains(c) && files.exists(pre) }
+    if (relevant.isEmpty) scan(files)
+    else files
+      .groupBy(f => relevant.keySet.filter(c => relevant(c)._2(f)))
+      .toSeq.sortBy(_._2.head)
+      .map { case (cols, fs) =>
+        val part = scan(fs)
+        if (cols.isEmpty) part
+        else part.select(logical.fields.map { f =>
+          if (cols.contains(f.name))
+            lit(relevant(f.name)._1).cast(f.dataType).as(f.name)
+          else col(f.name)
+        }.toIndexedSeq: _*)
+      }.reduce(_ unionByName _)
   }
 
-  /** [[readFiles]] with each file's deletion vector applied (see
-    * [[dvMaskOver]]); a snapshot with no vectors is exactly
-    * [[readFiles]]. Under an active column mapping the files are read
-    * with the PHYSICAL schema (the names actually in the parquet),
-    * vectors applied (they key on `_metadata`, name-independent), and
-    * the frame then renamed to the LOGICAL schema — callers only ever
-    * see logical names. */
-  private def readFilesWithDv(spark: SparkSession, dir: String,
-                              files: Seq[String],
-                              schema: Option[StructType],
-                              dvRefs: Map[String, String],
-                              colMap: Map[String, String] = Map.empty,
-                              defaults: Map[String, (String, Set[String])] =
-                                Map.empty
-                             ): DataFrame = {
-    // ADD COLUMN initial DEFAULTS — group-split read: files are
-    // grouped by WHICH default columns consider them pre-ADD, each
-    // group scans once, and the pre-ADD groups replace those columns
-    // with the recorded literal (cast to the column type). One union
-    // of a handful of scans (group count <= distinct default
-    // signatures, in practice #defaults + 1) — no per-row file
-    // comparisons, pushed filters prune each branch independently,
-    // and a table without live defaults takes the single-scan path
-    // untouched.
-    val relevant = defaults.filter { case (_, (_, pre)) =>
-      files.exists(pre) }
-    if (relevant.nonEmpty) {
-      val logical = schema.getOrElse(throw new IllegalStateException(
-        s"column defaults active under $dir but the manifest records " +
-          "no schema — corrupt metadata"))
-      return files
-        .groupBy(f => relevant.keySet.filter(c => relevant(c)._2(f)))
-        .toSeq.sortBy(_._2.head)
-        .map { case (cols, fs) =>
-          val base = readFilesWithDv(spark, dir, fs, schema, dvRefs, colMap)
-          if (cols.isEmpty) base
-          else base.select(logical.fields.map { f =>
-            if (cols.contains(f.name))
-              lit(relevant(f.name)._1).cast(f.dataType).as(f.name)
-            else col(f.name)
-          }.toIndexedSeq: _*)
-        }.reduce(_ unionByName _)
-    }
-    if (colMap.isEmpty)
-      dvMaskOver(spark, dir, dvRefs, files,
-        readFiles(spark, dir, files, schema))
-    else {
-      val logical = schema.getOrElse(throw new IllegalStateException(
-        s"column mapping active under $dir but the manifest records no " +
-          "schema — corrupt metadata"))
-      val masked = dvMaskOver(spark, dir, dvRefs, files,
-        readFiles(spark, dir, files, Some(physSchemaOf(colMap, logical))))
-      toLogicalFrame(masked, colMap, logical)
-    }
+  /** The logical schema of snapshot `st`: the manifest's, or — for a
+    * manifest written before schemas were recorded — parquet's
+    * inference over the snapshot's files. */
+  private[sources] def logicalSchemaOf(spark: SparkSession, dir: String,
+                                       st: TableState): StructType =
+    st.schema.getOrElse(
+      if (st.files.isEmpty) new StructType()
+      else spark.read.parquet(st.files.map(absPath(dir, _).toString): _*)
+        .schema)
+
+  /** `files` of snapshot `st` scanned under `scanSchema` (physical
+    * names) as a bare frame over [[snapshotRelation]] — `_metadata`
+    * still reachable, nothing masked or renamed. No files: an empty
+    * `LocalRelation`. */
+  private def physicalScan(spark: SparkSession, dir: String, st: TableState,
+                           files: Seq[String], scanSchema: StructType,
+                           streaming: Boolean,
+                           sqlSurface: Boolean): DataFrame = {
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .toAttributes(scanSchema)
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      if (files.isEmpty) org.apache.spark.sql.catalyst.plans.logical
+        .LocalRelation(attrs, Nil, isStreaming = streaming)
+      else org.apache.spark.sql.execution.datasources.LogicalRelation(
+        snapshotRelation(spark, dir, st, files, scanSchema, sqlSurface),
+        attrs, None, isStreaming = streaming, None))
   }
+
+  /** A manifest file key as a path: relative keys live under this
+    * table, absolute ones are a shallow clone's references into its
+    * source table. */
+  private[sources] def absPath(dir: String, key: String): Path =
+    if (key.startsWith("data/")) new Path(dir, key) else new Path(key)
 
   /** Serializes same-JVM committers. Commit atomicity rests on a
     * rename-that-fails-if-destination-exists — which HDFS-class
@@ -2184,18 +2162,18 @@ object SnapshotTable {
     commitLoop(spark, dir, "overwrite", maxRetries) { (_, st) =>
       checkMapClaim(st, wb.claim, "overwrite")
       val cur = st.getOrElse(EmptyState)
-      validated = recheckConstraints(spark, dir, cur.constraints, validated,
-        wb.added, Some(df.schema), "overwrite",
-        wb.claim.map(_.colMap).getOrElse(Map.empty))
       // A new table body: files, summaries, schema and tracking are the
       // batch's; vectors and the bucket claim clear; the ledger and the
       // table policy (constraints, properties, mapping) carry forward.
-      Some(cur.copy(files = wb.added, stats = wb.stats,
+      val next = cur.copy(files = wb.added, stats = wb.stats,
         bloomRefs = wb.refs, bloomCols = wb.bloomCols, sizes = wb.sizes,
         schema = Some(StructType(df.schema.fields.map(_.copy(nullable = true)))),
         dvRefs = Map.empty, bucket = None,
         colMap = wb.claim.fold(cur.colMap)(_.colMap),
-        retired = wb.claim.fold(cur.retired)(_.retired)))
+        retired = wb.claim.fold(cur.retired)(_.retired))
+      validated = recheckConstraints(spark, dir, next, validated, wb.added,
+        "overwrite")
+      Some(next)
     }.get
   }
 
@@ -2221,18 +2199,18 @@ object SnapshotTable {
       else {
         val unified = evolveSchema(cur.schema.getOrElse(new StructType()),
           dfSchema)
-        // a concurrently-added constraint must gate THIS batch too
-        validated = recheckConstraints(spark, dir, cur.constraints,
-          validated, wb.added, Some(unified), op,
-          wb.claim.map(_.colMap).getOrElse(Map.empty))
         // A bucketing claim only survives the commit if whatever table
         // state this attempt lands on still supports it (empty, or
         // bucketed with the SAME spec) — a racing unbucketed writer
         // degrades the claim instead of corrupting co-location.
-        Some(landed(cur, wb).copy(schema = Some(unified),
+        val next = landed(cur, wb).copy(schema = Some(unified),
           txns = cur.txns ++ txn,
           bucket = bucket.filter(b =>
-            cur.files.isEmpty || cur.bucket.contains(b))))
+            cur.files.isEmpty || cur.bucket.contains(b)))
+        // a concurrently-added constraint must gate THIS batch too
+        validated = recheckConstraints(spark, dir, next, validated,
+          wb.added, op)
+        Some(next)
       }
     }
   }
@@ -2682,19 +2660,8 @@ object SnapshotTable {
     * return). */
   def read(spark: SparkSession, dir: String,
            version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"read: no committed version under $dir"))
-    val files = manifestFiles(spark, dir, v)
-    val schema = manifestSchema(spark, dir, v)
-    if (files.isEmpty)
-      schema.map(st => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-        .getOrElse(spark.emptyDataFrame)
-    else {
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, files, schema, st.dvRefs, st.colMap,
-        st.defaults)
-    }
+    val (_, st) = resolve(spark, dir, version, "read")
+    readFilesWithDv(spark, dir, st, st.files)
   }
 
   /** The manifest-level file-pruning decision for
@@ -2715,27 +2682,27 @@ object SnapshotTable {
   def pruneFilesBounds(spark: SparkSession, dir: String, column: String,
                        lower: Option[Any], upper: Option[Any],
                        version: Option[Long] = None): (Seq[String], Int) = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(s"pruneFiles: no committed version under $dir"))
-    // Stats are keyed by PHYSICAL column name; the caller's predicate
-    // names the LOGICAL one.
-    pruneFilesBoundsPhys(spark, dir,
-      physName(stateOf(spark, dir, v).colMap, column), lower, upper, v)
+    val (_, st) = resolve(spark, dir, version, "pruneFiles")
+    pruneBounds(st, column, lower, upper)
   }
+
+  /** [[pruneFilesBoundsPhys]] for LOGICAL column `column`: stats are
+    * keyed by physical name. */
+  private def pruneBounds(st: TableState, column: String,
+                          lower: Option[Any], upper: Option[Any]
+                         ): (Seq[String], Int) =
+    pruneFilesBoundsPhys(st, physName(st.colMap, column), lower, upper)
 
   /** [[pruneFilesBounds]] with `pc` ALREADY physical — the
     * scan-relation path ([[SnapshotFileIndex]]) pushes filters whose
     * attribute names come from the physical scan schema; translating
     * them again through the logical→physical map would mis-prune
     * swapped-name tables. */
-  private[sources] def pruneFilesBoundsPhys(spark: SparkSession,
-                       dir: String, pc: String,
-                       lower: Option[Any], upper: Option[Any],
-                       v: Long): (Seq[String], Int) = {
-    val files = manifestFiles(spark, dir, v)
-    val stats = manifestStats(spark, dir, v)
-    val selected = files.filter { file =>
-      stats.get(file).flatMap(_.get(pc)) match {
+  private[sources] def pruneFilesBoundsPhys(st: TableState, pc: String,
+                       lower: Option[Any], upper: Option[Any]
+                      ): (Seq[String], Int) = {
+    val selected = st.files.filter { file =>
+      st.stats.get(file).flatMap(_.get(pc)) match {
         case None => true
         case Some(st) =>
           val okLo = lower.forall { l =>
@@ -2753,7 +2720,7 @@ object SnapshotTable {
           okLo && okHi
       }
     }
-    (selected, files.length)
+    (selected, st.files.length)
   }
 
   /** Range read with manifest-stats file skipping: opens only the
@@ -2764,16 +2731,10 @@ object SnapshotTable {
   def readWhere(spark: SparkSession, dir: String, column: String,
                 lower: Any, upper: Any,
                 version: Option[Long] = None): DataFrame = {
-    val (selected, _) = pruneFiles(spark, dir, column, lower, upper, version)
-    val residual = col(column) >= lit(lower) && col(column) <= lit(upper)
-    if (selected.isEmpty) read(spark, dir, version).filter(lit(false))
-    else {
-      val v = version.orElse(latestVersion(spark, dir)).get
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, selected, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-        .filter(residual)
-    }
+    val (_, st) = resolve(spark, dir, version, "readWhere")
+    val (selected, _) = pruneBounds(st, column, Some(lower), Some(upper))
+    readFilesWithDv(spark, dir, st, selected)
+      .filter(col(column) >= lit(lower) && col(column) <= lit(upper))
   }
 
   /** Conjunctive multi-predicate read: `AND` of
@@ -2787,20 +2748,15 @@ object SnapshotTable {
                    bounds: Seq[(String, Any, Any)],
                    version: Option[Long] = None): DataFrame = {
     require(bounds.nonEmpty, "readWhereAll: at least one predicate required")
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereAll: no committed version under $dir"))
+    val (_, st) = resolve(spark, dir, version, "readWhereAll")
     val selected = bounds
-      .map { case (c, lo, hi) => pruneFiles(spark, dir, c, lo, hi, Some(v))._1.toSet }
+      .map { case (c, lo, hi) =>
+        pruneBounds(st, c, Some(lo), Some(hi))._1.toSet }
       .reduce(_ intersect _)
     val residual = bounds
       .map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
       .reduce(_ && _)
-    if (selected.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-    else readFilesWithDv(spark, dir, selected.toSeq.sorted,
-      manifestSchema(spark, dir, v), stateOf(spark, dir, v).dvRefs,
-      stateOf(spark, dir, v).colMap, stateOf(spark, dir, v).defaults)
-      .filter(residual)
+    readFilesWithDv(spark, dir, st, selected.toSeq.sorted).filter(residual)
   }
 
   /** Bulk key-set file pruning by STATS ENVELOPE — the above-cap
@@ -2817,10 +2773,11 @@ object SnapshotTable {
                                         v: Long,
                                         bounds: Seq[(String, Any, Any)]
                                        ): Seq[String] = {
+    val st = stateOf(spark, dir, v)
     val sets = bounds.collect { case (c, lo, hi) if lo != null && hi != null =>
-      pruneFiles(spark, dir, c, lo, hi, Some(v))._1.toSet
+      pruneBounds(st, c, Some(lo), Some(hi))._1.toSet
     }
-    if (sets.isEmpty) manifestFiles(spark, dir, v)
+    if (sets.isEmpty) st.files
     else sets.reduce(_ intersect _).toSeq.sorted
   }
 
@@ -2832,16 +2789,8 @@ object SnapshotTable {
   def readWhereKeyEnvelope(spark: SparkSession, dir: String,
                            bounds: Seq[(String, Any, Any)],
                            version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereKeyEnvelope: no committed version under $dir"))
-    val kept = pruneFilesEnvelope(spark, dir, v, bounds)
-    if (kept.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-    else {
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, kept, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-    }
+    val (v, st) = resolve(spark, dir, version, "readWhereKeyEnvelope")
+    readFilesWithDv(spark, dir, st, pruneFilesEnvelope(spark, dir, v, bounds))
   }
 
   /** Multi-value point lookup — `column IN (values)` with Bloom +
@@ -2859,10 +2808,7 @@ object SnapshotTable {
                      version: Option[Long] = None,
                      semiJoinThreshold: Int = 256): DataFrame = {
     require(values.nonEmpty, "readWhereEqAny: at least one value required")
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereEqAny: no committed version under $dir"))
-    val st = stateOf(spark, dir, v)
+    val (_, st) = resolve(spark, dir, version, "readWhereEqAny")
     val pc = physName(st.colMap, column)
     // A WIDE IN-list flips from per-value pruning to a broadcast
     // semi-join: the per-value path costs O(values × files) driver
@@ -2880,13 +2826,11 @@ object SnapshotTable {
       val kept = scala.util.Try(
         (distinctVals.min(ord), distinctVals.max(ord))).toOption match {
         case Some((lo, hi)) =>
-          pruneFilesBoundsPhys(spark, dir, pc, Some(lo), Some(hi), v)._1
+          pruneFilesBoundsPhys(st, pc, Some(lo), Some(hi))._1
         case None => st.files // non-comparable values: no envelope
       }
-      if (kept.isEmpty) return read(spark, dir, Some(v)).filter(lit(false))
-      val dt = manifestSchema(spark, dir, v)
-        .flatMap(_.fields.find(_.name == column).map(_.dataType))
-        .getOrElse(read(spark, dir, Some(v)).schema(column).dataType)
+      val rows = readFilesWithDv(spark, dir, st, kept)
+      val dt = rows.schema(column).dataType
       // The probe frame is TYPED BY THE VALUES and then cast to the
       // table's column type — createDataFrame against `dt` directly
       // would crash on boxed-type mismatches (Integer values probing
@@ -2916,19 +2860,11 @@ object SnapshotTable {
           })): _*),
         StructType(Seq(StructField(column, valDt))))
         .select(col(column).cast(dt).as(column))
-      return readFilesWithDv(spark, dir, kept,
-        manifestSchema(spark, dir, v), st.dvRefs, st.colMap, st.defaults)
-        .join(broadcast(probe), Seq(column), "left_semi")
+      return rows.join(broadcast(probe), Seq(column), "left_semi")
     }
     val ranged: Seq[(Any, Seq[String])] = values.map(x =>
-      x -> pruneFilesBoundsPhys(spark, dir, pc, Some(x), Some(x), v)._1)
-    val needed = ranged.iterator.flatMap(_._2).toSet
-    val neededRefs = st.bloomRefs.view.filterKeys(needed).toMap
-    val blooms = st.legacyBlooms ++ neededRefs.groupBy(_._2).flatMap {
-      case (ref, fileRefs) =>
-        val side = loadBloomSidecar(spark, dir, ref)
-        fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
-    }
+      x -> pruneFilesBoundsPhys(st, pc, Some(x), Some(x))._1)
+    val blooms = bloomsOf(spark, dir, st, ranged.iterator.flatMap(_._2).toSet)
     val selected = ranged.flatMap { case (x, files) =>
       files.filter { file =>
         blooms.get(file).flatMap(_.get(pc)) match {
@@ -2937,9 +2873,7 @@ object SnapshotTable {
         }
       }
     }.distinct.sorted
-    if (selected.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-    else readFilesWithDv(spark, dir, selected,
-      manifestSchema(spark, dir, v), st.dvRefs, st.colMap, st.defaults)
+    readFilesWithDv(spark, dir, st, selected)
       .filter(col(column).isin(values: _*))
   }
 
@@ -2951,31 +2885,21 @@ object SnapshotTable {
   def pruneFilesEq(spark: SparkSession, dir: String, column: String,
                    value: Any,
                    version: Option[Long] = None): (Seq[String], Int) = {
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"pruneFilesEq: no committed version under $dir"))
-    pruneFilesEqPhys(spark, dir,
-      physName(stateOf(spark, dir, v).colMap, column), value, v)
+    val (_, st) = resolve(spark, dir, version, "pruneFilesEq")
+    pruneFilesEqPhys(spark, dir, physName(st.colMap, column), value, st)
   }
 
   /** [[pruneFilesEq]] with `pc` ALREADY physical (see
     * [[pruneFilesBoundsPhys]]). */
   private[sources] def pruneFilesEqPhys(spark: SparkSession, dir: String,
-                   pc: String, value: Any, v: Long): (Seq[String], Int) = {
+                   pc: String, value: Any,
+                   st: TableState): (Seq[String], Int) = {
     val (rangeKept, total) =
-      pruneFilesBoundsPhys(spark, dir, pc, Some(value), Some(value), v)
+      pruneFilesBoundsPhys(st, pc, Some(value), Some(value))
     // Sidecar-lazy probe: load only the sidecars of files that
     // survived range pruning — a point lookup on a well-clustered
     // table reads O(selected files) bloom bytes, not O(table).
-    val st = stateOf(spark, dir, v)
-    val rangeSet = rangeKept.toSet
-    val neededRefs = st.bloomRefs.view.filterKeys(rangeSet).toMap
-    val bySidecar = neededRefs.groupBy(_._2)
-    val blooms = st.legacyBlooms ++ bySidecar.flatMap {
-      case (ref, fileRefs) =>
-        val side = loadBloomSidecar(spark, dir, ref)
-        fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
-    }
+    val blooms = bloomsOf(spark, dir, st, rangeKept.toSet)
     val selected = rangeKept.filter { file =>
       blooms.get(file).flatMap(_.get(pc)) match {
         case None => true
@@ -2992,15 +2916,11 @@ object SnapshotTable {
     * table scale). */
   def readWhereEq(spark: SparkSession, dir: String, column: String,
                   value: Any, version: Option[Long] = None): DataFrame = {
-    val (selected, _) = pruneFilesEq(spark, dir, column, value, version)
-    if (selected.isEmpty) read(spark, dir, version).filter(lit(false))
-    else {
-      val v = version.orElse(latestVersion(spark, dir)).get
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, selected, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-        .filter(col(column) === lit(value))
-    }
+    val (_, st) = resolve(spark, dir, version, "readWhereEq")
+    val (selected, _) =
+      pruneFilesEqPhys(spark, dir, physName(st.colMap, column), value, st)
+    readFilesWithDv(spark, dir, st, selected)
+      .filter(col(column) === lit(value))
   }
 
   /** File pruning for a BOUNDED, COLLECTED key set — the touched-file
@@ -3029,7 +2949,6 @@ object SnapshotTable {
                         keyCols: Seq[String],
                         keyRows: Seq[org.apache.spark.sql.Row]): Seq[String] = {
     val st = stateOf(spark, dir, v)
-    val stats = manifestStats(spark, dir, v)
     var kept = st.files
     keyCols.zipWithIndex.foreach { case (c, i) =>
       if (kept.nonEmpty) {
@@ -3054,7 +2973,7 @@ object SnapshotTable {
                   .getOrElse(throw new IllegalStateException) < 0)).toOption
             })
           kept = kept.filter { f =>
-            stats.get(f).flatMap(_.get(pc)) match {
+            st.stats.get(f).flatMap(_.get(pc)) match {
               case None => true
               case Some(cs) => canonSorted(cs.tag) match {
                 case None => true
@@ -3075,14 +2994,7 @@ object SnapshotTable {
           }
           if (kept.nonEmpty &&
               vals.length.toLong * kept.length <= 4000000L) {
-            val keptSet = kept.toSet
-            val neededRefs = st.bloomRefs.view.filterKeys(keptSet).toMap
-            val blooms = st.legacyBlooms ++ neededRefs.groupBy(_._2).flatMap {
-              case (ref, fileRefs) =>
-                val side = loadBloomSidecar(spark, dir, ref)
-                fileRefs.keys.flatMap(f =>
-                  sidecarLookup(side, f, ref).map(f -> _))
-            }
+            val blooms = bloomsOf(spark, dir, st, kept.toSet)
             kept = kept.filter { f =>
               blooms.get(f).flatMap(_.get(pc)) match {
                 case None => true
@@ -3108,22 +3020,13 @@ object SnapshotTable {
                       keyCols: Seq[String], keyRows: Seq[org.apache.spark.sql.Row],
                       version: Option[Long] = None): DataFrame = {
     require(keyCols.nonEmpty, "readWhereKeySet: at least one key column")
-    val v = version.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.io.IOException(
-        s"readWhereKeySet: no committed version under $dir"))
-    val base = read(spark, dir, Some(v))
-    if (keyRows.isEmpty) return base.filter(lit(false))
+    val (v, st) = resolve(spark, dir, version, "readWhereKeySet")
+    val rows = readFilesWithDv(spark, dir, st,
+      pruneFilesForKeys(spark, dir, v, keyCols, keyRows))
     val probe = spark.createDataFrame(
       java.util.Arrays.asList(keyRows: _*),
-      StructType(keyCols.map(c => base.schema(c))))
-    val cand = pruneFilesForKeys(spark, dir, v, keyCols, keyRows)
-    if (cand.isEmpty) base.filter(lit(false))
-    else {
-      val st = stateOf(spark, dir, v)
-      readFilesWithDv(spark, dir, cand, manifestSchema(spark, dir, v),
-        st.dvRefs, st.colMap, st.defaults)
-        .join(broadcast(probe), keyCols, "left_semi")
-    }
+      StructType(keyCols.map(c => rows.schema(c))))
+    rows.join(broadcast(probe), keyCols, "left_semi")
   }
 
   /** Row-level CHANGE FEED between two committed versions — the CDC
@@ -3148,7 +3051,6 @@ object SnapshotTable {
     val toSt = stateOf(spark, dir, toVersion)
     val fromFiles = fromSt.files
     val toFiles = toSt.files
-    val schema = manifestSchema(spark, dir, toVersion)
     val dropped = fromFiles.filterNot(toFiles.toSet)
     val added = toFiles.filterNot(fromFiles.toSet)
     // A merge-on-read delete changes rows WITHOUT changing the file
@@ -3159,17 +3061,14 @@ object SnapshotTable {
     val fromSet = fromFiles.toSet
     val dvChanged = toFiles.filter(f =>
       fromSet.contains(f) && fromSt.dvRefs.get(f) != toSt.dvRefs.get(f))
-    // Both sides resolve under TO-version's column mapping (physical
-    // names are rename-stable, so old files read correctly under it)
-    // — a feed spanning a rename surfaces end-state logical names
-    // throughout, exactly like the schema discipline above.
+    // Both sides resolve under TO-version's schema, column mapping and
+    // defaults (physical names are rename-stable, so old files read
+    // correctly under it) — a feed spanning a rename surfaces
+    // end-state logical names throughout. Each side masks with its
+    // own version's vectors.
+    val sized = toSt.copy(sizes = fromSt.sizes ++ toSt.sizes)
     def side(files: Seq[String], refs: Map[String, String]): DataFrame =
-      if (files.nonEmpty)
-        readFilesWithDv(spark, dir, files, schema, refs, toSt.colMap,
-          toSt.defaults)
-      else schema.map(st => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-        .getOrElse(read(spark, dir, Some(toVersion)).filter(lit(false)))
+      readFilesWithDv(spark, dir, sized.copy(dvRefs = refs), files)
     val oldFiles = dropped ++ dvChanged
     val newFiles = added ++ dvChanged
     val oldRows = side(oldFiles, fromSt.dvRefs)
@@ -3177,9 +3076,7 @@ object SnapshotTable {
     // The multiset difference needs its two exceptAll shuffles only
     // when BOTH sides carry rows. A pure append (old side statically
     // empty — the overwhelmingly common commit) is its added rows
-    // verbatim, map-only; a pure removal is symmetric. The empty
-    // frames above are RDD-backed, which PropagateEmptyRelation can't
-    // see through — so short-circuit here, not in the optimizer.
+    // verbatim, map-only; a pure removal is symmetric.
     if (oldFiles.isEmpty && newFiles.isEmpty)
       newRows.withColumn("_change", lit("insert")).filter(lit(false))
     else if (oldFiles.isEmpty)
@@ -3231,8 +3128,7 @@ object SnapshotTable {
           case Some(old) => newMask.join(old,
             Seq("__dv_file", "__dv_rowidx"), "left_anti")
         }
-        val outCols = schema.map(_.fieldNames.toSeq)
-          .getOrElse(newRows.columns.toSeq)
+        val outCols = newRows.columns.toSeq
         withFile(spark, dir, toVersion, Some(dvChanged), applyDv = false)
           .join(broadcast(delta),
             col("__file") === col("__dv_file") &&
@@ -3325,8 +3221,7 @@ object SnapshotTable {
           .map(physName(cm, _))).distinct
     // Deletion vectors applied: the rewrite MATERIALIZES merge-on-read
     // deletes — compaction is also the vector-purge operation.
-    val src = readFilesWithDv(spark, dir, old, baseSt.schema, baseSt.dvRefs,
-      cm, baseSt.defaults)
+    val src = readFilesWithDv(spark, dir, baseSt, old)
     val bucketLayout = if (bucketBy.isEmpty) None
       else Some(BucketLayout(numBuckets, bucketBy, bucketSortBy))
     val (laid, layout) = bucketLayout match {
@@ -3357,8 +3252,15 @@ object SnapshotTable {
     commitLoop(spark, dir, "compact", maxRetries) { (_, st) =>
       val cur = st.get
       checkMapClaim(st, wb.claim, "compact")
-      // A deletion vector advanced on a compacted file since our read
-      // would be silently dropped by the rewrite — conflict, loudly.
+      // A compacted file rewritten since our read (a CoW delete, update
+      // or merge) would have its old rows re-landed by the rewrite, and
+      // a deletion vector advanced on one would be silently dropped —
+      // both are conflicts, loudly.
+      val missing = old.filterNot(cur.files.toSet)
+      if (missing.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"compact: compacted files rewritten concurrently: " +
+            missing.take(3).mkString(", "))
       val dvMoved = old.filter(f => cur.dvRefs.get(f) != baseSt.dvRefs.get(f))
       if (dvMoved.nonEmpty)
         throw new java.util.ConcurrentModificationException(
@@ -3454,9 +3356,7 @@ object SnapshotTable {
     if (candidates.length <= nTarget &&
         !candidates.exists(st.dvRefs.contains))
       return None
-    val src = readFilesWithDv(spark, dir, candidates,
-      manifestSchema(spark, dir, base), st.dvRefs, st.colMap, st.defaults)
-      .coalesce(nTarget)
+    val src = readFilesWithDv(spark, dir, st, candidates).coalesce(nTarget)
     commitRewrite(spark, dir, candidates, src,
       trackedStatsCols(spark, dir, base),
       trackedBloomCols(spark, dir, base), maxRetries, op,
@@ -3909,33 +3809,22 @@ object SnapshotTable {
   /** The commit-loop side of constraint enforcement: when the head
     * this attempt rebases onto records constraints the caller did NOT
     * validate against (a concurrent [[addConstraint]] won the race),
-    * re-probe the ALREADY-WRITTEN batch files against exactly the new
-    * entries — otherwise the rebase would land rows the table's own
-    * policy forbids. Returns the now-validated set. Costs nothing on
-    * the common no-race path (set equality short-circuit). */
+    * re-probe the ALREADY-WRITTEN batch files `added` against exactly
+    * the new entries — otherwise the rebase would land rows the
+    * table's own policy forbids. `next` is the state the attempt would
+    * publish: its constraints are the head's, and it resolves the
+    * batch's files (sizes, mapping, schema) for the scan. Returns the
+    * now-validated set. Costs nothing on the common no-race path (set
+    * equality short-circuit). */
   private[graft] def recheckConstraints(spark: SparkSession, dir: String,
-                                 cur: Map[String, String],
-                                 validated: Map[String, String],
-                                 added: Seq[String],
-                                 schema: Option[StructType],
-                                 op: String,
-                                 colMap: Map[String, String] = Map.empty
-                                ): Map[String, String] = {
-    val fresh = cur.filter { case (k, sql) => !validated.get(k).contains(sql) }
-    if (fresh.nonEmpty && added.nonEmpty) {
-      // Constraint SQL is written against LOGICAL names; the batch
-      // files carry physical ones — probe through the rename.
-      val frame =
-        if (colMap.isEmpty) readFiles(spark, dir, added, schema)
-        else {
-          val logical = schema.getOrElse(throw new IllegalStateException(
-            s"$op: column mapping active under $dir but no schema"))
-          toLogicalFrame(
-            readFiles(spark, dir, added, Some(physSchemaOf(colMap, logical))),
-            colMap, logical)
-        }
-      enforceConstraintSet(fresh, frame, op)
-    }
+                                        next: TableState,
+                                        validated: Map[String, String],
+                                        added: Seq[String],
+                                        op: String): Map[String, String] = {
+    val fresh = next.constraints.filter { case (k, sql) =>
+      !validated.get(k).contains(sql) }
+    if (fresh.nonEmpty && added.nonEmpty)
+      enforceConstraintSet(fresh, readFilesWithDv(spark, dir, next, added), op)
     validated ++ fresh
   }
 
@@ -4226,16 +4115,13 @@ object SnapshotTable {
                        applyDv: Boolean = true): DataFrame = {
     val st = stateOf(spark, dir, v)
     val files = only.getOrElse(st.files)
-    val schema = manifestSchema(spark, dir, v)
+    val logical = logicalSchemaOf(spark, dir, st)
     // Under an active column mapping the scan reads PHYSICAL names;
     // the final select below renames to logical, so callers' keys and
     // predicates resolve as users wrote them.
-    val physSchema =
-      if (st.colMap.isEmpty) schema
-      else Some(physSchemaOf(st.colMap, schema.getOrElse(
-        throw new IllegalStateException(
-          s"column mapping active under $dir but no recorded schema"))))
-    val base = readFiles(spark, dir, files, physSchema)
+    val base = physicalScan(spark, dir, st, files,
+      physSchemaOf(st.colMap, logical), streaming = false,
+      sqlSurface = false)
     val cols = base.columns.map(col)
     val keyed0 = base.select(cols :+
       fileKeyExpr(dir, col("_metadata.file_path")).as("__file") :+
@@ -4248,7 +4134,7 @@ object SnapshotTable {
     val keyed = st.defaults.foldLeft(keyed0) {
       case (df, (c, (dv, pre))) =>
         val subset = files.filter(pre)
-        val dt = schema.flatMap(_.fields.find(_.name == c)).map(_.dataType)
+        val dt = logical.fields.find(_.name == c).map(_.dataType)
         if (subset.isEmpty || dt.isEmpty) df
         else {
           val pc = physName(st.colMap, c)
@@ -4264,9 +4150,9 @@ object SnapshotTable {
           col("__file") === col("__dv_file") &&
             col("__row_index") === col("__dv_rowidx"), "left_anti")
       }
-    val physOut = live.select(cols :+ col("__file") :+ col("__row_index"): _*)
-    if (st.colMap.isEmpty) physOut
-    else toLogicalFrame(physOut, st.colMap, schema.get)
+    toLogicalFrame(
+      live.select(cols :+ col("__file") :+ col("__row_index"): _*),
+      st.colMap, logical)
   }
 
   /** The shared tail of every touched/affected-file probe: distinct
@@ -4322,8 +4208,7 @@ object SnapshotTable {
         .map(manifestKey(dir, _)).sorted
     }
     if (touched.isEmpty) None
-    else Some(touched -> readFilesWithDv(spark, dir, touched, st.schema,
-      st.dvRefs, st.colMap, st.defaults))
+    else Some(touched -> readFilesWithDv(spark, dir, st, touched))
   }
 
   /** The SET-list guards of [[updateWhere]] and [[updateWhereMor]]: at
@@ -4538,13 +4423,15 @@ object SnapshotTable {
         Some(curSt.schema.map(evolveSchema(_, schema))
           .getOrElse(evolveSchema(new StructType(), schema)))
       }
+      // A delete lands no file, so the bucket claim still holds; an
+      // update's new files are not bucket-routed, so it clears.
+      val next = landed(curSt, wb).copy(schema = nextSchema,
+        dvRefs = curSt.dvRefs ++ affected.map(_ -> ref),
+        bucket = curSt.bucket.filter(_ => batch.isEmpty))
       if (batch.nonEmpty)
-        validated = recheckConstraints(spark, dir, curSt.constraints,
-          validated, wb.added, nextSchema, op,
-          wb.claim.map(_.colMap).getOrElse(Map.empty))
-      // the bucket claim clears, even for a delete that lands no file
-      Some(landed(curSt, wb).copy(schema = nextSchema,
-        dvRefs = curSt.dvRefs ++ affected.map(_ -> ref), bucket = None))
+        validated = recheckConstraints(spark, dir, next, validated,
+          wb.added, op)
+      Some(next)
     }.get
   }
 
@@ -4604,13 +4491,11 @@ object SnapshotTable {
           .map(manifestKey(dir, _)).sorted
       case _ => Seq.empty[String]
     }
-    val baseDv = base.map(stateOf(spark, dir, _).dvRefs).getOrElse(Map.empty)
+    val baseSt = base.map(stateOf(spark, dir, _))
+    val baseDv = baseSt.map(_.dvRefs).getOrElse(Map.empty)
     val rewrite =
       if (touched.isEmpty) source
-      else readFilesWithDv(spark, dir, touched,
-          base.flatMap(manifestSchema(spark, dir, _)), baseDv,
-          base.map(stateOf(spark, dir, _).colMap).getOrElse(Map.empty),
-          base.map(stateOf(spark, dir, _).defaults).getOrElse(Map.empty))
+      else readFilesWithDv(spark, dir, baseSt.get, touched)
         .join(srcKeys, keys, "left_anti")
         .unionByName(source)
     commitRewrite(spark, dir, touched, rewrite,
@@ -4621,7 +4506,7 @@ object SnapshotTable {
         base.map(manifestFiles(spark, dir, _)).getOrElse(Nil).toSet,
         keys, srcKeys)),
       baseDv = baseDv, checkConstraints = Some(vcs),
-      basis = base.map(stateOf(spark, dir, _)))
+      basis = baseSt)
   }
 
   /** One action of a generalized [[mergeInto]] clause. Expression
@@ -4828,8 +4713,7 @@ object SnapshotTable {
     val tParts = Seq(touched -> true, holderOnly -> false)
       .filter(_._1.nonEmpty)
       .map { case (files, rw) =>
-        readFilesWithDv(spark, dir, files, Some(schema), st.dvRefs,
-          st.colMap, st.defaults).withColumn(RW, lit(rw))
+        readFilesWithDv(spark, dir, st, files).withColumn(RW, lit(rw))
       }
     val tFrame =
       (if (tParts.isEmpty)
@@ -5087,7 +4971,8 @@ object SnapshotTable {
         }
       case _ => Seq.empty[String]
     }
-    val baseDv = base.map(stateOf(spark, dir, _).dvRefs).getOrElse(Map.empty)
+    val baseSt = base.map(stateOf(spark, dir, _))
+    val baseDv = baseSt.map(_.dvRefs).getOrElse(Map.empty)
     // WRITE SIZING for the bounded case: when the fused collect
     // bounded the key set, the insert half is key-unique and at most
     // pruneKeyLimit rows — but it arrives carrying the caller's full
@@ -5110,10 +4995,7 @@ object SnapshotTable {
     }
     val rewrite =
       if (touched.isEmpty) insertsSized
-      else readFilesWithDv(spark, dir, touched,
-          base.flatMap(manifestSchema(spark, dir, _)), baseDv,
-          base.map(stateOf(spark, dir, _).colMap).getOrElse(Map.empty),
-          base.map(stateOf(spark, dir, _).defaults).getOrElse(Map.empty))
+      else readFilesWithDv(spark, dir, baseSt.get, touched)
         .join(affectedKeys, keys, "left_anti")
         .unionByName(insertsSized, allowMissingColumns = true)
     commitRewrite(spark, dir, touched, rewrite,
@@ -5124,7 +5006,7 @@ object SnapshotTable {
         base.map(manifestFiles(spark, dir, _)).getOrElse(Nil).toSet,
         keys, affectedKeys)),
       baseDv = baseDv, checkConstraints = Some(vcs),
-      basis = base.map(stateOf(spark, dir, _)))
+      basis = baseSt)
   }
 
   /** EXACTLY-ONCE incremental table-to-table replication: advance the
@@ -5259,19 +5141,8 @@ object SnapshotTable {
           val newSinceBase = cur.files
             .filterNot(baseFiles).filterNot(addedSet).filterNot(touchedSet)
           if (newSinceBase.nonEmpty) {
-            // keys are logical; concurrently-added files are physical —
-            // probe through the rename under an active mapping.
-            val cm = claim.map(_.colMap).getOrElse(Map.empty)
-            val probeFrame =
-              if (cm.isEmpty) readFiles(spark, dir, newSinceBase, cur.schema)
-              else {
-                val logical = cur.schema.getOrElse(
-                  throw new IllegalStateException(
-                    s"$op: column mapping active under $dir but no schema"))
-                toLogicalFrame(readFiles(spark, dir, newSinceBase,
-                  Some(physSchemaOf(cm, logical))), cm, logical)
-              }
-            val clash = probeFrame
+            // the head's live rows of those files, logically named
+            val clash = readFilesWithDv(spark, dir, cur, newSinceBase)
               .join(srcKeys, keys, "left_semi").limit(1).collect()
             if (clash.nonEmpty)
               throw new java.util.ConcurrentModificationException(
@@ -5281,14 +5152,14 @@ object SnapshotTable {
         }
         val schema = Some(evolveSchema(cur.schema.getOrElse(new StructType()),
           rewrite.schema))
-        validated = validated.map(v => recheckConstraints(spark, dir,
-          cur.constraints, v, added, schema, op,
-          claim.map(_.colMap).getOrElse(Map.empty)))
         // Rewritten files physically exclude their masked rows, so their
         // vectors retire with them; the new files aren't bucket-routed,
         // so the claim clears.
-        Some(landed(cur, wb, touchedSet).copy(schema = schema,
-          txns = cur.txns ++ txn, bucket = None))
+        val next = landed(cur, wb, touchedSet).copy(schema = schema,
+          txns = cur.txns ++ txn, bucket = None)
+        validated = validated.map(v =>
+          recheckConstraints(spark, dir, next, v, added, op))
+        Some(next)
       }
     }
   }

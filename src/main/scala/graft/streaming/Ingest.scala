@@ -149,10 +149,14 @@ object Ingest {
     // maxFilesPerTrigger bounds a micro-batch when a backlog of
     // millions of files lands at once (restart after downtime) — each
     // batch stays memory-bounded instead of listing the world.
+    // ignoreMissingFiles rides THIS relation (the scan reads it per
+    // relation), never the session: a replayed batch may list landing
+    // files the crashed attempt already archived (see foreachBatch).
     val reader = spark.readStream
       .format("binaryFile")
       .schema(binarySchema)
       .option("recursiveFileLookup", "true")
+      .option("ignoreMissingFiles", "true")
     val source = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
       .load(landingDir)
@@ -166,18 +170,13 @@ object Ingest {
         // list files that no longer exist in landing. Two guards make
         // replay idempotent (write-before-archive ordering guarantees a
         // file is only ever missing if its row was durably written):
-        //  1. ignoreMissingFiles while this batch runs. NOTE: the flag
-        //     is SESSION-GLOBAL, not batch-scoped — every query sharing
-        //     this SparkSession silently skips missing files until the
-        //     batch ends (run ingest on a dedicated/cloned session if
-        //     that matters). Set/restore is reference-counted so
-        //     concurrent ingest streams on one session cannot clobber
-        //     each other's restore mid-batch;
+        //  1. the landing reader's ignoreMissingFiles option skips the
+        //     moved files — in this stream's scan only, the session
+        //     and every other query on it keep their own setting;
         //  2. the per-folder write MERGES the previously written
         //     _batch_id partition (left-anti on row_id) into the
         //     dynamic overwrite, so rows whose source file the crashed
         //     attempt already archived survive the rewrite.
-        acquireIgnoreMissingFiles(spark)
         // Persist: every per-folder write re-evaluates the batch, and
         // the archive move below deletes source files — an unpersisted
         // batch would re-read moved files when one micro-batch spans
@@ -201,8 +200,9 @@ object Ingest {
               // localCheckpoint(eager) CUTS LINEAGE, not just caches:
               // the dynamic overwrite below deletes the very parquet
               // files this plan reads, so a cache-loss recompute after
-              // the commit (persist+count's failure mode) would
-              // silently resolve to zero rows under ignoreMissingFiles.
+              // the commit (persist+count's failure mode) would fail —
+              // or, in a session that ignores missing files, silently
+              // resolve to zero rows.
               // Checkpointed blocks have no parent to recompute from.
               val carried = try {
                 Some(spark.read.option("basePath", tablePath)
@@ -266,44 +266,10 @@ object Ingest {
           ingested.foreach { case (u, f) =>
             archive(spark, batch, u, f, processedDir)
           }
-        } finally {
-          batch.unpersist()
-          releaseIgnoreMissingFiles(spark)
-        }
+        } finally batch.unpersist()
       }
       .start()
   }
-
-  /** Reference-counted set/restore of the SESSION-GLOBAL
-    * spark.sql.files.ignoreMissingFiles flag: the first in-flight
-    * ingest batch on a session saves the prior value and forces true;
-    * the last one out restores it. Without the counter, two ingest
-    * streams sharing a session could restore the flag while the
-    * other's replay is mid-flight and fail it. */
-  private val imfKey = "spark.sql.files.ignoreMissingFiles"
-  private val imfDepth = new java.util.concurrent.ConcurrentHashMap[SparkSession, (Int, Option[String])]()
-  private def acquireIgnoreMissingFiles(spark: SparkSession): Unit =
-    imfDepth.synchronized {
-      imfDepth.compute(spark, (_, cur) => cur match {
-        case null | (0, _) =>
-          val prev = spark.conf.getOption(imfKey)
-          spark.conf.set(imfKey, "true")
-          (1, prev)
-        case (n, prev) => (n + 1, prev)
-      })
-      ()
-    }
-  private def releaseIgnoreMissingFiles(spark: SparkSession): Unit =
-    imfDepth.synchronized {
-      imfDepth.compute(spark, (_, cur) => cur match {
-        case null => null
-        case (1, prev) =>
-          prev.fold(spark.conf.unset(imfKey))(v => spark.conf.set(imfKey, v))
-          null
-        case (n, prev) => (n - 1, prev)
-      })
-      ()
-    }
 
   /** O17 archive move (main.py:750-752): relocate ingested files under
     * processedDir, preserving the incoming/... suffix. Bookkeeping

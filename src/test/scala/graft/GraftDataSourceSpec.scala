@@ -11,12 +11,12 @@ import graft.sources.SnapshotTable
   * (append/overwrite/error/ignore), streaming source (versions as
   * offsets, append-only contract), streaming sink (exactly-once
   * ledger). */
-class GraftDataSourceSpec extends AnyFunSuite {
+class GraftDataSourceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String, scheme: String = "file"): String =
-    SparkTestBase.tmpRoot(s"graft-ds-$tag", scheme) + "/t"
+    tempRoot(s"graft-ds-$tag", scheme) + "/t"
 
   test("batch read: format(graft) resolves via service loader, versionAsOf time-travels") {
     val dir = tmp("read")
@@ -166,7 +166,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   for ((scheme, tag) <- SparkTestBase.Schemes)
   test("streaming sink: exactly-once landing through the txn ledger, appId required" + tag) {
     val dir = tmp("sink", scheme)
-    val ckpt = SparkTestBase.tmpRoot("graft-ds-ckpt", scheme)
+    val ckpt = tempRoot("graft-ds-ckpt", scheme)
     val input = MemoryStream[Long](spark)
     val q = input.toDF().toDF("id")
       .writeStream.format("graft")
@@ -296,7 +296,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
   test("graft-to-graft pipe: source table streams into sink table exactly once" + tag) {
     val src = tmp("pipe-src", scheme)
     val dst = tmp("pipe-dst", scheme)
-    val ckpt = SparkTestBase.tmpRoot("graft-ds-pipe", scheme)
+    val ckpt = tempRoot("graft-ds-pipe", scheme)
     SnapshotTable.append(spark.range(0, 20).toDF(), src)
     val q = spark.readStream.format("graft").load(src)
       .writeStream.format("graft")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
@@ -10,12 +9,12 @@ import graft.sources.SnapshotTable
   * totals stay exact across restarts mid-drain, and the legacy
   * unlimited offsets stay byte-compatible (limits can be turned on
   * over an existing checkpoint). */
-class GraftRateLimitSpec extends AnyFunSuite {
+class GraftRateLimitSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String, scheme: String = "file"): String =
-    SparkTestBase.tmpRoot(s"graft-rate-$tag", scheme) + "/t"
+    tempRoot(s"graft-rate-$tag", scheme) + "/t"
 
   /** `n` more single-row files with ids starting at `from`. */
   private def mkFiles(dir: String, n: Int, from: Long = 0L): Unit =
@@ -41,8 +40,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
   test("maxFilesPerTrigger drains the initial snapshot across triggers, " +
       "exactly once") {
     val dir = tmp("files"); mkFiles(dir, 7)
-    val ckpt = Files.createTempDirectory("rate-ck").toString
-    val out = Files.createTempDirectory("rate-out").toString + "/p"
+    val ckpt = tempDir("rate-ck")
+    val out = tempDir("rate-out") + "/p"
     val batches = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out, Map("maxFilesPerTrigger" -> "2"), batches)
     // 7 single-row files at 2 per trigger → 4 non-empty batches
@@ -61,8 +60,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
   for ((scheme, tag) <- SparkTestBase.Schemes)
   test("restart mid-drain continues from the checkpoint, no dupes/gaps" + tag) {
     val dir = tmp("restart", scheme); mkFiles(dir, 6)
-    val ckpt = SparkTestBase.tmpRoot("rate-ck2", scheme)
-    val out = Files.createTempDirectory("rate-out2").toString + "/p"
+    val ckpt = tempRoot("rate-ck2", scheme)
+    val out = tempDir("rate-out2") + "/p"
     // first run: ONE trigger only, then stop mid-drain
     var first: Option[Long] = None
     val q = spark.readStream.format("graft")
@@ -85,8 +84,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
 
   test("maxBytesPerTrigger admits at least one file per trigger") {
     val dir = tmp("bytes"); mkFiles(dir, 4)
-    val ckpt = Files.createTempDirectory("rate-ck3").toString
-    val out = Files.createTempDirectory("rate-out3").toString + "/p"
+    val ckpt = tempDir("rate-ck3")
+    val out = tempDir("rate-out3") + "/p"
     val batches = scala.collection.mutable.Buffer[Long]()
     // 1-byte budget: every file is over budget alone — one per trigger
     runOnce(dir, ckpt, out, Map("maxBytesPerTrigger" -> "1"), batches)
@@ -97,8 +96,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
   test("a checkpoint with engine progress but NO position file falls back " +
       "to one unlimited catch-up batch — never a duplicate snapshot replan") {
     val dir = tmp("legacy"); mkFiles(dir, 3)
-    val ckpt = Files.createTempDirectory("rate-ck5").toString
-    val out = Files.createTempDirectory("rate-out5").toString + "/p"
+    val ckpt = tempDir("rate-ck5")
+    val out = tempDir("rate-out5") + "/p"
     val b1 = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out, Map.empty, b1)
     assert(b1.toSeq == Seq(3L))
@@ -128,8 +127,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
   test("startingVersion beyond the head waits instead of crashing") {
     val dir = tmp("beyond"); mkFiles(dir, 2)
     val head = SnapshotTable.latestVersion(spark, dir).get
-    val ckpt = Files.createTempDirectory("rate-ck6").toString
-    val out = Files.createTempDirectory("rate-out6").toString + "/p"
+    val ckpt = tempDir("rate-ck6")
+    val out = tempDir("rate-out6") + "/p"
     val batches = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out,
       Map("maxFilesPerTrigger" -> "1", "startingVersion" -> s"${head + 2}"),
@@ -149,8 +148,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
     // widen guard: int column widened mid-stream
     val dir2 = tmp("guards2")
     SnapshotTable.append(Seq((1, "a")).toDF("n", "s").coalesce(1), dir2)
-    val ckpt2 = Files.createTempDirectory("rate-ckg2").toString
-    val out2 = Files.createTempDirectory("rate-outg2").toString + "/p"
+    val ckpt2 = tempDir("rate-ckg2")
+    val out2 = tempDir("rate-outg2") + "/p"
     val q2 = spark.readStream.format("graft").load(dir2)
       .writeStream.format("parquet")
       .option("checkpointLocation", ckpt2).option("path", out2).start()
@@ -172,8 +171,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
     val dir3 = tmp("guards3")
     SnapshotTable.append(Seq((1L, "a", 7L)).toDF("k", "s", "x")
       .coalesce(1), dir3)
-    val ckpt3 = Files.createTempDirectory("rate-ckg3").toString
-    val out3 = Files.createTempDirectory("rate-outg3").toString + "/p"
+    val ckpt3 = tempDir("rate-ckg3")
+    val out3 = tempDir("rate-outg3") + "/p"
     val q3 = spark.readStream.format("graft").load(dir3)
       .writeStream.format("parquet")
       .option("checkpointLocation", ckpt3).option("path", out3).start()
@@ -194,8 +193,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
   test("Trigger.AvailableNow drains ALL available data under the budget, " +
       "then terminates; a later run picks up new commits") {
     val dir = tmp("avnow"); mkFiles(dir, 5)
-    val ckpt = Files.createTempDirectory("rate-ck7").toString
-    val out = Files.createTempDirectory("rate-out7").toString + "/p"
+    val ckpt = tempDir("rate-ck7")
+    val out = tempDir("rate-out7") + "/p"
     def runAvailableNow(): Int = {
       var n = 0
       val q = spark.readStream.format("graft")
@@ -224,8 +223,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
   test("CDF source: a mid-stream rename fails loudly with a restart hint") {
     val dir = tmp("cdf-guard")
     SnapshotTable.append(Seq((1L, "a")).toDF("k", "s").coalesce(1), dir)
-    val ckpt = Files.createTempDirectory("rate-ckc").toString
-    val out = Files.createTempDirectory("rate-outc").toString + "/p"
+    val ckpt = tempDir("rate-ckc")
+    val out = tempDir("rate-outc") + "/p"
     val q = spark.readStream.format("graft")
       .option("readChangeFeed", "true").load(dir)
       .writeStream.format("parquet")
@@ -252,8 +251,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
     // vacuumed away here — where the unlimited path works fine.
     val dir = tmp("vacstart"); mkFiles(dir, 6)           // v0..v5
     SnapshotTable.vacuum(spark, dir, keepVersions = 2, minAgeMs = 0L)
-    val ckpt = Files.createTempDirectory("rate-ck5").toString
-    val out = Files.createTempDirectory("rate-out5").toString + "/p"
+    val ckpt = tempDir("rate-ck5")
+    val out = tempDir("rate-out5") + "/p"
     val batches = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out,
       Map("maxFilesPerTrigger" -> "1", "startingVersion" -> "5"), batches)
@@ -264,8 +263,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
 
   test("CDF maxFilesPerTrigger drains the snapshot and bulk appends across triggers") {
     val dir = tmp("cdf-files"); mkFiles(dir, 5)            // v0..v4
-    val ckpt = Files.createTempDirectory("cdfrate-ck").toString
-    val out = Files.createTempDirectory("cdfrate-out").toString + "/p"
+    val ckpt = tempDir("cdfrate-ck")
+    val out = tempDir("cdfrate-out") + "/p"
     val batches = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out,
       Map("readChangeFeed" -> "true", "maxFilesPerTrigger" -> "2"), batches)
@@ -299,8 +298,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
       .toDF("id", "name").repartition(3), dir)              // v0: 3 files
     SnapshotTable.deleteWhere(spark, dir, col("id") < 2L)   // v1: rewrite
     mkFiles(dir, 2, from = 50L)                             // v2, v3
-    val ckpt = Files.createTempDirectory("cdfrate-ck2").toString
-    val out = Files.createTempDirectory("cdfrate-out2").toString + "/p"
+    val ckpt = tempDir("cdfrate-ck2")
+    val out = tempDir("cdfrate-out2") + "/p"
     val batches = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out,
       Map("readChangeFeed" -> "true", "maxFilesPerTrigger" -> "1",
@@ -317,8 +316,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
 
   test("turning limits ON over an unlimited CDF checkpoint continues cleanly") {
     val dir = tmp("cdf-flip"); mkFiles(dir, 3)
-    val ckpt = Files.createTempDirectory("cdfrate-ck3").toString
-    val out = Files.createTempDirectory("cdfrate-out3").toString + "/p"
+    val ckpt = tempDir("cdfrate-ck3")
+    val out = tempDir("cdfrate-out3") + "/p"
     val b1 = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out, Map("readChangeFeed" -> "true"), b1)
     assert(b1.toSeq == Seq(3L))
@@ -332,8 +331,8 @@ class GraftRateLimitSpec extends AnyFunSuite {
 
   test("turning limits ON over an unlimited checkpoint continues cleanly") {
     val dir = tmp("flip"); mkFiles(dir, 3)
-    val ckpt = Files.createTempDirectory("rate-ck4").toString
-    val out = Files.createTempDirectory("rate-out4").toString + "/p"
+    val ckpt = tempDir("rate-ck4")
+    val out = tempDir("rate-out4") + "/p"
     val b1 = scala.collection.mutable.Buffer[Long]()
     runOnce(dir, ckpt, out, Map.empty, b1)      // unlimited: 1 batch of 3
     assert(b1.toSeq == Seq(3L))

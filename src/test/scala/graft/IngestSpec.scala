@@ -437,6 +437,29 @@ class IngestSpec extends AnyFunSuite with TempDirs {
     assert(t2.select("row_id").distinct().count() == 2)
   }
 
+  test("an in-flight batch leaves the session's ignoreMissingFiles alone") {
+    val root = tempDir("graft-ingest-conf")
+    val meta = Catalog.train("u1", "f1", "x", Map("Amount" -> "$10"))
+    write(root + "/landing", "incoming/u1/f1/batch/a.pdf", "Amount=$100")
+    val key = "spark.sql.files.ignoreMissingFiles"
+    val before = spark.conf.getOption(key)
+    val held = IngestSpec.Held
+    held.entered = new java.util.concurrent.CountDownLatch(1)
+    held.release = new java.util.concurrent.CountDownLatch(1)
+    val q = Ingest.start(spark, s"$root/landing", s"$root/warehouse",
+      s"$root/processed", s"$root/checkpoint", Catalog.empty.add(meta), held)
+    val during =
+      try {
+        assert(held.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+          "the batch never reached extraction")
+        spark.conf.getOption(key)
+      } finally held.release.countDown()
+    q.awaitTermination()
+    assert(during == before)
+    assert(spark.conf.getOption(key) == before)
+    assert(Ingest.readTable(spark, s"$root/warehouse", meta).count() == 1)
+  }
+
   test("ingest e2e through the batched-RPC extractor, with failure injection") {
     import graft.extract.{BatchedRpcExtractor, ExtractionClient}
     val root = tempDir("graft-ingest-rpc")
@@ -608,4 +631,19 @@ class IngestSpec extends AnyFunSuite with TempDirs {
   * closure is deserialized per task; local mode shares this JVM). */
 object IngestSpec {
   val rpcCalls = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The deterministic extractor, held at its first extraction until
+    * the test releases it — a batch kept in flight. */
+  object Held extends graft.extract.Extractor {
+    @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+    @volatile var release = new java.util.concurrent.CountDownLatch(1)
+    override def discover(n: String, c: Array[Byte]): Map[String, String] =
+      DeterministicExtractor.discover(n, c)
+    override def extractAll(docs: Seq[(String, Array[Byte])],
+                            keys: Seq[String]): Seq[Map[String, String]] = {
+      entered.countDown()
+      release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      super.extractAll(docs, keys)
+    }
+  }
 }

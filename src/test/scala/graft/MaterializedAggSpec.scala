@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -11,12 +10,12 @@ import graft.sources.MaterializedAgg.AggSpec
   * view must be row-identical to a full recomputation over the
   * source's current snapshot — across appends, deletes, updates,
   * group birth/death, compaction no-ops, and replayed refreshes. */
-class MaterializedAggSpec extends AnyFunSuite {
+class MaterializedAggSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-mv-$tag").toString + "/t"
+    tempDir(s"graft-mv-$tag") + "/t"
 
   private val aggs = Seq(
     AggSpec("n", "", "count"),
@@ -192,7 +191,7 @@ class MaterializedAggSpec extends AnyFunSuite {
 
   test("startContinuous: the commit stream keeps the view fresh through appends, deletes, MoR deletes") {
     val src = tmp("srcct"); val view = tmp("viewct")
-    val ckpt = Files.createTempDirectory("graft-mv-ckpt").toString
+    val ckpt = tempDir("graft-mv-ckpt")
     SnapshotTable.append(rows(("a", 1L, 1.0), ("b", 2L, 2.0)), src)
     MaterializedAgg.create(spark, src, view, Seq("k"), aggs, "mvct")
     val q = MaterializedAgg.startContinuous(spark, view, ckpt)

@@ -168,4 +168,32 @@ class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
       assert(bucketed == plain)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  test("a merge-on-read delete keeps the bucket claim; the SQL relation " +
+      "still reports it and serves the masked rows") {
+    val dir = tmp("mor")
+    SnapshotTable.appendBucketed(spark.range(0, 400)
+      .select(col("id").as("k"), (col("id") % 13).as("v")), dir, Seq("k"),
+      numBuckets = 4)
+    SnapshotTable.deleteWhereMor(spark, dir, col("k") % 10 === 3L)
+    assert(SnapshotTable.manifestBucket(spark, dir, 1L)
+      .contains(BucketLayout(4, Seq("k"), Nil)))
+    val viaSql = SnapshotSql.dataFrame(spark, dir)
+    val specs = viaSql.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.isInstanceOf[graft.sources.SnapshotFileIndex] =>
+        s.relation.bucketSpec
+    }
+    assert(specs.nonEmpty && specs.forall(_.exists(b =>
+      b.numBuckets == 4 && b.bucketColumnNames == Seq("k"))),
+      s"the masked SQL relation lost its BucketSpec: $specs")
+    // the rows equal a full masked read, and the expected survivors
+    val expected = (0L until 400L).filterNot(_ % 10 == 3L)
+      .map(i => (i, i % 13)).toSet
+    assert(SnapshotTable.read(spark, dir).as[(Long, Long)].collect().toSet ==
+      expected)
+    assert(viaSql.as[(Long, Long)].collect().toSet == expected)
+    assert(viaSql.groupBy("k").count().filter(col("count") =!= 1L).count() ==
+      0L)
+  }
 }

@@ -153,12 +153,12 @@ class SnapshotCommitCarrySpec extends AnyFunSuite with TempDirs {
     pin(t)(SnapshotTable.unsetProperties(spark, t, Seq("tier")))(
       _.copy(props = Map("team" -> "core")))
 
-    // A merge-on-read delete moves no rows, yet the bucket claim
-    // clears (pinned as is).
+    // A merge-on-read delete adds no file, so the bucket claim holds;
+    // a merge-on-read update lands unbucketed files and clears it.
     pinMor(t)(SnapshotTable.deleteWhereMor(spark, t, col("id") === 3L))(
-      _.copy(bucket = None))
+      identity)
     pinMor(t)(SnapshotTable.updateWhereMor(spark, t, col("id") === 4L,
-      Seq("v" -> (col("v") + 1L))))(identity)
+      Seq("v" -> (col("v") + 1L))))(_.copy(bucket = None))
     val morV = head(t)
     pin(t)(SnapshotTable.transactionalAppend(batch(60, 70), t, "app2", 1L))(
       b => b.copy(txns = b.txns + ("app2" -> 1L)))

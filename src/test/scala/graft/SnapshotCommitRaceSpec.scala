@@ -77,4 +77,26 @@ class SnapshotCommitRaceSpec extends AnyFunSuite with TempDirs {
       assert(head(dir) == 2L)
     }
   }
+
+  test("compact: a copy-on-write delete of a compacted file landing " +
+      s"during the commit aborts it [${GraftTestFs.Scheme}]") {
+    val dir = twoAppends("graft-race-compact-cow")
+    val fired = new java.util.concurrent.atomic.AtomicBoolean()
+    // deleteWhere commits v2 from inside compact's first create of its
+    // v2 manifest temp; compact's publish then loses to it
+    val e = intercept[java.util.ConcurrentModificationException] {
+      GraftTestFs.failingWhen { (op, p) =>
+        if (op == "create" && p.getName.startsWith(".v2.json.") &&
+            fired.compareAndSet(false, true))
+          SnapshotTable.deleteWhere(spark, dir, col("id") === 3L)
+        false
+      } {
+        SnapshotTable.compact(spark, dir, maxRetries = MaxRetries)
+      }
+    }
+    assert(fired.get && e.getMessage.contains("rewritten concurrently"))
+    assert(head(dir) == 2L)
+    assert(SnapshotTable.read(spark, dir).collect().map(_.getLong(0))
+      .sorted.toSeq == (0L until 20L).filterNot(_ == 3L))
+  }
 }

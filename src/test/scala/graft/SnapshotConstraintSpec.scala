@@ -102,22 +102,28 @@ class SnapshotConstraintSpec extends AnyFunSuite with TempDirs {
     val dir = tmp("race")
     SnapshotTable.append(spark.range(0, 10).toDF(), dir)
     val files = SnapshotTable.manifestFiles(spark, dir, 0L)
-    val schema = SnapshotTable.manifestSchema(spark, dir, 0L)
+    // the state a commit would publish with the batch `files` landed
+    // on a head recording `cs`
+    def next(cs: Map[String, String]) = SnapshotTable.TableState(
+      files = files, txns = Map.empty, stats = Map.empty,
+      bloomRefs = Map.empty, bloomCols = Nil, legacyBlooms = Map.empty,
+      schema = SnapshotTable.manifestSchema(spark, dir, 0L),
+      sizes = SnapshotTable.manifestSizes(spark, dir, 0L), constraints = cs)
     val cs = Map("bounded" -> "id < 5")
     // nothing validated yet → the written files re-probe and refuse
     val e = intercept[IllegalArgumentException] {
-      SnapshotTable.recheckConstraints(spark, dir, cs, Map.empty,
-        files, schema, "append")
+      SnapshotTable.recheckConstraints(spark, dir, next(cs), Map.empty,
+        files, "append")
     }
     assert(e.getMessage.contains("bounded"))
     // already-validated identical set → no re-probe, passes through
-    assert(SnapshotTable.recheckConstraints(spark, dir, cs, cs,
-      files, schema, "append") == cs)
+    assert(SnapshotTable.recheckConstraints(spark, dir, next(cs), cs,
+      files, "append") == cs)
     // a conforming batch against a fresh constraint validates and
     // returns the merged set
     val ok = Map("nonneg" -> "id >= 0")
-    assert(SnapshotTable.recheckConstraints(spark, dir, ok, Map.empty,
-      files, schema, "append") == ok)
+    assert(SnapshotTable.recheckConstraints(spark, dir, next(ok), Map.empty,
+      files, "append") == ok)
   }
 
   test("constraints and bucket claims survive vacuum's checkpoint rewrite") {

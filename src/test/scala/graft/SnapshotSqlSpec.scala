@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,7 +9,7 @@ import graft.sources.{SnapshotFileIndex, SnapshotSql, SnapshotTable}
   * registered snapshot view gets manifest stats + Bloom file skipping
   * through the custom FileIndex, with results identical to the
   * programmatic read path. */
-class SnapshotSqlSpec extends AnyFunSuite {
+class SnapshotSqlSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -35,7 +34,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
   }
 
   test("spark.sql over a registered snapshot prunes files via stats and blooms") {
-    val dir = Files.createTempDirectory("graft-sqls").toString + "/t"
+    val dir = tempDir("graft-sqls") + "/t"
     // Four disjoint-range files (clusterBy-style layout by hand) with
     // id stats and a bloom on the unsorted key k.
     (0 until 4).foreach { i =>
@@ -69,7 +68,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
   }
 
   test("SQL view result == programmatic read; time travel pins; evolution backfills") {
-    val dir = Files.createTempDirectory("graft-sqls2").toString + "/t"
+    val dir = tempDir("graft-sqls2") + "/t"
     SnapshotTable.append(
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir, statsCols = Seq("id"))
     SnapshotTable.append(
@@ -99,7 +98,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
   }
 
   test("live view auto-advances across commits; pinned view stays put; DV masks apply") {
-    val dir = Files.createTempDirectory("graft-sql-live").toString + "/t"
+    val dir = tempDir("graft-sql-live") + "/t"
     SnapshotTable.append(
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir)
     SnapshotSql.register(spark, "live_pinned", dir)   // pins v0
@@ -127,5 +126,34 @@ class SnapshotSqlSpec extends AnyFunSuite {
     val selfJoin = spark.sql(
       """SELECT count(*) FROM live_head a JOIN live_head b USING (id)""")
     assert(selfJoin.collect().head.getLong(0) == 2L)
+  }
+
+  test("a data file the store lost fails every read surface, " +
+      "whatever the session's ignoreMissingFiles says") {
+    val dir = tempDir("graft-sql-lost") + "/t"
+    SnapshotTable.append(spark.range(0, 100).toDF(), dir,
+      bloomCols = Seq("id"))
+    // the live data file holding id 7, deleted out of band
+    val lost = SnapshotTable.read(spark, dir).filter($"id" === 7L)
+      .select(input_file_name()).head().getString(0)
+    val lostName = new org.apache.hadoop.fs.Path(lost).getName
+    assert(java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
+      new org.apache.hadoop.fs.Path(lost).toUri.getPath)))
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    def refuses(surface: String)(df: => DataFrame): Unit = {
+      val e = intercept[Exception](df.collect())
+      assert(causes(e).exists(c => String.valueOf(c.getMessage)
+        .contains(lostName)), s"$surface failed without naming the file: $e")
+    }
+    val key = "spark.sql.files.ignoreMissingFiles"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      refuses("read")(SnapshotTable.read(spark, dir))
+      refuses("readWhereEq")(SnapshotTable.readWhereEq(spark, dir, "id", 7L))
+      refuses("SnapshotSql.dataFrame")(SnapshotSql.dataFrame(spark, dir))
+      refuses("format(graft)")(spark.read.format("graft").load(dir))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
