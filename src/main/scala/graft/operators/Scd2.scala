@@ -64,7 +64,7 @@ object Scd2 {
       throw new java.io.IOException(
         s"Scd2: no committed version under $srcDir"))
     val cursor = SnapshotTable.latestVersion(spark, dimDir)
-      .map(SnapshotTable.manifestTxns(spark, dimDir, _))
+      .map(SnapshotTable.snapshot(spark, dimDir, _).txns)
       .getOrElse(Map.empty).get(appId)
     if (cursor.exists(_ >= srcV)) return None
     cursor match {

@@ -12632,13 +12632,13 @@ object Queries {
       val v = graft.sources.SnapshotTable.latestVersion(s, dir).get
       require(graft.sources.SnapshotTable.manifestFiles(s, dir, v).toSet ==
         before, "MoR DELETE must not rewrite any file")
-      require(graft.sources.SnapshotTable.manifestDvRefs(s, dir, v).nonEmpty,
+      require(graft.sources.SnapshotTable.snapshot(s, dir, v).dvRefs.nonEmpty,
         "MoR DELETE must land a deletion vector")
       s.sql(s"UPDATE graft.`$dir` SET o_totalprice = o_totalprice * 2 " +
         "WHERE o_orderpriority = '1-URGENT'")
       s.sql(s"OPTIMIZE graft.`$dir`")
       val v3 = graft.sources.SnapshotTable.latestVersion(s, dir).get
-      require(graft.sources.SnapshotTable.manifestDvRefs(s, dir, v3).isEmpty,
+      require(graft.sources.SnapshotTable.snapshot(s, dir, v3).dvRefs.isEmpty,
         "OPTIMIZE must materialize the vectors")
       s.sql(s"""SELECT o_orderpriority AS priority, count(*) AS n,
         CAST(sum(CAST(o_totalprice AS DECIMAL(18,6)) * 100) AS BIGINT)

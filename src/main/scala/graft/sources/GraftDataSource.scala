@@ -83,9 +83,9 @@ final class GraftDataSource extends RelationProvider
     // scan schema); both route through a scan relation that runs the
     // fully-resolved frame — same manifest-pruned parquet scan
     // underneath, plus the anti-join / logical rename.
-    if (SnapshotTable.manifestDvRefs(spark, dir, v).isEmpty &&
-        SnapshotTable.manifestColMap(spark, dir, v).isEmpty &&
-        SnapshotTable.manifestDefaults(spark, dir, v).isEmpty) rel
+    val snap = SnapshotTable.snapshot(spark, dir, v)
+    if (snap.dvRefs.isEmpty && snap.colMap.isEmpty && snap.defaults.isEmpty)
+      rel
     else new DvMaskedRelation(spark, dir, v, schema)
   }
 
@@ -223,8 +223,7 @@ object GraftDataSource {
       throw new java.io.IOException(
         s"graft: no committed version under $dir — streaming reads need " +
           "an initialized table (commit an empty append to start one)"))
-    SnapshotTable.manifestSchema(spark, dir, v)
-      .getOrElse(SnapshotTable.read(spark, dir, Some(v)).schema)
+    SnapshotTable.snapshot(spark, dir, v).schema
   }
 }
 
@@ -597,23 +596,21 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
     // Restarting re-captures.
     val (_, st) = SnapshotTable.resolve(spark, dir, Some(atVersion),
       "graft streaming source")
-    st.schema.foreach { ls =>
-      val liveTypes = ls.fields.map(f => f.name -> f.dataType).toMap
-      val gone = schema.fieldNames.filterNot(liveTypes.contains)
-      if (gone.nonEmpty && (st.colMap.nonEmpty || st.retired.nonEmpty))
-        throw new IllegalStateException(
-          s"graft streaming source: column(s) ${gone.mkString(", ")} were " +
-            "renamed or dropped mid-stream — restart the stream to " +
-            "capture the current schema")
-      val retyped = schema.fields.filter(f =>
-        liveTypes.get(f.name).exists(_ != f.dataType))
-      if (retyped.nonEmpty) throw new IllegalStateException(
-        s"graft streaming source: column(s) " +
-          retyped.map(f => s"${f.name} (${f.dataType.simpleString} -> " +
-            s"${liveTypes(f.name).simpleString})").mkString(", ") +
-          " changed type mid-stream (widenColumn) — restart the stream " +
-          "to capture the current schema")
-    }
+    val liveTypes = st.schema.fields.map(f => f.name -> f.dataType).toMap
+    val gone = schema.fieldNames.filterNot(liveTypes.contains)
+    if (gone.nonEmpty && (st.colMap.nonEmpty || st.retired.nonEmpty))
+      throw new IllegalStateException(
+        s"graft streaming source: column(s) ${gone.mkString(", ")} were " +
+          "renamed or dropped mid-stream — restart the stream to " +
+          "capture the current schema")
+    val retyped = schema.fields.filter(f =>
+      liveTypes.get(f.name).exists(_ != f.dataType))
+    if (retyped.nonEmpty) throw new IllegalStateException(
+      s"graft streaming source: column(s) " +
+        retyped.map(f => s"${f.name} (${f.dataType.simpleString} -> " +
+          s"${liveTypes(f.name).simpleString})").mkString(", ") +
+        " changed type mid-stream (widenColumn) — restart the stream " +
+        "to capture the current schema")
     // a slice may emit files of earlier versions in the range: their
     // sizes come from their own manifests
     SnapshotTable.readFilesWithDv(spark, dir,
@@ -740,16 +737,14 @@ final class GraftCdfStreamSource(spark: SparkSession, dir: String,
     // fail LOUDLY with a restart hint (same contract as the plain
     // source — without this a rename/drop/widen surfaces as a raw
     // unresolved-column or parquet-conversion error deep in a step).
-    SnapshotTable.manifestSchema(spark, dir, to).foreach { live =>
-      val liveTypes = live.fields.map(f => f.name -> f.dataType).toMap
-      val captured = GraftCdfStreamSource.stripCdfColumns(schema)
-      val bad = captured.fields.filter(f =>
-        !liveTypes.get(f.name).contains(f.dataType))
-      if (bad.nonEmpty) throw new IllegalStateException(
-        s"graft CDF source: column(s) ${bad.map(_.name).mkString(", ")} " +
-          "were renamed, dropped, or changed type mid-stream — restart " +
-          "the stream to capture the current schema")
-    }
+    val liveTypes = SnapshotTable.snapshot(spark, dir, to).schema.fields
+      .map(f => f.name -> f.dataType).toMap
+    val bad = GraftCdfStreamSource.stripCdfColumns(schema).fields.filter(f =>
+      !liveTypes.get(f.name).contains(f.dataType))
+    if (bad.nonEmpty) throw new IllegalStateException(
+      s"graft CDF source: column(s) ${bad.map(_.name).mkString(", ")} " +
+        "were renamed, dropped, or changed type mid-stream — restart " +
+        "the stream to capture the current schema")
     val begin = startPos.getOrElse(startingVersion match {
       case Some(sv) => Pos(sv - 1, Pos.Complete, snap = false)
       case None => Pos(endPos.v, 0, snap = endPos.snap)

@@ -382,7 +382,7 @@ object GraftSqlCommands {
       // malformed values fail loudly); source-only columns pass
       // through for add-column evolution.
       val src = SnapshotTable.latestVersion(spark, dir)
-        .flatMap(v => SnapshotTable.manifestSchema(spark, dir, v)) match {
+        .map(v => SnapshotTable.snapshot(spark, dir, v).schema) match {
         case Some(schema) =>
           val types = schema.fields.map(f => f.name -> f.dataType).toMap
           src0.select(src0.columns.map(c =>
@@ -431,7 +431,7 @@ object GraftSqlCommands {
     override def run(spark: SparkSession): Seq[Row] = {
       val q = GraftSqlBridge.ofRows(spark, query)
       val aligned = SnapshotTable.latestVersion(spark, dir)
-        .flatMap(v => SnapshotTable.manifestSchema(spark, dir, v)) match {
+        .map(v => SnapshotTable.snapshot(spark, dir, v).schema) match {
         case Some(schema) =>
           if (q.schema.length != schema.length)
             fail(s"INSERT: query has ${q.schema.length} columns, " +
@@ -585,7 +585,7 @@ object GraftSqlCommands {
     override def run(spark: SparkSession): Seq[Row] = {
       val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
         fail(s"SHOW TBLPROPERTIES: no committed version under $dir"))
-      SnapshotTable.manifestProps(spark, dir, v)
+      SnapshotTable.snapshot(spark, dir, v).props
         .filter(kv => key.forall(_ == kv._1))
         .toSeq.sortBy(_._1).map { case (k, value) => Row(k, value) }
     }
@@ -595,7 +595,7 @@ object GraftSqlCommands {
     * through merge-on-read deletion vectors. */
   private def morEnabled(spark: SparkSession, dir: String): Boolean =
     SnapshotTable.latestVersion(spark, dir).exists(v =>
-      SnapshotTable.manifestProps(spark, dir, v)
+      SnapshotTable.snapshot(spark, dir, v).props
         .get(SnapshotTable.EnableDeletionVectorsKey).exists(_.toBoolean))
 
   /** `DESCRIBE DETAIL` → one metadata-only summary row (`n_rows` is
@@ -609,24 +609,20 @@ object GraftSqlCommands {
     override def run(spark: SparkSession): Seq[Row] = {
       val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
         fail(s"DESCRIBE DETAIL: no committed version under $dir"))
-      val files = SnapshotTable.manifestFiles(spark, dir, v)
-      val bytes = SnapshotTable.manifestSizes(spark, dir, v).values.sum
+      val snap = SnapshotTable.snapshot(spark, dir, v)
       val rows = SnapshotTable.countRows(spark, dir, Some(v))
-      val schema = SnapshotTable.manifestSchema(spark, dir, v)
-        .map(_.map(f => s"${f.name} ${f.dataType.simpleString}")
-          .mkString(", ")).getOrElse("")
+      val schema = snap.schema
+        .map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ")
       val feats = Seq(
-        if (SnapshotTable.manifestColMap(spark, dir, v).nonEmpty ||
-            SnapshotTable.manifestRetired(spark, dir, v).nonEmpty)
-          Some("colmap") else None,
-        if (SnapshotTable.manifestDvRefs(spark, dir, v).nonEmpty)
-          Some("dv") else None,
-        if (SnapshotTable.manifestConstraints(spark, dir, v).nonEmpty)
-          Some("constraints") else None,
-        SnapshotTable.manifestBucket(spark, dir, v).map(b =>
+        if (snap.colMap.nonEmpty || snap.retired.nonEmpty) Some("colmap")
+        else None,
+        if (snap.dvRefs.nonEmpty) Some("dv") else None,
+        if (snap.constraints.nonEmpty) Some("constraints") else None,
+        snap.bucket.map(b =>
           s"bucket(${b.cols.mkString(",")};${b.numBuckets})")
       ).flatten.mkString(" ")
-      Seq(Row(v, files.size.toLong, bytes, rows, schema, feats))
+      Seq(Row(v, snap.files.size.toLong, snap.sizes.values.sum, rows, schema,
+        feats))
     }
   }
 
@@ -639,7 +635,7 @@ object GraftSqlCommands {
     override def run(spark: SparkSession): Seq[Row] = {
       val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
         fail(s"SHOW CONSTRAINTS: no committed version under $dir"))
-      SnapshotTable.manifestConstraints(spark, dir, v)
+      SnapshotTable.snapshot(spark, dir, v).constraints
         .toSeq.sortBy(_._1).map { case (n, e) => Row(n, e) }
     }
   }
@@ -661,7 +657,7 @@ object GraftSqlCommands {
     override val output: Seq[Attribute] = Seq(
       longAttr("version"),
       AttributeReference("op", StringType, nullable = false)(),
-      longAttr("commit_ts", nullable = true),
+      longAttr("commit_ts"),
       longAttr("n_added"), longAttr("n_removed"),
       longAttr("n_files"), longAttr("total_bytes"))
     override def run(spark: SparkSession): Seq[Row] =

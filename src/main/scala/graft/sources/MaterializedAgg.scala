@@ -131,7 +131,7 @@ object MaterializedAgg {
     val dstV = SnapshotTable.latestVersion(spark, dstDir).getOrElse(
       throw new java.io.IOException(
         s"MaterializedAgg: view under $dstDir not created"))
-    val cursor = SnapshotTable.manifestTxns(spark, dstDir, dstV)
+    val cursor = SnapshotTable.snapshot(spark, dstDir, dstV).txns
       .getOrElse(meta.viewId, throw new IllegalStateException(
         s"MaterializedAgg: no ${meta.viewId} cursor in the view ledger " +
           s"under $dstDir — not a MaterializedAgg view?"))

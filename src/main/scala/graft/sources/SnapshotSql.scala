@@ -181,7 +181,7 @@ object SnapshotSql {
                                 version: Option[Long]
                                ): (HadoopFsRelation, StructType, Long) = {
     val (v, st) = SnapshotTable.resolve(spark, dir, version, "SnapshotSql")
-    val schema = SnapshotTable.logicalSchemaOf(spark, dir, st)
+    val schema = st.schema
     (SnapshotTable.snapshotRelation(spark, dir, st, st.files,
       SnapshotTable.physSchemaOf(st.colMap, schema), sqlSurface = true),
       schema, v)
@@ -235,7 +235,7 @@ object SnapshotSql {
   def dataFrameLive(spark: SparkSession, dir: String): DataFrame = {
     val (_, st) = SnapshotTable.resolve(spark, dir, None, "SnapshotSql")
     val rel = new LiveSnapshotRelation(spark, dir,
-      SnapshotTable.logicalSchemaOf(spark, dir, st))
+      st.schema)
     val plan = LogicalRelation(rel,
       DataTypeUtils.toAttributes(rel.schema), None, isStreaming = false, None)
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
@@ -340,8 +340,7 @@ object LiveSnapshotRelation {
   * snapshot state, with statuses built from the MANIFEST's recorded
   * per-file sizes — zero filesystem RPCs on the planning path (the
   * manifest-only-planning property object stores need; modification
-  * time is irrelevant to a pinned-snapshot read and stamps 0). Files a
-  * pre-sizes writer committed fall back to one getFileStatus each.
+  * time is irrelevant to a pinned-snapshot read and stamps 0).
   * With `prune` (the SQL surfaces) [[listFiles]] intersects `files`
   * with the manifest's min/max and Bloom decisions for the query's
   * pushed filters; without it a scan IS its files.
@@ -352,11 +351,8 @@ final class SnapshotFileIndex private[sources] (
     files: Seq[String], prune: Boolean) extends FileIndex {
 
   private val statuses: Map[String, FileStatus] = files.map { key =>
-    val p = SnapshotTable.absPath(dir, key)
-    key -> st.sizes.get(key)
-      .map(len => new FileStatus(len, false, 1, len, 0L, p))
-      .getOrElse(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p))
+    val len = st.sizes(key)
+    key -> new FileStatus(len, false, 1, len, 0L, SnapshotTable.absPath(dir, key))
   }.toMap
 
   /** (selected, total) of the most recent listFiles pruning decision —

@@ -102,6 +102,19 @@ import org.apache.spark.sql.types._
   *     their layouts derive from column names; plain append inherits
   *     everything.)
   *
+  * Wire form: [[ManifestCodec]] is the one place the manifest format
+  * is declared — each field's JSON name, sort order and delta rule,
+  * read and written through one field table. A delta carries
+  * per-file map entries (`stats`, `bloomrefs`, `sizes`, `dvrefs`)
+  * only for files whose entry changed; a whole-value field there is
+  * inherited when absent and replaced when present, an explicit empty
+  * value included. Each manifest lists the reader features it needs
+  * (`dv`, `dvremoves`, `constraints`, `segments`, `bucket`, `colmap`,
+  * `defaults`); a reader refuses unknown features and the layouts
+  * earlier writers produced (inline Bloom bitsets, no timestamp, no
+  * op, no schema, files without sizes or row counts). Every reader
+  * resolves a version to one [[Snapshot]].
+  *
   * Deliberately out of scope (and documented as such): multi-table
   * transactions. */
 object SnapshotTable {
@@ -249,12 +262,6 @@ object SnapshotTable {
     * row, never hide one. */
   final case class ColStat(tag: String, min: String, max: String)
 
-  /** Manifest JSON is written and parsed with Jackson (ships with
-    * Spark) — file paths are machine-generated but stat min/max of
-    * string columns carry arbitrary user text, which hand-rolled
-    * escaping would get wrong. */
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   /** Latest committed version, or None for an empty/uninitialized
     * table. One directory listing of `_manifests/` — never of the
     * data. */
@@ -272,39 +279,10 @@ object SnapshotTable {
         s.stripPrefix("v").stripSuffix(".json") }
       .flatMap(s => scala.util.Try(s.toLong).toOption).sorted
 
-  /** Reader features THIS code understands. A manifest written by a
-    * newer engine lists the features its resolution depends on
-    * (`"features"`); an entry outside this set means silently reading
-    * would misinterpret the table (e.g. a reader that doesn't apply
-    * deletion vectors would resurrect deleted rows) — so the read
-    * fails loudly instead. The public Delta/Iceberg
-    * protocol-versioning idea reduced to a feature list: plain old
-    * manifests carry no list and every reader accepts them. */
-  private val SupportedFeatures = Set(
-    "dv", "dvremoves", "constraints", "segments", "bucket", "colmap",
-    "defaults")
-
-  private def manifestNode(spark: SparkSession, dir: String,
-                           v: Long): com.fasterxml.jackson.databind.JsonNode = {
-    val txt = TableStore(spark, dir).readText(manifestPath(dir, v)).getOrElse(
-      throw new java.io.IOException(
-        s"manifest v$v missing under $dir — vacuumed past the time-travel " +
-          "horizon, or the table directory was modified out of band"))
-    val node = mapper.readTree(txt)
-    val unknown = strSeq(node, "features").filterNot(SupportedFeatures)
-    if (unknown.nonEmpty)
-      throw new java.io.IOException(
-        s"manifest v$v under $dir requires reader features this engine " +
-          s"does not implement: ${unknown.mkString(", ")} — written by a " +
-          "newer writer; upgrade before reading")
-    node
-  }
-
   /** The fully-resolved table state at one version. Immutable once
     * committed, hence cacheable. `bloomRefs` points at the per-batch
     * Bloom SIDECAR file each data file's bitsets live in (the
-    * Delta-bloom-index layout — bitsets never ride inside manifests);
-    * `legacyBlooms` holds inline bitsets from pre-sidecar manifests.
+    * Delta-bloom-index layout — bitsets never ride inside manifests).
     * `segments` records the SEGMENTED checkpoint composition this
     * state was resolved through (segment file name → its file list,
     * carried unchanged through deltas) — what lets the NEXT
@@ -313,14 +291,13 @@ object SnapshotTable {
     * since that checkpoint (their segment entries are stale and the
     * segment must be rewritten at the next checkpoint). */
   private[graft] final case class TableState(
-      files: Seq[String],
-      txns: Map[String, Long],
-      stats: Map[String, Map[String, ColStat]],
-      bloomRefs: Map[String, String],
-      bloomCols: Seq[String],
-      legacyBlooms: Map[String, Map[String, Array[Byte]]],
-      schema: Option[StructType],
-      sizes: Map[String, Long],
+      files: Seq[String] = Nil,
+      txns: Map[String, Long] = Map.empty,
+      stats: Map[String, Map[String, ColStat]] = Map.empty,
+      bloomRefs: Map[String, String] = Map.empty,
+      bloomCols: Seq[String] = Nil,
+      schema: StructType = new StructType(),
+      sizes: Map[String, Long] = Map.empty,
       dvRefs: Map[String, String] = Map.empty,
       segments: Seq[(String, Seq[String])] = Nil,
       dvDirty: Set[String] = Set.empty,
@@ -366,7 +343,30 @@ object SnapshotTable {
   final case class BucketLayout(numBuckets: Int, cols: Seq[String],
                                 sortCols: Seq[String])
 
-  /** Bounded cache of resolved states — a COMMITTED manifest is
+  /** One committed version, read-only: its commit stamp (epoch
+    * millis), the operation that committed it and the fields of its
+    * resolved [[TableState]] — what [[snapshot]] returns and every
+    * reader resolves a version to. `checkpoint`: the manifest is
+    * self-contained (not a delta). */
+  final case class Snapshot(version: Long, ts: Long, op: String,
+                            private[graft] val state: TableState,
+                            private[graft] val checkpoint: Boolean = false) {
+    def files: Seq[String] = state.files
+    def txns: Map[String, Long] = state.txns
+    def stats: Map[String, Map[String, ColStat]] = state.stats
+    def bloomCols: Seq[String] = state.bloomCols
+    def schema: StructType = state.schema
+    def sizes: Map[String, Long] = state.sizes
+    def dvRefs: Map[String, String] = state.dvRefs
+    def bucket: Option[BucketLayout] = state.bucket
+    def constraints: Map[String, String] = state.constraints
+    def colMap: Map[String, String] = state.colMap
+    def retired: Seq[String] = state.retired
+    def props: Map[String, String] = state.props
+    def defaults: Map[String, (String, Set[String])] = state.defaults
+  }
+
+  /** Bounded cache of resolved snapshots — a COMMITTED manifest is
     * immutable, so the only size concern would be capacity; but a
     * table directory deleted and recreated at the same path (or a
     * vacuum checkpoint-rewrite of the oldest kept manifest) replaces
@@ -376,41 +376,68 @@ object SnapshotTable {
     * replaced v<N>.json forms a new key and can never be served from
     * the old entry (the stale entry just ages out of the LRU). */
   private val stateCache =
-    new java.util.LinkedHashMap[(String, Long, Long, Long), TableState](
+    new java.util.LinkedHashMap[(String, Long, Long, Long), Snapshot](
         64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long, Long), TableState]
+          e: java.util.Map.Entry[(String, Long, Long, Long), Snapshot]
          ): Boolean = size() > 48
     }
 
-  /** Resolve the state at version `v`: read manifests BACKWARD from v
-    * to the nearest full (checkpoint-form) manifest, then replay the
-    * delta chain forward — the Delta-log checkpoint+delta model. A
-    * full manifest is written every [[CheckpointEvery]] commits (and
-    * at v0), so the chain is at most CheckpointEvery deltas long and
-    * a COMMIT only ever writes O(batch) bytes, not O(table). */
-  private def stateOf(spark: SparkSession, dir: String,
-                      v: Long): TableState = {
-    val fst = try TableStore(spark, dir).status(manifestPath(dir, v))
+  private def missingManifest(dir: String, v: Long) =
+    new java.io.IOException(
+      s"manifest v$v missing under $dir — vacuumed past the time-travel " +
+        "horizon, or the table directory was modified out of band")
+
+  /** Version `version` of the table under `dir`: read the manifest
+    * and, for a delta, the versions BACKWARD to the nearest checkpoint,
+    * replaying the deltas forward — the Delta-log checkpoint+delta
+    * model. A checkpoint is written every [[CheckpointEvery]] commits
+    * (and at v0), so the chain is at most CheckpointEvery deltas long
+    * and a COMMIT only ever writes O(batch) bytes, not O(table). */
+  def snapshot(spark: SparkSession, dir: String, version: Long): Snapshot = {
+    val fst = try TableStore(spark, dir).status(manifestPath(dir, version))
     catch { case _: java.io.FileNotFoundException =>
-      throw new java.io.IOException(
-        s"manifest v$v missing under $dir — vacuumed past the time-travel " +
-          "horizon, or the table directory was modified out of band")
+      throw missingManifest(dir, version)
     }
-    val key = (new Path(dir).toUri.getPath, v,
+    val key = (new Path(dir).toUri.getPath, version,
       fst.getModificationTime, fst.getLen)
     stateCache.synchronized {
       val hit = stateCache.get(key)
       if (hit != null) return hit
     }
-    val node = manifestNode(spark, dir, v)
-    val st =
-      if (node.get("files") != null || node.get("segments") != null ||
-          v == 0L)
-        fullState(spark, dir, node)
-      else deltaState(stateOf(spark, dir, v - 1), node)
-    stateCache.synchronized { stateCache.put(key, st); () }
-    st
+    val snap = readManifest(spark, dir, version,
+      if (version == 0L) None else Some(stateOf(spark, dir, version - 1)))
+    stateCache.synchronized { stateCache.put(key, snap); () }
+    snap
+  }
+
+  private def stateOf(spark: SparkSession, dir: String, v: Long): TableState =
+    snapshot(spark, dir, v).state
+
+  /** Decode manifest `v`; a delta resolves against `parent`. */
+  private def readManifest(spark: SparkSession, dir: String, v: Long,
+                           parent: => Option[TableState]): Snapshot =
+    ManifestCodec.decode(dir, v,
+      TableStore(spark, dir).readText(manifestPath(dir, v))
+        .getOrElse(throw missingManifest(dir, v)),
+      parent, loadSegment(spark, dir, _))
+
+  /** The snapshots of ascending `versions`, each manifest read once: a
+    * version right after the previous one decodes against it, any
+    * other resolves through [[snapshot]]. The walk adds nothing to the
+    * state cache, which a long history would otherwise thrash. */
+  private def walk(spark: SparkSession, dir: String,
+                   versions: Seq[Long]): Iterator[Snapshot] = {
+    var prev: Option[Snapshot] = None
+    versions.iterator.map { v =>
+      val s = prev match {
+        case Some(p) if p.version == v - 1 =>
+          readManifest(spark, dir, v, Some(p.state))
+        case _ => snapshot(spark, dir, v)
+      }
+      prev = Some(s)
+      s
+    }
   }
 
   /** The version a reader serves — `version`, else the head — and its
@@ -425,309 +452,54 @@ object SnapshotTable {
     (v, stateOf(spark, dir, v))
   }
 
-  private def strSeq(n: com.fasterxml.jackson.databind.JsonNode,
-                     field: String): Seq[String] = {
-    val a = n.get(field)
-    if (a == null) Seq.empty else (0 until a.size).map(a.get(_).asText)
-  }
-
-  private def txnsOf(n: com.fasterxml.jackson.databind.JsonNode
-                    ): Map[String, Long] = {
-    val t = n.get("txns")
-    if (t == null) Map.empty
-    else {
-      val it = t.fieldNames()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val k = it.next(); b += k -> t.get(k).asLong }
-      b.result()
-    }
-  }
-
-  private def statsOf(n: com.fasterxml.jackson.databind.JsonNode
-                     ): Map[String, Map[String, ColStat]] = {
-    val s = n.get("stats")
-    if (s == null) return Map.empty
-    val b = Map.newBuilder[String, Map[String, ColStat]]
-    val files = s.fieldNames()
-    while (files.hasNext) {
-      val file = files.next()
-      val fileNode = s.get(file)
-      val cb = Map.newBuilder[String, ColStat]
-      val cols = fileNode.fieldNames()
-      while (cols.hasNext) {
-        val c = cols.next(); val a = fileNode.get(c)
-        if (a != null && a.size == 3)
-          cb += c -> ColStat(a.get(0).asText, a.get(1).asText,
-            a.get(2).asText)
-      }
-      b += file -> cb.result()
-    }
-    b.result()
-  }
-
-  private def bloomRefsOf(n: com.fasterxml.jackson.databind.JsonNode
-                         ): Map[String, String] =
-    refMapOf(n, "bloomrefs")
-
-  private def dvRefsOf(n: com.fasterxml.jackson.databind.JsonNode
-                      ): Map[String, String] =
-    refMapOf(n, "dvrefs")
-
-  private def refMapOf(n: com.fasterxml.jackson.databind.JsonNode,
-                       field: String): Map[String, String] = {
-    val s = n.get(field)
-    if (s == null) return Map.empty
-    val it = s.fieldNames()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) { val k = it.next(); b += k -> s.get(k).asText }
-    b.result()
-  }
-
-  private def legacyBloomsOf(n: com.fasterxml.jackson.databind.JsonNode
-                            ): Map[String, Map[String, Array[Byte]]] =
-    bloomMapOf(n.get("blooms"))
-
-  /** Parse a {file: {col: base64}} node (a bloom sidecar's root, or a
-    * legacy manifest's inline "blooms" object). */
-  private def bloomMapOf(s: com.fasterxml.jackson.databind.JsonNode
-                        ): Map[String, Map[String, Array[Byte]]] = {
-    if (s == null) return Map.empty
-    val b = Map.newBuilder[String, Map[String, Array[Byte]]]
-    val files = s.fieldNames()
-    while (files.hasNext) {
-      val file = files.next()
-      val fileNode = s.get(file)
-      val cb = Map.newBuilder[String, Array[Byte]]
-      val cols = fileNode.fieldNames()
-      while (cols.hasNext) {
-        val c = cols.next()
-        cb += c -> java.util.Base64.getDecoder.decode(fileNode.get(c).asText)
-      }
-      b += file -> cb.result()
-    }
-    b.result()
-  }
-
-  private def bucketOf(n: com.fasterxml.jackson.databind.JsonNode
-                      ): Option[BucketLayout] = {
-    val b = n.get("bucket")
-    if (b == null) None
-    else Some(BucketLayout(b.get("n").asInt, strSeq(b, "cols"),
-      strSeq(b, "sort")))
-  }
-
-  /** Parse the `defaults` object: {col: {"v": str, "files": [...]}}. */
-  private def defaultsOf(n: com.fasterxml.jackson.databind.JsonNode
-                        ): Map[String, (String, Set[String])] = {
-    val d = n.get("defaults")
-    if (d == null) return Map.empty
-    val it = d.fieldNames()
-    val b = Map.newBuilder[String, (String, Set[String])]
-    while (it.hasNext) {
-      val c = it.next(); val e = d.get(c)
-      b += c -> (e.get("v").asText, strSeq(e, "files").toSet)
-    }
-    b.result()
-  }
-
-  private def sizesOf(n: com.fasterxml.jackson.databind.JsonNode
-                     ): Map[String, Long] = {
-    val t = n.get("sizes")
-    if (t == null) Map.empty
-    else {
-      val it = t.fieldNames()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val k = it.next(); b += k -> t.get(k).asLong }
-      b.result()
-    }
-  }
-
-  private def schemaOf(n: com.fasterxml.jackson.databind.JsonNode
-                      ): Option[StructType] = {
-    val s = n.get("schema")
-    if (s == null) None
-    else Some(DataType.fromJson(s.toString).asInstanceOf[StructType])
-  }
-
-  /** One parsed checkpoint segment — the per-file maps of a slice of
-    * the table. Segment files (`_manifests/seg-v<N>-<uuid>.json`) are
-    * immutable once referenced (writers only ever create NEW segment
-    * names), so the cache key is just (dir, name). */
-  private final case class Segment(
-      files: Seq[String],
-      stats: Map[String, Map[String, ColStat]],
-      bloomRefs: Map[String, String],
-      sizes: Map[String, Long],
-      dvRefs: Map[String, String])
-
+  /** Checkpoint segments (`_manifests/seg-v<N>-<uuid>.json`), each the
+    * file list and per-file maps of a slice of the table. Segment
+    * files are immutable once referenced (writers only ever create NEW
+    * segment names), so the cache key is just (dir, name). */
   private val segmentCache =
-    new java.util.LinkedHashMap[(String, String), Segment](64, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, String), TableState](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Segment]): Boolean =
+          e: java.util.Map.Entry[(String, String), TableState]): Boolean =
         size() > 48
     }
 
   private def loadSegment(spark: SparkSession, dir: String,
-                          name: String): Segment = {
+                          name: String): TableState = {
     val key = (new Path(dir).toUri.getPath, name)
     segmentCache.synchronized {
       val hit = segmentCache.get(key)
       if (hit != null) return hit
     }
-    val txt = TableStore(spark, dir).readText(new Path(manifestDir(dir), name))
-      .getOrElse(throw new java.io.IOException(
-        s"checkpoint segment $name missing under $dir — vacuumed past " +
-          "the horizon, or the table directory was modified out of band"))
-    val n = mapper.readTree(txt)
-    val seg = Segment(strSeq(n, "files"), statsOf(n), bloomRefsOf(n),
-      sizesOf(n), dvRefsOf(n))
+    val seg = ManifestCodec.decodeSegment(
+      TableStore(spark, dir).readText(new Path(manifestDir(dir), name))
+        .getOrElse(throw new java.io.IOException(
+          s"checkpoint segment $name missing under $dir — vacuumed past " +
+            "the horizon, or the table directory was modified out of band")))
     segmentCache.synchronized { segmentCache.put(key, seg); () }
     seg
   }
 
-  private def fullState(spark: SparkSession, dir: String,
-                        n: com.fasterxml.jackson.databind.JsonNode
-                       ): TableState = {
-    val legacy = legacyBloomsOf(n)
-    // SEGMENTED checkpoint: the per-file maps live in referenced
-    // segment files; the manifest itself is O(segments) small.
-    if (n.get("segments") != null) {
-      val names = strSeq(n, "segments")
-      val segs = names.map(nm => nm -> loadSegment(spark, dir, nm))
-      return TableState(
-        files = segs.flatMap(_._2.files),
-        txns = txnsOf(n),
-        stats = segs.iterator.flatMap(_._2.stats).toMap,
-        bloomRefs = segs.iterator.flatMap(_._2.bloomRefs).toMap,
-        bloomCols = strSeq(n, "bloomcols"),
-        legacyBlooms = legacy,
-        schema = schemaOf(n),
-        sizes = segs.iterator.flatMap(_._2.sizes).toMap,
-        dvRefs = segs.iterator.flatMap(_._2.dvRefs).toMap,
-        segments = segs.map { case (nm, s) => nm -> s.files },
-        bucket = bucketOf(n),
-        constraints = refMapOf(n, "constraints"),
-        colMap = refMapOf(n, "colmap"),
-        retired = strSeq(n, "retired"),
-        props = refMapOf(n, "props"),
-        defaults = defaultsOf(n))
-    }
-    val refs = bloomRefsOf(n)
-    val cols = strSeq(n, "bloomcols") match {
-      case Seq() => legacy.values.flatMap(_.keys).toSeq.distinct
-      case cs => cs
-    }
-    // A delta-form v0 (never written by this code, but a truncated
-    // chain must fail loudly, not silently read half a table).
-    if (n.get("files") == null && strSeq(n, "removes").nonEmpty)
-      throw new java.io.IOException(
-        "manifest v0 is delta-form with removes — corrupt chain")
-    TableState(
-      files = if (n.get("files") != null) strSeq(n, "files")
-              else strSeq(n, "adds"),
-      txns = txnsOf(n), stats = statsOf(n), bloomRefs = refs,
-      bloomCols = cols, legacyBlooms = legacy, schema = schemaOf(n),
-      sizes = sizesOf(n), dvRefs = dvRefsOf(n), bucket = bucketOf(n),
-      constraints = refMapOf(n, "constraints"),
-      colMap = refMapOf(n, "colmap"),
-      retired = strSeq(n, "retired"),
-      props = refMapOf(n, "props"),
-      defaults = defaultsOf(n))
-  }
-
-  private def deltaState(parent: TableState,
-                         n: com.fasterxml.jackson.databind.JsonNode
-                        ): TableState = {
-    val adds = strSeq(n, "adds")
-    val removes = strSeq(n, "removes").toSet
-    val dvOverrides = dvRefsOf(n)
-    val dvRemoves = strSeq(n, "dvremoves").toSet
-    TableState(
-      files = parent.files.filterNot(removes) ++ adds,
-      txns = txnsOf(n), // full ledger rides in every manifest (small)
-      stats = (parent.stats -- removes) ++ statsOf(n),
-      bloomRefs = (parent.bloomRefs -- removes) ++ bloomRefsOf(n),
-      bloomCols = strSeq(n, "bloomcols") match {
-        case Seq() => parent.bloomCols
-        case cs => cs
-      },
-      legacyBlooms = parent.legacyBlooms -- removes,
-      schema = schemaOf(n).orElse(parent.schema),
-      sizes = (parent.sizes -- removes) ++ sizesOf(n),
-      // deletion-vector refs: delta entries REPLACE per file (a MoR
-      // delete supersedes the file's previous vector); removed files
-      // drop theirs with the file; explicit dvremoves (restore to a
-      // pre-vector version) drop a CARRIED file's vector.
-      dvRefs = (parent.dvRefs -- removes -- dvRemoves) ++ dvOverrides,
-      // segment composition rides through deltas untouched; overridden
-      // (or dropped) vectors mark their files' segment entries stale.
-      segments = parent.segments,
-      dvDirty = parent.dvDirty ++ dvOverrides.keySet ++ dvRemoves,
-      // The bucketing claim never inherits: each commit must
-      // re-assert it (appendBucketed does) or the table is no longer
-      // uniformly bucketed and the claim clears.
-      bucket = bucketOf(n),
-      // CHECK constraints DO inherit (they are table policy): a delta
-      // carries the field only when the set changed — present-but-
-      // empty means an explicit clear.
-      constraints = if (n.get("constraints") != null)
-        refMapOf(n, "constraints") else parent.constraints,
-      // Column mapping inherits the same way (present = replace,
-      // absent = inherit; an explicit empty object clears — the
-      // rename-back-to-identity case).
-      colMap = if (n.get("colmap") != null || n.get("retired") != null)
-        refMapOf(n, "colmap") else parent.colMap,
-      retired = if (n.get("colmap") != null || n.get("retired") != null)
-        strSeq(n, "retired") else parent.retired,
-      // properties inherit like constraints (present = replace,
-      // explicit-empty = clear, absent = inherit)
-      props = if (n.get("props") != null) refMapOf(n, "props")
-        else parent.props,
-      // column defaults: same change-only discipline
-      defaults = if (n.get("defaults") != null) defaultsOf(n)
-        else parent.defaults)
-  }
-
   /** The file list of a version (relative paths). */
   def manifestFiles(spark: SparkSession, dir: String, v: Long): Seq[String] =
-    stateOf(spark, dir, v).files
+    snapshot(spark, dir, v).files
 
-  /** Highest committed transaction version per writer app id (the
-    * exactly-once ledger [[transactionalAppend]] checks). */
-  def manifestTxns(spark: SparkSession, dir: String, v: Long): Map[String, Long] =
-    stateOf(spark, dir, v).txns
+  /** Per-file byte sizes of a version (see [[Snapshot.sizes]]). */
+  def manifestSizes(spark: SparkSession, dir: String,
+                    v: Long): Map[String, Long] =
+    snapshot(spark, dir, v).sizes
 
-  /** Per-file column stats of a version (file → column → ColStat).
-    * Files or columns without recorded stats are absent — and treated
-    * as un-prunable by [[readWhere]]. */
-  def manifestStats(spark: SparkSession, dir: String,
-                    v: Long): Map[String, Map[String, ColStat]] =
-    stateOf(spark, dir, v).stats
-
-  /** Per-file Bloom bitsets of a version (file → column → packed
+  /** The Bloom bitsets of `files` at `st` (file → column → packed
     * bitset): the point-lookup skipping summary — min/max stats
     * cannot prune an equality probe on a high-cardinality UNSORTED
     * key; a per-file Bloom filter can ([[pruneFilesEq]]). Bitsets
     * live in per-batch SIDECAR files under `_blooms/` (the public
     * Delta bloom-index layout) with the manifest holding only
-    * path-sized pointers — at 100 TB file counts the bitsets would
-    * otherwise dominate every manifest write. This accessor
-    * materializes the WHOLE map (sidecars included) for
-    * inspection/specs; the probe path ([[pruneFilesEq]]) loads only
-    * the sidecars of files that survive range pruning. */
-  def manifestBlooms(spark: SparkSession, dir: String,
-                     v: Long): Map[String, Map[String, Array[Byte]]] = {
-    val st = stateOf(spark, dir, v)
-    bloomsOf(spark, dir, st, st.bloomRefs.keySet)
-  }
-
-  /** The Bloom bitsets of `files` at `st`: inline legacy bitsets plus
-    * the entries of the sidecars those files reference, each sidecar
-    * loaded once. */
+    * path-sized pointers; each sidecar `files` reference is loaded
+    * once. */
   private def bloomsOf(spark: SparkSession, dir: String, st: TableState,
                        files: Set[String]
                       ): Map[String, Map[String, Array[Byte]]] =
-    st.legacyBlooms ++ st.bloomRefs.view.filterKeys(files).toMap
+    st.bloomRefs.view.filterKeys(files).toMap
       .groupBy(_._2).flatMap { case (ref, fileRefs) =>
         val side = loadBloomSidecar(spark, dir, ref)
         fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
@@ -751,79 +523,26 @@ object SnapshotTable {
       }
     }
 
-  /** The table schema a version's manifest records (absent on
-    * pre-evolution manifests → readers fall back to parquet
-    * inference over the snapshot's files). */
-  def manifestSchema(spark: SparkSession, dir: String,
-                     v: Long): Option[StructType] =
-    stateOf(spark, dir, v).schema
-
-  /** Per-file byte sizes a version's manifest records (absent for
-    * files committed by pre-r7 writers) — what lets planners build
-    * their file listing from the manifest alone, with zero
-    * per-file filesystem RPCs. */
-  def manifestSizes(spark: SparkSession, dir: String,
-                    v: Long): Map[String, Long] =
-    stateOf(spark, dir, v).sizes
-
-  /** Per-file deletion-vector refs of a version (file → `_dv/<batch>`
-    * sidecar, or a clone's absolute ref) — nonEmpty means the
-    * snapshot carries merge-on-read deletes that every row-level read
-    * must apply. */
-  def manifestDvRefs(spark: SparkSession, dir: String,
-                     v: Long): Map[String, String] =
-    stateOf(spark, dir, v).dvRefs
-
-  /** The version's bucketing claim ([[BucketLayout]]), if every data
-    * file was written by [[appendBucketed]] under one spec. The SQL
-    * read surfaces turn this into Spark's `BucketSpec`, so joins and
-    * aggregations on the bucket columns skip their Exchange. */
-  def manifestBucket(spark: SparkSession, dir: String,
-                     v: Long): Option[BucketLayout] =
-    stateOf(spark, dir, v).bucket
-
   /** Commit AUDIT LOG (the public DESCRIBE HISTORY shape): one row per
-    * surviving manifest — (version, op, files added, files removed,
-    * live file count, live bytes). Driver-side over the manifest
-    * chain (control plane; bounded by the vacuum window), surfaced as
-    * a DataFrame so it composes with SQL. Vacuumed versions are
-    * simply absent — the log is exactly as durable as time travel. */
+    * surviving manifest — (version, op, commit time, files added,
+    * files removed, live file count, live bytes). Driver-side over the
+    * manifest chain (control plane; bounded by the vacuum window) in
+    * one [[walk]], surfaced as a DataFrame so it composes with SQL.
+    * Vacuumed versions are simply absent — the log is exactly as
+    * durable as time travel. */
   def history(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val live = liveVersions(spark, dir)
     if (live.isEmpty)
       throw new java.io.IOException(s"history: no committed version under $dir")
-    // One ASCENDING pass carrying the previous version's state: each
-    // manifest is read exactly once (op and delta come from the same
-    // node), and nothing routes through the global LRU state cache —
-    // a per-version stateOf chain here would thrash it on tables with
-    // more surviving versions than the cache holds, costing
-    // O(versions × CheckpointEvery) manifest reads. The first
-    // surviving manifest is always full-form (v0, or vacuum's
-    // checkpoint rewrite of the oldest kept version); stateOf stays
-    // as a fallback for a chain that violates that.
-    var prev: Option[(Long, TableState)] = None
-    val rows = live.map { v =>
-      val node = manifestNode(spark, dir, v)
-      val st =
-        if (node.get("files") != null || node.get("segments") != null ||
-            v == 0L) fullState(spark, dir, node)
-        else prev match {
-          case Some((pv, ps)) if pv == v - 1 => deltaState(ps, node)
-          case _ => stateOf(spark, dir, v)
-        }
-      val op = Option(node.get("op")).map(_.asText).getOrElse("commit")
-      val prevFiles = prev match {
-        case Some((pv, ps)) if pv == v - 1 => ps.files.toSet
-        case _ => Set.empty[String]
-      }
-      prev = Some((v, st))
-      val cur = st.files.toSet
-      (v, op,
-        Option(node.get("ts")).map(t => java.lang.Long.valueOf(t.asLong))
-          .orNull.asInstanceOf[java.lang.Long],
-        (cur -- prevFiles).size.toLong, (prevFiles -- cur).size.toLong,
-        st.files.length.toLong, st.sizes.values.sum)
-    }
+    var prev: Option[Snapshot] = None
+    val rows = walk(spark, dir, live).map { s =>
+      val was = prev.filter(_.version == s.version - 1)
+        .fold(Set.empty[String])(_.files.toSet)
+      prev = Some(s)
+      val cur = s.files.toSet
+      (s.version, s.op, s.ts, (cur -- was).size.toLong,
+        (was -- cur).size.toLong, s.files.length.toLong, s.sizes.values.sum)
+    }.toSeq
     import spark.implicits._
     rows.toDF("version", "op", "commit_ts", "n_added", "n_removed",
       "n_files", "total_bytes")
@@ -832,56 +551,37 @@ object SnapshotTable {
   /** EXACT metadata-only COUNT(*): Σ per-file [[RowsCol]] footer
     * counts − Σ deletion-vector masked positions. At 100 TB this is
     * the difference between an instant manifest fold and an
-    * hour-long scan. Files written before counts existed (legacy) are
-    * counted by scanning JUST those files; vectors are exact by
+    * hour-long scan. Every live file records its count (a manifest
+    * without one is refused as a retired layout); vectors are exact by
     * construction (each sidecar row is one masked live position), so
     * the result equals `read().count()` bit-for-bit — pinned in
     * SnapshotOpsSpec and oracle-checked by q_snapshot_count. */
   def countRows(spark: SparkSession, dir: String,
                 version: Option[Long] = None): Long = {
     val (_, st) = resolve(spark, dir, version, "countRows")
-    val (counted, uncounted) = st.files.partition(f =>
-      st.stats.get(f).exists(_.contains(RowsCol)))
-    // legacy files (no recorded count) are scanned, vectors applied
-    val scanned =
-      if (uncounted.isEmpty) 0L
-      else readFilesWithDv(spark, dir, st, uncounted).count()
     // distinct() is load-bearing here (COUNT is duplicate-sensitive):
     // dvRows serves raw sidecar rows, unique by writer invariant, but
     // exactness of the subtraction must not rest on that invariant
     // alone — a hand-edited or foreign sidecar with a duplicate
     // position must still count each masked row once.
-    val masked = dvRows(spark, dir, st.dvRefs, counted)
+    val masked = dvRows(spark, dir, st.dvRefs, st.files)
       .map(_.distinct().count()).getOrElse(0L)
-    counted.iterator.map(f => st.stats(f)(RowsCol).min.toLong).sum -
-      masked + scanned
+    st.files.iterator.map(f => st.stats(f)(RowsCol).min.toLong).sum - masked
   }
-
-  /** The raw commit wall-clock of version `v` (epoch millis); None for
-    * manifests stamped before timestamps existed. */
-  def manifestCommitTime(spark: SparkSession, dir: String,
-                         v: Long): Option[Long] =
-    Option(manifestNode(spark, dir, v).get("ts")).map(_.asLong)
 
   /** The surviving versions with their MONOTONICITY-ADJUSTED commit
     * times — the public Delta discipline: `adj(v) = max(adj(v-1)+1,
     * ts(v))`, so clock skew between committers (or a re-stamped
-    * manifest) can never make history run backwards; a legacy
-    * manifest with no stamp inherits `adj(prev)+1` (unknown-age
-    * history sorts as old as possible). This is the timeline
-    * `TIMESTAMP AS OF` resolves against. One manifest read per
-    * surviving version — control plane. */
+    * manifest) can never make history run backwards. This is the
+    * timeline `TIMESTAMP AS OF` resolves against. One manifest read
+    * per surviving version — control plane. */
   def commitTimeline(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
     val live = liveVersions(spark, dir)
     if (live.isEmpty) throw new java.io.IOException(
       s"commitTimeline: no committed version under $dir")
-    var adj = Long.MinValue
-    live.map { v =>
-      val raw = Option(manifestNode(spark, dir, v).get("ts"))
-        .map(_.asLong).getOrElse(Long.MinValue)
-      adj = math.max(adj + 1, raw)
-      v -> adj
-    }
+    val stamps = walk(spark, dir, live).map(s => s.version -> s.ts).toSeq
+    stamps.tail.scanLeft(stamps.head) { case ((_, adj), (v, ts)) =>
+      v -> math.max(adj + 1, ts) }
   }
 
   /** Resolve `TIMESTAMP AS OF tsMillis`: the LATEST version whose
@@ -906,11 +606,10 @@ object SnapshotTable {
 
   /** Per-version (op, added files, removed files) over
     * `(fromExclusive, to]` — the commit-granular delta walk the
-    * streaming source consumes. One manifest read per version (same
-    * ascending-carry discipline as [[history]]); every version in the
-    * range must still exist (a vacuumed manifest fails loudly — a
-    * stream restarted past the retention horizon must not silently
-    * skip data). */
+    * streaming source consumes, one manifest read per version
+    * ([[walk]]); every version in the range must still exist (a
+    * vacuumed manifest fails loudly — a stream restarted past the
+    * retention horizon must not silently skip data). */
   private[graft] final case class VersionDelta(
       version: Long, op: String, adds: Seq[String], removes: Seq[String],
       dvChanged: Seq[String] = Nil)
@@ -919,39 +618,22 @@ object SnapshotTable {
                                    fromExclusive: Long, to: Long
                                   ): Seq[VersionDelta] = {
     if (fromExclusive >= to) return Seq.empty
-    var prev: Option[(Long, TableState)] = None
-    (math.max(0L, fromExclusive) to to).flatMap { v =>
-      val node = manifestNode(spark, dir, v)
-      val op = Option(node.get("op")).map(_.asText).getOrElse("commit")
-      val st =
-        if (node.get("files") != null || node.get("segments") != null ||
-            v == 0L) fullState(spark, dir, node)
-        else prev match {
-          case Some((pv, ps)) if pv == v - 1 => deltaState(ps, node)
-          case _ => stateOf(spark, dir, v)
-        }
-      val out =
-        if (v <= fromExclusive) None
-        else {
-          val (prevFiles, prevDv) = prev match {
-            case Some((pv, ps)) if pv == v - 1 => (ps.files.toSet, ps.dvRefs)
-            case _ if v == 0L => (Set.empty[String], Map.empty[String, String])
-            case _ =>
-              val ps = stateOf(spark, dir, v - 1)
-              (ps.files.toSet, ps.dvRefs)
-          }
-          val cur = st.files
-          Some(VersionDelta(v, op,
-            cur.filterNot(prevFiles).sorted,
-            prevFiles.diff(cur.toSet).toSeq.sorted,
-            // carried files whose deletion vector moved: a MoR delete
-            // changed rows without changing the file list
-            cur.filter(f => prevFiles.contains(f) &&
-              prevDv.get(f) != st.dvRefs.get(f)).sorted))
-        }
-      prev = Some((v, st))
-      out
-    }
+    var prev = TableState() // before v0
+    walk(spark, dir, math.max(0L, fromExclusive) to to).flatMap { s =>
+      val p = prev
+      prev = s.state
+      if (s.version <= fromExclusive) None
+      else {
+        val was = p.files.toSet
+        Some(VersionDelta(s.version, s.op,
+          s.files.filterNot(was).sorted,
+          was.diff(s.files.toSet).toSeq.sorted,
+          // carried files whose deletion vector moved: a MoR delete
+          // changed rows without changing the file list
+          s.files.filter(f => was(f) &&
+            p.dvRefs.get(f) != s.dvRefs.get(f)).sorted))
+      }
+    }.toSeq
   }
 
   // ------------------------------------------------------------------
@@ -959,7 +641,7 @@ object SnapshotTable {
   // ------------------------------------------------------------------
 
   /** Write one batch's bitsets as `_blooms/<batch>.json`
-    * ({file: {col: base64}}), returning the per-file refs the
+    * ([[ManifestCodec.encodeBlooms]]), returning the per-file refs the
     * manifest records. Sidecars are immutable once written, named by
     * the batch UUID — no commit races. */
   private def writeBloomSidecar(spark: SparkSession, dir: String,
@@ -968,18 +650,10 @@ object SnapshotTable {
                                ): Map[String, String] = {
     if (blooms.isEmpty) return Map.empty
     val rel = s"_blooms/$batch.json"
-    val root = new java.util.LinkedHashMap[String, Object]()
-    blooms.toSeq.sortBy(_._1).foreach { case (file, cols) =>
-      val cj = new java.util.LinkedHashMap[String, Object]()
-      cols.toSeq.sortBy(_._1).foreach { case (c, bits) =>
-        cj.put(c, java.util.Base64.getEncoder.encodeToString(bits))
-      }
-      root.put(file, cj)
-    }
     // uniquely named per batch, referenced only by the manifest
     // committed after it — writeNew's no-rename contract applies
     TableStore(spark, dir).writeNew(new Path(dir, rel),
-      mapper.writeValueAsString(root))
+      ManifestCodec.encodeBlooms(blooms))
     blooms.keys.map(_ -> rel).toMap
   }
 
@@ -992,9 +666,8 @@ object SnapshotTable {
             else new Path(ref)
     // a vacuumed sidecar is un-probeable: its files are kept
     TableStore(spark.sparkContext.hadoopConfiguration, p).readText(p)
-      .map(txt => bloomMapOf(mapper.readTree(txt))).getOrElse(Map.empty)
+      .map(ManifestCodec.decodeBlooms).getOrElse(Map.empty)
   }
-
   /** Add-column schema evolution (the [[graft.catalog.Catalog]] /
     * reference-O16 discipline, enforced at the table-format layer):
     * every existing column keeps its type — a same-name type conflict
@@ -1215,7 +888,7 @@ object SnapshotTable {
                                      streaming: Boolean = false,
                                      sqlSurface: Boolean = false
                                     ): DataFrame = {
-    val logical = schema.getOrElse(logicalSchemaOf(spark, dir, st))
+    val logical = schema.getOrElse(st.schema)
     def scan(fs: Seq[String]): DataFrame = {
       val base = physicalScan(spark, dir, st, fs,
         physSchemaOf(st.colMap, logical), streaming, sqlSurface)
@@ -1249,16 +922,6 @@ object SnapshotTable {
         }.toIndexedSeq: _*)
       }.reduce(_ unionByName _)
   }
-
-  /** The logical schema of snapshot `st`: the manifest's, or — for a
-    * manifest written before schemas were recorded — parquet's
-    * inference over the snapshot's files. */
-  private[sources] def logicalSchemaOf(spark: SparkSession, dir: String,
-                                       st: TableState): StructType =
-    st.schema.getOrElse(
-      if (st.files.isEmpty) new StructType()
-      else spark.read.parquet(st.files.map(absPath(dir, _).toString): _*)
-        .schema)
 
   /** `files` of snapshot `st` scanned under `scanSchema` (physical
     * names) as a bare frame over [[snapshotRelation]] — `_metadata`
@@ -1301,64 +964,6 @@ object SnapshotTable {
     * replay length (≤ CheckpointEvery manifest reads, amortized away
     * by the state cache). */
   private val CheckpointEvery = 10L
-
-  /** Checkpoints at or below this many files inline the complete
-    * per-file maps (one self-contained JSON — simplest to read and
-    * debug, and every small table stays in the format it always had);
-    * above it they write SEGMENTED form. */
-  private[sources] val SegmentInlineMax = 256
-
-  /** Bound on a segmented checkpoint's segment-file count; crossing
-    * it folds the smallest reusable segments into the commit's new
-    * segment (log-structured merge, amortized O(batch·log)). */
-  private val MaxSegments = 16
-
-  /** Write one immutable checkpoint segment (content-atomic:
-    * tmp + rename) holding the per-file maps of exactly `segFiles`.
-    * Written BEFORE the manifest CAS — a lost commit race leaves an
-    * orphan segment that [[vacuum]] age-GCs, never a dangling
-    * reference. Returns the segment file name. */
-  private def writeSegment(spark: SparkSession, dir: String, v: Long,
-                           segFiles: Seq[String],
-                           stats: Map[String, Map[String, ColStat]],
-                           bloomRefs: Map[String, String],
-                           sizes: Map[String, Long],
-                           dvRefs: Map[String, String]): String = {
-    val segSet = segFiles.toSet
-    val root = new java.util.LinkedHashMap[String, Object]()
-    val fj = new java.util.ArrayList[String]()
-    segFiles.foreach(fj.add)
-    root.put("files", fj)
-    def putMap[A](field: String, m: Map[String, A])(js: A => Object): Unit = {
-      val restricted = m.view.filterKeys(segSet).toMap
-      if (restricted.nonEmpty) {
-        val o = new java.util.LinkedHashMap[String, Object]()
-        restricted.toSeq.sortBy(_._1).foreach { case (k, x) =>
-          o.put(k, js(x)) }
-        root.put(field, o)
-      }
-    }
-    putMap("stats", stats) { cols =>
-      val cj = new java.util.LinkedHashMap[String, Object]()
-      cols.toSeq.sortBy(_._1).foreach { case (c, st) =>
-        val a = new java.util.ArrayList[String]()
-        a.add(st.tag); a.add(st.min); a.add(st.max)
-        cj.put(c, a)
-      }
-      cj
-    }
-    putMap("bloomrefs", bloomRefs)(r => r)
-    putMap("sizes", sizes)(n => java.lang.Long.valueOf(n))
-    putMap("dvrefs", dvRefs)(r => r)
-    val name = s"seg-v$v-${java.util.UUID.randomUUID()}.json"
-    TableStore(spark, dir).overwrite(new Path(manifestDir(dir), name),
-      mapper.writeValueAsString(root))
-    name
-  }
-
-  /** The state a table's first commit builds on. */
-  private val EmptyState = TableState(Nil, Map.empty, Map.empty, Map.empty,
-    Nil, Map.empty, None, Map.empty)
 
   /** The optimistic commit protocol every writer shares (the Delta
     * log's): read the head, let `step` compute the COMPLETE next state
@@ -1410,271 +1015,33 @@ object SnapshotTable {
   /** Try to commit the COMPLETE state `next` as version `v` on top of
     * `parent`, the state at v-1 (None for v0). True iff this writer
     * won the publish race for v<N>. What lands on disk is a DELTA
-    * against the parent (adds/removes + adds' stats/bloom refs —
-    * O(batch) bytes) except every [[CheckpointEvery]]-th version and
-    * v0, which write the full checkpoint form; readers reconstruct via
-    * [[stateOf]]. Column defaults PRUNE to `next`'s live files here: a
-    * rewritten pre-ADD file materialized its default, so its entry
-    * (and, eventually, the whole column's) retires. Content-atomic:
-    * the body is fully written to a hidden temp file, then renamed
-    * into place — a reader can never observe a partially-written
-    * manifest. */
+    * against the parent (O(batch) bytes) except every
+    * [[CheckpointEvery]]-th version and v0, which write the checkpoint
+    * form ([[ManifestCodec.encode]]). Content-atomic: the body is
+    * fully written to a hidden temp file, then renamed into place — a
+    * reader can never observe a partially-written manifest. */
   private def tryCommit(spark: SparkSession, dir: String, v: Long,
                         parent: Option[TableState], next: TableState,
                         op: String): Boolean = commitLock.synchronized {
     val s = TableStore(spark, dir)
     val target = manifestPath(dir, v)
     if (s.exists(target)) return false
-    val live = next.files.toSet
-    val defaults = next.defaults
-      .map { case (c, (dv, pre)) => c -> (dv, pre.intersect(live)) }
-      .filter(_._2._2.nonEmpty)
-    s.createExclusive(target, manifestBody(spark, dir, v, parent,
-      next.copy(defaults = defaults), op,
+    s.createExclusive(target, manifestBody(s, dir,
+      Snapshot(v, System.currentTimeMillis(), op, next), parent,
       full = v == 0L || v % CheckpointEvery == 0L))
   }
 
-  /** Serialize `next` as the manifest body of version `v` — full
-    * checkpoint form, or a delta against `parent` (the already
-    * committed, hence stable, state at v-1). A segmented checkpoint
-    * reuses the parent's intact segments. */
-  private def manifestBody(spark: SparkSession, dir: String, v: Long,
-                           parent: Option[TableState], next: TableState,
-                           op: String, full: Boolean,
-                           tsOverride: Option[Long] = None,
-                           stampTs: Boolean = true): String = {
-    import next.{bloomCols, bloomRefs, bucket, colMap, constraints,
-      defaults, dvRefs, files, props, retired, schema, sizes, stats, txns}
-    val root = new java.util.LinkedHashMap[String, Object]()
-    root.put("version", java.lang.Long.valueOf(v))
-    // Commit wall-clock — what TIMESTAMP AS OF resolves against
-    // (monotonicity-adjusted at read time, see [[commitTimeline]]).
-    // tsOverride preserves the ORIGINAL stamp when vacuum rewrites
-    // the keepFrom manifest in checkpoint form — and a rewrite of a
-    // LEGACY stampless manifest must stay stampless (stampTs = false):
-    // stamping it "now" would adjust every later version past the
-    // vacuum time and corrupt historical resolution.
-    tsOverride match {
-      case Some(t) => root.put("ts", java.lang.Long.valueOf(t))
-      case None if stampTs =>
-        root.put("ts", java.lang.Long.valueOf(System.currentTimeMillis()))
-      case None => // legacy rewrite: omit, commitTimeline floors it
-    }
-    root.put("op", op)
-    schema.foreach(st => root.put("schema", mapper.readTree(st.json)))
-    bucket.foreach { b =>
-      val bj = new java.util.LinkedHashMap[String, Object]()
-      bj.put("n", java.lang.Integer.valueOf(b.numBuckets))
-      val cj = new java.util.ArrayList[String]()
-      b.cols.foreach(cj.add)
-      bj.put("cols", cj)
-      if (b.sortCols.nonEmpty) {
-        val sj = new java.util.ArrayList[String]()
-        b.sortCols.foreach(sj.add)
-        bj.put("sort", sj)
-      }
-      root.put("bucket", bj)
-    }
-    val tj = new java.util.LinkedHashMap[String, Object]()
-    txns.toSeq.sortBy(_._1).foreach { case (a, tv) =>
-      tj.put(a, java.lang.Long.valueOf(tv)) }
-    root.put("txns", tj)
-    val fileSet = files.toSet
-    // Only stats/refs of committed files: a retry loop may carry maps
-    // from a superseded read — intersect, never invent.
-    def putStats(m: Map[String, Map[String, ColStat]]): Unit =
-      if (m.nonEmpty) {
-        val sj = new java.util.LinkedHashMap[String, Object]()
-        m.toSeq.sortBy(_._1).foreach { case (file, cols) =>
-          val cj = new java.util.LinkedHashMap[String, Object]()
-          cols.toSeq.sortBy(_._1).foreach { case (c, st) =>
-            val a = new java.util.ArrayList[String]()
-            a.add(st.tag); a.add(st.min); a.add(st.max)
-            cj.put(c, a)
-          }
-          sj.put(file, cj)
-        }
-        root.put("stats", sj)
-      }
-    def putRefMap(field: String, m: Map[String, String]): Unit =
-      if (m.nonEmpty) {
-        val bj = new java.util.LinkedHashMap[String, Object]()
-        m.toSeq.sortBy(_._1).foreach { case (file, ref) => bj.put(file, ref) }
-        root.put(field, bj)
-      }
-    def putRefs(m: Map[String, String]): Unit = putRefMap("bloomrefs", m)
-    // Per-file byte sizes: planners (SnapshotFileIndex, compact) read
-    // them from the manifest instead of paying one filesystem RPC per
-    // file — the manifest-only-planning property object stores need.
-    def putSizes(m: Map[String, Long]): Unit =
-      if (m.nonEmpty) {
-        val zj = new java.util.LinkedHashMap[String, Object]()
-        m.toSeq.sortBy(_._1).foreach { case (file, n) =>
-          zj.put(file, java.lang.Long.valueOf(n)) }
-        root.put("sizes", zj)
-      }
-    if (bloomCols.nonEmpty) {
-      val cj = new java.util.ArrayList[String]()
-      bloomCols.distinct.sorted.foreach(cj.add)
-      root.put("bloomcols", cj)
-    }
-    def putConstraints(m: Map[String, String]): Unit = {
-      val cj = new java.util.LinkedHashMap[String, Object]()
-      m.toSeq.sortBy(_._1).foreach { case (nm, sql) => cj.put(nm, sql) }
-      root.put("constraints", cj)
-    }
-    // Column mapping: `colmap` (sparse logical→physical) + `retired`
-    // (dropped physical names). An explicit EMPTY colmap object is a
-    // clear (rename-back-to-identity); absence inherits in deltas.
-    def putColMap(): Unit = {
-      val mj = new java.util.LinkedHashMap[String, Object]()
-      colMap.toSeq.sortBy(_._1).foreach { case (l, p) => mj.put(l, p) }
-      root.put("colmap", mj)
-      if (retired.nonEmpty) {
-        val rj = new java.util.ArrayList[String]()
-        retired.foreach(rj.add)
-        root.put("retired", rj)
-      }
-    }
-    def putProps(m: Map[String, String]): Unit = {
-      val pj = new java.util.LinkedHashMap[String, Object]()
-      m.toSeq.sortBy(_._1).foreach { case (k, v2) => pj.put(k, v2) }
-      root.put("props", pj)
-    }
-    def putDefaults(m: Map[String, (String, Set[String])]): Unit = {
-      val dj = new java.util.LinkedHashMap[String, Object]()
-      m.toSeq.sortBy(_._1).foreach { case (c, (dv, pre)) =>
-        val ej = new java.util.LinkedHashMap[String, Object]()
-        ej.put("v", dv)
-        val fj = new java.util.ArrayList[String]()
-        pre.toSeq.sorted.foreach(fj.add)
-        ej.put("files", fj)
-        dj.put(c, ej)
-      }
-      root.put("defaults", dj)
-    }
-    if (full) { if (constraints.nonEmpty) putConstraints(constraints) }
-    if (full) { if (colMap.nonEmpty || retired.nonEmpty) putColMap() }
-    if (full) { if (props.nonEmpty) putProps(props) }
-    if (full) { if (defaults.nonEmpty) putDefaults(defaults) }
-    if (full && files.size > SegmentInlineMax) {
-      // SEGMENTED checkpoint — the 100 TB commit-cost answer (the
-      // public Iceberg manifest-list design): the checkpoint
-      // references immutable SEGMENT files instead of inlining the
-      // complete per-file maps. Segments of the previous checkpoint
-      // whose files all survive (and carry no overridden deletion
-      // vector) are referenced AS-IS — zero bytes rewritten; only the
-      // batch's new files plus the survivors of broken segments land
-      // in one new segment. A commit's manifest write is therefore
-      // O(batch + churn), never O(table). Segment count is bounded by
-      // folding the smallest reusable segments into the new one
-      // (log-structured merging — amortized O(batch·log) bytes).
-      val parentSegs = parent.map(_.segments).getOrElse(Nil)
-      val dirty = parent.map(p => p.dvDirty ++
-        files.filter(f => dvRefs.get(f) != p.dvRefs.get(f)))
-        .getOrElse(Set.empty[String])
-      var keep = parentSegs.filter { case (_, segFiles) =>
-        segFiles.nonEmpty &&
-          segFiles.forall(f => fileSet(f) && !dirty(f)) }
-      val covered = keep.iterator.flatMap(_._2).toSet
-      var fold = files.filterNot(covered)
-      while (keep.size + 1 > MaxSegments) {
-        val smallest = keep.minBy { case (nm, fs2) => (fs2.size, nm) }
-        keep = keep.filterNot(_ == smallest)
-        fold = fold ++ smallest._2
-      }
-      val segNames = keep.map(_._1) ++ (
-        if (fold.nonEmpty)
-          Seq(writeSegment(spark, dir, v, fold.sorted,
-            stats.view.filterKeys(fileSet).toMap,
-            bloomRefs.view.filterKeys(fileSet).toMap,
-            sizes.view.filterKeys(fileSet).toMap,
-            dvRefs.view.filterKeys(fileSet).toMap))
-        else Nil)
-      val sj = new java.util.ArrayList[String]()
-      segNames.foreach(sj.add)
-      root.put("segments", sj)
-    } else if (full) {
-      val fj = new java.util.ArrayList[String]()
-      files.sorted.foreach(fj.add)
-      root.put("files", fj)
-      putStats(stats.view.filterKeys(fileSet).toMap)
-      putRefs(bloomRefs.view.filterKeys(fileSet).toMap)
-      putSizes(sizes.view.filterKeys(fileSet).toMap)
-      putRefMap("dvrefs", dvRefs.view.filterKeys(fileSet).toMap)
-    } else {
-      val p = parent.getOrElse(throw new IllegalStateException(
-        s"manifest v$v: a delta needs the state at v${v - 1}"))
-      val parentSet = p.files.toSet
-      val adds = files.filterNot(parentSet)
-      val removes = p.files.filterNot(fileSet)
-      val aj = new java.util.ArrayList[String]()
-      adds.sorted.foreach(aj.add)
-      root.put("adds", aj)
-      val rj = new java.util.ArrayList[String]()
-      removes.sorted.foreach(rj.add)
-      root.put("removes", rj)
-      putStats(stats.view.filterKeys(adds.toSet).toMap)
-      putRefs(bloomRefs.view.filterKeys(adds.toSet).toMap)
-      putSizes(sizes.view.filterKeys(adds.toSet).toMap)
-      // dv refs in a delta are per-file OVERRIDES — record exactly
-      // the entries that changed vs the parent (new files' vectors
-      // and MoR-superseded vectors of carried files).
-      putRefMap("dvrefs", dvRefs.view.filterKeys(fileSet)
-        .filter { case (f, r) => !p.dvRefs.get(f).contains(r) }.toMap)
-      // A CARRIED file whose vector is DROPPED (restore to a
-      // pre-vector version) needs an explicit remove record — an
-      // override map alone can't say "no vector anymore".
-      val dvRemoves = p.files.filter(f => fileSet(f) &&
-        p.dvRefs.contains(f) && !dvRefs.contains(f)).sorted
-      if (dvRemoves.nonEmpty) {
-        val dj = new java.util.ArrayList[String]()
-        dvRemoves.foreach(dj.add)
-        root.put("dvremoves", dj)
-      }
-      // constraints in a delta only when the set CHANGED — a
-      // present-but-empty object is an explicit clear, absence
-      // inherits (see deltaState).
-      if (constraints != p.constraints) putConstraints(constraints)
-      // column mapping in a delta only when it CHANGED (same
-      // discipline: present = replace, explicit-empty = clear).
-      if (colMap != p.colMap || retired != p.retired) putColMap()
-      // properties: same change-only discipline. No reader feature
-      // guard — props never change READ semantics, only write routing.
-      if (props != p.props) putProps(props)
-      // column defaults: change-only (present = replace, explicit
-      // empty = clear — the last-pre-file-rewritten case)
-      if (defaults != p.defaults) putDefaults(defaults)
-    }
-    // Stamp exactly the reader features this manifest's resolution
-    // depends on (see [[SupportedFeatures]]); a plain manifest stays
-    // list-free and readable by every release. "dv" must key off the
-    // EFFECTIVE refs, not the root key — a segmented checkpoint's
-    // vectors live inside segment files (a segments-capable but
-    // DV-unaware reader would otherwise pass the guard and resurrect
-    // masked rows).
-    val usesDv = root.containsKey("dvrefs") ||
-      (full && dvRefs.view.filterKeys(fileSet).nonEmpty)
-    // "colmap" guards only manifests that RECORD a live mapping: a
-    // reader unaware of it would serve physical column names (or
-    // resurrect dropped columns). An explicit-empty clear needs no
-    // guard — identity is what a legacy reader assumes anyway.
-    val usesColMap = (root.containsKey("colmap") ||
-      root.containsKey("retired")) && (colMap.nonEmpty || retired.nonEmpty)
-    // "defaults" keys off the EFFECTIVE map (the dv discipline): a
-    // reader unaware of initial defaults would serve NULL where the
-    // table's contract says the default value.
-    val feats = Seq("segments", "dvremoves", "constraints",
-      "bucket").filter(root.containsKey) ++
-      (if (usesDv) Seq("dv") else Nil) ++
-      (if (usesColMap) Seq("colmap") else Nil) ++
-      (if (defaults.nonEmpty) Seq("defaults") else Nil)
-    if (feats.nonEmpty) {
-      val fj = new java.util.ArrayList[String]()
-      feats.foreach(fj.add)
-      root.put("features", fj)
-    }
-    mapper.writeValueAsString(root)
+  /** [[ManifestCodec.encode]] of `snap`, with the new checkpoint
+    * segments it references written first (content-atomic: tmp +
+    * rename). A lost commit race leaves an orphan segment that
+    * [[vacuum]] age-GCs, never a dangling reference. */
+  private def manifestBody(s: TableStore, dir: String, snap: Snapshot,
+                           parent: Option[TableState],
+                           full: Boolean): String = {
+    val (body, segments) = ManifestCodec.encode(snap, parent, full)
+    segments.foreach { case (name, seg) =>
+      s.overwrite(new Path(manifestDir(dir), name), seg) }
+    body
   }
 
   // ------------------------------------------------------------------
@@ -1776,20 +1143,6 @@ object SnapshotTable {
     * the stats tracking filters to batch columns, and the name is
     * documented reserved). */
   private[graft] val RowsCol = "__rows"
-
-  /** Per-file row counts from the parquet FOOTERS of freshly written
-    * files — driver-side metadata reads (no executor job, no data
-    * pages): the count every parquet file already carries. Shaped as
-    * [[RowsCol]] pseudo-stats for direct merging into a batch's stats
-    * map. */
-  private def footerRowCounts(spark: SparkSession, dir: String,
-                              statuses: Seq[FileStatus]
-                             ): Map[String, Map[String, ColStat]] =
-    readFooters(spark.sparkContext.hadoopConfiguration, statuses) { (st, rd) =>
-      val cnt = rd.getRecordCount
-      manifestKey(dir, st.getPath.toString) ->
-        Map(RowsCol -> ColStat("num", cnt.toString, cnt.toString))
-    }.toMap
 
   /** Open each file's parquet FOOTER and apply `f` to the open reader
     * — driver-side metadata reads (no executor job, no data pages).
@@ -2036,9 +1389,9 @@ object SnapshotTable {
     * STRING, reproducible on the probe side via `value.toString` for
     * the [[bloomEligible]] types. Caller-supplied Bloom columns were
     * already checked by [[inheritTracking]]; an ineligible column
-    * here is a RECORDED legacy one the rules have since rejected, and
-    * it stops carrying bitsets (pruning degrades, correctness does
-    * not) rather than wedge every rewrite of an old table. */
+    * here is a recorded one (rewrite paths pass the table's tracking
+    * unchecked), and it stops carrying bitsets (pruning degrades,
+    * correctness does not) rather than wedge every rewrite. */
   private def batchSummaries(spark: SparkSession, batchDir: Path,
                              statsCols: Seq[String],
                              bloomCols: Seq[String]
@@ -2096,8 +1449,8 @@ object SnapshotTable {
     * that's an unprunable stripe in the middle of the table, invisible
     * until someone profiles the scans). Caller-passed bloom columns
     * get the eligibility check here, before any write (a typo fails
-    * loudly); INHERITED legacy columns the rules have since rejected
-    * just stop carrying bitsets in [[batchSummaries]]. */
+    * loudly); INHERITED columns the rules reject just stop carrying
+    * bitsets in [[batchSummaries]]. */
   private def inheritTracking(spark: SparkSession, dir: String,
                               df: DataFrame, statsCols: Seq[String],
                               bloomCols: Seq[String])
@@ -2115,7 +1468,7 @@ object SnapshotTable {
     val cm = base.map(stateOf(spark, dir, _).colMap).getOrElse(Map.empty)
     val fields = df.schema.fieldNames.map(physName(cm, _)).toSet
     val ts = base.map(trackedStatsCols(spark, dir, _)).getOrElse(Nil)
-    val tb = base.map(trackedBloomCols(spark, dir, _)).getOrElse(Nil)
+    val tb = base.map(stateOf(spark, dir, _).bloomCols).getOrElse(Nil)
     ((statsCols.map(physName(cm, _)) ++ ts.filter(fields)).distinct,
       (bloomCols.map(physName(cm, _)) ++ tb.filter(fields)).distinct)
   }
@@ -2133,8 +1486,8 @@ object SnapshotTable {
     // Pre-flight evolution check BEFORE the data write: a type
     // conflict must not cost a doomed batch (the authoritative check
     // re-runs against whatever manifest the commit loop lands on).
-    latestVersion(spark, dir).flatMap(manifestSchema(spark, dir, _))
-      .foreach(evolveSchema(_, df.schema))
+    latestVersion(spark, dir).foreach(v =>
+      evolveSchema(stateOf(spark, dir, v).schema, df.schema))
     val vcs = enforceConstraints(spark, dir, df, "append")
     val (sCols, bCols) = inheritTracking(spark, dir, df, statsCols, bloomCols)
     val wb = labeled(spark, "append") { writeBatch(df, dir, sCols, bCols) }
@@ -2161,13 +1514,13 @@ object SnapshotTable {
     val wb = writeBatch(df, dir, sCols, bCols)
     commitLoop(spark, dir, "overwrite", maxRetries) { (_, st) =>
       checkMapClaim(st, wb.claim, "overwrite")
-      val cur = st.getOrElse(EmptyState)
+      val cur = st.getOrElse(TableState())
       // A new table body: files, summaries, schema and tracking are the
       // batch's; vectors and the bucket claim clear; the ledger and the
       // table policy (constraints, properties, mapping) carry forward.
       val next = cur.copy(files = wb.added, stats = wb.stats,
         bloomRefs = wb.refs, bloomCols = wb.bloomCols, sizes = wb.sizes,
-        schema = Some(StructType(df.schema.fields.map(_.copy(nullable = true)))),
+        schema = StructType(df.schema.fields.map(_.copy(nullable = true))),
         dvRefs = Map.empty, bucket = None,
         colMap = wb.claim.fold(cur.colMap)(_.colMap),
         retired = wb.claim.fold(cur.retired)(_.retired))
@@ -2193,17 +1546,16 @@ object SnapshotTable {
     var validated = validatedConstraints
     commitLoop(spark, dir, op, maxRetries) { (_, st) =>
       checkMapClaim(st, wb.claim, op)
-      val cur = st.getOrElse(EmptyState)
+      val cur = st.getOrElse(TableState())
       // a racing replay won: no commit, our files stay orphaned
       if (replayed(cur, txn)) None
       else {
-        val unified = evolveSchema(cur.schema.getOrElse(new StructType()),
-          dfSchema)
+        val unified = evolveSchema(cur.schema, dfSchema)
         // A bucketing claim only survives the commit if whatever table
         // state this attempt lands on still supports it (empty, or
         // bucketed with the SAME spec) — a racing unbucketed writer
         // degrades the claim instead of corrupting co-location.
-        val next = landed(cur, wb).copy(schema = Some(unified),
+        val next = landed(cur, wb).copy(schema = unified,
           txns = cur.txns ++ txn,
           bucket = bucket.filter(b =>
             cur.files.isEmpty || cur.bucket.contains(b)))
@@ -2253,8 +1605,8 @@ object SnapshotTable {
                               df: DataFrame, op: String,
                               writer: String): Option[TableState] =
     latestVersion(spark, dir).map { v =>
-      manifestSchema(spark, dir, v).foreach(evolveSchema(_, df.schema))
       val cur = stateOf(spark, dir, v)
+      evolveSchema(cur.schema, df.schema)
       require(cur.colMap.isEmpty && cur.retired.isEmpty,
         s"$op: not supported on a column-mapped table — the $writer " +
           "writer derives its layout from column names; use append " +
@@ -2505,8 +1857,7 @@ object SnapshotTable {
     val claim =
       if (baseMap.isEmpty && baseRet.isEmpty) None
       else {
-        val known = baseSt.flatMap(_.schema)
-          .map(_.fieldNames.toSet).getOrElse(Set.empty)
+        val known = baseSt.fold(Set.empty[String])(_.schema.fieldNames.toSet)
         var taken = known.map(physName(baseMap, _)) ++ baseRet
         var m = baseMap
         df.schema.fieldNames.filterNot(known).foreach { l =>
@@ -2624,7 +1975,7 @@ object SnapshotTable {
     latestVersion(spark, dir).foreach(v => throw new IllegalStateException(
       s"createEmpty: a snapshot table already exists under $dir (v$v)"))
     if (!tryCommit(spark, dir, 0L, None,
-        EmptyState.copy(schema = Some(schema)), "create"))
+        TableState(schema = schema), "create"))
       throw new java.io.IOException(
         s"createEmpty: lost the v0 commit race under $dir")
     0L
@@ -3101,9 +2452,8 @@ object SnapshotTable {
       // for these ops — they never advance a carried file's vector);
       // guarded anyway so an unforeseen writer degrades to the
       // generic diff, never to a wrong feed.
-      val spanOps = (fromVersion + 1 to toVersion).map(v =>
-        Option(manifestNode(spark, dir, v).get("op")).map(_.asText)
-          .getOrElse("commit"))
+      val spanOps = walk(spark, dir, fromVersion + 1 to toVersion)
+        .map(_.op).toSeq
       val rowPreserving = Set("compact", "compactWhere", "binPackSmall")
       if (dvChanged.isEmpty && spanOps.forall(rowPreserving))
         newRows.withColumn("_change", lit("insert")).filter(lit(false))
@@ -3193,16 +2543,12 @@ object SnapshotTable {
       "compact: bucketBy and numBuckets go together")
     require(bucketBy.nonEmpty || bucketSortBy.isEmpty,
       "compact: bucketSortBy requires bucketBy")
-    val f = TableStore(spark, dir)
     val base = latestVersion(spark, dir).getOrElse(
       throw new java.io.IOException(s"compact: no committed version under $dir"))
     val baseSt = stateOf(spark, dir, base)
     val old = baseSt.files
     if (old.isEmpty) return None
-    // Manifest sizes when recorded (every writer since r7); RPC
-    // fallback per legacy file.
-    val totalBytes = old.map(p => baseSt.sizes.getOrElse(p,
-      f.status(new Path(dir, p)).getLen)).sum
+    val totalBytes = old.map(baseSt.sizes).sum
     val nTarget = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (old.length <= nTarget && clusterBy.isEmpty && zOrderBy.isEmpty &&
         bucketBy.isEmpty)
@@ -3326,11 +2672,7 @@ object SnapshotTable {
       throw new java.io.IOException(
         s"binPackSmall: no committed version under $dir"))
     val st = stateOf(spark, dir, base)
-    val f = TableStore(spark, dir)
-    val candidates = st.files.filter { p =>
-      st.sizes.getOrElse(p,
-        f.status(new Path(dir, p)).getLen) < smallerThanBytes
-    }.sorted
+    val candidates = st.files.filter(st.sizes(_) < smallerThanBytes).sorted
     compactFiles(spark, dir, base, candidates, targetBytes,
       "binPackSmall", maxRetries)
   }
@@ -3348,9 +2690,7 @@ object SnapshotTable {
                            op: String, maxRetries: Int): Option[Long] = {
     if (candidates.isEmpty) return None
     val st = stateOf(spark, dir, base)
-    val f = TableStore(spark, dir)
-    val totalBytes = candidates.map(p => st.sizes.getOrElse(p,
-      f.status(new Path(dir, p)).getLen)).sum
+    val totalBytes = candidates.map(st.sizes).sum
     val nTarget =
       math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (candidates.length <= nTarget &&
@@ -3359,7 +2699,7 @@ object SnapshotTable {
     val src = readFilesWithDv(spark, dir, st, candidates).coalesce(nTarget)
     commitRewrite(spark, dir, candidates, src,
       trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base), maxRetries, op,
+      stateOf(spark, dir, base).bloomCols, maxRetries, op,
       baseDv = st.dvRefs, basis = Some(st))
   }
 
@@ -3454,29 +2794,20 @@ object SnapshotTable {
     // initial defaults for its referenced files
     val defaults = st.defaults.map { case (c, (dv, pre)) =>
       c -> (dv, pre.map(absolutize)) }
-    // The clone starts its own ledger and its own policy: no txns, no
-    // constraints, no bucket claim; properties and mapping come along.
-    if (!tryCommit(spark, dstDir, 0L, None, EmptyState.copy(files = files,
+    // The clone starts its own ledger: no txns and no bucket claim.
+    // Its CHECK constraints, properties and mapping come along — the
+    // source's rows already satisfy the constraints, and every write
+    // to the clone is checked against them.
+    if (!tryCommit(spark, dstDir, 0L, None, TableState(files = files,
         stats = stats, schema = st.schema, bloomRefs = refs,
         bloomCols = st.bloomCols, sizes = sizes, dvRefs = dvRefs,
-        colMap = st.colMap, retired = st.retired, props = st.props,
-        defaults = defaults), "clone"))
+        constraints = st.constraints, colMap = st.colMap,
+        retired = st.retired, props = st.props, defaults = defaults),
+        "clone"))
       throw new java.io.IOException(
         s"shallowClone: destination $dstDir committed concurrently")
     0L
   }
-
-  /** The CHECK constraints recorded at version `v` (name → SQL
-    * expression). */
-  def manifestConstraints(spark: SparkSession, dir: String,
-                          v: Long): Map[String, String] =
-    stateOf(spark, dir, v).constraints
-
-  /** The column initial-defaults recorded at version `v`:
-    * column → (canonical literal, pre-ADD file keys still live). */
-  def manifestDefaults(spark: SparkSession, dir: String, v: Long
-                      ): Map[String, (String, Set[String])] =
-    stateOf(spark, dir, v).defaults
 
   /** Record a CHECK constraint (the public `ALTER TABLE … ADD
     * CONSTRAINT … CHECK (expr)` shape): `exprSql` must hold — SQL
@@ -3528,11 +2859,6 @@ object SnapshotTable {
   // Table properties (the TBLPROPERTIES surface)
   // ------------------------------------------------------------------
 
-  /** The table properties recorded at version `v`. */
-  def manifestProps(spark: SparkSession, dir: String,
-                    v: Long): Map[String, String] =
-    stateOf(spark, dir, v).props
-
   /** The property key that flips SQL DELETE/UPDATE from copy-on-write
     * to MERGE-ON-READ deletion vectors (the public Delta
     * `delta.enableDeletionVectors` idea): set it `"true"` and the DML
@@ -3573,19 +2899,6 @@ object SnapshotTable {
   // Column mapping admin ops (metadata-only RENAME / DROP COLUMN)
   // ------------------------------------------------------------------
 
-  /** The column mapping recorded at version `v` (logical → physical,
-    * SPARSE — identity columns are absent). Empty = logical and
-    * physical names coincide (every table until its first rename). */
-  def manifestColMap(spark: SparkSession, dir: String,
-                     v: Long): Map[String, String] =
-    stateOf(spark, dir, v).colMap
-
-  /** Physical names of DROPPED columns at version `v` — still present
-    * in old data files, never served, never reused. */
-  def manifestRetired(spark: SparkSession, dir: String,
-                      v: Long): Seq[String] =
-    stateOf(spark, dir, v).retired
-
   /** The first recorded CHECK constraint whose SQL mentions column
     * `c` (word-boundary match — conservative: a false positive
     * refuses a rename/drop loudly, which is always safe). */
@@ -3614,9 +2927,7 @@ object SnapshotTable {
     require(to.nonEmpty, "renameColumn: target name must be non-empty")
     require(from != to, s"renameColumn: $from -> $to is a no-op")
     commitOnHead(spark, dir, "renameColumn", maxRetries) { st =>
-      val schema = st.schema.getOrElse(throw new IllegalStateException(
-        s"renameColumn: table under $dir records no schema (legacy " +
-          "manifest) — append once to record one, then rename"))
+      val schema = st.schema
       require(schema.fieldNames.contains(from),
         s"renameColumn: no such column $from " +
           s"(have ${schema.fieldNames.mkString(", ")})")
@@ -3635,7 +2946,7 @@ object SnapshotTable {
       val newBucket = st.bucket.map(b => b.copy(
         cols = b.cols.map(c => if (c == from) to else c),
         sortCols = b.sortCols.map(c => if (c == from) to else c)))
-      st.copy(schema = Some(newSchema), bucket = newBucket,
+      st.copy(schema = newSchema, bucket = newBucket,
         colMap = newMap)
     }
   }
@@ -3670,9 +2981,7 @@ object SnapshotTable {
       str
     }
     commitOnHead(spark, dir, "addColumn", maxRetries) { st =>
-      val schema = st.schema.getOrElse(throw new IllegalStateException(
-        s"addColumn: table under $dir records no schema (legacy " +
-          "manifest) — append once to record one, then add"))
+      val schema = st.schema
       // case-INsensitive guard: Spark's default resolution would make
       // a case-variant duplicate unreadable (ambiguous column)
       require(!schema.fieldNames.exists(_.equalsIgnoreCase(column)),
@@ -3689,7 +2998,7 @@ object SnapshotTable {
           val p = freshPhys(column, taken)
           if (p != column) st.colMap + (column -> p) else st.colMap
         }
-      st.copy(schema = Some(newSchema), colMap = colMap,
+      st.copy(schema = newSchema, colMap = colMap,
         defaults = st.defaults ++
           defStr.map(d => column -> (d, st.files.toSet)))
     }
@@ -3709,9 +3018,7 @@ object SnapshotTable {
   def widenColumn(spark: SparkSession, dir: String, column: String,
                   to: DataType, maxRetries: Int = 20): Long =
     commitOnHead(spark, dir, "widenColumn", maxRetries) { st =>
-      val schema = st.schema.getOrElse(throw new IllegalStateException(
-        s"widenColumn: table under $dir records no schema (legacy " +
-          "manifest) — append once to record one, then widen"))
+      val schema = st.schema
       val field = schema.fields.find(_.name == column).getOrElse(
         throw new IllegalArgumentException(
           s"widenColumn: no such column $column " +
@@ -3731,7 +3038,7 @@ object SnapshotTable {
           "the bucket layout first")
       val newSchema = StructType(schema.fields.map(f =>
         if (f.name == column) f.copy(dataType = to) else f))
-      st.copy(schema = Some(newSchema))
+      st.copy(schema = newSchema)
     }
 
   /** METADATA-ONLY column drop: one manifest commit removes the
@@ -3750,9 +3057,7 @@ object SnapshotTable {
   def dropColumn(spark: SparkSession, dir: String, column: String,
                  maxRetries: Int = 20): Long =
     commitOnHead(spark, dir, "dropColumn", maxRetries) { st =>
-      val schema = st.schema.getOrElse(throw new IllegalStateException(
-        s"dropColumn: table under $dir records no schema (legacy " +
-          "manifest) — append once to record one, then drop"))
+      val schema = st.schema
       require(schema.fieldNames.contains(column),
         s"dropColumn: no such column $column " +
           s"(have ${schema.fieldNames.mkString(", ")})")
@@ -3769,7 +3074,7 @@ object SnapshotTable {
       val newSchema = StructType(schema.fields.filterNot(_.name == column))
       val newBucket = st.bucket.filterNot(b =>
         b.cols.contains(column) || b.sortCols.contains(column))
-      st.copy(schema = Some(newSchema),
+      st.copy(schema = newSchema,
         bloomCols = st.bloomCols.filterNot(_ == phys), bucket = newBucket,
         colMap = newMap, retired = newRetired)
     }
@@ -3954,9 +3259,7 @@ object SnapshotTable {
     * `now − retainMs` survives — time travel within the window keeps
     * working, the latest version always survives. Returns the
     * keepVersions equivalent, so callers can preview with
-    * [[vacuumPreview]] before [[vacuum]]. Legacy stampless manifests
-    * sort as old as possible (the [[commitTimeline]] contract) — they
-    * fall outside any finite window. */
+    * [[vacuumPreview]] before [[vacuum]]. */
   def keepVersionsForRetention(spark: SparkSession, dir: String,
                                retainMs: Long): Int = {
     val latest = latestVersion(spark, dir).getOrElse(return 1)
@@ -4005,23 +3308,16 @@ object SnapshotTable {
     // it in full checkpoint form (equivalent state, so any reader sees
     // the same snapshot; janitor-only op per this method's contract).
     if (keepFrom > 0L) {
-      val st = stateOf(spark, dir, keepFrom)
-      val node = manifestNode(spark, dir, keepFrom)
-      // A segmented checkpoint is already self-contained (its
+      val snap = snapshot(spark, dir, keepFrom)
+      // A checkpoint is already self-contained (a segmented one's
       // segments are kept by the segment GC below) — only delta-form
       // manifests need the rewrite.
-      if (node.get("files") == null && node.get("segments") == null) {
-        val origOp = Option(node.get("op")).map(_.asText)
-          .getOrElse("commit")
+      if (!snap.checkpoint) {
         // The rewrite carries the COMPLETE resolved state (policy and
-        // mapping included). The state is its own parent: the segments
-        // it resolved through are the ones a segmented rewrite reuses.
-        val origTs = Option(node.get("ts")).map(_.asLong)
-        val body = manifestBody(spark, dir, keepFrom, Some(st), st, origOp,
-          full = true, tsOverride = origTs,
-          // a legacy stampless manifest stays stampless — see
-          // manifestBody's ts discipline
-          stampTs = origTs.isDefined)
+        // mapping included) and the original op and stamp. The state is
+        // its own parent: the segments it resolved through are the ones
+        // a segmented rewrite reuses.
+        val body = manifestBody(s, dir, snap, Some(snap.state), full = true)
         commitLock.synchronized {
           // Rename OVER the target (POSIX/local rename overwrites in
           // place — no instant at which v<keepFrom> is missing for a
@@ -4098,11 +3394,7 @@ object SnapshotTable {
     * tracking them so data skipping survives row-level ops. */
   private def trackedStatsCols(spark: SparkSession, dir: String,
                                v: Long): Seq[String] =
-    manifestStats(spark, dir, v).values.flatMap(_.keys).toSeq.distinct
-
-  private def trackedBloomCols(spark: SparkSession, dir: String,
-                               v: Long): Seq[String] =
-    stateOf(spark, dir, v).bloomCols
+    stateOf(spark, dir, v).stats.values.flatMap(_.keys).toSeq.distinct
 
   /** The current snapshot (deletion vectors applied — a row-level op
     * must never see, match, or rewrite a MoR-deleted row) with a
@@ -4115,7 +3407,7 @@ object SnapshotTable {
                        applyDv: Boolean = true): DataFrame = {
     val st = stateOf(spark, dir, v)
     val files = only.getOrElse(st.files)
-    val logical = logicalSchemaOf(spark, dir, st)
+    val logical = st.schema
     // Under an active column mapping the scan reads PHYSICAL names;
     // the final select below renames to logical, so callers' keys and
     // predicates resolve as users wrote them.
@@ -4226,10 +3518,7 @@ object SnapshotTable {
     require(names.distinct.length == names.length,
       s"$op: duplicate SET columns: " +
         s"${names.diff(names.distinct).distinct.mkString(", ")}")
-    // Pre-schema-recording manifests (schema == None) fall back to the
-    // table's read schema, so the guard holds on them too.
-    val fieldNames = manifestSchema(spark, dir, base).map(_.fieldNames.toSeq)
-      .getOrElse(read(spark, dir, Some(base)).columns.toSeq)
+    val fieldNames = stateOf(spark, dir, base).schema.fieldNames.toSeq
     names.foreach { c =>
       require(fieldNames.contains(c),
         s"$op: SET column $c does not exist (columns: " +
@@ -4420,8 +3709,7 @@ object SnapshotTable {
           s"$op: deletion vectors advanced concurrently on " +
             s"${dvMoved.take(3).mkString(", ")}")
       val nextSchema = batch.fold(curSt.schema) { case (_, schema, _) =>
-        Some(curSt.schema.map(evolveSchema(_, schema))
-          .getOrElse(evolveSchema(new StructType(), schema)))
+        evolveSchema(curSt.schema, schema)
       }
       // A delete lands no file, so the bucket claim still holds; an
       // update's new files are not bucket-routed, so it clears.
@@ -4464,7 +3752,7 @@ object SnapshotTable {
                          maxRetries: Int = 20): Option[Long] = {
     require(appId.nonEmpty, "transactionalMerge: appId must be non-empty")
     val pre = latestVersion(spark, dir)
-      .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
+      .map(stateOf(spark, dir, _).txns).getOrElse(Map.empty)
     if (pre.getOrElse(appId, Long.MinValue) >= txnVersion) return None
     mergeImpl(spark, dir, source, keys, Some(appId -> txnVersion), maxRetries)
   }
@@ -4500,7 +3788,7 @@ object SnapshotTable {
         .unionByName(source)
     commitRewrite(spark, dir, touched, rewrite,
       base.map(trackedStatsCols(spark, dir, _)).getOrElse(Nil),
-      base.map(trackedBloomCols(spark, dir, _)).getOrElse(Nil),
+      base.map(stateOf(spark, dir, _).bloomCols).getOrElse(Nil),
       maxRetries, "merge", txn,
       keyConflict = Some((
         base.map(manifestFiles(spark, dir, _)).getOrElse(Nil).toSet,
@@ -4626,8 +3914,7 @@ object SnapshotTable {
         s"$dir — initialize the table first (the whole-row merge " +
         "accepts an empty target)"))
     val st = stateOf(spark, dir, base)
-    val schema = manifestSchema(spark, dir, base)
-      .getOrElse(read(spark, dir, Some(base)).schema)
+    val schema = st.schema
     val fieldNames = schema.fieldNames.toSet
     keys.foreach(k => require(fieldNames.contains(k),
       s"mergeInto: key column $k is not in the target schema"))
@@ -4789,7 +4076,7 @@ object SnapshotTable {
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     commitRewrite(spark, dir, touched, rewrite,
       trackedStatsCols(spark, dir, base),
-      trackedBloomCols(spark, dir, base),
+      stateOf(spark, dir, base).bloomCols,
       maxRetries, "mergeInto", None,
       keyConflict = Some((st.files.toSet, keys, srcKeys)),
       baseDv = st.dvRefs, checkConstraints = Some(vcs),
@@ -4820,7 +4107,7 @@ object SnapshotTable {
     // even scanning the change frame.
     txn.foreach { case (appId, tv) =>
       val pre = latestVersion(spark, dir)
-        .map(manifestTxns(spark, dir, _)).getOrElse(Map.empty)
+        .map(stateOf(spark, dir, _).txns).getOrElse(Map.empty)
       if (pre.getOrElse(appId, Long.MinValue) >= tv) return None
     }
     val inserts = changes.filter(col("_change") === "insert").drop("_change")
@@ -5000,7 +4287,7 @@ object SnapshotTable {
         .unionByName(insertsSized, allowMissingColumns = true)
     commitRewrite(spark, dir, touched, rewrite,
       base.map(trackedStatsCols(spark, dir, _)).getOrElse(Nil),
-      base.map(trackedBloomCols(spark, dir, _)).getOrElse(Nil),
+      base.map(stateOf(spark, dir, _).bloomCols).getOrElse(Nil),
       maxRetries, "applyChanges", txn,
       keyConflict = Some((
         base.map(manifestFiles(spark, dir, _)).getOrElse(Nil).toSet,
@@ -5042,7 +4329,7 @@ object SnapshotTable {
       throw new java.io.IOException(
         s"replicate: no committed version under $srcDir"))
     val cursor = latestVersion(spark, dstDir)
-      .map(manifestTxns(spark, dstDir, _)).getOrElse(Map.empty)
+      .map(stateOf(spark, dstDir, _).txns).getOrElse(Map.empty)
       .get(appId)
     if (cursor.exists(_ >= srcV)) return None
     val feed = cursor match {
@@ -5117,7 +4404,7 @@ object SnapshotTable {
     var validated = checkConstraints
     commitLoop(spark, dir, op, maxRetries) { (_, st) =>
       checkMapClaim(st, claim, op)
-      val cur = st.getOrElse(EmptyState)
+      val cur = st.getOrElse(TableState())
       // a racing replay won: no commit, our files stay orphaned
       if (replayed(cur, txn)) None
       else {
@@ -5150,8 +4437,7 @@ object SnapshotTable {
                   s"${clash.head.mkString(",")} — committing would duplicate it")
           }
         }
-        val schema = Some(evolveSchema(cur.schema.getOrElse(new StructType()),
-          rewrite.schema))
+        val schema = evolveSchema(cur.schema, rewrite.schema)
         // Rewritten files physically exclude their masked rows, so their
         // vectors retire with them; the new files aren't bucket-routed,
         // so the claim clears.

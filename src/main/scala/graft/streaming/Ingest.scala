@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.catalog.{Catalog, FolderMeta}
 import graft.extract.Extractor
 import graft.functions.Clean
+import graft.sources.TableStore
 
 /** The streaming rebuild of the reference's ingest engine (`POST /`,
   * reference main.py:656-759): file lands → admission filter → path
@@ -204,13 +205,18 @@ object Ingest {
               // or, in a session that ignores missing files, silently
               // resolve to zero rows.
               // Checkpointed blocks have no parent to recompute from.
-              val carried = try {
-                Some(spark.read.option("basePath", tablePath)
-                  .parquet(s"$tablePath/_batch_id=$batchId")
+              // One listing decides whether there is anything to carry:
+              // only a replayed batch finds a parquet file there.
+              val part = s"$tablePath/_batch_id=$batchId"
+              val carried =
+                if (!TableStore(spark, tablePath).list(new Path(part))
+                    .exists(st => st.isFile &&
+                      st.getPath.getName.endsWith(".parquet"))) None
+                else Some(spark.read.option("basePath", tablePath)
+                  .parquet(part)
                   .withColumn("_batch_id", lit(batchId))
                   .join(fresh.select("row_id"), Seq("row_id"), "left_anti")
                   .localCheckpoint(eager = true))
-              } catch { case _: org.apache.spark.sql.AnalysisException => None }
               val merged = carried.fold(fresh)(c =>
                 fresh.unionByName(c, allowMissingColumns = true))
               merged.write.mode("overwrite")

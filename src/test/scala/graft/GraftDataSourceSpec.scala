@@ -41,7 +41,7 @@ class GraftDataSourceSpec extends AnyFunSuite with TempDirs {
     assert(spark.read.format("graft").load(dir).count() == 20)
     // stats landed → readWhere prunes
     val v = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestStats(spark, dir, v).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v).stats.nonEmpty)
     // Ignore: no-op on an existing table
     spark.range(100, 200).toDF().write.format("graft")
       .mode(SaveMode.Ignore).save(dir)
@@ -182,7 +182,7 @@ class GraftDataSourceSpec extends AnyFunSuite with TempDirs {
       assert(SnapshotTable.read(spark, dir).count() == 15)
       // the ledger recorded the writer's high-water batch
       val v = SnapshotTable.latestVersion(spark, dir).get
-      assert(SnapshotTable.manifestTxns(spark, dir, v)
+      assert(SnapshotTable.snapshot(spark, dir, v).txns
         .get("spec-sink").exists(_ >= 1L))
       // a manual replay of batch 0 is a manifest no-op
       val replay = SnapshotTable.transactionalAppend(

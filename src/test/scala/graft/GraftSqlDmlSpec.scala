@@ -218,8 +218,8 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     val afterDel = SnapshotTable.read(spark, dir)
     assert(afterDel.filter(col("rank") === 7).count() == 4)
     assert(afterDel.filter(col("rank").isNull).count() == 1)
-    val headDefs = SnapshotTable.manifestDefaults(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get)
+    val headDefs = SnapshotTable.snapshot(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).defaults
     assert(headDefs.get("rank").forall(_._2.subsetOf(before)),
       "rewritten files must leave the pre-ADD set")
     // time travel: pre-ADD versions have no column; restore rolls the
@@ -228,8 +228,8 @@ class GraftSqlDmlSpec extends AnyFunSuite {
       .columns.contains("rank"))
     spark.sql(s"RESTORE sqldml_adddef TO VERSION AS OF 0")
     assert(!SnapshotTable.read(spark, dir).columns.contains("rank"))
-    assert(SnapshotTable.manifestDefaults(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).defaults.isEmpty)
     // a default that cannot cast is refused up front
     intercept[IllegalArgumentException] {
       spark.sql(
@@ -242,7 +242,7 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     SnapshotTable.append(Seq((100L, "x", 1L)).toDF("id", "name", "score"),
       dir)                                               // v1
     SnapshotSql.bind("sqldml_rts", dir)
-    val t0 = SnapshotTable.manifestCommitTime(spark, dir, 0L).get
+    val t0 = SnapshotTable.snapshot(spark, dir, 0L).ts
     // an instant between v0 and v1 resolves to v0 (epoch-millis form)
     spark.sql(s"RESTORE sqldml_rts TO TIMESTAMP AS OF '${t0 + 300}'")
     assert(SnapshotTable.read(spark, dir).count() == 5)
@@ -457,7 +457,7 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     assert(r.getLong(1) == 10L)
     val v1 = SnapshotTable.latestVersion(spark, dir).get
     assert(SnapshotTable.manifestFiles(spark, dir, v1).toSet == filesBefore)
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v1).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v1).dvRefs.nonEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 90)
     // MoR UPDATE: masked old rows + new files, values correct
     spark.sql("UPDATE sqldml_props SET score = score + 1000000 WHERE id < 5")
@@ -467,21 +467,21 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     // OPTIMIZE materializes the vectors
     spark.sql("OPTIMIZE sqldml_props")
     val v3 = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v3).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v3).dvRefs.isEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 90)
     // UNSET flips back to copy-on-write: the touched file is REWRITTEN
     spark.sql("ALTER TABLE sqldml_props UNSET TBLPROPERTIES " +
       "('graft.enableDeletionVectors')")
     spark.sql("DELETE FROM sqldml_props WHERE id = 0")
     val v4 = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v4).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v4).dvRefs.isEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 89)
     assert(spark.sql("SHOW TBLPROPERTIES sqldml_props").collect()
       .map(_.getString(0)).toSeq == Seq("team"))
     // properties survive a shallow clone
     val cloneDir = tmp("props-clone")
     SnapshotTable.shallowClone(spark, dir, cloneDir)
-    assert(SnapshotTable.manifestProps(spark, cloneDir, 0L) ==
+    assert(SnapshotTable.snapshot(spark, cloneDir, 0L).props ==
       Map("team" -> "etl"))
   }
 
@@ -658,8 +658,8 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     val bdir = tmp("ctas-bucket")
     spark.sql(s"CREATE TABLE graft.`$bdir` CLUSTERED BY (id) " +
       "SORTED BY (id) INTO 4 BUCKETS AS SELECT id, id * 2 AS v FROM range(40)")
-    val b = SnapshotTable.manifestBucket(spark, bdir,
-      SnapshotTable.latestVersion(spark, bdir).get)
+    val b = SnapshotTable.snapshot(spark, bdir,
+      SnapshotTable.latestVersion(spark, bdir).get).bucket
     assert(b.exists(s => s.numBuckets == 4 && s.cols == Seq("id")))
     assert(SnapshotTable.read(spark, bdir).count() == 40)
     // OR REPLACE with a layout clause is refused loudly

@@ -23,7 +23,7 @@ class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
     val df = spark.range(0, 500)
       .select(col("id").as("k"), (col("id") % 13).as("v"))
     SnapshotTable.appendBucketed(df, dir, Seq("k"), numBuckets = 8)
-    assert(SnapshotTable.manifestBucket(spark, dir, 0L)
+    assert(SnapshotTable.snapshot(spark, dir, 0L).bucket
       .contains(BucketLayout(8, Seq("k"), Nil)))
     // one file per non-empty bucket, Spark-parseable _NNNNN names
     val files = SnapshotTable.manifestFiles(spark, dir, 0L)
@@ -87,7 +87,7 @@ class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
       .select(col("id").as("k"), (col("id") * 2).as("v"))
     SnapshotTable.appendBucketed(mk(0, 100), dir, Seq("k"), 4)
     SnapshotTable.appendBucketed(mk(100, 200), dir, Seq("k"), 4)
-    assert(SnapshotTable.manifestBucket(spark, dir, 1L)
+    assert(SnapshotTable.snapshot(spark, dir, 1L).bucket
       .contains(BucketLayout(4, Seq("k"), Nil)))
     assert(SnapshotTable.read(spark, dir).count() == 200)
     intercept[IllegalArgumentException] {
@@ -100,16 +100,16 @@ class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
     // read surface must fall back to normal (non-bucketed) scans
     SnapshotTable.append(mk(200, 300), dir)
     val v = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestBucket(spark, dir, v).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v).bucket.isEmpty)
     assert(SnapshotSql.dataFrame(spark, dir).count() == 300)
     // time travel still sees the bucketed claim at the old version
-    assert(SnapshotTable.manifestBucket(spark, dir, 1L).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, 1L).bucket.nonEmpty)
     // and a CoW rewrite on a bucketed table clears too
     val dir2 = tmp("cow")
     SnapshotTable.appendBucketed(mk(0, 100), dir2, Seq("k"), 4)
     SnapshotTable.deleteWhere(spark, dir2, col("k") < 10L)
     val v2 = SnapshotTable.latestVersion(spark, dir2).get
-    assert(SnapshotTable.manifestBucket(spark, dir2, v2).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir2, v2).bucket.isEmpty)
     assert(SnapshotTable.read(spark, dir2).count() == 90)
   }
 
@@ -120,19 +120,19 @@ class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
     // plain appends: unbucketed table
     SnapshotTable.append(df.filter(col("k") < 300), dir)
     SnapshotTable.append(df.filter(col("k") >= 300), dir)
-    assert(SnapshotTable.manifestBucket(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).bucket.isEmpty)
     // in-place conversion
     val v = SnapshotTable.compact(spark, dir,
       bucketBy = Seq("k"), numBuckets = 4).get
-    assert(SnapshotTable.manifestBucket(spark, dir, v)
+    assert(SnapshotTable.snapshot(spark, dir, v).bucket
       .contains(BucketLayout(4, Seq("k"), Nil)))
     assert(SnapshotTable.read(spark, dir).count() == 600)
     // bucketed appends now accrete on the converted table
     SnapshotTable.appendBucketed(
       spark.range(600, 700).select(col("id").as("k"),
         (col("id") % 11).as("v")), dir, Seq("k"), 4)
-    assert(SnapshotTable.manifestBucket(spark, dir, v + 1).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v + 1).bucket.nonEmpty)
     // zero-Exchange groupBy through the SQL surface post-conversion
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -145,7 +145,7 @@ class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
     // a plain (size-driven) compact rewrites names — claim must clear
     val v2 = SnapshotTable.compact(spark, dir).getOrElse(
       fail("plain compact of a 5-file table must rewrite"))
-    assert(SnapshotTable.manifestBucket(spark, dir, v2).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v2).bucket.isEmpty)
     assert(SnapshotTable.read(spark, dir).count() == 700)
   }
 
@@ -176,7 +176,7 @@ class SnapshotBucketSpec extends AnyFunSuite with TempDirs {
       .select(col("id").as("k"), (col("id") % 13).as("v")), dir, Seq("k"),
       numBuckets = 4)
     SnapshotTable.deleteWhereMor(spark, dir, col("k") % 10 === 3L)
-    assert(SnapshotTable.manifestBucket(spark, dir, 1L)
+    assert(SnapshotTable.snapshot(spark, dir, 1L).bucket
       .contains(BucketLayout(4, Seq("k"), Nil)))
     val viaSql = SnapshotSql.dataFrame(spark, dir)
     val specs = viaSql.queryExecution.sparkPlan.collect {

@@ -42,7 +42,7 @@ class SnapshotColumnMapSpec extends AnyFunSuite with TempDirs {
     assert(v == 2L)
     // zero data movement
     assert(SnapshotTable.manifestFiles(spark, dir, v) == filesBefore)
-    assert(SnapshotTable.manifestColMap(spark, dir, v) ==
+    assert(SnapshotTable.snapshot(spark, dir, v).colMap ==
       Map("doc_id" -> "id"))
     // every read surface serves the logical name
     val df = SnapshotTable.read(spark, dir)
@@ -91,7 +91,7 @@ class SnapshotColumnMapSpec extends AnyFunSuite with TempDirs {
     val filesBefore = SnapshotTable.manifestFiles(spark, dir, 1L)
     val v = SnapshotTable.dropColumn(spark, dir, "score")
     assert(SnapshotTable.manifestFiles(spark, dir, v) == filesBefore)
-    assert(SnapshotTable.manifestRetired(spark, dir, v) == Seq("score"))
+    assert(SnapshotTable.snapshot(spark, dir, v).retired == Seq("score"))
     assert(SnapshotTable.read(spark, dir).columns.toSeq == Seq("id", "name"))
     // time travel pre-drop still serves the column
     assert(SnapshotTable.read(spark, dir, Some(1L))
@@ -99,8 +99,8 @@ class SnapshotColumnMapSpec extends AnyFunSuite with TempDirs {
     // re-add the same logical name: fresh physical, old rows NULL
     SnapshotTable.append(
       Seq((100L, "v100", 7L)).toDF("id", "name", "score"), dir)
-    assert(SnapshotTable.manifestColMap(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get) == Map("score" -> "score_p1"))
+    assert(SnapshotTable.snapshot(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).colMap == Map("score" -> "score_p1"))
     val scored = SnapshotTable.read(spark, dir)
     assert(scored.filter(col("score").isNotNull).count() == 1)
     assert(scored.agg(sum("score")).head().getLong(0) == 7L)
@@ -116,7 +116,7 @@ class SnapshotColumnMapSpec extends AnyFunSuite with TempDirs {
       (200L until 220L).map(i => (i, s"v$i", i * 3)).toDF("id", "name", "score"),
       dir, statsCols = Seq("score"), bloomCols = Seq("score"))
     val head = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestColMap(spark, dir, head) ==
+    assert(SnapshotTable.snapshot(spark, dir, head).colMap ==
       Map("score" -> "score_p1"))
     // range pruning on the re-added column engages (stats exist under
     // the fresh physical key and translate from the logical name);
@@ -259,8 +259,8 @@ class SnapshotColumnMapSpec extends AnyFunSuite with TempDirs {
     SnapshotTable.restore(spark, dir, 1L)
     assert(SnapshotTable.read(spark, dir).columns.toSeq ==
       Seq("id", "name", "score"))
-    assert(SnapshotTable.manifestColMap(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).colMap.isEmpty)
     // rename again, then bury the rename behind the vacuum horizon —
     // the keepFrom checkpoint rewrite must carry the mapping
     SnapshotTable.renameColumn(spark, dir, "name", "label")

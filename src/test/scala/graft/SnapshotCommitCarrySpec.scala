@@ -28,42 +28,30 @@ class SnapshotCommitCarrySpec extends AnyFunSuite with TempDirs {
   private def files(dir: String, v: Long): Set[String] =
     SnapshotTable.manifestFiles(spark, dir, v).toSet
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def manifestJson(dir: String, v: Long) =
-    mapper.readTree(new java.io.File(
-      SparkTestBase.localPath(dir), s"_manifests/v$v.json"))
-
-  /** The tracked Bloom columns as a reader resolves them: a manifest
-    * that records the list wins, a checkpoint without one tracks none,
-    * a delta without one inherits its parent's. */
-  private def bloomCols(dir: String, v: Long): Seq[String] = {
-    val n = manifestJson(dir, v)
-    val b = n.get("bloomcols")
-    if (b != null) (0 until b.size).map(b.get(_).asText)
-    else if (n.get("files") != null || n.get("segments") != null || v == 0L)
-      Nil
-    else bloomCols(dir, v - 1)
+  private def carried(dir: String, v: Long): Carried = {
+    val s = SnapshotTable.snapshot(spark, dir, v)
+    Carried(s.bucket, s.constraints, s.props, s.colMap, s.retired,
+      s.defaults, s.txns, s.bloomCols, s.dvRefs)
   }
 
-  private def carried(dir: String, v: Long): Carried = Carried(
-    SnapshotTable.manifestBucket(spark, dir, v),
-    SnapshotTable.manifestConstraints(spark, dir, v),
-    SnapshotTable.manifestProps(spark, dir, v),
-    SnapshotTable.manifestColMap(spark, dir, v),
-    SnapshotTable.manifestRetired(spark, dir, v),
-    SnapshotTable.manifestDefaults(spark, dir, v),
-    SnapshotTable.manifestTxns(spark, dir, v),
-    bloomCols(dir, v),
-    SnapshotTable.manifestDvRefs(spark, dir, v))
+  /** Every live file of version `v` records its byte size and its row
+    * count — what planning and `countRows` read instead of the store. */
+  private def assertSizedAndCounted(dir: String, v: Long): Unit = {
+    val s = SnapshotTable.snapshot(spark, dir, v)
+    val missing = s.files.filterNot(f => s.sizes.contains(f) &&
+      s.stats.get(f).exists(_.contains(SnapshotTable.RowsCol)))
+    assert(missing.isEmpty, s"v$v: files without a size or row count")
+  }
 
-  /** Run one committer; it must land exactly one version. Returns the
-    * head's fields before and after. */
+  /** Run one committer; it must land exactly one version, and record
+    * a size and a row count for every live file. Returns the head's
+    * fields before and after. */
   private def commit(dir: String)(body: => Any): (Carried, Carried) = {
     val v = head(dir)
     val before = carried(dir, v)
     body
     assert(head(dir) == v + 1, "the committer did not land one version")
+    assertSizedAndCounted(dir, v + 1)
     (before, carried(dir, v + 1))
   }
 
@@ -104,11 +92,11 @@ class SnapshotCommitCarrySpec extends AnyFunSuite with TempDirs {
     dvRefs = c.dvRefs.filter { case (f, _) => live(f) })
 
   /** A shallow clone of `src` (the fields of `dir`'s head) at v0: no
-    * ledger, no constraints, and file keys made absolute. */
+    * ledger, and file keys made absolute. */
   private def cloned(dir: String, src: Carried): Carried = {
     def abs(p: String) = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(dir), p).toUri.getPath
-    src.copy(constraints = Map.empty, txns = Map.empty,
+    src.copy(txns = Map.empty,
       defaults = src.defaults.map { case (k, (x, pre)) =>
         k -> (x, pre.map(abs)) },
       dvRefs = src.dvRefs.map { case (f, r) => abs(f) -> abs(r) })
@@ -215,14 +203,15 @@ class SnapshotCommitCarrySpec extends AnyFunSuite with TempDirs {
     pin(t)(SnapshotTable.overwrite(batch(0, 20), t))(
       _.copy(defaults = Map.empty, dvRefs = Map.empty))
 
-    // A clone starts its own ledger and policy: txns and constraints
-    // stay behind; properties, mapping, Bloom columns and defaults
-    // (their file keys made absolute) come along.
+    // A clone starts its own ledger: txns stay behind; constraints,
+    // properties, mapping, Bloom columns and defaults (their file keys
+    // made absolute) come along.
     SnapshotTable.addColumn(spark, t, "d2", StringType, default = Some("x"))
     val c = tmp("clone")
     val src = carried(t, head(t))
     assert(SnapshotTable.shallowClone(spark, t, c) == 0L)
     assert(carried(c, 0L) == cloned(t, src))
+    assertSizedAndCounted(c, 0L)
 
     val e = tmp("empty")
     assert(SnapshotTable.createEmpty(spark, e, batch(0, 1).schema) == 0L)
@@ -233,11 +222,11 @@ class SnapshotCommitCarrySpec extends AnyFunSuite with TempDirs {
     // the same fields.
     val keep = if ((head(t) - 1) % 10 == 0) 3 else 2
     val keepFrom = head(t) - (keep - 1)
-    assert(manifestJson(t, keepFrom).get("files") == null)
+    assert(!SnapshotTable.snapshot(spark, t, keepFrom).checkpoint)
     val atKeepFrom = carried(t, keepFrom)
     SnapshotTable.vacuum(spark, t, keepVersions = keep,
       minAgeMs = 24L * 3600 * 1000)
-    assert(manifestJson(t, keepFrom).get("files") != null)
+    assert(SnapshotTable.snapshot(spark, t, keepFrom).checkpoint)
     assert(carried(t, keepFrom) == atKeepFrom)
   }
 
@@ -257,10 +246,10 @@ class SnapshotCommitCarrySpec extends AnyFunSuite with TempDirs {
     pin(m)(SnapshotTable.renameColumn(spark, m, "v", "w"))(
       _.copy(colMap = Map("w" -> "v")))
     pin(m)(SnapshotTable.append(mapped(batch(30, 40)), m))(identity)
-    // The delta records no empty Bloom list, so the dropped Bloom
-    // column stays tracked (pinned as is).
+    // Dropping the only Bloom column empties the tracked list, and the
+    // delta records the empty list.
     pin(m)(SnapshotTable.dropColumn(spark, m, "k"))(
-      _.copy(retired = Seq("k")))
+      _.copy(retired = Seq("k"), bloomCols = Nil))
     pin(m)(SnapshotTable.addColumn(spark, m, "k", StringType))(
       b => b.copy(colMap = b.colMap + ("k" -> "k_p1")))
     pin(m)(SnapshotTable.widenColumn(spark, m, "w", LongType))(identity)

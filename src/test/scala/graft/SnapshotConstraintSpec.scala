@@ -24,7 +24,7 @@ class SnapshotConstraintSpec extends AnyFunSuite with TempDirs {
     }
     assert(SnapshotTable.latestVersion(spark, dir).contains(0L))
     val v = SnapshotTable.addConstraint(spark, dir, "bounded", "id < 100")
-    assert(SnapshotTable.manifestConstraints(spark, dir, v) ==
+    assert(SnapshotTable.snapshot(spark, dir, v).constraints ==
       Map("bounded" -> "id < 100"))
     // violating batch refused BEFORE any data write or commit
     intercept[IllegalArgumentException] {
@@ -37,6 +37,23 @@ class SnapshotConstraintSpec extends AnyFunSuite with TempDirs {
     intercept[IllegalArgumentException] {
       SnapshotTable.addConstraint(spark, dir, "bounded", "id < 5")
     }
+  }
+
+  test("a shallow clone keeps the source's constraints: a violating append to it is refused") {
+    val src = tmp("clone-src")
+    SnapshotTable.append(spark.range(0, 20).toDF(), src)
+    SnapshotTable.addConstraint(spark, src, "bounded", "id < 100")
+    val dst = tmp("clone-dst")
+    SnapshotTable.shallowClone(spark, src, dst)
+    assert(SnapshotTable.snapshot(spark, dst, 0L).constraints ==
+      Map("bounded" -> "id < 100"))
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.append(spark.range(95, 105).toDF(), dst)
+    }
+    assert(e.getMessage.contains("bounded"))
+    assert(SnapshotTable.latestVersion(spark, dst).contains(0L))
+    SnapshotTable.append(spark.range(20, 30).toDF(), dst)
+    assert(SnapshotTable.read(spark, dst).count() == 30)
   }
 
   test("constraints gate update/merge/transactional paths and clear on drop") {
@@ -106,8 +123,8 @@ class SnapshotConstraintSpec extends AnyFunSuite with TempDirs {
     // on a head recording `cs`
     def next(cs: Map[String, String]) = SnapshotTable.TableState(
       files = files, txns = Map.empty, stats = Map.empty,
-      bloomRefs = Map.empty, bloomCols = Nil, legacyBlooms = Map.empty,
-      schema = SnapshotTable.manifestSchema(spark, dir, 0L),
+      bloomRefs = Map.empty, bloomCols = Nil,
+      schema = SnapshotTable.snapshot(spark, dir, 0L).schema,
       sizes = SnapshotTable.manifestSizes(spark, dir, 0L), constraints = cs)
     val cs = Map("bounded" -> "id < 5")
     // nothing validated yet → the written files re-probe and refuse
@@ -139,9 +156,9 @@ class SnapshotConstraintSpec extends AnyFunSuite with TempDirs {
     // rewrite; policy recorded at v1 (constraint) must survive, and so
     // must v2's bucket claim resolution through the rewritten chain
     SnapshotTable.vacuum(spark, dir, keepVersions = 2, minAgeMs = 0L)
-    assert(SnapshotTable.manifestConstraints(spark, dir, head) ==
+    assert(SnapshotTable.snapshot(spark, dir, head).constraints ==
       Map("k_pos" -> "k >= 0"))
-    assert(SnapshotTable.manifestBucket(spark, dir, head).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, head).bucket.nonEmpty)
     // and enforcement still works post-vacuum
     intercept[IllegalArgumentException] {
       SnapshotTable.append(Seq((-1L, 0L)).toDF("k", "v"), dir)

@@ -507,10 +507,10 @@ class SnapshotModelSpec extends AnyFunSuite with TempDirs {
       assert(wins.get() == 1,
         s"round $round: advanceTxn admitted ${wins.get()} winners")
       val head = SnapshotTable.latestVersion(spark, dir).get
-      val st = SnapshotTable.manifestTxns(spark, dir, head)
+      val st = SnapshotTable.snapshot(spark, dir, head).txns
       assert(st.get("race-app").contains(round.toLong),
         s"round $round: ledger cursor lost")
-      assert(SnapshotTable.manifestProps(spark, dir, head)
+      assert(SnapshotTable.snapshot(spark, dir, head).props
         .get("round").contains(round.toString),
         s"round $round: property commit lost")
     }

@@ -29,7 +29,7 @@ class SnapshotMorSpec extends AnyFunSuite with TempDirs {
     assert(v == 1L)
     // file list IDENTICAL — no data moved; only a vector landed
     assert(SnapshotTable.manifestFiles(spark, dir, v) == filesBefore)
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v).dvRefs.nonEmpty)
     val expect = (0L until 100L).filterNot(_ % 10 == 3).toSet
     assert(ids(SnapshotTable.read(spark, dir)) == expect)
     // pruned read paths apply the vector too
@@ -50,7 +50,7 @@ class SnapshotMorSpec extends AnyFunSuite with TempDirs {
     assert(ids(SnapshotTable.read(spark, dir)) == (10L until 40L).toSet)
     // second vector replaced the first per file — exactly one ref
     val v = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v).values.toSet.size == 1)
+    assert(SnapshotTable.snapshot(spark, dir, v).dvRefs.values.toSet.size == 1)
     // a MoR delete matching only already-deleted rows is a no-op
     assert(SnapshotTable.deleteWhereMor(spark, dir, $"id" === 5L).isEmpty)
   }
@@ -82,7 +82,7 @@ class SnapshotMorSpec extends AnyFunSuite with TempDirs {
     // and the rewritten files dropped their vectors
     val v = SnapshotTable.latestVersion(spark, dir).get
     val live = SnapshotTable.manifestFiles(spark, dir, v).toSet
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v).keySet.subsetOf(live))
+    assert(SnapshotTable.snapshot(spark, dir, v).dvRefs.keySet.subsetOf(live))
     // CoW MERGE on the DV'd table: upsert sees only live rows
     SnapshotTable.merge(spark, dir,
       Seq((5L, "revived"), (30L, "merged")).toDF("id", "v"), Seq("id"))
@@ -100,7 +100,7 @@ class SnapshotMorSpec extends AnyFunSuite with TempDirs {
     SnapshotTable.deleteWhereMor(spark, dir, $"id" % 4 === 1L)
     val expect = (0L until 80L).filterNot(_ % 4 == 1).toSet
     val cv = SnapshotTable.compact(spark, dir, clusterBy = Seq("id")).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, cv).isEmpty,
+    assert(SnapshotTable.snapshot(spark, dir, cv).dvRefs.isEmpty,
       "compaction is the vector purge")
     assert(ids(SnapshotTable.read(spark, dir)) == expect)
     // the SQL surface re-enables after the purge

@@ -76,8 +76,8 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
     SnapshotTable.setProperties(spark, dir, Map("k" -> "v"))      // v2
     assert(SnapshotTable.restore(spark, dir, 0L).isEmpty)
     // and the policy is still in force
-    assert(SnapshotTable.manifestConstraints(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get).contains("nonneg"))
+    assert(SnapshotTable.snapshot(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).constraints.contains("nonneg"))
   }
 
   test("restore: deletion vectors roll back and the txn ledger carries forward") {
@@ -89,7 +89,7 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
     val v = SnapshotTable.restore(spark, dir, 1L).get
     // masked rows are back (the pre-vector dvRefs state is reinstated)
     assert(ids(SnapshotTable.read(spark, dir)) == (0L until 60L).toSet)
-    assert(SnapshotTable.manifestDvRefs(spark, dir, v).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, v).dvRefs.isEmpty)
     // ledger survived the rollback: the replayed batch stays a no-op
     assert(SnapshotTable.transactionalAppend(
       spark.range(999, 1100).toDF(), dir, "app", 7L).isEmpty)
@@ -111,7 +111,7 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
     // MoR kept every original file (masked, not rewritten) and added new
     val filesAfter = SnapshotTable.manifestFiles(spark, mor, v).toSet
     assert(filesBefore.subsetOf(filesAfter) && filesAfter != filesBefore)
-    assert(SnapshotTable.manifestDvRefs(spark, mor, v).nonEmpty)
+    assert(SnapshotTable.snapshot(spark, mor, v).dvRefs.nonEmpty)
     // identical result to the CoW twin
     def snap(d: String) = SnapshotTable.read(spark, d)
       .select("id", "status", "amount").collect()
@@ -141,7 +141,7 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(snap() == expect)
     val cv = SnapshotTable.compact(spark, dir).get
-    assert(SnapshotTable.manifestDvRefs(spark, dir, cv).isEmpty)
+    assert(SnapshotTable.snapshot(spark, dir, cv).dvRefs.isEmpty)
     assert(snap() == expect)
   }
 
@@ -178,7 +178,7 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
     SnapshotTable.append(spark.range(100, 200).coalesce(1).toDF(), dir)
     SnapshotTable.deleteWhereMor(spark, dir, $"id" === 5L || $"id" === 150L)
     val v = SnapshotTable.compactWhere(spark, dir, "id", 0L, 99L).get
-    val dv = SnapshotTable.manifestDvRefs(spark, dir, v)
+    val dv = SnapshotTable.snapshot(spark, dir, v).dvRefs
     // the out-of-scope file keeps its vector; the in-scope one purged
     assert(dv.size == 1)
     assert(ids(SnapshotTable.read(spark, dir)) ==
@@ -262,25 +262,28 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
     // version-pinned counts too
     assert(SnapshotTable.countRows(spark, dir, Some(preRestore)) ==
       SnapshotTable.read(spark, dir, Some(preRestore)).count())
-    // LEGACY fallback: a table whose v0 manifest (always full-form)
-    // is stripped of stats — no file carries a count, countRows must
-    // scan those files and still be exact
+    // A manifest whose files carry no row count (stats stripped, the
+    // layout of writers that predate counts) is refused, not scanned.
     val dir2 = tmp("count-legacy")
     SnapshotTable.append(spark.range(0, 77).toDF(), dir2,
       statsCols = Seq("id"))
-    val p = new org.apache.hadoop.fs.Path(dir2, "_manifests/v0.json")
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    rewriteManifest(dir2, 0L)(_.remove("stats"))
+    val e = intercept[java.io.IOException] {
+      SnapshotTable.countRows(spark, dir2)
+    }
+    assert(e.getMessage.contains("without a recorded size and row count"))
+  }
+
+  /** Rewrite manifest `v` of `dir` through `edit` of its JSON tree. */
+  private def rewriteManifest(dir: String, v: Long)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Any): Unit = {
+    val p = new java.io.File(SparkTestBase.localPath(dir),
+      s"_manifests/v$v.json").toPath
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = {
-      val in = hfs.open(p)
-      try mapper.readTree(in) finally in.close()
-    }.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    assert(node.has("stats"))
-    node.remove("stats")
-    hfs.delete(p, false)
-    val out = hfs.create(p, false)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    assert(SnapshotTable.countRows(spark, dir2) == 77L)
+    val node = mapper.readTree(java.nio.file.Files.readAllBytes(p))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(node)
+    java.nio.file.Files.write(p, mapper.writeValueAsBytes(node))
   }
 
   test("reader-feature guard: future manifests fail loudly; current ones stamp their features") {
@@ -309,34 +312,35 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
     assert(e.getMessage.contains("column-mapping"))
   }
 
-  test("vacuum's rewrite keeps a legacy stampless manifest stampless") {
+  test("manifests in pre-current layouts are refused with a rewrite hint") {
     val dir = tmp("legacy-ts")
     SnapshotTable.append(spark.range(0, 10).toDF(), dir)   // v0
     SnapshotTable.append(spark.range(10, 20).toDF(), dir)  // v1
     SnapshotTable.append(spark.range(20, 30).toDF(), dir)  // v2
-    // simulate a pre-timestamp manifest at the future keepFrom (v1)
-    val p = new org.apache.hadoop.fs.Path(dir, "_manifests/v1.json")
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = {
-      val in = hfs.open(p)
-      try mapper.readTree(in) finally in.close()
-    }.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("ts")
-    hfs.delete(p, false)
-    val out = hfs.create(p, false)
-    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    SnapshotTable.vacuum(spark, dir, keepVersions = 2, minAgeMs = 0L)
-    // the checkpoint-form rewrite of v1 must NOT have stamped "now" —
-    // that would adjust v2 past the vacuum instant and break
-    // historical resolution
-    assert(SnapshotTable.manifestCommitTime(spark, dir, 1L).isEmpty)
-    val tl = SnapshotTable.commitTimeline(spark, dir)
-    assert(tl.map(_._1) == Seq(1L, 2L))
-    assert(tl(1)._2 > tl(0)._2)
-    // v2's real stamp still resolves
-    assert(SnapshotTable.versionAtTimestamp(spark, dir, tl(1)._2) == 2L)
-    assert(SnapshotTable.read(spark, dir).count() == 30)
+    // each layout an earlier writer produced, simulated at v1
+    val layouts = Seq[(String, com.fasterxml.jackson.databind.node.ObjectNode => Any)](
+      "no commit timestamp" -> (_.remove("ts")),
+      "no operation name" -> (_.remove("op")),
+      "no recorded schema" -> (_.remove("schema")),
+      "inline Bloom bitsets" -> (_.putObject("blooms")),
+      "without a recorded size and row count" -> (_.remove("sizes")))
+    val v1 = new java.io.File(SparkTestBase.localPath(dir), "_manifests/v1.json")
+    val current = java.nio.file.Files.readAllBytes(v1.toPath)
+    layouts.foreach { case (layout, edit) =>
+      java.nio.file.Files.write(v1.toPath, current)
+      rewriteManifest(dir, 1L)(edit)
+      Seq[() => Any](
+        () => SnapshotTable.read(spark, dir, Some(1L)).count(),
+        () => SnapshotTable.history(spark, dir),
+        () => SnapshotTable.vacuum(spark, dir, keepVersions = 2,
+          minAgeMs = 0L)).foreach { reader =>
+        val e = intercept[java.io.IOException](reader())
+        assert(e.getMessage.contains(s"manifest v1 under $dir"), layout)
+        assert(e.getMessage.contains(layout), e.getMessage)
+        assert(e.getMessage.contains("rewrite the table with an earlier " +
+          "release"), e.getMessage)
+      }
+    }
   }
 
   test("binPackSmall folds only sub-threshold files") {

@@ -430,7 +430,7 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
     appendP(df, Seq("day"), 0L)
     val v0 = SnapshotTable.latestVersion(spark, dir).get
     // Every data file holds exactly one day (min == max in stats).
-    val stats = SnapshotTable.manifestStats(spark, dir, v0)
+    val stats = SnapshotTable.snapshot(spark, dir, v0).stats
     val files = SnapshotTable.manifestFiles(spark, dir, v0)
     assert(files.nonEmpty && files.forall(stats.contains))
     files.foreach { f =>
@@ -1056,7 +1056,7 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
     assert(ids(re) == Set(100L, 200L))
   }
 
-  test("rewrite paths drop a legacy ineligible bloom column instead of wedging") {
+  test("rewrite paths drop an ineligible bloom column instead of wedging") {
     val dir = tempDir("graft-snap-lb") + "/t"
     SnapshotTable.append(
       Seq((1L, 1.5), (2L, 2.5), (3L, 3.5)).toDF("id", "d"), dir,
@@ -1064,13 +1064,13 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
     val base = SnapshotTable.latestVersion(spark, dir).get
     val touched = SnapshotTable.manifestFiles(spark, dir, base)
     val rewrite = SnapshotTable.read(spark, dir).filter($"id" =!= 2L)
-    // A pre-r7 manifest may RECORD a bloom column the eligibility
-    // rules now reject (here: double). The rewrite path re-tracks
-    // recorded columns non-strictly — it must complete (dropping the
-    // bitsets), not throw the append-time require.
+    // The rewrite path takes its Bloom columns unchecked (they are the
+    // table's recorded tracking), so it may be handed one the
+    // eligibility rules reject (here: double). It must complete
+    // (dropping the bitsets), not throw the append-time require.
     val v = SnapshotTable.commitRewrite(spark, dir, touched, rewrite,
       statsCols = Seq("id"), bloomCols = Seq("d"), maxRetries = 20,
-      op = "legacyRewrite")
+      op = "ineligibleRewrite")
     assert(v.nonEmpty)
     assert(ids(SnapshotTable.read(spark, dir)) == Set(1L, 3L))
     // And compact() of the table now tracking "d" completes too.
@@ -1145,7 +1145,7 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
     // compact materializes: values persist, the defaults map drains
     SnapshotTable.compact(spark, dir, clusterBy = Seq("id"))
     val head = SnapshotTable.latestVersion(spark, dir).get
-    assert(SnapshotTable.manifestDefaults(spark, dir, head).isEmpty,
+    assert(SnapshotTable.snapshot(spark, dir, head).defaults.isEmpty,
       "all pre-ADD files rewritten — the entry must retire")
     assert(scores(SnapshotTable.read(spark, dir)) == expect)
   }
@@ -1178,7 +1178,7 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
         s"timestamp statsCols must summarize from footers alone, " +
           s"ran ${summaryJobs.get} scan job(s)")
       val v = SnapshotTable.latestVersion(spark, dir).get
-      val stats = SnapshotTable.manifestStats(spark, dir, v)
+      val stats = SnapshotTable.snapshot(spark, dir, v).stats
       assert(stats.size == 2 &&
         stats.values.forall(_.get("ts").exists(_.tag == "ts")),
         s"every file must carry a ts-domain stat: $stats")
