@@ -120,18 +120,20 @@ import org.apache.spark.sql.types._
 object SnapshotTable {
 
   /** Label every Spark job an internal phase launches (guide §1.5 —
-    * "label your jobs"): the phase tag is APPENDED to whatever
-    * description the caller already set, so a profiler/UI reading
-    * `spark.job.description` can attribute each control-plane job
-    * (probe, stats scan, rewrite, ...) to the table operation that
-    * ran it. Pure observability — restores the previous description
-    * on exit. */
+    * "label your jobs"): the phase tag is APPENDED to an enclosing
+    * `graft:` label, so a profiler/UI reading `spark.job.description`
+    * can attribute each control-plane job (probe, stats scan,
+    * rewrite, ...) to the table operation that ran it. Any other
+    * description (a stream's batch description, a user's) gives way
+    * to `graft:<tag>` inside the scope, so every labelled job's
+    * description starts with `graft:`. Pure observability — restores
+    * the previous description on exit. */
   private[graft] def labeled[T](spark: SparkSession, tag: String)
                                (body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(
-      if (prev == null || prev.isEmpty) s"graft:$tag"
+      if (prev == null || !prev.startsWith("graft:")) s"graft:$tag"
       else s"$prev | $tag")
     try body
     finally sc.setJobDescription(prev)

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.catalog.{Catalog, FolderMeta}
 import graft.extract.Extractor
 import graft.functions.Clean
-import graft.sources.TableStore
+import graft.sources.{SnapshotTable, TableStore}
 
 /** The streaming rebuild of the reference's ingest engine (`POST /`,
   * reference main.py:656-759): file lands → admission filter → path
@@ -31,6 +31,22 @@ import graft.sources.TableStore
   * Ingest is embarrassingly parallel per file: no shuffle anywhere in
   * the plan, so at 100 TB this scales linearly with executors; the
   * only driver-side state is the O(#folders) catalog.
+  *
+  * Each wave reuses the previous wave's generated code. Spark caches a
+  * compiled class under (thread context classloader, source text), so
+  * two things keep a wave's classes cached:
+  *
+  *  - every micro-batch is re-anchored on the caller's `spark` session
+  *    before any job runs. Each `start` clones a fresh stream session,
+  *    and with artifact isolation the executors give every session its
+  *    own classloader, so jobs run under the stream's session would
+  *    miss the cache on every wave;
+  *  - no per-batch value enters the plan as a literal. A literal is
+  *    inlined into the generated source, so `uploaded_at` (one driver
+  *    timestamp per batch) and `_batch_id` ride the rows as data, and
+  *    the archive filters its (uid, folder) set in the task, not in
+  *    the plan. The plan text is then the same wave after wave, and
+  *    only a re-train that changes a folder's KPIs compiles new code.
   */
 object Ingest {
 
@@ -80,15 +96,16 @@ object Ingest {
   /** Project one folder's admitted+extracted rows to its typed schema
     * (O15 row construction, main.py:726-741 — row_id is content-derived
     * sha2(path) instead of the reference's wall-clock epoch for
-    * determinism). */
+    * determinism). `uploaded_at` and `_batch_id` are the batch's own
+    * values, which [[withKpis]] carries on every row. */
   private def project(extracted: DataFrame, meta: FolderMeta): DataFrame = {
     val kpiCols = meta.kpis.map(k =>
       castKpi(element_at(col("kpis"), k.name), k.logicalType).as(k.columnName))
     extracted.select(
       (sha2(col("path"), 256).as("row_id")
         +: col("file_name").as("file_name")
-        +: current_timestamp().as("uploaded_at")
-        +: kpiCols): _*)
+        +: col("uploaded_at")
+        +: kpiCols :+ col("_batch_id")): _*)
   }
 
   /** Start the ingest stream over `landingDir`. Files are appended to
@@ -114,11 +131,15 @@ object Ingest {
     // main.py:757-759): failures degrade to the all-"N/A" map, which
     // the sentinel normalization turns into a row of NULL KPIs — the
     // file is still recorded and archived.
-    def withKpis(subset: DataFrame, keys: Seq[String]): DataFrame = {
-      val schema = subset.schema.add("kpis",
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType))
+    // The batch's `uploaded_at` and `_batch_id` ride each row as data,
+    // never as plan literals (see the object's doc).
+    def withKpis(subset: DataFrame, keys: Seq[String],
+                 uploadedAt: java.time.Instant, batchId: Long): DataFrame = {
+      import org.apache.spark.sql.types._
+      val schema = subset.schema
+        .add("kpis", MapType(StringType, StringType))
+        .add("uploaded_at", TimestampType, nullable = false)
+        .add("_batch_id", LongType, nullable = false)
       val nameIdx = subset.schema.fieldIndex("file_name")
       val contentIdx = subset.schema.fieldIndex("content")
       val chunk = extractor.batchSize
@@ -134,10 +155,12 @@ object Ingest {
           // archived below, which is unrecoverable loss.
           rows.zipWithIndex.map { case (r, i) =>
             val m = if (i < maps.size) maps(i) else keys.map(_ -> "N/A").toMap
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ m)
+            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ m :+ uploadedAt :+ batchId)
           }
         }
-      }(org.apache.spark.sql.Encoders.row(schema))
+        // Lenient: the Instant encodes whatever the session's
+        // java8API setting makes the external timestamp type.
+      }(org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(schema, lenient = true))
     }
 
     // The binaryFile source's schema is fixed but streaming sources
@@ -165,7 +188,14 @@ object Ingest {
     admit(source).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (streamBatch: DataFrame, batchId: Long) =>
+        // Re-anchor: every job below runs on the caller's session, not
+        // the stream's clone, so each wave's tasks share one artifact
+        // classloader and hit the codegen cache (see the object's doc).
+        val batch = org.apache.spark.sql.GraftSqlBridge.dataFrameOfInternalRows(
+          spark, streamBatch.queryExecution.toRdd, streamBatch.schema)
+        val uploadedAt =
+          java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.MICROS)
         // Crash-replay tolerance: archive() moves landing files before
         // the checkpoint commits this batch, so a replayed batch can
         // list files that no longer exist in landing. Two guards make
@@ -184,15 +214,23 @@ object Ingest {
         // several folders.
         batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val present = batch.select("uid", "folder").distinct()
-            .collect().map(r => (r.getString(0), r.getString(1)))
+          // Distinct (uid, folder) pairs in one job: each partition
+          // dedups its own rows, the driver unions the sets — no
+          // shuffle.
+          val present: Seq[(String, String)] =
+            SnapshotTable.labeled(spark, "ingest.discover") {
+              batch.select("uid", "folder")
+                .mapPartitions(_.map(r => (r.getString(0), r.getString(1))).toSet.iterator)(
+                  Encoders.tuple(Encoders.STRING, Encoders.STRING))
+                .collect().toSet.toSeq
+            }
           def ingestFolder(u: String, f: String): Boolean =
             catalog.get(u, f).exists { meta =>
               val keys = meta.kpis.map(_.name)
               val subset = withKpis(
-                batch.filter(col("uid") === u && col("folder") === f), keys)
+                batch.filter(col("uid") === u && col("folder") === f), keys,
+                uploadedAt, batchId)
               val fresh = project(subset, meta)
-                .withColumn("_batch_id", lit(batchId))
               val tablePath = s"$warehouseDir/${meta.tableName}"
               // Rows written by a crashed attempt for files that are no
               // longer in landing: carry them through the overwrite.
@@ -238,13 +276,17 @@ object Ingest {
           // shares one BigQuery table the same way), and those two
           // writes must not race on the same directory — they run
           // sequentially inside their group.
-          val byTable: Seq[Seq[(String, String)]] = present.toSeq
+          val byTable: Seq[Seq[(String, String)]] = present
             .groupBy { uf: (String, String) =>
               catalog.get(uf._1, uf._2).map(_.tableName)
                 .getOrElse(uf._1 + " " + uf._2) }
             .values.toSeq
+          // Labelled here, in the thread that runs the group: a job's
+          // description is a per-thread local property.
           def ingestGroup(group: Seq[(String, String)]): Seq[(String, String)] =
-            group.filter { case (u, f) => ingestFolder(u, f) }
+            SnapshotTable.labeled(spark, "ingest.write") {
+              group.filter { case (u, f) => ingestFolder(u, f) }
+            }
           val ingested: Seq[(String, String)] =
             if (byTable.length <= 1) byTable.flatMap(ingestGroup)
             else {
@@ -269,36 +311,38 @@ object Ingest {
             }
           // Archive ONLY after every folder's rows are durably written
           // (O17's crash window closed by ordering + checkpoint).
-          ingested.foreach { case (u, f) =>
-            archive(spark, batch, u, f, processedDir)
-          }
+          if (ingested.nonEmpty)
+            SnapshotTable.labeled(spark, "ingest.archive") {
+              archive(spark, batch, ingested.toSet, processedDir)
+            }
         } finally batch.unpersist()
       }
       .start()
   }
 
-  /** O17 archive move (main.py:750-752): relocate ingested files under
-    * processedDir, preserving the incoming/... suffix. Bookkeeping
-    * only — exactly-once is the checkpoint's job.
+  /** O17 archive move (main.py:750-752): relocate the batch's files of
+    * the `ingested` (uid, folder) pairs under processedDir, preserving
+    * the incoming/... suffix. Bookkeeping only — exactly-once is the
+    * checkpoint's job.
     *
-    * The renames run DISTRIBUTED (foreachPartition over the batch's
-    * path column): the driver never collects the file list, so a
-    * landing zone with millions of small files archives at executor
-    * parallelism instead of serializing one rename at a time on the
-    * driver. Renames are independent per file, so task retries and
-    * speculative duplicates are safe — the exists() guard makes the
-    * move idempotent. */
+    * The renames run DISTRIBUTED, in one foreachPartition over the
+    * batch: the driver never collects the file list, so a landing zone
+    * with millions of small files archives at executor parallelism
+    * instead of serializing one rename at a time on the driver. The
+    * pair set is checked in the task, not filtered in the plan, so the
+    * plan carries no per-batch literal. Renames are independent per
+    * file, so task retries and speculative duplicates are safe — the
+    * exists() guard makes the move idempotent. */
   private def archive(spark: SparkSession, batch: DataFrame,
-                      uid: String, folder: String, processedDir: String): Unit = {
+                      ingested: Set[(String, String)], processedDir: String): Unit = {
     val bcConf = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
-    batch.filter(col("uid") === uid && col("folder") === folder)
-      .select("path")
+    try batch.select("uid", "folder", "path")
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         val conf = bcConf.value.value
-        rows.foreach { r =>
-          val p = r.getString(0)
+        rows.filter(r => ingested((r.getString(0), r.getString(1)))).foreach { r =>
+          val p = r.getString(2)
           val src = new Path(p)
           val fs = src.getFileSystem(conf)
           val suffix = p.substring(p.lastIndexOf("incoming/"))
@@ -311,6 +355,7 @@ object Ingest {
           }
         }
       }
+    finally bcConf.destroy()
   }
 
   /** Read back a folder's table with evolved schema, dropping

@@ -606,6 +606,71 @@ class IngestSpec extends AnyFunSuite with TempDirs {
     assert(e.getCondition == "CANNOT_MERGE_SCHEMAS", e.getMessage)
   }
 
+  /** Two folders (two tables) trained with a number and a date KPI. */
+  private def twoFolders(): Catalog =
+    Seq("f1", "f2").foldLeft(Catalog.empty) { (c, f) =>
+      c.add(Catalog.train("u1", f, "waves",
+        Map("Amount" -> "$10", "Day" -> "2024-01-05")))
+    }
+
+  /** Wave `w`'s documents: two per folder. */
+  private def waveDocs(w: Int): Seq[((String, String), String)] =
+    for (f <- Seq("f1", "f2"); i <- 1 to 2)
+      yield (f, s"w$w-$i.pdf") -> s"Amount=$$$w$i.50\nDay=2024-02-0$i"
+
+  test("a second wave on an unchanged catalog compiles no new code") {
+    val root = tempDir("graft-ingest-codegen")
+    val catalog = twoFolders()
+    wave(root, catalog, waveDocs(1): _*)
+    val before = org.apache.spark.GraftSparkTestBridge.compilations
+    wave(root, catalog, waveDocs(2): _*)
+    val compiled = org.apache.spark.GraftSparkTestBridge.compilations - before
+    assert(compiled == 0, s"the second wave compiled $compiled classes")
+    catalog.folders.values.foreach { meta =>
+      assert(Ingest.readTable(spark, s"$root/warehouse", meta).count() == 4)
+    }
+  }
+
+  test("a batch's rows share one uploaded_at across folders; a later wave's is greater") {
+    val root = tempDir("graft-ingest-stamp")
+    val catalog = twoFolders()
+    wave(root, catalog, waveDocs(1): _*)
+    wave(root, catalog, waveDocs(2): _*)
+    val stamps = catalog.folders.values.flatMap { meta =>
+      Catalog.readTable(spark, s"$root/warehouse", meta)
+        .select("_batch_id", "uploaded_at").collect()
+        .map(r => r.getAs[Number](0).longValue -> r.getTimestamp(1))
+    }
+    assert(stamps.size == 8)
+    val byBatch = stamps.groupBy(_._1).map { case (b, s) => b -> s.map(_._2).toSet }
+    assert(byBatch.keySet == Set(0L, 1L))
+    assert(byBatch.values.forall(_.size == 1), byBatch)
+    assert(byBatch(1L).head.after(byBatch(0L).head), byBatch)
+  }
+
+  test("a wave's jobs carry the ingest.discover, ingest.write and ingest.archive labels") {
+    val root = tempDir("graft-ingest-labels")
+    val catalog = twoFolders()
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        labels.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      wave(root, catalog, waveDocs(1): _*)
+      org.apache.spark.GraftSparkTestBridge.drain(sc)
+    } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val heads = labels.asScala.map(_.split('|').head.trim).toSet
+    assert(heads == Set("graft:ingest.discover", "graft:ingest.write",
+      "graft:ingest.archive"), labels.asScala.mkString("; "))
+  }
+
   test("admit implements the B.6 admission vectors") {
     import spark.implicits._
     val paths = Seq(
