@@ -57,10 +57,20 @@ object Clean {
   /** O11: messy numeric cast (main.py:229-239).
     * Strip `[$€£¥,\s%]`; `(x)` → `-x`; cast; unparseable → NULL.
     * Composed built-ins → codegen'd; the numeric-shape guard keeps the
-    * cast safe under ANSI mode (Spark 4 default). */
-  def parseMessyNumber(c: Column): Column = {
-    val s = nullNormalize(trim(c))
-    val cleaned = regexp_replace(s, MessyChars, "")
+    * cast safe under ANSI mode (Spark 4 default). The one-shot form of
+    * [[normalizeNumber]] then [[parseNormalizedNumber]]. */
+  def parseMessyNumber(c: Column): Column =
+    parseNormalizedNumber(normalizeNumber(c))
+
+  /** O11's normalize step: trimmed, sentinels to NULL, the messy
+    * characters stripped. */
+  def normalizeNumber(c: Column): Column =
+    regexp_replace(nullNormalize(trim(c)), MessyChars, "")
+
+  /** O11's parse step over a [[normalizeNumber]]ed column, which it
+    * refers to several times: a caller that projects the normalized
+    * value first evaluates it once per row. */
+  def parseNormalizedNumber(cleaned: Column): Column = {
     val deparen = when(
       cleaned.startsWith("(") && cleaned.endsWith(")"),
       concat(lit("-"), regexp_replace(cleaned, "^\\(|\\)$", ""))
@@ -145,10 +155,19 @@ object Clean {
     * date grammar as a custom expression would have to reproduce
     * Spark's exact parser semantics (lenient-mode month names, era
     * handling) to stay oracle-identical — all risk, no codegen win,
-    * so the grouped-guard composed form is final. */
-  def parseFuzzyDate(c: Column): Column = {
-    val s = regexp_replace(nullNormalize(trim(c)),
-      "(\\d)(st|nd|rd|th)\\b", "$1")
+    * so the grouped-guard composed form is final. The one-shot form of
+    * [[normalizeDate]] then [[parseNormalizedDate]]. */
+  def parseFuzzyDate(c: Column): Column = parseNormalizedDate(normalizeDate(c))
+
+  /** O12's normalize step: trimmed, sentinels to NULL, ordinal day
+    * suffixes dropped. */
+  def normalizeDate(c: Column): Column =
+    regexp_replace(nullNormalize(trim(c)), "(\\d)(st|nd|rd|th)\\b", "$1")
+
+  /** O12's parse step over a [[normalizeDate]]d column, which every
+    * guard and parse attempt refers to: a caller that projects the
+    * normalized value first evaluates it once per row. */
+  def parseNormalizedDate(s: Column): Column = {
     // Group formats by identical guard regex, preserving first-format
     // precedence (guards are mutually exclusive, so inter-group order
     // is immaterial; intra-group order is kept).

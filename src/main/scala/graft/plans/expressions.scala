@@ -1995,11 +1995,80 @@ case class AdcDistance(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The deletion vectors of a scan's files: each file's deleted in-file
+  * row positions (`_metadata.row_index`) as a bitmap, keyed by the
+  * file's decoded URI path. A scan reports `_metadata.file_path` as a
+  * URL-encoded string; [[pathKey]] turns either form into the key.
+  * The string form names only sizes, so a plan string never lists
+  * positions. */
+final case class DeletionVectors(byPath: Map[String, org.roaringbitmap.RoaringBitmap]) {
+  /** The bitmap of the file a scan reports as `filePath`, or null. */
+  def of(filePath: UTF8String): org.roaringbitmap.RoaringBitmap =
+    byPath.getOrElse(DeletionVectors.pathKey(filePath.toString), null)
+
+  override def toString: String =
+    s"${byPath.size} files, ${byPath.valuesIterator.map(_.getLongCardinality).sum} rows"
+}
+
+object DeletionVectors {
+  def pathKey(urlOrPath: String): String =
+    org.apache.spark.paths.SparkPath.fromUrlString(urlOrPath).toPath.toUri.getPath
+
+  /** True when `position` is in `bitmap` (null: no vector). Bitmaps
+    * hold unsigned 32-bit positions; a larger one is never deleted. */
+  def contains(bitmap: org.roaringbitmap.RoaringBitmap, position: Long): Boolean =
+    bitmap != null && (position >>> 32) == 0 && bitmap.contains(position.toInt)
+}
+
+/** True when the row at `rowIndex` of file `filePath` is deleted by
+  * `vectors` — the scan-side deletion-vector mask (`NOT` of it) and the
+  * change feed's newly-deleted rows. The vectors ride the plan, read by
+  * the driver beforehand, so a masked scan runs no job of its own.
+  * Generated code looks a file's bitmap up once per run of rows from
+  * that file, then tests each position; interpreted evaluation looks it
+  * up per row. */
+case class InDeletionVector(left: Expression, right: Expression,
+                            vectors: DeletionVectors) extends BinaryExpression {
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "in_deletion_vector"
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"in_deletion_vector expects (STRING, BIGINT), got ${l.sql}, ${r.sql}")
+  }
+
+  override protected def nullSafeEval(path: Any, index: Any): Any =
+    DeletionVectors.contains(vectors.of(path.asInstanceOf[UTF8String]),
+      index.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val vs = ctx.addReferenceObj("dvs", vectors, classOf[DeletionVectors].getName)
+    val path = ctx.addMutableState("org.apache.spark.unsafe.types.UTF8String", "dvPath")
+    val bitmap = ctx.addMutableState("org.roaringbitmap.RoaringBitmap", "dvBitmap")
+    nullSafeCodeGen(ctx, ev, (p, i) =>
+      s"""
+        if (!$p.equals($path)) { $path = $p.clone(); $bitmap = $vs.of($p); }
+        ${ev.value} = graft.plans.DeletionVectors.contains($bitmap, $i);
+      """)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): InDeletionVector =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Column-level and SQL-level entry points for the native expressions. */
 object GraftFunctions {
 
   def parseMessyNumber(c: Column): Column =
     GraftSqlBridge.column(ParseMessyNumber(GraftSqlBridge.expression(c)))
+
+  /** True when a scanned row (`_metadata.file_path`,
+    * `_metadata.row_index`) is deleted by `vectors`. */
+  def inDeletionVector(filePath: Column, rowIndex: Column,
+                       vectors: DeletionVectors): Column =
+    GraftSqlBridge.column(InDeletionVector(GraftSqlBridge.expression(filePath),
+      GraftSqlBridge.expression(rowIndex), vectors))
 
   def dotProductFloat(a: Column, b: Column): Column =
     GraftSqlBridge.column(DotProductFloat(

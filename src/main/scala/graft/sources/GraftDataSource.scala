@@ -82,7 +82,7 @@ final class GraftDataSource extends RelationProvider
     // column-mapped one (the bare relation's schema is the PHYSICAL
     // scan schema); both route through a scan relation that runs the
     // fully-resolved frame — same manifest-pruned parquet scan
-    // underneath, plus the anti-join / logical rename.
+    // underneath, plus the deletion-vector mask / logical rename.
     val snap = SnapshotTable.snapshot(spark, dir, v)
     if (snap.dvRefs.isEmpty && snap.colMap.isEmpty && snap.defaults.isEmpty)
       rel
@@ -687,7 +687,7 @@ final class GraftStreamSink(spark: SparkSession, dir: String, appId: String,
   * initial snapshot (vectors applied) as inserts at the pinned
   * version — the public Delta CDF streaming surface.
   *
-  * Each batch's change computation (parquet scans + DV anti-joins +
+  * Each batch's change computation (parquet scans + DV masks +
   * multiset set-ops) is planned to its RDD lineage at getBatch time
   * and re-anchored as a streaming frame — no job runs until the
   * micro-batch executes, and a committed version's delta is immutable
@@ -837,7 +837,7 @@ object GraftCdfStreamSource {
   * masked rows, so `format("graft")` routes DV'd snapshots through
   * this [[PrunedFilteredScan]] — buildScan runs the SAME
   * manifest-pruned [[SnapshotSql.dataFrame]] (vectorized parquet scan
-  * + broadcast DV anti-join), with the pushed columns projected and
+  * + deletion-vector mask), with the pushed columns projected and
   * the pushable filters applied INSIDE the frame so they still reach
   * [[SnapshotFileIndex]] pruning and the parquet row-group filters.
   * All filters are declared unhandled (Spark re-applies the full

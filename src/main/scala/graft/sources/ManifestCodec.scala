@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 
-import SnapshotTable.{BucketLayout, ColStat, RowsCol, Snapshot, TableState}
+import SnapshotTable.{BucketLayout, ColStat, DeletionVector, RowsCol, Snapshot, TableState}
 
 /** The manifest wire form of [[SnapshotTable]], declared once: each
   * field's JSON name, sort order and delta rule sits in one field
@@ -15,7 +15,7 @@ import SnapshotTable.{BucketLayout, ColStat, RowsCol, Snapshot, TableState}
   * per-file maps live in immutable segment files, each the per-file
   * subset of an inline checkpoint), or a DELTA against the parent
   * version. Two delta rules cover every field:
-  *   - PER-FILE maps (`stats`, `bloomrefs`, `sizes`, `dvrefs`) follow
+  *   - PER-FILE maps (`stats`, `bloomrefs`, `sizes`, `dvs`) follow
   *     the file list (`adds`/`removes`), and a delta carries only the
   *     entries that changed. Only a live file's deletion vector ever
   *     changes; a carried file whose vector is dropped is listed in
@@ -25,7 +25,8 @@ import SnapshotTable.{BucketLayout, ColStat, RowsCol, Snapshot, TableState}
   *     which deltas write each one).
   * Each manifest lists the reader `features` its resolution depends
   * on; [[decode]] refuses unknown ones, and the layouts this engine no
-  * longer writes. Bloom sidecars have their own small codec. */
+  * longer writes. Bloom and deletion-vector sidecars have their own
+  * small codecs. */
 private[graft] object ManifestCodec {
   private val mapper = new ObjectMapper()
   private val nodes = JsonNodeFactory.instance
@@ -45,14 +46,21 @@ private[graft] object ManifestCodec {
     * that skips deletion vectors), so it fails loudly instead — the
     * public Delta/Iceberg protocol-versioning idea as a feature list. */
   private val SupportedFeatures = Set(
-    "dv", "dvremoves", "constraints", "segments", "bucket", "colmap",
+    "dvbitmaps", "dvremoves", "constraints", "segments", "bucket", "colmap",
     "defaults")
+
+  /** Reader features of retired layouts ([[RetiredLayouts]]): `dv`
+    * guarded deletion vectors stored as parquet (file, row_index)
+    * sidecars. */
+  private val RetiredFeatures = Set("dv")
 
   /** Layouts earlier writers produced and this reader refuses: the
     * name of each, and how to spot it in a manifest. Files without a
     * recorded size and row count are refused per file in [[decode]]. */
   private val RetiredLayouts: Seq[(String, JsonNode => Boolean)] = Seq(
     ("inline Bloom bitsets", _.has("blooms")),
+    ("parquet deletion-vector sidecars",
+      n => n.has("dvrefs") || listAt(n, "features").exists(RetiredFeatures)),
     ("no commit timestamp", !_.has("ts")),
     ("no operation name", !_.has("op")),
     ("no recorded schema", !_.has("schema")))
@@ -61,6 +69,9 @@ private[graft] object ManifestCodec {
 
   private val text = Codec[String](nodes.textNode, _.asText)
   private val long = Codec[Long](nodes.numberNode(_: Long), _.asLong)
+  private val bytes = Codec[Array[Byte]](
+    b => nodes.textNode(java.util.Base64.getEncoder.encodeToString(b)),
+    n => java.util.Base64.getDecoder.decode(n.asText))
 
   /** A string list in the order given. */
   private val strs = Codec[Seq[String]](
@@ -103,6 +114,11 @@ private[graft] object ManifestCodec {
     },
     n => Some(BucketLayout(n.get("n").asInt, strs.dec(n.get("cols")),
       listAt(n, "sort"))))
+
+  /** `[sidecar ref, deleted-row count]`. */
+  private val vector = Codec[DeletionVector](
+    d => { val a = nodes.arrayNode(); a.add(d.ref); a.add(d.card); a },
+    n => DeletionVector(n.get(0).asText, n.get(1).asLong))
 
   /** `{"v": literal, "files": [pre-ADD file keys]}`. */
   private val default = Codec[(String, Set[String])](
@@ -243,7 +259,7 @@ private[graft] object ManifestCodec {
     PerFile[String]("bloomrefs", text, _.bloomRefs,
       (s, m) => s.copy(bloomRefs = m)),
     PerFile[Long]("sizes", long, _.sizes, (s, m) => s.copy(sizes = m)),
-    PerFile[String]("dvrefs", text, _.dvRefs, (s, m) => s.copy(dvRefs = m),
+    PerFile[DeletionVector]("dvs", vector, _.dvs, (s, m) => s.copy(dvs = m),
       removes = Some("dvremoves")))
 
   /** The manifest of `snap` — a checkpoint when `full`, else a delta
@@ -281,12 +297,12 @@ private[graft] object ManifestCodec {
         Nil
     }
     // Stamp exactly the reader features this manifest's resolution
-    // depends on. "dv" and "defaults" key off the EFFECTIVE state
+    // depends on. "dvbitmaps" and "defaults" key off the EFFECTIVE state
     // (a segmented checkpoint's vectors live in its segments); an
     // explicit-empty column-mapping clear needs no guard.
     val feats =
       Seq("segments", "dvremoves", "constraints", "bucket").filter(o.has) ++
-        Seq("dv" -> (o.has("dvrefs") || full && next.dvRefs.nonEmpty),
+        Seq("dvbitmaps" -> (o.has("dvs") || full && next.dvs.nonEmpty),
           "colmap" -> (o.has("colmap") &&
             (next.colMap.nonEmpty || next.retired.nonEmpty)),
           "defaults" -> next.defaults.nonEmpty).collect { case (f, true) => f }
@@ -341,10 +357,10 @@ private[graft] object ManifestCodec {
     })
   }
 
-  /** Files whose deletion-vector ref differs between `p` and `s`: a
+  /** Files whose deletion vector differs between `p` and `s`: a
     * segment holding one is stale once a delta moves it. */
   private def dvMoved(p: TableState, s: TableState): Set[String] =
-    (p.dvRefs.keySet ++ s.dvRefs.keySet).filter(f => p.dvRefs.get(f) != s.dvRefs.get(f))
+    (p.dvs.keySet ++ s.dvs.keySet).filter(f => p.dvs.get(f) != s.dvs.get(f))
 
   /** The version `v` under `dir` from its manifest text. A delta
     * resolves against `parent` (the state at v-1, asked for only
@@ -354,7 +370,8 @@ private[graft] object ManifestCodec {
              parent: => Option[TableState],
              segment: String => TableState): Snapshot = {
     val n = mapper.readTree(body)
-    val unknown = listAt(n, "features").filterNot(SupportedFeatures)
+    val unknown = listAt(n, "features")
+      .filterNot(f => SupportedFeatures(f) || RetiredFeatures(f))
     if (unknown.nonEmpty)
       throw new java.io.IOException(
         s"manifest v$v under $dir requires reader features this engine " +
@@ -407,9 +424,7 @@ private[graft] object ManifestCodec {
         "re-lands with its size and row count), then vacuum with " +
         "keepVersions = 1 (one current checkpoint remains)")
 
-  private val bitsets = obj(obj(Codec[Array[Byte]](
-    b => nodes.textNode(java.util.Base64.getEncoder.encodeToString(b)),
-    n => java.util.Base64.getDecoder.decode(n.asText))))
+  private val bitsets = obj(obj(bytes))
 
   /** A Bloom sidecar: `{file: {column: base64 bitset}}`. */
   def encodeBlooms(blooms: Map[String, Map[String, Array[Byte]]]): String =
@@ -417,4 +432,26 @@ private[graft] object ManifestCodec {
 
   def decodeBlooms(body: String): Map[String, Map[String, Array[Byte]]] =
     bitsets.dec(mapper.readTree(body))
+
+  /** A deletion-vector sidecar: `{file: base64 portable RoaringBitmap}`,
+    * each file's whole set of deleted row positions (encoding
+    * run-compresses the writer's bitmaps in place first). */
+  private val bitmaps = obj(Codec[org.roaringbitmap.RoaringBitmap](
+    b => {
+      b.runOptimize()
+      val buf = java.nio.ByteBuffer.allocate(b.serializedSizeInBytes)
+      b.serialize(buf)
+      bytes.enc(buf.array)
+    },
+    n => {
+      val b = new org.roaringbitmap.RoaringBitmap()
+      b.deserialize(java.nio.ByteBuffer.wrap(bytes.dec(n)))
+      b
+    }))
+
+  def encodeVectors(vectors: Map[String, org.roaringbitmap.RoaringBitmap]): String =
+    mapper.writeValueAsString(bitmaps.enc(vectors))
+
+  def decodeVectors(body: String): Map[String, org.roaringbitmap.RoaringBitmap] =
+    bitmaps.dec(mapper.readTree(body))
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, count, expr, greatest, hash, input_file_name, least, lit, max, min, not, pmod, regexp_replace, shiftleft, shiftright, sum, when}
 import org.apache.spark.sql.types._
+import org.roaringbitmap.RoaringBitmap
 
 /** Minimal manifest-committed table format — the consistency layer the
   * plain-directory warehouse documents itself as lacking
@@ -105,14 +106,15 @@ import org.apache.spark.sql.types._
   * Wire form: [[ManifestCodec]] is the one place the manifest format
   * is declared — each field's JSON name, sort order and delta rule,
   * read and written through one field table. A delta carries
-  * per-file map entries (`stats`, `bloomrefs`, `sizes`, `dvrefs`)
+  * per-file map entries (`stats`, `bloomrefs`, `sizes`, `dvs`)
   * only for files whose entry changed; a whole-value field there is
   * inherited when absent and replaced when present, an explicit empty
   * value included. Each manifest lists the reader features it needs
-  * (`dv`, `dvremoves`, `constraints`, `segments`, `bucket`, `colmap`,
-  * `defaults`); a reader refuses unknown features and the layouts
-  * earlier writers produced (inline Bloom bitsets, no timestamp, no
-  * op, no schema, files without sizes or row counts). Every reader
+  * (`dvbitmaps`, `dvremoves`, `constraints`, `segments`, `bucket`,
+  * `colmap`, `defaults`); a reader refuses unknown features and the
+  * layouts earlier writers produced (inline Bloom bitsets, parquet
+  * deletion-vector sidecars, no timestamp, no op, no schema, files
+  * without sizes or row counts). Every reader
   * resolves a version to one [[Snapshot]].
   *
   * Deliberately out of scope (and documented as such): multi-table
@@ -289,7 +291,7 @@ object SnapshotTable {
     * state was resolved through (segment file name → its file list,
     * carried unchanged through deltas) — what lets the NEXT
     * checkpoint writer reuse unchanged segments; `dvDirty` accumulates
-    * the files whose deletion-vector ref was overridden by a delta
+    * the files whose deletion vector was overridden by a delta
     * since that checkpoint (their segment entries are stale and the
     * segment must be rewritten at the next checkpoint). */
   private[graft] final case class TableState(
@@ -300,7 +302,7 @@ object SnapshotTable {
       bloomCols: Seq[String] = Nil,
       schema: StructType = new StructType(),
       sizes: Map[String, Long] = Map.empty,
-      dvRefs: Map[String, String] = Map.empty,
+      dvs: Map[String, DeletionVector] = Map.empty,
       segments: Seq[(String, Seq[String])] = Nil,
       dvDirty: Set[String] = Set.empty,
       bucket: Option[BucketLayout] = None,
@@ -332,6 +334,12 @@ object SnapshotTable {
       // into new files, and commits prune entries to live files.
       defaults: Map[String, (String, Set[String])] = Map.empty)
 
+  /** A file's DELETION VECTOR (merge-on-read deletes): the `_dv/`
+    * sidecar holding the file's whole set of deleted row positions as a
+    * bitmap, and how many positions it holds — what [[countRows]]
+    * subtracts without reading the sidecar. */
+  final case class DeletionVector(ref: String, card: Long)
+
   /** A table-wide bucketing CLAIM: every data file of the version was
     * written by [[appendBucketed]] with this spec — file names carry
     * Spark-parseable bucket ids, and each file holds exactly the rows
@@ -359,7 +367,8 @@ object SnapshotTable {
     def bloomCols: Seq[String] = state.bloomCols
     def schema: StructType = state.schema
     def sizes: Map[String, Long] = state.sizes
-    def dvRefs: Map[String, String] = state.dvRefs
+    /** Each masked file's deletion-vector sidecar. */
+    def dvRefs: Map[String, String] = state.dvs.map { case (f, d) => f -> d.ref }
     def bucket: Option[BucketLayout] = state.bucket
     def constraints: Map[String, String] = state.constraints
     def colMap: Map[String, String] = state.colMap
@@ -507,15 +516,15 @@ object SnapshotTable {
         fileRefs.keys.flatMap(f => sidecarLookup(side, f, ref).map(f -> _))
       }
 
-  /** Find `file`'s entry in a sidecar. A shallow clone absolutizes
-    * both the file key and the sidecar ref, but the sidecar's OWN
-    * keys stay source-relative — so an absolute miss retries under
-    * the source-relative key derived from the ref's location. */
-  private def sidecarLookup(side: Map[String, Map[String, Array[Byte]]],
-                            file: String,
-                            ref: String): Option[Map[String, Array[Byte]]] =
+  /** Find `file`'s entry in a Bloom or deletion-vector sidecar. A
+    * shallow clone absolutizes both the file key and the sidecar ref,
+    * but the sidecar's OWN keys stay source-relative — so an absolute
+    * miss retries under the source-relative key derived from the ref's
+    * location. */
+  private def sidecarLookup[A](side: Map[String, A], file: String,
+                               ref: String): Option[A] =
     side.get(file).orElse {
-      if (ref.startsWith("_blooms/")) None
+      if (ref.startsWith("_blooms/") || ref.startsWith("_dv/")) None
       else {
         val srcDir = new Path(ref).getParent.getParent // …/_blooms/x.json
         val prefix = srcDir.toUri.getPath + "/data/"
@@ -551,24 +560,19 @@ object SnapshotTable {
   }
 
   /** EXACT metadata-only COUNT(*): Σ per-file [[RowsCol]] footer
-    * counts − Σ deletion-vector masked positions. At 100 TB this is
-    * the difference between an instant manifest fold and an
+    * counts − Σ recorded deletion-vector cardinalities. At 100 TB this
+    * is the difference between an instant manifest fold and an
     * hour-long scan. Every live file records its count (a manifest
-    * without one is refused as a retired layout); vectors are exact by
-    * construction (each sidecar row is one masked live position), so
-    * the result equals `read().count()` bit-for-bit — pinned in
-    * SnapshotOpsSpec and oracle-checked by q_snapshot_count. */
+    * without one is refused as a retired layout), and each vector its
+    * bitmap's cardinality — every position a live row the vector
+    * masks — so the result equals `read().count()` without reading a
+    * sidecar. Pinned in SnapshotOpsSpec and oracle-checked by
+    * q_snapshot_count. */
   def countRows(spark: SparkSession, dir: String,
                 version: Option[Long] = None): Long = {
     val (_, st) = resolve(spark, dir, version, "countRows")
-    // distinct() is load-bearing here (COUNT is duplicate-sensitive):
-    // dvRows serves raw sidecar rows, unique by writer invariant, but
-    // exactness of the subtraction must not rest on that invariant
-    // alone — a hand-edited or foreign sidecar with a duplicate
-    // position must still count each masked row once.
-    val masked = dvRows(spark, dir, st.dvRefs, st.files)
-      .map(_.distinct().count()).getOrElse(0L)
-    st.files.iterator.map(f => st.stats(f)(RowsCol).min.toLong).sum - masked
+    st.files.iterator.map(f => st.stats(f)(RowsCol).min.toLong -
+      st.dvs.get(f).fold(0L)(_.card)).sum
   }
 
   /** The surviving versions with their MONOTONICITY-ADJUSTED commit
@@ -633,7 +637,7 @@ object SnapshotTable {
           // carried files whose deletion vector moved: a MoR delete
           // changed rows without changing the file list
           s.files.filter(f => was(f) &&
-            p.dvRefs.get(f) != s.dvRefs.get(f)).sorted))
+            p.dvs.get(f) != s.state.dvs.get(f)).sorted))
       }
     }.toSeq
   }
@@ -754,8 +758,8 @@ object SnapshotTable {
 
   /** The manifest key of a scanned row's physical file, as a Column —
     * the scan-side twin of [[manifestKey]], computed from
-    * `_metadata.file_path` entirely in builtin string expressions so
-    * deletion-vector application stays inside codegen. */
+    * `_metadata.file_path` in builtin string expressions: the `__file`
+    * column of [[withFile]]. */
   private def fileKeyExpr(dir: String, fp: Column): Column = {
     val prefix = new Path(dir).toUri.getPath + "/data/"
     val p = regexp_replace(fp, "^[a-zA-Z][a-zA-Z0-9+.\\-]*:(//)?", "")
@@ -764,66 +768,59 @@ object SnapshotTable {
         lit(Int.MaxValue)))).otherwise(p)
   }
 
-  private def resolveDvRef(dir: String, ref: String): String =
-    if (ref.startsWith("_dv/")) new Path(dir, ref).toString else ref
-
-  /** The deletion-vector rows covering `files` —
-    * (`__dv_file` manifest key, `__dv_rowidx` in-file row position) —
-    * loading ONLY the sidecars those files' refs name. A foreign
-    * (clone-absolute) sidecar stores source-relative keys; they are
-    * absolutized against the ref's own location so a clone's reads
-    * honor the source's vectors. None when no covered file carries a
-    * vector. */
-  private def dvRows(spark: SparkSession, dir: String,
-                     dvRefs: Map[String, String],
-                     files: Seq[String]): Option[DataFrame] = {
-    val relevant = dvRefs.view.filterKeys(files.toSet).toMap
-    if (relevant.isEmpty) return None
-    // One sidecar can cover MANY files (a single MoR delete writes one
-    // vector file for every file it touched). Positions must be
-    // restricted to the files that CURRENTLY reference the sidecar: a
-    // sibling file's later rewrite materializes ITS deletes and drops
-    // ITS dvRefs entry, but the shared sidecar lives on — serving its
-    // stale positions would make position-COUNTING consumers
-    // (countRows) subtract deletes that no longer exist. (The
-    // anti-join mask was accidentally immune — a rewritten file's name
-    // never matches — but the filter is the correctness contract, not
-    // the join's luck.)
-    import spark.implicits._
-    // Sidecar layout is fixed by the writers (deleteWhereMor /
-    // updateWhereMor / replicate-carry): (file STRING, row_index
-    // LONG). Reading with the schema EXPLICIT skips the per-read
-    // footer schema-inference pass (a driver-side footer open — or a
-    // mergeSchemasInParallel job — on EVERY DV'd read path: probes,
-    // feeds, masked reads).
-    val dvSchema = StructType(Seq(
-      StructField("file", StringType), StructField("row_index", LongType)))
-    val frames = relevant.groupBy(_._2).toSeq.map { case (ref, fs) =>
-      val df0 = spark.read.schema(dvSchema).parquet(resolveDvRef(dir, ref))
-        .select(col("file").as("__dv_file"),
-          col("row_index").as("__dv_rowidx"))
-      val df =
-        if (ref.startsWith("_dv/")) df0
-        else {
-          val srcDir = new Path(ref).getParent.getParent.toUri.getPath
-          df0.withColumn("__dv_file",
-            when(col("__dv_file").startsWith("data/"),
-              concat(lit(s"$srcDir/"), col("__dv_file")))
-              .otherwise(col("__dv_file")))
-        }
-      df.join(broadcast(fs.keys.toSeq.toDF("__dv_file")),
-        Seq("__dv_file"), "left_semi")
+  /** The deletion vectors of `files` at `st`: manifest key → the
+    * file's deleted row positions. The driver reads each sidecar a
+    * covered file names once, through [[TableStore]]; no Spark job
+    * runs. One sidecar covers every file its merge-on-read commit
+    * touched, but only the files that still name it are served: a
+    * sibling's later rewrite drops ITS entry while the sidecar lives
+    * on. A missing sidecar or entry fails the read — serving the file
+    * unmasked would resurrect deleted rows. */
+  private def vectorsOf(spark: SparkSession, dir: String, st: TableState,
+                        files: Seq[String]): Map[String, RoaringBitmap] = {
+    val covered = files.toSet
+    st.dvs.filter { case (f, _) => covered(f) }.groupBy(_._2.ref).flatMap {
+      case (ref, fs) =>
+        val p = if (ref.startsWith("_dv/")) new Path(dir, ref) else new Path(ref)
+        val side = TableStore(spark.sparkContext.hadoopConfiguration, p)
+          .readText(p).map(ManifestCodec.decodeVectors)
+          .getOrElse(throw new java.io.IOException(
+            s"deletion-vector sidecar $ref missing under $dir — vacuumed " +
+              "past the horizon, or the table directory was modified out of band"))
+        fs.keys.map(f => f -> sidecarLookup(side, f, ref).getOrElse(
+          throw new java.io.IOException(
+            s"deletion-vector sidecar $ref under $dir holds no vector for $f")))
     }
-    // No distinct here — (file, row_index) rows are unique by
-    // construction: every sidecar writer (deleteWhereMor /
-    // updateWhereMor) distincts its positions before writing, and
-    // dvRefs maps each file to exactly ONE sidecar, so the per-ref
-    // frames cover disjoint file sets. A distinct would add a full
-    // shuffle of the mask to EVERY DV'd read (masked reads, probes,
-    // feeds) for nothing. Consumers that are duplicate-SENSITIVE
-    // (countRows) re-assert uniqueness themselves.
-    Some(frames.reduce(_ unionByName _))
   }
+
+  /** True for a scanned row whose position `vectors` (manifest key →
+    * positions) lists: one predicate on the row's file path and
+    * in-file index (default: its `_metadata`), evaluated in the scan's
+    * own stage. */
+  private def deletedRow(dir: String, vectors: Map[String, RoaringBitmap],
+                         path: Column = col("_metadata.file_path"),
+                         index: Column = col("_metadata.row_index")): Column =
+    graft.plans.GraftFunctions.inDeletionVector(path, index,
+      graft.plans.DeletionVectors(
+        vectors.map { case (f, b) => absPath(dir, f).toUri.getPath -> b }))
+
+  /** The positions of `rows` (`__file`, `__row_index`, as [[withFile]]
+    * serves them) as one bitmap per file: each task builds its files'
+    * bitmaps and the driver ORs them — one job, its result bounded by
+    * the matched rows. */
+  private def positionsOf(rows: DataFrame): Map[String, RoaringBitmap] =
+    rows.select("__file", "__row_index").mapPartitions { it =>
+      val byFile = scala.collection.mutable.HashMap.empty[String, RoaringBitmap]
+      it.foreach { r =>
+        val pos = r.getLong(1)
+        require((pos >>> 32) == 0,
+          s"deletion vectors hold row positions below 2^32, got $pos")
+        byFile.getOrElseUpdate(r.getString(0), new RoaringBitmap).add(pos.toInt)
+      }
+      byFile.iterator
+    }(org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
+      org.apache.spark.sql.Encoders.javaSerialization(classOf[RoaringBitmap])))
+      .collect().groupMapReduce(_._1)(_._2)(RoaringBitmap.or(_, _))
 
   // ------------------------------------------------------------------
   // Column mapping (logical ↔ physical names)
@@ -865,11 +862,12 @@ object SnapshotTable {
     *   - One [[snapshotRelation]] per scan: file statuses come from
     *     the manifest's recorded sizes, and a file the store lost
     *     fails the read.
-    *   - DELETION VECTORS mask each scan by a BROADCAST anti-join on
-    *     (`_metadata.file_path`, `_metadata.row_index`) — vectors are
-    *     deleted-row-count-sized, orders of magnitude under the data
-    *     they mask. For a `streaming` scan this is a stream-static
-    *     left-anti join, a supported incremental shape.
+    *   - DELETION VECTORS mask each scan with one predicate on
+    *     (`_metadata.file_path`, `_metadata.row_index`) that carries the
+    *     scanned files' bitmaps ([[deletedRow]]): the driver reads the
+    *     sidecars, and the masked scan runs as one job, like a plain
+    *     one. `onlyDeleted` inverts it: only the rows whose positions
+    *     it lists (the change feed's newly deleted rows).
     *   - COLUMN MAPPING: the files are scanned under their PHYSICAL
     *     names and renamed to the logical schema last (after masking,
     *     which needs `_metadata`); filters a query pushes against
@@ -888,25 +886,20 @@ object SnapshotTable {
                                      st: TableState, files: Seq[String],
                                      schema: Option[StructType] = None,
                                      streaming: Boolean = false,
-                                     sqlSurface: Boolean = false
-                                    ): DataFrame = {
+                                     sqlSurface: Boolean = false,
+                                     onlyDeleted: Option[Map[String, RoaringBitmap]] =
+                                       None): DataFrame = {
     val logical = schema.getOrElse(st.schema)
     def scan(fs: Seq[String]): DataFrame = {
       val base = physicalScan(spark, dir, st, fs,
         physSchemaOf(st.colMap, logical), streaming, sqlSurface)
-      val masked = dvRows(spark, dir, st.dvRefs, fs) match {
-        case None => base
-        case Some(dv) =>
-          val cols = base.columns.map(col)
-          base.select(cols :+
-              fileKeyExpr(dir, col("_metadata.file_path")).as("__dv_fp") :+
-              col("_metadata.row_index").as("__dv_ri"): _*)
-            .join(broadcast(dv),
-              col("__dv_fp") === col("__dv_file") &&
-                col("__dv_ri") === col("__dv_rowidx"), "left_anti")
-            .select(cols: _*)
+      val rows = onlyDeleted match {
+        case Some(vs) => base.filter(deletedRow(dir, vs))
+        case None =>
+          val vs = vectorsOf(spark, dir, st, fs)
+          if (vs.isEmpty) base else base.filter(not(deletedRow(dir, vs)))
       }
-      toLogicalFrame(masked, st.colMap, logical)
+      toLogicalFrame(rows, st.colMap, logical)
     }
     val relevant = st.defaults.filter { case (c, (_, pre)) =>
       logical.fieldNames.contains(c) && files.exists(pre) }
@@ -1523,7 +1516,7 @@ object SnapshotTable {
       val next = cur.copy(files = wb.added, stats = wb.stats,
         bloomRefs = wb.refs, bloomCols = wb.bloomCols, sizes = wb.sizes,
         schema = StructType(df.schema.fields.map(_.copy(nullable = true))),
-        dvRefs = Map.empty, bucket = None,
+        dvs = Map.empty, bucket = None,
         colMap = wb.claim.fold(cur.colMap)(_.colMap),
         retired = wb.claim.fold(cur.retired)(_.retired))
       validated = recheckConstraints(spark, dir, next, validated, wb.added,
@@ -1586,7 +1579,7 @@ object SnapshotTable {
       bloomRefs = (cur.bloomRefs -- removed) ++ wb.refs,
       bloomCols = (cur.bloomCols ++ wb.bloomCols).distinct,
       sizes = (cur.sizes -- removed) ++ wb.sizes,
-      dvRefs = cur.dvRefs -- removed,
+      dvs = cur.dvs -- removed,
       colMap = wb.claim.fold(cur.colMap)(_.colMap),
       retired = wb.claim.fold(cur.retired)(_.retired))
 
@@ -2407,25 +2400,25 @@ object SnapshotTable {
     val dropped = fromFiles.filterNot(toFiles.toSet)
     val added = toFiles.filterNot(fromFiles.toSet)
     // A merge-on-read delete changes rows WITHOUT changing the file
-    // list: carried files whose deletion-vector ref differs between
-    // the two versions join both sides — old content under the FROM
+    // list: carried files whose deletion vector differs between the
+    // two versions join both sides — old content under the FROM
     // vector, new under the TO vector — and the multiset difference
     // surfaces exactly the newly-masked rows as deletes.
     val fromSet = fromFiles.toSet
     val dvChanged = toFiles.filter(f =>
-      fromSet.contains(f) && fromSt.dvRefs.get(f) != toSt.dvRefs.get(f))
+      fromSet.contains(f) && fromSt.dvs.get(f) != toSt.dvs.get(f))
     // Both sides resolve under TO-version's schema, column mapping and
     // defaults (physical names are rename-stable, so old files read
     // correctly under it) — a feed spanning a rename surfaces
     // end-state logical names throughout. Each side masks with its
     // own version's vectors.
     val sized = toSt.copy(sizes = fromSt.sizes ++ toSt.sizes)
-    def side(files: Seq[String], refs: Map[String, String]): DataFrame =
-      readFilesWithDv(spark, dir, sized.copy(dvRefs = refs), files)
+    def side(files: Seq[String], dvs: Map[String, DeletionVector]): DataFrame =
+      readFilesWithDv(spark, dir, sized.copy(dvs = dvs), files)
     val oldFiles = dropped ++ dvChanged
     val newFiles = added ++ dvChanged
-    val oldRows = side(oldFiles, fromSt.dvRefs)
-    val newRows = side(newFiles, toSt.dvRefs)
+    val oldRows = side(oldFiles, fromSt.dvs)
+    val newRows = side(newFiles, toSt.dvs)
     // The multiset difference needs its two exceptAll shuffles only
     // when BOTH sides carry rows. A pure append (old side statically
     // empty — the overwhelmingly common commit) is its added rows
@@ -2463,29 +2456,21 @@ object SnapshotTable {
         oldRows.exceptAll(newRows).withColumn("_change", lit("delete"))
       else if (dropped.isEmpty && added.isEmpty &&
           spanOps.forall(_ == "deleteMor") &&
-          dvChanged.forall(toSt.dvRefs.contains)) {
+          dvChanged.forall(toSt.dvs.contains)) {
         //   - a span of ONLY merge-on-read deletes: every file carries
         //     forward, so the net change is exactly the rows whose
-        //     positions entered the TO-side vectors. Read the affected
-        //     files ONCE (unmasked) and semi-join the position DELTA
-        //     (to ∖ from — both sides deleted-row-count-sized and
-        //     broadcastable) instead of scanning the affected bytes
-        //     TWICE through two exceptAll shuffle pairs. The insert
-        //     leg is empty by construction (deleteMor only ever adds
-        //     masked positions); a vanished vector ref (impossible for
-        //     these ops) falls through to the generic diff above.
-        val newMask = dvRows(spark, dir, toSt.dvRefs, dvChanged).get
-        val delta = dvRows(spark, dir, fromSt.dvRefs, dvChanged) match {
-          case None => newMask
-          case Some(old) => newMask.join(old,
-            Seq("__dv_file", "__dv_rowidx"), "left_anti")
-        }
-        val outCols = newRows.columns.toSeq
-        withFile(spark, dir, toVersion, Some(dvChanged), applyDv = false)
-          .join(broadcast(delta),
-            col("__file") === col("__dv_file") &&
-              col("__row_index") === col("__dv_rowidx"), "left_semi")
-          .select(outCols.map(col): _*)
+        //     positions entered the TO-side vectors. Each affected
+        //     file's bitmap DIFFERENCE (to ∖ from, on the driver)
+        //     selects them in ONE scan of the affected files, instead
+        //     of scanning the affected bytes TWICE through two
+        //     exceptAll shuffle pairs. The insert leg is empty by
+        //     construction (deleteMor only ever adds masked
+        //     positions); a vanished vector (impossible for these ops)
+        //     falls through to the generic diff below.
+        val before = vectorsOf(spark, dir, fromSt, dvChanged)
+        val delta = vectorsOf(spark, dir, toSt, dvChanged).map { case (f, b) =>
+          f -> before.get(f).fold(b)(RoaringBitmap.andNot(b, _)) }
+        readFilesWithDv(spark, dir, sized, dvChanged, onlyDeleted = Some(delta))
           .withColumn("_change", lit("delete"))
       }
       else
@@ -2609,7 +2594,7 @@ object SnapshotTable {
         throw new java.util.ConcurrentModificationException(
           s"compact: compacted files rewritten concurrently: " +
             missing.take(3).mkString(", "))
-      val dvMoved = old.filter(f => cur.dvRefs.get(f) != baseSt.dvRefs.get(f))
+      val dvMoved = old.filter(f => cur.dvs.get(f) != baseSt.dvs.get(f))
       if (dvMoved.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"compact: deletion vectors advanced concurrently on " +
@@ -2696,13 +2681,13 @@ object SnapshotTable {
     val nTarget =
       math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (candidates.length <= nTarget &&
-        !candidates.exists(st.dvRefs.contains))
+        !candidates.exists(st.dvs.contains))
       return None
     val src = readFilesWithDv(spark, dir, st, candidates).coalesce(nTarget)
     commitRewrite(spark, dir, candidates, src,
       trackedStatsCols(spark, dir, base),
       stateOf(spark, dir, base).bloomCols, maxRetries, op,
-      baseDv = st.dvRefs, basis = Some(st))
+      baseDv = st.dvs, basis = Some(st))
   }
 
   /** The interleaved-bit z-value of `cols` over `src`'s value ranges —
@@ -2788,8 +2773,8 @@ object SnapshotTable {
     // clone its own.
     val refs = st.bloomRefs
       .map { case (k, r) => absolutize(k) -> absolutizeRef(r) }
-    val dvRefs = st.dvRefs
-      .map { case (k, r) => absolutize(k) -> absolutizeRef(r) }
+    val dvs = st.dvs
+      .map { case (k, d) => absolutize(k) -> d.copy(ref = absolutizeRef(d.ref)) }
     val sizes = st.sizes.map { case (k, n) => absolutize(k) -> n }
     // defaults' pre-ADD file keys absolutize exactly like the file
     // list — the clone's reads must keep serving the source's
@@ -2802,7 +2787,7 @@ object SnapshotTable {
     // to the clone is checked against them.
     if (!tryCommit(spark, dstDir, 0L, None, TableState(files = files,
         stats = stats, schema = st.schema, bloomRefs = refs,
-        bloomCols = st.bloomCols, sizes = sizes, dvRefs = dvRefs,
+        bloomCols = st.bloomCols, sizes = sizes, dvs = dvs,
         constraints = st.constraints, colMap = st.colMap,
         retired = st.retired, props = st.props, defaults = defaults),
         "clone"))
@@ -3181,7 +3166,7 @@ object SnapshotTable {
       // head differing from the target only in constraints would
       // otherwise commit a version identical to itself.
       if (curSt.files.toSet == target.files.toSet &&
-          curSt.dvRefs == target.dvRefs &&
+          curSt.dvs == target.dvs &&
           curSt.schema == target.schema &&
           curSt.colMap == target.colMap &&
           curSt.retired == target.retired &&
@@ -3375,15 +3360,15 @@ object SnapshotTable {
           st.getModificationTime <= cutoff)
         s.delete(st.getPath)
     }
-    // Deletion-vector sidecars (parquet DIRECTORIES under _dv/): same
-    // orphan rule — superseded vectors (a later MoR delete replaced
-    // the file's ref) and vectors of vacuumed versions GC once no
-    // kept manifest references them.
-    val keptDvRefs = keptStates.flatMap(_.dvRefs.values).toSet
+    // Deletion-vector sidecars (one bitmap file per merge-on-read
+    // commit under _dv/): same orphan rule — superseded vectors (a
+    // later MoR delete replaced the file's ref) and vectors of
+    // vacuumed versions GC once no kept manifest references them.
+    val keptDvRefs = keptStates.flatMap(_.dvs.values.map(_.ref)).toSet
     s.list(new Path(dir, "_dv")).foreach { st =>
-      if (st.isDirectory && !keptDvRefs.contains(s"_dv/${st.getPath.getName}") &&
+      if (st.isFile && !keptDvRefs.contains(s"_dv/${st.getPath.getName}") &&
           st.getModificationTime <= cutoff)
-        s.delete(st.getPath, recursive = true)
+        s.delete(st.getPath)
     }
     deleted
   }
@@ -3405,8 +3390,7 @@ object SnapshotTable {
     * SCAN (from `_metadata`) because a post-join `input_file_name()`
     * is undefined. */
   private def withFile(spark: SparkSession, dir: String, v: Long,
-                       only: Option[Seq[String]] = None,
-                       applyDv: Boolean = true): DataFrame = {
+                       only: Option[Seq[String]] = None): DataFrame = {
     val st = stateOf(spark, dir, v)
     val files = only.getOrElse(st.files)
     val logical = st.schema
@@ -3417,9 +3401,15 @@ object SnapshotTable {
       physSchemaOf(st.colMap, logical), streaming = false,
       sqlSurface = false)
     val cols = base.columns.map(col)
-    val keyed0 = base.select(cols :+
+    val scanned = base.select(cols :+
       fileKeyExpr(dir, col("_metadata.file_path")).as("__file") :+
-      col("_metadata.row_index").as("__row_index"): _*)
+      col("_metadata.row_index").as("__row_index") :+
+      col("_metadata.file_path").as("__path"): _*)
+    val vectors = vectorsOf(spark, dir, st, files)
+    val keyed0 =
+      if (vectors.isEmpty) scanned
+      else scanned.filter(not(deletedRow(dir, vectors, col("__path"),
+        col("__row_index"))))
     // initial DEFAULTS: row-level conditions (delete/update/merge
     // probes) must see the served values, or a predicate on a
     // defaulted column would silently miss every pre-ADD row. __file
@@ -3436,16 +3426,8 @@ object SnapshotTable {
             lit(dv).cast(dt.get)).otherwise(col(pc)))
         }
     }
-    val live =
-      if (!applyDv) keyed // position-delta consumers mask themselves
-      else dvRows(spark, dir, st.dvRefs, files) match {
-        case None => keyed
-        case Some(dv) => keyed.join(broadcast(dv),
-          col("__file") === col("__dv_file") &&
-            col("__row_index") === col("__dv_rowidx"), "left_anti")
-      }
     toLogicalFrame(
-      live.select(cols :+ col("__file") :+ col("__row_index"): _*),
+      keyed.select(cols :+ col("__file") :+ col("__row_index"): _*),
       st.colMap, logical)
   }
 
@@ -3483,7 +3465,7 @@ object SnapshotTable {
       case (touched, rows) =>
         commitRewrite(spark, dir, touched, rows.filter(not(condition)),
           trackedStatsCols(spark, dir, base), baseSt.bloomCols, maxRetries,
-          "deleteWhere", baseDv = baseSt.dvRefs, basis = Some(baseSt))
+          "deleteWhere", baseDv = baseSt.dvs, basis = Some(baseSt))
     }
   }
 
@@ -3561,7 +3543,7 @@ object SnapshotTable {
         val vcs = enforceConstraints(spark, dir, rewritten, "updateWhere")
         commitRewrite(spark, dir, touched, rewritten,
           trackedStatsCols(spark, dir, base), baseSt.bloomCols, maxRetries,
-          "updateWhere", baseDv = baseSt.dvRefs, checkConstraints = Some(vcs),
+          "updateWhere", baseDv = baseSt.dvs, checkConstraints = Some(vcs),
           basis = Some(baseSt))
     }
   }
@@ -3570,9 +3552,9 @@ object SnapshotTable {
     * [[deleteWhere]]: instead of rewriting every file that holds a
     * matching row (CoW — write cost proportional to TOUCHED BYTES),
     * commit a DELETION VECTOR per affected file (the matched rows'
-    * in-file positions, a parquet sidecar under `_dv/`) and leave
-    * every data byte in place — write cost proportional to DELETED
-    * ROWS. Readers apply the vectors as a broadcast anti-join on
+    * in-file positions, a bitmap in one sidecar under `_dv/`) and
+    * leave every data byte in place — write cost proportional to
+    * DELETED ROWS. Readers mask the scan with a predicate on
     * `_metadata.row_index` ([[readFilesWithDv]]); [[compact]] is the
     * purge: its rewrite materializes the deletes and retires the
     * vectors. The CoW/MoR trade is the public Delta/Iceberg one —
@@ -3580,8 +3562,8 @@ object SnapshotTable {
     * streaming retractions) against huge files; CoW wins for bulk
     * deletes that would mask most of a file anyway.
     *
-    * Vectors COMPOSE: a second MoR delete unions its positions with
-    * the file's existing vector into a fresh sidecar (the manifest's
+    * Vectors COMPOSE: a second MoR delete ORs its positions into the
+    * file's existing vector in a fresh sidecar (the manifest's
     * per-file ref replaces — old sidecars become vacuumable once out
     * of the retention window). Conflicts are loud: a concurrently
     * rewritten file, or a concurrently advanced vector on an
@@ -3595,21 +3577,13 @@ object SnapshotTable {
     val baseSt = stateOf(spark, dir, base)
     if (baseSt.files.isEmpty) return None
     // Matches among LIVE rows only (existing vectors applied): a
-    // row already masked must not land in the new vector twice.
-    // Persisted: the affected-files collect and the vector write both
-    // consume it — uncached each re-runs the scan + DV anti-join.
-    val matches = withFile(spark, dir, base)
-      .filter(condition)
-      .select(col("__file").as("file"), col("__row_index").as("row_index"))
-      .persist()
-    try {
-      val affected = probe(spark, "delete-mor:affected-probe") {
-        collectFileCol(matches, "file").sorted
-      }
-      if (affected.isEmpty) None
-      else Some(commitVectors(spark, dir, baseSt, affected, matches,
-        "delete-mor", "deleteWhereMor", "deleteMor", maxRetries))
-    } finally matches.unpersist(false)
+    // row already masked must not count in the new vector twice.
+    val positions = probe(spark, "delete-mor:affected-probe") {
+      positionsOf(withFile(spark, dir, base).filter(condition))
+    }
+    if (positions.isEmpty) None
+    else Some(commitVectors(spark, dir, baseSt, positions, "deleteWhereMor",
+      "deleteMor", maxRetries))
   }
 
   /** MERGE-ON-READ row UPDATE — [[updateWhere]]'s write-cheap sibling
@@ -3639,19 +3613,16 @@ object SnapshotTable {
     val baseSt = stateOf(spark, dir, base)
     if (baseSt.files.isEmpty) return None
     // Matches among LIVE rows only, carrying their physical
-    // positions. PERSISTED: the affected-files collect, the new-file
-    // write, the vector write and any constraint probes all derive
-    // from this frame — uncached, each would re-run the full
-    // scan + DV anti-join, betraying the op's write-cost-∝-matched-
-    // rows pitch.
+    // positions. PERSISTED: the positions collect, the new-file write
+    // and any constraint probes all derive from this frame — uncached,
+    // each would re-run the full masked scan, betraying the op's
+    // write-cost-∝-matched-rows pitch.
     val matches = withFile(spark, dir, base).filter(condition).persist()
     try {
-      val positions = matches.select(col("__file").as("file"),
-        col("__row_index").as("row_index"))
-      val affected = probe(spark, "update-mor:affected-probe") {
-        collectFileCol(positions, "file").sorted
+      val positions = probe(spark, "update-mor:affected-probe") {
+        positionsOf(matches)
       }
-      if (affected.isEmpty) return None
+      if (positions.isEmpty) return None
       // The updated forms: every row here matched, so the SET columns
       // project unconditionally — all against the PRE-update row.
       val setMap = set.toMap
@@ -3661,37 +3632,36 @@ object SnapshotTable {
       // basis = base state: `updated` carries base-version logical names
       val wb = writeBatch(updated, dir, trackedStatsCols(spark, dir, base),
         baseSt.bloomCols, basis = Some(baseSt))
-      Some(commitVectors(spark, dir, baseSt, affected, positions,
-        "update-mor", "updateWhereMor", "updateMor", maxRetries,
-        Some((wb, updated.schema, vcs))))
+      Some(commitVectors(spark, dir, baseSt, positions, "updateWhereMor",
+        "updateMor", maxRetries, Some((wb, updated.schema, vcs))))
     } finally matches.unpersist(false)
   }
 
   /** The merge-on-read commit of [[deleteWhereMor]] and
     * [[updateWhereMor]]: write each affected file's cumulative vector
-    * (its positions at `baseSt` ∪ `positions`) as one `_dv/<uuid>`
-    * sidecar (a `<tag>:vector-write` job), then commit the vectors —
-    * with the update's written batch, its frame schema and validated
+    * (its bitmap at `baseSt` OR its new `positions`) into one
+    * `_dv/<uuid>.json` sidecar through [[TableStore]] — no Spark job —
+    * then commit the vectors with their cardinalities, and with the
+    * update's written batch, its frame schema and validated
     * constraints when `batch` is given. An affected file rewritten or
     * re-vectored since `baseSt` throws ConcurrentModificationException;
     * so does (with a batch) a column mapping that moved. Returns the
     * committed version. */
   private def commitVectors(spark: SparkSession, dir: String,
-                            baseSt: TableState, affected: Seq[String],
-                            positions: DataFrame, tag: String, op: String,
+                            baseSt: TableState,
+                            positions: Map[String, RoaringBitmap], op: String,
                             manifestOp: String, maxRetries: Int,
                             batch: Option[(WrittenBatch, StructType,
                               Map[String, String])] = None): Long = {
-    val prior = dvRows(spark, dir, baseSt.dvRefs, affected)
-      .map(_.filter(col("__dv_file").isin(affected: _*))
-        .select(col("__dv_file").as("file"),
-          col("__dv_rowidx").as("row_index")))
-    val vector = prior.map(positions.unionByName(_).distinct())
-      .getOrElse(positions)
-    val ref = s"_dv/${java.util.UUID.randomUUID()}"
-    labeled(spark, s"$tag:vector-write") {
-      internalWrite(vector, new Path(dir, ref).toString)
-    }
+    val affected = positions.keys.toSeq.sorted
+    val prior = vectorsOf(spark, dir, baseSt, affected)
+    val vectors = positions.map { case (f, b) =>
+      f -> prior.get(f).fold(b)(RoaringBitmap.or(_, b)) }
+    val ref = s"_dv/${java.util.UUID.randomUUID()}.json"
+    // uniquely named, referenced only by the manifest committed after
+    // it — writeNew's no-rename contract applies
+    TableStore(spark, dir).writeNew(new Path(dir, ref),
+      ManifestCodec.encodeVectors(vectors))
     // the delete commits no batch: nothing added, no mapping claimed
     val wb = batch.fold(WrittenBatch(Nil, Map.empty, Map.empty, Map.empty,
       None, Nil))(_._1)
@@ -3705,7 +3675,7 @@ object SnapshotTable {
           s"$op: affected files rewritten concurrently: " +
             missing.take(3).mkString(", "))
       val dvMoved = affected.filter(f =>
-        curSt.dvRefs.get(f) != baseSt.dvRefs.get(f))
+        curSt.dvs.get(f) != baseSt.dvs.get(f))
       if (dvMoved.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"$op: deletion vectors advanced concurrently on " +
@@ -3716,7 +3686,8 @@ object SnapshotTable {
       // A delete lands no file, so the bucket claim still holds; an
       // update's new files are not bucket-routed, so it clears.
       val next = landed(curSt, wb).copy(schema = nextSchema,
-        dvRefs = curSt.dvRefs ++ affected.map(_ -> ref),
+        dvs = curSt.dvs ++ vectors.map { case (f, b) =>
+          f -> DeletionVector(ref, b.getLongCardinality) },
         bucket = curSt.bucket.filter(_ => batch.isEmpty))
       if (batch.nonEmpty)
         validated = recheckConstraints(spark, dir, next, validated,
@@ -3782,7 +3753,7 @@ object SnapshotTable {
       case _ => Seq.empty[String]
     }
     val baseSt = base.map(stateOf(spark, dir, _))
-    val baseDv = baseSt.map(_.dvRefs).getOrElse(Map.empty)
+    val baseDv = baseSt.map(_.dvs).getOrElse(Map.empty)
     val rewrite =
       if (touched.isEmpty) source
       else readFilesWithDv(spark, dir, baseSt.get, touched)
@@ -4081,7 +4052,7 @@ object SnapshotTable {
       stateOf(spark, dir, base).bloomCols,
       maxRetries, "mergeInto", None,
       keyConflict = Some((st.files.toSet, keys, srcKeys)),
-      baseDv = st.dvRefs, checkConstraints = Some(vcs),
+      baseDv = st.dvs, checkConstraints = Some(vcs),
       basis = Some(st), readOnly = holderOnly)
   }
 
@@ -4261,7 +4232,7 @@ object SnapshotTable {
       case _ => Seq.empty[String]
     }
     val baseSt = base.map(stateOf(spark, dir, _))
-    val baseDv = baseSt.map(_.dvRefs).getOrElse(Map.empty)
+    val baseDv = baseSt.map(_.dvs).getOrElse(Map.empty)
     // WRITE SIZING for the bounded case: when the fused collect
     // bounded the key set, the insert half is key-unique and at most
     // pruneKeyLimit rows — but it arrives carrying the caller's full
@@ -4387,7 +4358,7 @@ object SnapshotTable {
                             txn: Option[(String, Long)] = None,
                             keyConflict: Option[(Set[String], Seq[String],
                               DataFrame)] = None,
-                            baseDv: Map[String, String] = Map.empty,
+                            baseDv: Map[String, DeletionVector] = Map.empty,
                             checkConstraints: Option[Map[String, String]] =
                               None,
                             basis: Option[TableState] = None,
@@ -4421,7 +4392,7 @@ object SnapshotTable {
         // conflict as a vanished file, same loud surface. Read-only
         // decision inputs (insert-suppression holders) get the same
         // guard: their rows decided what this commit suppresses.
-        val dvMoved = guarded.filter(f => cur.dvRefs.get(f) != baseDv.get(f))
+        val dvMoved = guarded.filter(f => cur.dvs.get(f) != baseDv.get(f))
         if (dvMoved.nonEmpty)
           throw new java.util.ConcurrentModificationException(
             s"$op: deletion vectors advanced concurrently on touched " +

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.catalog.{Catalog, FolderMeta}
@@ -67,8 +67,6 @@ object Ingest {
       .withColumn("file_name", element_at(parts, -1))
   }
 
-  /** Typed value cast for one KPI (O11/O12/O13 dispatch, the
-    * reference's convert_value_for_bq, main.py:219-250). */
   /** Content normalization before extraction — the reference flow is
     * PDF → model (main.py:694-713 ships the PDF bytes); ours is
     * PDF → TEXT → extractor, with the real
@@ -86,26 +84,40 @@ object Ingest {
         .getOrElse(content)
     else content
 
-  private def castKpi(raw: org.apache.spark.sql.Column, logicalType: String) =
+  /** Typed value cast for one KPI (O11/O12/O13 dispatch, the
+    * reference's convert_value_for_bq, main.py:219-250) as two steps:
+    * a normalize step over the raw value, and a parse step over the
+    * normalized column. */
+  private def castKpi(logicalType: String): (Column => Column, Column => Column) =
     logicalType match {
-      case "number" => Clean.parseMessyNumber(raw)
-      case "date"   => Clean.parseFuzzyDate(raw)
-      case _        => Clean.nullNormalize(raw)
+      case "number" => (Clean.normalizeNumber, Clean.parseNormalizedNumber)
+      case "date"   => (Clean.normalizeDate, Clean.parseNormalizedDate)
+      case _        => (identity, Clean.nullNormalize)
     }
 
   /** Project one folder's admitted+extracted rows to its typed schema
     * (O15 row construction, main.py:726-741 — row_id is content-derived
     * sha2(path) instead of the reference's wall-clock epoch for
     * determinism). `uploaded_at` and `_batch_id` are the batch's own
-    * values, which [[withKpis]] carries on every row. */
+    * values, which [[withKpis]] carries on every row. Each KPI is
+    * normalized once in a first projection; its parse chain, which
+    * refers to the normalized value many times, reads that column (the
+    * optimizer keeps the two projections apart rather than repeat the
+    * normalization in every reference). */
   private def project(extracted: DataFrame, meta: FolderMeta): DataFrame = {
-    val kpiCols = meta.kpis.map(k =>
-      castKpi(element_at(col("kpis"), k.name), k.logicalType).as(k.columnName))
-    extracted.select(
-      (sha2(col("path"), 256).as("row_id")
-        +: col("file_name").as("file_name")
-        +: col("uploaded_at")
-        +: kpiCols :+ col("_batch_id")): _*)
+    val steps = meta.kpis.map(k => castKpi(k.logicalType))
+    val normalized = meta.kpis.indices.map(i => s"__kpi$i")
+    def frame(kpiCols: Seq[Column]) =
+      Seq(col("row_id"), col("file_name"), col("uploaded_at")) ++ kpiCols :+
+        col("_batch_id")
+    extracted.withColumn("row_id", sha2(col("path"), 256))
+      .select(frame(meta.kpis.zip(steps).zip(normalized).map {
+        case ((k, (normalize, _)), n) =>
+          normalize(element_at(col("kpis"), k.name)).as(n)
+      }): _*)
+      .select(frame(meta.kpis.zip(steps).zip(normalized).map {
+        case ((k, (_, parse)), n) => parse(col(n)).as(k.columnName)
+      }): _*)
   }
 
   /** Start the ingest stream over `landingDir`. Files are appended to
@@ -214,22 +226,25 @@ object Ingest {
         // several folders.
         batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // Distinct (uid, folder) pairs in one job: each partition
-          // dedups its own rows, the driver unions the sets — no
+          // Distinct (uid, folder) pairs in one job, each with the
+          // number of batch partitions holding its rows: each partition
+          // dedups its own rows, the driver counts the sets — no
           // shuffle.
-          val present: Seq[(String, String)] =
+          val present: Map[(String, String), Int] =
             SnapshotTable.labeled(spark, "ingest.discover") {
               batch.select("uid", "folder")
                 .mapPartitions(_.map(r => (r.getString(0), r.getString(1))).toSet.iterator)(
                   Encoders.tuple(Encoders.STRING, Encoders.STRING))
-                .collect().toSet.toSeq
+                .collect().groupMapReduce(identity)(_ => 1)(_ + _)
             }
+          // A folder's write runs as many tasks as partitions hold its
+          // rows, not one (mostly empty) task per batch partition.
           def ingestFolder(u: String, f: String): Boolean =
             catalog.get(u, f).exists { meta =>
               val keys = meta.kpis.map(_.name)
               val subset = withKpis(
-                batch.filter(col("uid") === u && col("folder") === f), keys,
-                uploadedAt, batchId)
+                batch.filter(col("uid") === u && col("folder") === f)
+                  .coalesce(present((u, f))), keys, uploadedAt, batchId)
               val fresh = project(subset, meta)
               val tablePath = s"$warehouseDir/${meta.tableName}"
               // Rows written by a crashed attempt for files that are no
@@ -276,7 +291,7 @@ object Ingest {
           // shares one BigQuery table the same way), and those two
           // writes must not race on the same directory — they run
           // sequentially inside their group.
-          val byTable: Seq[Seq[(String, String)]] = present
+          val byTable: Seq[Seq[(String, String)]] = present.keys.toSeq
             .groupBy { uf: (String, String) =>
               catalog.get(uf._1, uf._2).map(_.tableName)
                 .getOrElse(uf._1 + " " + uf._2) }

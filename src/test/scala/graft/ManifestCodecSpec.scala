@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sources.ManifestCodec
-import graft.sources.SnapshotTable.{BucketLayout, ColStat, RowsCol, Snapshot, TableState}
+import graft.sources.SnapshotTable.{BucketLayout, ColStat, DeletionVector, RowsCol, Snapshot,
+  TableState}
 
 /** Round trips of generated table states through the manifest codec,
   * in each of its three forms: an inline checkpoint, a segmented
@@ -36,7 +37,13 @@ class ManifestCodecSpec extends AnyFunSuite {
     stats = files.map(_ -> fileStats()).toMap,
     bloomRefs = subset(files).map(_ -> s"_blooms/${rnd.nextInt(9)}.json").toMap,
     sizes = files.map(_ -> rnd.nextInt(1 << 20).toLong).toMap,
-    dvRefs = subset(files).map(_ -> s"_dv/${rnd.nextInt(9)}").toMap)
+    dvs = subset(files).map(_ -> vector("")).toMap)
+
+  /** A deletion vector: its sidecar ref and a cardinality that is zero
+    * or not at random. */
+  private def vector(tag: String): DeletionVector =
+    DeletionVector(s"_dv/$tag${rnd.nextInt(9)}.json",
+      maybe(1L + rnd.nextInt(1 << 20), 0L))
 
   /** `s` with every whole-value field regenerated — empty or not — with
     * probability `p`. */
@@ -91,7 +98,8 @@ class ManifestCodecSpec extends AnyFunSuite {
   private def emptiness(s: TableState): Map[String, Boolean] = Map(
     "files" -> s.files.isEmpty, "stats" -> s.stats.isEmpty,
     "bloomRefs" -> s.bloomRefs.isEmpty, "sizes" -> s.sizes.isEmpty,
-    "dvRefs" -> s.dvRefs.isEmpty, "schema" -> s.schema.isEmpty,
+    "dvs" -> s.dvs.isEmpty, "schema" -> s.schema.isEmpty,
+    "dv cardinalities" -> s.dvs.values.forall(_.card == 0L),
     "bucket" -> s.bucket.isEmpty, "txns" -> s.txns.isEmpty,
     "bloomCols" -> s.bloomCols.isEmpty,
     "constraints" -> s.constraints.isEmpty, "colMap" -> s.colMap.isEmpty,
@@ -131,7 +139,7 @@ class ManifestCodecSpec extends AnyFunSuite {
       val next = s.copy(files = s.files ++ more.files,
         stats = s.stats ++ more.stats,
         bloomRefs = s.bloomRefs ++ more.bloomRefs,
-        sizes = s.sizes ++ more.sizes, dvRefs = s.dvRefs ++ more.dvRefs)
+        sizes = s.sizes ++ more.sizes, dvs = s.dvs ++ more.dvs)
       val (body2, segs2) = encode(next, Some(d.state), full = true, v = 4L)
       assert(segs2.size == 1)
       val d2 = decode(body2, None, segs ++ segs2, v = 4L)
@@ -152,8 +160,8 @@ class ManifestCodecSpec extends AnyFunSuite {
       // added, replaced or dropped
       val dv = carried.flatMap { f =>
         rnd.nextInt(3) match {
-          case 0 => p.dvRefs.get(f).map(f -> _)
-          case 1 => Some(f -> s"_dv/moved-${rnd.nextInt(9)}")
+          case 0 => p.dvs.get(f).map(f -> _)
+          case 1 => Some(f -> vector("moved-"))
           case _ => None
         }
       }.toMap
@@ -163,7 +171,7 @@ class ManifestCodecSpec extends AnyFunSuite {
         stats = keep(p.stats) ++ added.stats,
         bloomRefs = keep(p.bloomRefs) ++ added.bloomRefs,
         sizes = keep(p.sizes) ++ added.sizes,
-        dvRefs = dv ++ added.dvRefs,
+        dvs = dv ++ added.dvs,
         defaults = p.defaults
           .map { case (c, (v, pre)) => c -> (v, pre -- removed) }
           .filter(_._2._2.nonEmpty)), 0.5)
@@ -175,7 +183,7 @@ class ManifestCodecSpec extends AnyFunSuite {
       assert(!d.checkpoint)
       // the carried files whose vector moved are marked dirty, no
       // other carried file is
-      val moved = carried.filter(f => p.dvRefs.get(f) != next.dvRefs.get(f))
+      val moved = carried.filter(f => p.dvs.get(f) != next.dvs.get(f))
       assert(carried.filter(d.state.dvDirty) == moved)
     }
   }

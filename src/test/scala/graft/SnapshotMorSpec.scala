@@ -200,4 +200,83 @@ class SnapshotMorSpec extends AnyFunSuite with TempDirs {
     assert(scanned == 15)                          // 20 - 4 masked - 1 CoW
     assert(SnapshotTable.countRows(spark, dir) == scanned)
   }
+
+  /** The Spark jobs `body` starts from this thread (a job group marks
+    * them, so no other thread's job counts). */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-mor-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count", interruptOnCancel = false)
+    try {
+      body
+      org.apache.spark.GraftSparkTestBridge.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  /** Two data files, rows 0..39, each MoR-masked at `id % 10 == 3`. */
+  private def maskedTable(tag: String): String = {
+    val dir = tmp(tag)
+    SnapshotTable.append(spark.range(0, 20).coalesce(1).toDF(), dir)
+    SnapshotTable.append(spark.range(20, 40).coalesce(1).toDF(), dir)
+    SnapshotTable.deleteWhereMor(spark, dir, $"id" % 10 === 3L)
+    dir
+  }
+
+  test("a masked read runs one Spark job, like a plain scan") {
+    val dir = maskedTable("jobs-read")
+    val expect = (0L until 40L).filterNot(_ % 10 == 3).toSet
+    var got = Set.empty[Long]
+    assert(jobsOf { got = ids(SnapshotTable.read(spark, dir)) } == 1)
+    assert(got == expect)
+    SnapshotSql.register(spark, "mor_jobs_read", dir)
+    var viaSql = Set.empty[Long]
+    assert(jobsOf {
+      viaSql = ids(spark.sql("SELECT id FROM mor_jobs_read"))
+    } == 1)
+    assert(viaSql == expect)
+  }
+
+  test("countRows on a table with deletion vectors runs no Spark job") {
+    val dir = maskedTable("jobs-count")
+    var n = -1L
+    assert(jobsOf { n = SnapshotTable.countRows(spark, dir) } == 0)
+    assert(n == 36L)
+  }
+
+  test("a MoR delete runs one Spark job, with or without prior vectors") {
+    val dir = maskedTable("jobs-delete")
+    // the file's prior vector is read on the driver and ORed in
+    assert(jobsOf(SnapshotTable.deleteWhereMor(spark, dir, $"id" < 2L)) == 1)
+    assert(ids(SnapshotTable.read(spark, dir)) ==
+      (2L until 40L).filterNot(_ % 10 == 3).toSet)
+    assert(SnapshotTable.countRows(spark, dir) == 34L)
+  }
+
+  test("a MoR-only change feed is the bitmap difference, in one job") {
+    val dir = maskedTable("jobs-feed")
+    val from = SnapshotTable.latestVersion(spark, dir).get
+    SnapshotTable.deleteWhereMor(spark, dir, $"id" === 4L || $"id" === 24L)
+    SnapshotTable.deleteWhereMor(spark, dir, $"id" === 5L)
+    val to = SnapshotTable.latestVersion(spark, dir).get
+    var feed = Seq.empty[(String, Long)]
+    assert(jobsOf {
+      feed = SnapshotTable.changeFeed(spark, dir, from, to)
+        .select("_change", "id").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._2)
+    } == 1)
+    assert(feed == Seq(("delete", 4L), ("delete", 5L), ("delete", 24L)))
+  }
 }

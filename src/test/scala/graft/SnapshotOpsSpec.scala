@@ -298,7 +298,7 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     }
-    assert(txt.contains("\"features\"") && txt.contains("\"dv\""))
+    assert(txt.contains("\"features\"") && txt.contains("\"dvbitmaps\""))
     // a manifest from a newer writer with an unknown required feature
     // refuses to resolve instead of silently misreading
     val future = new org.apache.hadoop.fs.Path(dir, "_manifests/v2.json")
@@ -323,6 +323,7 @@ class SnapshotOpsSpec extends AnyFunSuite with TempDirs {
       "no operation name" -> (_.remove("op")),
       "no recorded schema" -> (_.remove("schema")),
       "inline Bloom bitsets" -> (_.putObject("blooms")),
+      "parquet deletion-vector sidecars" -> (_.putArray("features").add("dv")),
       "without a recorded size and row count" -> (_.remove("sizes")))
     val v1 = new java.io.File(SparkTestBase.localPath(dir), "_manifests/v1.json")
     val current = java.nio.file.Files.readAllBytes(v1.toPath)
