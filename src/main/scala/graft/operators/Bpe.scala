@@ -84,7 +84,6 @@ object Bpe {
             maxWordChars: Int = 512): Seq[(String, String)] = {
     require(numMerges >= 1, s"numMerges must be >= 1: $numMerges")
     require(maxWordChars >= 2, s"maxWordChars must be >= 2: $maxWordChars")
-    val spark = docs.sparkSession
     // localCheckpoint (not cache) at EVERY step: each merge nests
     // another fold expression, and 20+ levels of generated aggregate
     // code in one plan blow past codegen limits and driver heap —
@@ -109,25 +108,24 @@ object Bpe {
     // per partition; narrow coalesce, lineage stays checkpointed.
     val nWords = vocab.count()
     val parts = math.max(1L, math.min(32L, nWords / 50000L + 1)).toInt
-    if (parts < 32) vocab = vocab.coalesce(parts)
-    val merges = Seq.newBuilder[(String, String)]
-    var prev: DataFrame = null
-    var i = 0
-    var done = false
-    // The train loop runs with AQE OFF and the shuffle partition count
+    // The train loop plans with AQE OFF and the shuffle partition count
     // pinned to the MEASURED vocabulary size (the probe discipline —
     // SnapshotTable.probe): every iteration's frames are
-    // vocabulary-bounded and explicitly right-sized above, so AQE's
+    // vocabulary-bounded and explicitly right-sized here, so AQE's
     // runtime re-optimization changes nothing — but each of the
     // numMerges actions would pay withFinalPlanUpdate re-planning on
     // the driver (the top gap-profile frame in the trainers; at a
     // production 32k-merge vocabulary that is minutes of pure driver
     // time). Scale-adaptive by construction: `parts` derives from the
-    // measured word count, not a constant.
-    graft.sources.SnapshotTable.withSessionConf(spark,
-        "spark.sql.adaptive.enabled", "false") {
-    graft.sources.SnapshotTable.withSessionConf(spark,
-        "spark.sql.shuffle.partitions", parts.toString) {
+    // measured word count, not a constant. Every loop frame derives
+    // from this rebound one, so the caller's session keeps its confs.
+    vocab = graft.sources.SnapshotTable.loopFrame(
+      if (parts < 32) vocab.coalesce(parts) else vocab, Some(parts))
+    val loop = vocab.sparkSession
+    val merges = Seq.newBuilder[(String, String)]
+    var prev: DataFrame = null
+    var i = 0
+    var done = false
     while (i < numMerges && !done) {
       // Adjacent pairs weighted by word frequency; exact Long counts;
       // deterministic lexicographic tie-break.
@@ -152,7 +150,7 @@ object Bpe {
         // The pair rides a broadcast 1-row join (NOT literals): the
         // plan — and its generated code — is identical every
         // iteration, so codegen compiles once for the whole run.
-        val pair = spark.createDataFrame(
+        val pair = loop.createDataFrame(
           java.util.Collections.singletonList(
             org.apache.spark.sql.Row(l, r)),
           StructType(Seq(StructField("__l", StringType, nullable = false),
@@ -166,7 +164,6 @@ object Bpe {
         i += 1
       }
     }
-    } }
     // INVARIANT: the last `vocab` is a lazy localCheckpoint that was
     // never materialized, and its parent's blocks are freed here — it
     // must never be acted on (an action would hit missing checkpoint
@@ -248,7 +245,6 @@ object Bpe {
                    maxWordChars: Int = 512): Seq[(String, String)] = {
     require(numMerges >= 1, s"numMerges must be >= 1: $numMerges")
     require(maxBatch >= 1, s"maxBatch must be >= 1: $maxBatch")
-    val spark = docs.sparkSession
     // Lazy checkpoints, same discipline as [[train]]: the next
     // iteration's pair-count job materializes the batch apply — one
     // action per iteration instead of two.
@@ -259,7 +255,12 @@ object Bpe {
       .localCheckpoint(false)
     val nWords = vocab.count()
     val parts = math.max(1L, math.min(32L, nWords / 50000L + 1)).toInt
-    if (parts < 32) vocab = vocab.coalesce(parts)
+    // AQE off + measured shuffle partitioning for the loop — same
+    // rationale as [[train]] (vocabulary-bounded frames, explicitly
+    // right-sized; per-iteration AQE re-planning is pure driver cost).
+    vocab = graft.sources.SnapshotTable.loopFrame(
+      if (parts < 32) vocab.coalesce(parts) else vocab, Some(parts))
+    val loop = vocab.sparkSession
     val pairSchema = StructType(Seq(
       StructField("l", StringType, nullable = false),
       StructField("r", StringType, nullable = false)))
@@ -278,13 +279,6 @@ object Bpe {
     var total = 0
     var iters = 0
     var done = false
-    // AQE off + measured shuffle partitioning for the loop — same
-    // rationale as [[train]] (vocabulary-bounded frames, explicitly
-    // right-sized; per-iteration AQE re-planning is pure driver cost).
-    graft.sources.SnapshotTable.withSessionConf(spark,
-        "spark.sql.adaptive.enabled", "false") {
-    graft.sources.SnapshotTable.withSessionConf(spark,
-        "spark.sql.shuffle.partitions", parts.toString) {
     while (total < numMerges && !done) {
       iters += 1
       // m caps ADMISSION, but topM stays CONSTANT across iterations:
@@ -371,7 +365,7 @@ object Bpe {
         // pairs ride as DATA (a broadcast 1-row array), so generated
         // code is identical across iterations and janino compiles
         // once.
-        val pairArr = spark.createDataFrame(
+        val pairArr = loop.createDataFrame(
           java.util.Collections.singletonList(org.apache.spark.sql.Row(
             batch.map { case (l, r) =>
               org.apache.spark.sql.Row(l, r) })),
@@ -386,7 +380,6 @@ object Bpe {
         vocab = next
       }
     }
-    } }
     // INVARIANT (same as train): the last `vocab` is an unmaterialized
     // lazy localCheckpoint whose parent's blocks are freed here — it
     // must never be acted on. Only `merges` leaves this scope.

@@ -166,7 +166,7 @@ object Kmeans {
       require(centroids.length == k,
         s"need at least $k vectors to seed $k cells, got ${centroids.length}")
       var it = 0
-      // Lloyd rounds run with AQE OFF and the reduce side sized to the
+      // Lloyd rounds plan with AQE OFF and the reduce side sized to the
       // k×d key space (the probe discipline): each round's collect is
       // bounded at k×d rows by construction (map-side partial
       // aggregation means the exchange moves ≤ k×d rows per map task
@@ -174,18 +174,15 @@ object Kmeans {
       // its per-round withFinalPlanUpdate re-planning is pure driver
       // cost × iters. Scale-adaptive: partitions derive from k×d.
       val d = centroids.head.length
-      val aggParts = math.max(1L, k.toLong * d / 50000L + 1).toString
-      graft.sources.SnapshotTable.withSessionConf(
-          quantized.sparkSession, "spark.sql.adaptive.enabled", "false") {
-      graft.sources.SnapshotTable.withSessionConf(
-          quantized.sparkSession, "spark.sql.shuffle.partitions", aggParts) {
+      val rounds = graft.sources.SnapshotTable.loopFrame(quantized,
+        Some(math.max(1L, k.toLong * d / 50000L + 1).toInt))
       while (it < iters) {
         // (cid, dim)-keyed exact sums; truncating integer mean.
         // Assignment is the native map-only argmin (bit-identical to
         // the aggregate [[assign]] twin by the spec pins): the
         // per-iteration cost is ONE projection + the k×d-keyed sum —
         // no crossJoin row blow-up, no per-vec_id shuffle.
-        val sums = quantized
+        val sums = rounds
           .select(cellIdExpr(col("qv"), centroids).as("cid"),
             posexplode(col("qv")).as(Seq("dim", "x")))
           .groupBy("cid", "dim")
@@ -198,7 +195,6 @@ object Kmeans {
         centroids = next
         it += 1
       }
-      } }
       centroids
     } finally { quantized.unpersist(); () }
   }

@@ -147,14 +147,13 @@ object LinearModel {
     require(n > 0, "logisticFit: empty input")
     var w = Array.fill(dim)(0L)
     var it = 0
-    // Epochs run with AQE OFF (the probe discipline): each epoch is a
+    // Epochs plan with AQE OFF (the probe discipline): each epoch is a
     // GLOBAL aggregate over the persisted design matrix — one partial
     // pass + a single-reducer merge, a plan AQE can never improve —
     // while its withFinalPlanUpdate re-planning costs driver time ×
     // iters. Valid at any scale: the aggregate's reduce side is one
     // dim-wide row by construction.
-    graft.sources.SnapshotTable.withSessionConf(df.sparkSession,
-        "spark.sql.adaptive.enabled", "false") {
+    val epochs = graft.sources.SnapshotTable.loopFrame(prepared)
     while (it < iters) {
       // z = (w · x) / WScale — the dot is EXACT integer arithmetic,
       // evaluated by the native [[graft.plans.DotLongWeights]]
@@ -174,7 +173,7 @@ object LinearModel {
         * lit(QScale.toDouble)).cast("long")
       val gradAggs = (0 until dim).map(j =>
         sum(col("__q") * element_at(col("__x"), j + 1)).as(s"g_$j"))
-      val row = prepared.withColumn("__q", q)
+      val row = epochs.withColumn("__q", q)
         .agg(gradAggs.head, gradAggs.tail: _*).head()
       val denom = n.toDouble * QScale.toDouble
       w = Array.tabulate(dim) { j =>
@@ -186,7 +185,6 @@ object LinearModel {
             (g.toDouble / denom) * WScale.toDouble)
       }
       it += 1
-    }
     }
     w
     } finally { prepared.unpersist(false); () }

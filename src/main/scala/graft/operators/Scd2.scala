@@ -113,9 +113,8 @@ object Scd2 {
     // ([[SnapshotTable.readWhereKeySet]]). On a key-clustered
     // dimension a maintain reads O(affected key clusters) dimension
     // files, never the dimension — the 100 TB cost model.
-    val affectedRows = SnapshotTable.probe(spark, "scd2:key-collect") {
-      affected.limit(pruneKeyLimit + 1).collect()
-    }
+    val affectedRows = SnapshotTable.probe(affected.limit(pruneKeyLimit + 1),
+      "scd2:key-collect")(_.collect())
     val openLookup =
       if (affectedRows.length > pruneKeyLimit) {
         // ABOVE the cap the key set is no longer collectable, but its
@@ -127,8 +126,9 @@ object Scd2 {
         // dimension ([[SnapshotTable.readWhereKeyEnvelope]]); the
         // exact key match stays the broadcast-free semi-join below.
         val envAggs = keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-        val env = SnapshotTable.probe(spark, "scd2:key-envelope") {
-          val r = affected.agg(envAggs.head, envAggs.tail: _*).collect()(0)
+        val env = SnapshotTable.probe(affected.agg(envAggs.head, envAggs.tail: _*),
+            "scd2:key-envelope") { d =>
+          val r = d.collect()(0)
           keys.zipWithIndex.map { case (k, i) =>
             (k, r.get(2 * i), r.get(2 * i + 1)) }
         }

@@ -94,13 +94,9 @@ object Queries {
       //  - TIMESTAMP_NTZ (µs, not UTC-adjusted): reinterpret in the
       //    session zone (all graft sessions pin UTC), a no-op on the
       //    stored micros.
-      // NB nanosAsLong is a SESSION conf (no per-read option): it stays
-      // set for the session's lifetime, so a LATER nanos-parquet read
-      // in the same session also surfaces raw longs instead of
-      // erroring. Acceptable for the Verify/Bench/test sessions this
-      // helper serves; a library user embedding these queries should
-      // set the flag once at session build instead.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // nanosAsLong is a SESSION conf with no per-read option, so the
+      // session builders set it (Bench, Verify, the test session); a
+      // session without it fails on a nanos file instead of reading it.
       val raw = s.read.parquet(s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

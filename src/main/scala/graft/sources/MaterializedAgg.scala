@@ -226,13 +226,11 @@ object MaterializedAgg {
       // sanity check (negative live counts = feed/view divergence).
       // These were three separate actions, each re-running the join.
       val retAlive = retracted && newN > 0
-      val p = SnapshotTable.probe(spark, "matview:refresh-probe") {
-        joined.agg(
+      val p = SnapshotTable.probe(joined.agg(
         count(lit(1)).as("_n"),
         coalesce(sum(when(retAlive, 1L).otherwise(0L)), lit(0L)).as("_aff"),
         coalesce(sum(when(newN < 0, 1L).otherwise(0L)), lit(0L)).as("_bad")
-        ).collect()(0)
-      }
+        ), "matview:refresh-probe")(_.collect()(0))
       val (nRows, nAff, nBad) = (p.getLong(0), p.getLong(1), p.getLong(2))
       if (nBad > 0) {
         // A negative live count means the feed and the view disagree —

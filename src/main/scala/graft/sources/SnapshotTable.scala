@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftScopedSessions, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, count, expr, greatest, hash, input_file_name, least, lit, max, min, not, pmod, regexp_replace, shiftleft, shiftright, sum, when}
 import org.apache.spark.sql.types._
 import org.roaringbitmap.RoaringBitmap
@@ -141,76 +141,33 @@ object SnapshotTable {
     finally sc.setJobDescription(prev)
   }
 
-  /** Depth-counted SESSION-CONF LEASE: the FIRST concurrent scope for
-    * a (session, key) saves the session's value and sets the
-    * override; the LAST one out restores it. Plain per-scope
-    * set/restore pairs are NOT safe here — internal scopes run
-    * concurrently (streaming maintenance threads vs the caller's
-    * thread), and interleaving two pairs can restore the inner
-    * scope's saved override LAST, leaking it onto every later query
-    * in the shared session (a thread-local SQLConf overlay cannot fix
-    * this: InsertAdaptiveSparkPlan — and the parquet write path's
-    * prepareWrite — read the session conf directly, not SQLConf.get).
-    * All in-repo scopes for a given key use the SAME value, so
-    * overlapping leases never conflict. Weak keys: a stopped
-    * session's entries just age out. */
-  private final class ConfLease {
-    var depth = 0
-    var prev: Option[String] = None
-  }
-  private val confLeases = new java.util.WeakHashMap[
-    SparkSession, java.util.HashMap[String, ConfLease]]()
-
-  private[graft] def withSessionConf[T](spark: SparkSession, key: String,
-                                        value: String)(body: => T): T = {
-    confLeases.synchronized {
-      var m = confLeases.get(spark)
-      if (m == null) {
-        m = new java.util.HashMap[String, ConfLease]()
-        confLeases.put(spark, m)
-      }
-      var st = m.get(key)
-      if (st == null) { st = new ConfLease; m.put(key, st) }
-      if (st.depth == 0) {
-        st.prev = spark.conf.getOption(key)
-        spark.conf.set(key, value)
-      }
-      st.depth += 1
-    }
-    try body
-    finally confLeases.synchronized {
-      val m = confLeases.get(spark)
-      val st = m.get(key)
-      st.depth -= 1
-      if (st.depth == 0) {
-        st.prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-        m.remove(key)
-        if (m.isEmpty) confLeases.remove(spark)
-      }
-    }
-  }
-
-  private val AqeKey = "spark.sql.adaptive.enabled"
-
-  /** [[labeled]] plus ADAPTIVE EXECUTION OFF for the scope: every
+  /** [[labeled]] plus ADAPTIVE EXECUTION OFF for `df`'s action: every
     * control-plane probe ends in a bounded `collect()` over at most a
     * few thousand rows (affected keys, touched files, validation
     * counts), so AQE's runtime re-optimization buys nothing — but each
     * probe action pays its `withFinalPlanUpdate` re-planning rounds
     * and plan-update events on the driver, the single largest
     * driver-gap frame in the lifecycle-query profiles (multi-action
-    * queries run dozens of probes). Data-path jobs (batch writes,
-    * rewrites, reads the caller composes) keep AQE untouched — the
-    * conf flips only around the probe's own action and restores on
-    * exit. Valid at any scale: the probe result size is bounded by
-    * contract (collect caps / file counts), not by table size. */
-  private[graft] def probe[T](spark: SparkSession, tag: String)
-                             (body: => T): T = labeled(spark, tag) {
-    withSessionConf(spark, AqeKey, "false")(body)
-  }
+    * queries run dozens of probes). `action` runs on `df` rebound onto
+    * a cached clone of its session with AQE off
+    * ([[GraftScopedSessions]]), so the caller's session and every
+    * query planned on it meanwhile keep their AQE setting; data-path jobs (batch writes, rewrites, reads the caller
+    * composes) run on the caller's conf. Valid at any scale: the probe
+    * result size is bounded by contract (collect caps / file counts),
+    * not by table size. */
+  private[graft] def probe[T](df: DataFrame, tag: String)
+                             (action: DataFrame => T): T =
+    labeled(df.sparkSession, tag)(action(GraftScopedSessions.rebind(df, NoAqe)))
+
+  private val NoAqe = Map("spark.sql.adaptive.enabled" -> "false")
+
+  /** `df` rebound for an iterative trainer's loop: AQE off as for a
+    * [[probe]], plus the trainer's measured shuffle partition count.
+    * Frames the loop derives from the result plan on the same clone. */
+  private[graft] def loopFrame(df: DataFrame,
+                               shufflePartitions: Option[Int] = None): DataFrame =
+    GraftScopedSessions.rebind(df,
+      NoAqe ++ shufflePartitions.map("spark.sql.shuffle.partitions" -> _.toString))
 
   /** Internal batch writer with the Hadoop job-commit ceremony cut
     * down: the MANIFEST is this format's atomicity boundary — a batch
@@ -240,18 +197,21 @@ object SnapshotTable {
     * write-amplification residue after the footer-stats path landed.
     * MICROS round-trips bit-identically (Spark timestamps ARE micros;
     * INT96 nanos were zero-padding) and is the recommended modern
-    * encoding anyway; INT96 is parquet-deprecated. The pin must ride
-    * the SESSION conf for the write's duration (a writer option is
+    * encoding anyway; INT96 is parquet-deprecated. The pin must be
+    * the conf of the session the write runs on (a writer option is
     * clobbered by prepareWrite, which copies the session value into
-    * the job conf), hence the depth-counted lease. */
+    * the job conf), so the write runs on `df` rebound onto a cached
+    * clone of its session that holds it; AQE stays as the caller has
+    * it, so the written file counts do not move. */
   private def internalWrite(df: DataFrame, path: String,
-                            partitionBy: Seq[String] = Nil): Unit =
-    withSessionConf(df.sparkSession,
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") {
-      val w = internalWriter(df)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(path)
-    }
+                            partitionBy: Seq[String] = Nil): Unit = {
+    val w = internalWriter(GraftScopedSessions.rebind(df, MicrosTimestamps))
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(path)
+  }
+
+  private val MicrosTimestamps =
+    Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
   private def manifestDir(dir: String) = new Path(dir, "_manifests")
   private def manifestPath(dir: String, v: Long) =
@@ -3479,9 +3439,9 @@ object SnapshotTable {
                          ): Option[(Seq[String], DataFrame)] = {
     val st = stateOf(spark, dir, base)
     if (st.files.isEmpty) return None
-    val touched = probe(spark, s"$tag:touched-probe") {
-      collectFileCol(withFile(spark, dir, base).filter(condition), "__file")
-        .map(manifestKey(dir, _)).sorted
+    val touched = probe(withFile(spark, dir, base).filter(condition),
+        s"$tag:touched-probe") { d =>
+      collectFileCol(d, "__file").map(manifestKey(dir, _)).sorted
     }
     if (touched.isEmpty) None
     else Some(touched -> readFilesWithDv(spark, dir, st, touched))
@@ -3578,9 +3538,8 @@ object SnapshotTable {
     if (baseSt.files.isEmpty) return None
     // Matches among LIVE rows only (existing vectors applied): a
     // row already masked must not count in the new vector twice.
-    val positions = probe(spark, "delete-mor:affected-probe") {
-      positionsOf(withFile(spark, dir, base).filter(condition))
-    }
+    val positions = probe(withFile(spark, dir, base).filter(condition),
+      "delete-mor:affected-probe")(positionsOf)
     if (positions.isEmpty) None
     else Some(commitVectors(spark, dir, baseSt, positions, "deleteWhereMor",
       "deleteMor", maxRetries))
@@ -3619,9 +3578,7 @@ object SnapshotTable {
     // write-cost-∝-matched-rows pitch.
     val matches = withFile(spark, dir, base).filter(condition).persist()
     try {
-      val positions = probe(spark, "update-mor:affected-probe") {
-        positionsOf(matches)
-      }
+      val positions = probe(matches, "update-mor:affected-probe")(positionsOf)
       if (positions.isEmpty) return None
       // The updated forms: every row here matched, so the SET columns
       // project unconditionally — all against the PRE-update row.
@@ -4112,13 +4069,13 @@ object SnapshotTable {
       !col("_change").isin("insert", "delete")
     val fused: Option[Array[org.apache.spark.sql.Row]] =
       if (pruneKeyLimit <= 0) None
-      else probe(spark, "apply-changes:probe+keys") {
-        val rows = changes.groupBy(keys.map(col): _*)
+      else probe(changes.groupBy(keys.map(col): _*)
           .agg(
             sum(when(col("_change") === "insert", 1L).otherwise(0L))
               .as("__ac_ni"),
             sum(when(badTagC, 1L).otherwise(0L)).as("__ac_nb"))
-          .limit(pruneKeyLimit + 1).collect()
+          .limit(pruneKeyLimit + 1), "apply-changes:probe+keys") { d =>
+        val rows = d.collect()
         if (rows.length > pruneKeyLimit) None else Some(rows)
       }
     // The affected-key MIN/MAX ENVELOPE of an above-cap batch: too
@@ -4157,17 +4114,15 @@ object SnapshotTable {
         case None =>
           // past the collect cap: the global validation aggregate
           // (carrying the key envelope — same action, free)
-          val probed = probe(spark, "apply-changes:probe") {
-            changes.groupBy(keys.map(col): _*)
+          val probed = probe(changes.groupBy(keys.map(col): _*)
               .agg(
                 sum(when(col("_change") === "insert", 1L).otherwise(0L))
                   .as("_ni"),
                 sum(when(badTagC, 1L).otherwise(0L)).as("_nb"))
               .agg(coalesce(sum(col("_nb")), lit(0L)),
                 (coalesce(max(col("_ni")), lit(0L)) +: count(lit(1)) +:
-                  keyEnvelopeAggs): _*)
-              .collect()(0)
-          }
+                  keyEnvelopeAggs): _*),
+            "apply-changes:probe")(_.collect()(0))
           envelope = Some(envelopeOf(probed, 3))
           if (probed.getLong(0) > 0) {
             val badTag = changes.filter(badTagC).limit(1).collect()
@@ -4216,18 +4171,15 @@ object SnapshotTable {
             // aggregate when it ran; preValidated bulk callers pay
             // one dedicated bounded aggregate here.
             val env = envelope.getOrElse(
-              probe(spark, "apply-changes:key-envelope") {
-                val r = changes.agg(keyEnvelopeAggs.head,
-                  keyEnvelopeAggs.tail: _*).collect()(0)
-                envelopeOf(r, 0)
-              })
+              probe(changes.agg(keyEnvelopeAggs.head, keyEnvelopeAggs.tail: _*),
+                "apply-changes:key-envelope")(d => envelopeOf(d.collect()(0), 0)))
             Some(pruneFilesEnvelope(spark, dir, v, env))
           }
         if (candidates.exists(_.isEmpty)) Seq.empty[String]
-        else probe(spark, "apply-changes:touched-probe") {
-          collectFileCol(withFile(spark, dir, v, candidates)
-            .join(affectedKeys, keys, "left_semi"), "__file")
-            .map(manifestKey(dir, _)).sorted
+        else probe(withFile(spark, dir, v, candidates)
+            .join(affectedKeys, keys, "left_semi"),
+            "apply-changes:touched-probe") { d =>
+          collectFileCol(d, "__file").map(manifestKey(dir, _)).sorted
         }
       case _ => Seq.empty[String]
     }

@@ -12,44 +12,6 @@ class BpeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  /** Reference trainer: Sennrich-style, lexicographic tie-break. */
-  private def refTrain(words: Map[String, Long],
-                       numMerges: Int): Seq[(String, String)] = {
-    var vocab: Map[Vector[String], Long] =
-      words.groupMapReduce(_._1.map(_.toString).toVector)(_._2)(_ + _)
-    val merges = Seq.newBuilder[(String, String)]
-    var i = 0
-    var done = false
-    while (i < numMerges && !done) {
-      val counts = collection.mutable.Map.empty[(String, String), Long]
-      vocab.foreach { case (syms, cnt) =>
-        syms.sliding(2).foreach {
-          case Vector(a, b) => counts((a, b)) = counts.getOrElse((a, b), 0L) + cnt
-          case _ => ()
-        }
-      }
-      if (counts.isEmpty) done = true
-      else {
-        val (l, r) = counts.toSeq
-          .minBy { case ((a, b), n) => (-n, a, b) }._1
-        merges += l -> r
-        vocab = vocab.groupMapReduce { case (syms, _) =>
-          val out = Vector.newBuilder[String]
-          var prev: String = null
-          syms.foreach { x =>
-            if (prev == null) prev = x
-            else if (prev == l && x == r) { out += (l + r); prev = null }
-            else { out += prev; prev = x }
-          }
-          if (prev != null) out += prev
-          out.result()
-        }(_._2)(_ + _)
-        i += 1
-      }
-    }
-    merges.result()
-  }
-
   private val corpus = Seq(
     "the cat sat on the mat", "the bat and the cat", "low lower lowest",
     "newer newest new", "the low cat", "wider wide widest",
@@ -62,7 +24,7 @@ class BpeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).groupBy(identity)
       .map { case (w, g) => w -> g.size.toLong }
     val got = Bpe.train(docs, "text", 20)
-    val want = refTrain(words, 20)
+    val want = References.bpeTrain(words, 20)
     assert(got == want, s"\ngot:  $got\nwant: $want")
     assert(got.size == 20)
     // Partitioning independence: a differently-partitioned input
@@ -88,12 +50,8 @@ class BpeSpec extends AnyFunSuite {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
-    val words = docs.collect().iterator
-      .flatMap(_.getString(1).toLowerCase.split("\\s+"))
-      .filter(w => w.nonEmpty && w.length <= 512)
-      .foldLeft(Map.empty[String, Long]) { (m, w) =>
-        m.updated(w, m.getOrElse(w, 0L) + 1L) }
-    val want = refTrain(words, 200)
+    val words = References.bpeWords(docs.collect().iterator.map(_.getString(1)))
+    val want = References.bpeTrain(words, 200)
     val got = Bpe.trainBatched(docs, "text", 200)
     assert(got.size == want.size)
     // First divergence (if any) reported precisely — a wrong merge

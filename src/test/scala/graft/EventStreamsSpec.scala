@@ -10,7 +10,7 @@ import graft.streaming.EventStreams.{Event, UserSessions}
 /** Batch-equivalent checks of the streaming event operators: the
   * streaming results over a replayed finite input must equal the batch
   * query over the same rows. */
-class EventStreamsSpec extends AnyFunSuite {
+class EventStreamsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
 
   private def ts(min: Long): Timestamp =
@@ -358,9 +358,8 @@ class EventStreamsSpec extends AnyFunSuite {
   test("snapshot sink: streamed batches land exactly once, replay is a no-op") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ssnk")
-      .toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ssnk-ck").toString
+    val dir = tempDir("graft-ssnk") + "/t"
+    val ckpt = tempDir("graft-ssnk-ck")
     val input = MemoryStream[Long]
     val q = graft.streaming.SnapshotSink.start(
       input.toDF().toDF("id"), dir, ckpt, appId = "events-v1")
@@ -382,9 +381,8 @@ class EventStreamsSpec extends AnyFunSuite {
   test("snapshot merge sink: streaming CDC upsert is last-write-wins and exactly-once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-smrg")
-      .toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-smrg-ck").toString
+    val dir = tempDir("graft-smrg") + "/t"
+    val ckpt = tempDir("graft-smrg-ck")
     val input = MemoryStream[(Long, String)]
     val q = graft.streaming.SnapshotSink.startMerge(
       input.toDF().toDF("id", "v"), dir, ckpt, appId = "cdc-v1",
@@ -414,9 +412,8 @@ class EventStreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-idx")
-      .toString + "/idx"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ann-ck").toString
+    val dir = tempDir("graft-ann-idx") + "/idx"
+    val ckpt = tempDir("graft-ann-ck")
     val base = emb.filter(col("vec_id") % 2 === 0)
     graft.operators.Similarity.writeIvfIndex(base, dir, cellBits = 4)
     val deltaRows = emb.filter(col("vec_id") % 2 === 1)
@@ -453,9 +450,8 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val isDelta = pmod(col("doc_id"), lit(5)) === 4
-    val table = java.nio.file.Files.createTempDirectory("graft-cur-t")
-      .toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cur-ck").toString
+    val table = tempDir("graft-cur-t") + "/t"
+    val ckpt = tempDir("graft-cur-ck")
     val reg = new graft.operators.CacheRegistry
     try {
       graft.operators.Dedup.writeMinhashIndex(docs.filter(!isDelta),
@@ -507,9 +503,8 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val isDelta = pmod(col("doc_id"), lit(5)) === 4
-    val out = java.nio.file.Files.createTempDirectory("graft-doi-out")
-      .toString + "/stamps"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-doi-ck").toString
+    val out = tempDir("graft-doi-out") + "/stamps"
+    val ckpt = tempDir("graft-doi-ck")
     val reg = new graft.operators.CacheRegistry
     try {
       graft.operators.Dedup.writeMinhashIndex(docs.filter(!isDelta),
@@ -555,9 +550,8 @@ class EventStreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-eo")
-      .toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ann-eock").toString
+    val dir = tempDir("graft-ann-eo") + "/t"
+    val ckpt = tempDir("graft-ann-eock")
     val cents = graft.operators.Kmeans.train(emb, 8, 2)
     graft.operators.Similarity.initIvfSnapshot(spark, dir, cents)
     val rows = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
@@ -629,10 +623,8 @@ class EventStreamsSpec extends AnyFunSuite {
     val cents = graft.operators.Kmeans.train(emb, 8, 2)
     val cbs = graft.operators.Pq.trainResidual(emb, cents, m = 8, k = 8,
       iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-eo")
-      .toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-pq-eock")
-      .toString
+    val dir = tempDir("graft-pq-eo") + "/t"
+    val ckpt = tempDir("graft-pq-eock")
     graft.operators.Pq.initIvfPqSnapshot(spark, dir, cents, cbs,
       residual = true)
     val rows = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
@@ -656,8 +648,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // All-cells snapshot probe == the plain writeIvfPqIndex probe over
     // the same vectors and quantizers (the streamed codes are
     // bit-identical to a batch build).
-    val full = java.nio.file.Files.createTempDirectory("graft-pq-eofl")
-      .toString + "/idx"
+    val full = tempDir("graft-pq-eofl") + "/idx"
     graft.operators.Pq.writeIvfPqIndex(emb, full, cents, cbs,
       residual = true)
     def rset(df: org.apache.spark.sql.DataFrame) =

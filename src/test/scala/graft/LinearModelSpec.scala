@@ -81,29 +81,11 @@ class LinearModelSpec extends AnyFunSuite {
       iters = 12, lrNum = 1L, lrShift = 8)
     val w1 = train(1); val w5 = train(5)
     assert(w1.toSeq == w5.toSeq, "integer state ⇒ partition invariance")
-    // single-threaded reference of the same quantized algorithm
     val xs = rows.map(r => Array(r._1, r._2, 1L))
     val ys = rows.map(_._3)
-    var w = Array.fill(3)(0L)
     val n = rows.length
-    for (_ <- 0 until 12) {
-      val grads = Array.fill(3)(0L)
-      xs.zip(ys).foreach { case (x, y) =>
-        val dot = x.indices.map(j => w(j) * x(j)).sum
-        val z = dot.toDouble / LinearModel.WScale.toDouble
-        val p = 1.0 / (1.0 + math.exp(-z))
-        // Spark's round() is HALF_UP on the BigDecimal value — mirror
-        // it exactly (Math.round would differ on negative halves)
-        val q = java.math.BigDecimal.valueOf(
-            (p - y) * LinearModel.QScale.toDouble)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-        x.indices.foreach(j => grads(j) += q * x(j))
-      }
-      val denom = n.toDouble * LinearModel.QScale.toDouble
-      w = Array.tabulate(3)(j => w(j) - Math.round(
-        1.0 / 256.0 * (grads(j).toDouble / denom) *
-          LinearModel.WScale.toDouble))
-    }
+    val w = References.logisticFit(xs, ys, dim = 3, iters = 12, lrNum = 1L,
+      lrShift = 8)
     assert(w1.toSeq == w.toSeq, "distributed == single-threaded, bit for bit")
     // and the model actually learned: accuracy beats the majority class
     val scored = df.withColumn("p",

@@ -7,7 +7,7 @@ import graft.operators.{Kmeans, Pq, Similarity}
 /** Product quantization pinned against a single-threaded reference:
   * encoding, ADC distances, index round trip, planted-twin
   * minimality, and the recall the compression buys. */
-class PqSpec extends AnyFunSuite {
+class PqSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
 
   private def emb = spark.read
@@ -52,8 +52,7 @@ class PqSpec extends AnyFunSuite {
     }
     // ADC via expressions == driver reference for a few query/cand
     // pairs (through the materialized index + pqTopK path).
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq")
-      .toString + "/idx"
+    val dir = tempDir("graft-pq") + "/idx"
     Pq.writePqIndex(emb, dir, cbs)
     // Sidecar round trip is exact.
     val back = Pq.readCodebookSidecar(spark, dir).get
@@ -81,8 +80,7 @@ class PqSpec extends AnyFunSuite {
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
     val corpus = base.unionByName(planted)
     val cbs = Pq.train(corpus, m = 8, k = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-t")
-      .toString + "/idx"
+    val dir = tempDir("graft-pq-t") + "/idx"
     Pq.writePqIndex(corpus, dir, cbs)
     val top1 = Pq.pqTopK(spark, dir, corpus, col("vec_id") >= 1000000L, k = 1)
       .select("query_id", "cand_id", "adc_dist")
@@ -110,8 +108,7 @@ class PqSpec extends AnyFunSuite {
     val corpus = base.unionByName(planted)
     val cents = Kmeans.train(corpus, 8, 2)
     val cbs = Pq.train(corpus, m = 8, k = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq")
-      .toString + "/idx"
+    val dir = tempDir("graft-ivfpq") + "/idx"
     Pq.writeIvfPqIndex(corpus, dir, cents, cbs)
     // Physical layout + DPP on the probe.
     import scala.jdk.CollectionConverters._
@@ -124,8 +121,7 @@ class PqSpec extends AnyFunSuite {
     assert(probe.queryExecution.executedPlan.toString
       .toLowerCase.contains("dynamicpruning"))
     // All-cells probe == plain PQ over the whole codes table.
-    val pqDir = java.nio.file.Files.createTempDirectory("graft-ivfpq-f")
-      .toString + "/idx"
+    val pqDir = tempDir("graft-ivfpq-f") + "/idx"
     Pq.writePqIndex(corpus, pqDir, cbs)
     def rset(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "adc_dist", "rk").collect()
@@ -154,8 +150,7 @@ class PqSpec extends AnyFunSuite {
 
   test("PQ compresses the scan target and still recalls against brute force") {
     val cbs = Pq.train(emb, m = 16, k = 16, iters = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-r")
-      .toString + "/idx"
+    val dir = tempDir("graft-pq-r") + "/idx"
     Pq.writePqIndex(emb, dir, cbs)
     // Structural compression: the codes table is an order of
     // magnitude smaller than the raw embedding column it replaces.
@@ -165,8 +160,7 @@ class PqSpec extends AnyFunSuite {
       fs.listStatus(p).filter(_.isFile)
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     }
-    val rawDir = java.nio.file.Files.createTempDirectory("graft-pq-raw")
-      .toString + "/raw"
+    val rawDir = tempDir("graft-pq-raw") + "/raw"
     emb.select("vec_id", "embedding").write.parquet(rawDir)
     assert(bytesUnder(dir) * 4 < bytesUnder(rawDir),
       s"codes ${bytesUnder(dir)}B vs raw ${bytesUnder(rawDir)}B")
@@ -243,8 +237,7 @@ class PqSpec extends AnyFunSuite {
     val cents = Kmeans.train(corpus, 8, 2)
     val cbs = Pq.trainResidual(corpus, cents, m = 8, k = 8, iters = 2)
     assert(cbs.length == 8 && cbs.forall(_.length == 8))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-res")
-      .toString + "/idx"
+    val dir = tempDir("graft-ivfpq-res") + "/idx"
     Pq.writeIvfPqIndex(corpus, dir, cents, cbs, residual = true)
     // The sidecar records the encoding; a raw index stays raw.
     assert(Pq.readCellResidualFlag(spark, dir))
@@ -294,12 +287,10 @@ class PqSpec extends AnyFunSuite {
       val cbs =
         if (residual) Pq.trainResidual(base, cents, m = 8, k = 8, iters = 2)
         else Pq.train(base, m = 8, k = 8, iters = 2)
-      val inc = java.nio.file.Files.createTempDirectory("graft-ivfpq-app")
-        .toString + "/idx"
+      val inc = tempDir("graft-ivfpq-app") + "/idx"
       Pq.writeIvfPqIndex(half, inc, cents, cbs, residual = residual)
       Pq.appendIvfPq(delta, inc)
-      val full = java.nio.file.Files.createTempDirectory("graft-ivfpq-fl")
-        .toString + "/idx"
+      val full = tempDir("graft-ivfpq-fl") + "/idx"
       Pq.writeIvfPqIndex(base, full, cents, cbs, residual = residual)
       def rset(df: org.apache.spark.sql.DataFrame) =
         df.select("query_id", "cand_id", "adc_dist", "rk").collect()

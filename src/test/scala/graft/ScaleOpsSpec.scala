@@ -9,7 +9,7 @@ import graft.sources.Warehouse
 
 /** Scale-infrastructure operators: salted skew join correctness and
   * warehouse partition pruning. */
-class ScaleOpsSpec extends AnyFunSuite {
+class ScaleOpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -57,7 +57,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // without any Exchange (and without re-sorting, buckets are
     // pre-sorted). This is the layout q-style pipelines rely on when
     // neither side broadcasts at the 100 TB design point.
-    val dir = Files.createTempDirectory("graft-buckets").toString
+    val dir = tempDir("graft-buckets")
     val orders = spark.range(0, 1000)
       .select(col("id").as("o_key"), (col("id") % 7).as("o_val"))
     val items = spark.range(0, 3000)
@@ -90,7 +90,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // bucketed table keyed by bkey=hash(band, value), so the candidate
     // self-join needs NO Exchange — the only shuffle in the whole plan
     // is the final pair dedup, which carries true >=-threshold pairs.
-    val dir = Files.createTempDirectory("graft-lsh").toString
+    val dir = tempDir("graft-lsh")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val noise = (x: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
@@ -190,7 +190,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("materialized IVF index: dynamic partition pruning on the probe, same results") {
-    val dir = Files.createTempDirectory("graft-ivf").toString + "/idx"
+    val dir = tempDir("graft-ivf") + "/idx"
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     graft.operators.Similarity.writeIvfIndex(emb, dir, cellBits = 4)
     val listing = Files.list(java.nio.file.Paths.get(dir))
@@ -226,7 +226,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // vec_id, same bucket count). Then the equi-join on
     // doc_id = vec_id plans with no Exchange on either side, and the
     // per-label aggregate is all that shuffles.
-    val dir = Files.createTempDirectory("graft-mm").toString
+    val dir = tempDir("graft-mm")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     Warehouse.writeBucketed(docs, "mm_docs", "doc_id", 8, Some(s"$dir/docs"))
@@ -259,7 +259,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("appendIvf touches only the delta's cells; probe sees old+new under DPP") {
-    val dir = Files.createTempDirectory("graft-ivf-app").toString + "/idx"
+    val dir = tempDir("graft-ivf-app") + "/idx"
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
     graft.operators.Similarity.writeIvfIndex(base, dir, cellBits = 4)
@@ -310,7 +310,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       "post-append probe must equal in-memory IVF over base+delta")
     // A directory without the quantizer sidecar must refuse the append
     // (wrong-cellBits appends would silently lose recall).
-    val bare = Files.createTempDirectory("graft-ivf-bare").toString + "/idx"
+    val bare = tempDir("graft-ivf-bare") + "/idx"
     base.limit(4).select(col("vec_id"), col("embedding").as("v"))
       .write.parquet(bare)
     intercept[IllegalStateException] {
@@ -322,7 +322,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // Simulate streaming accretion: many tiny appends → compact →
     // file counts drop per cell, probe results are byte-identical,
     // the quantizer sidecar and DPP survive.
-    val dir = Files.createTempDirectory("graft-ivfc").toString + "/idx"
+    val dir = tempDir("graft-ivfc") + "/idx"
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     graft.operators.Similarity.writeIvfIndex(
       emb.filter(col("vec_id") % 4 === 0), dir, cellBits = 3)
@@ -352,7 +352,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("compactSmallFiles: fewer files, identical rows, idempotent") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = tempDir("graft-compact") + "/t"
     spark.range(0, 10000).select(col("id"), (col("id") * 3).as("v"))
       .repartition(40).write.parquet(dir)
     val before = spark.read.parquet(dir)
@@ -368,7 +368,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("compactSmallFiles aborts on a non-empty trash dir (crashed prior swap)") {
-    val base = Files.createTempDirectory("graft-compact-crash")
+    val base = java.nio.file.Paths.get(tempDir("graft-compact-crash"))
     val dir = base.toString + "/t"
     spark.range(0, 1000).select(col("id"), (col("id") * 3).as("v"))
       .repartition(20).write.parquet(dir)
@@ -387,7 +387,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // The abort must fire even when the live dir LOOKS already compact
     // (crash after the rewrite→live move): the no-op early return may
     // not bypass it.
-    val base2 = Files.createTempDirectory("graft-compact-crash2")
+    val base2 = java.nio.file.Paths.get(tempDir("graft-compact-crash2"))
     val dir2 = base2.toString + "/t"
     spark.range(0, 10).coalesce(1).write.parquet(dir2)
     val trash2 = base2.resolve(".t_compact_old")
@@ -405,7 +405,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("compactSmallFiles preserves evolved schemas (union of all footers)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact-ev").toString + "/t"
+    val dir = tempDir("graft-compact-ev") + "/t"
     // Two appends with DIFFERENT schemas (the O16 evolution shape),
     // several small files each: compaction must keep both column sets.
     (1L to 12L).map(i => (i, i.toDouble)).toDF("id", "a").repartition(6)
@@ -425,7 +425,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("warehouse day-partitioned layout prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft-wh").toString
+    val dir = tempDir("graft-wh")
     val events = spark.createDataFrame(Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
       (2L, java.sql.Timestamp.valueOf("2024-01-02 11:00:00"), 2.0),
@@ -479,7 +479,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("readWhereEqAny: a wide IN-list plans ONE broadcast semi-join, same rows") {
     import graft.sources.SnapshotTable
-    val dir = Files.createTempDirectory("graft-eqany").toString + "/t"
+    val dir = tempDir("graft-eqany") + "/t"
     SnapshotTable.append((0L until 2000L).map(i => (i, s"t$i"))
       .toDF("id", "s").repartitionByRange(4, col("id"))
       .sortWithinPartitions("id"), dir,
@@ -521,7 +521,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // in content, and the pruned probe's candidate set must be ≪ the
     // file count.
     def mk(tag: String): String = {
-      val d = Files.createTempDirectory(s"graft-ac-$tag").toString + "/t"
+      val d = tempDir(s"graft-ac-$tag") + "/t"
       SnapshotTable.append((0L until 2000L).map(i => (i, s"v$i", i % 7))
         .toDF("id", "v", "g").repartitionByRange(8, col("id"))
         .sortWithinPartitions("id"), d,
@@ -561,7 +561,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("schema evolution survives the partitioned layout (mergeSchema)") {
-    val dir = Files.createTempDirectory("graft-wh2").toString
+    val dir = tempDir("graft-wh2")
     Warehouse.appendPartitioned(
       Seq((1L, "2024-01-01", 1.0)).toDF("id", "day", "a"), dir, Seq("day"))
     Warehouse.appendPartitioned(

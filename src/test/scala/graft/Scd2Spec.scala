@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Scd2
@@ -9,12 +8,12 @@ import graft.sources.SnapshotTable
 /** Type-2 dimension maintenance: interval lifecycle through
   * insert/update/delete/re-birth, exactly-once replay, point-in-time
   * reconstruction, and the only-affected-files rewrite discipline. */
-class Scd2Spec extends AnyFunSuite {
+class Scd2Spec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-scd2-$tag").toString + "/t"
+    tempDir(s"graft-scd2-$tag") + "/t"
 
   private def intervals(dim: String): Set[(Long, String, Long, Option[Long])] =
     SnapshotTable.read(spark, dim).collect().map(r =>
@@ -85,7 +84,7 @@ class Scd2Spec extends AnyFunSuite {
     val src = tmp("src4"); val dim = tmp("dim4")
     SnapshotTable.append(Seq((1L, "a")).toDF("id", "v"), src)
     Scd2.maintain(spark, src, dim, Seq("id"), "scd4") // bootstrap
-    val ckpt = Files.createTempDirectory("graft-scd2-ck").toString
+    val ckpt = tempDir("graft-scd2-ck")
     val q = Scd2.startContinuous(spark, src, dim, Seq("id"), "scd4", ckpt)
     try {
       SnapshotTable.merge(spark, src, Seq((1L, "a2"), (2L, "b"))
@@ -106,7 +105,7 @@ class Scd2Spec extends AnyFunSuite {
     SnapshotTable.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), src) // v0
     Scd2.maintain(spark, src, dim, Seq("id"), "scd7")
     Scd2.maintain(spark, src, twin, Seq("id"), "scd7t")
-    val ckpt = Files.createTempDirectory("graft-scd2-ck7").toString
+    val ckpt = tempDir("graft-scd2-ck7")
     val q = Scd2.startContinuous(spark, src, dim, Seq("id"), "scd7", ckpt)
     try {
       SnapshotTable.merge(spark, src, Seq((1L, "a2")).toDF("id", "v"),

@@ -1202,12 +1202,11 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
     val before = spark.conf.get(k)
     assert(before == "true",
       s"shared test session must start with AQE on (leaked conf? $k=$before)")
-    // The thread-local overlay reaches planning: a shuffling frame
-    // planned INSIDE a probe gets no AdaptiveSparkPlan wrapper...
-    val inProbe = SnapshotTable.probe(spark, "spec-aqe-probe") {
-      spark.range(0, 100).groupBy(pmod(col("id"), lit(7))).count()
-        .queryExecution.executedPlan.toString
-    }
+    // A shuffling frame a probe runs plans with no AdaptiveSparkPlan
+    // wrapper...
+    val inProbe = SnapshotTable.probe(
+        spark.range(0, 100).groupBy(pmod(col("id"), lit(7))).count(),
+        "spec-aqe-probe")(_.queryExecution.executedPlan.toString)
     assert(!inProbe.contains("AdaptiveSparkPlan"),
       s"probe body must plan with AQE off:\n$inProbe")
     // ...and the SAME thread plans adaptively again right after.
@@ -1215,9 +1214,9 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
       .queryExecution.executedPlan.toString
     assert(outside.contains("AdaptiveSparkPlan"),
       s"AQE must be back outside the probe:\n$outside")
-    // Concurrent probes can never interleave a set/restore pair onto
-    // the shared session (the historical leak that turned AQE off for
-    // every later query in the JVM): barrage them and re-check.
+    // Concurrent probes never write the shared session's conf (a
+    // leaked override once turned AQE off for every later query in
+    // the JVM): barrage them and re-check.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -1225,7 +1224,8 @@ class SnapshotTableSpec extends AnyFunSuite with TempDirs {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val futs = (1 to 64).map { i =>
       Future {
-        SnapshotTable.probe(spark, s"spec-aqe-probe-$i") { Thread.sleep(1) }
+        SnapshotTable.probe(spark.range(1).toDF(), s"spec-aqe-probe-$i") { _ =>
+          Thread.sleep(1) }
       }
     }
     try Await.result(Future.sequence(futs), Duration.Inf)

@@ -14,6 +14,8 @@ object SparkTestBase {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet may hold ns timestamps (see Queries.t)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
     val s = GraftTestFs.Conf.foldLeft(b) { case (b, (k, v)) =>

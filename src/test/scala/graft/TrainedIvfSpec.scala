@@ -12,7 +12,7 @@ import graft.operators.{Kmeans, Similarity}
   * sidecar + multi-probe read path, append dispatch, and the recall
   * claim that justifies training at all (trained cells ≥ sign-pattern
   * cells at an equal probe budget). */
-class TrainedIvfSpec extends AnyFunSuite {
+class TrainedIvfSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestBase.spark
 
   private def emb = spark.read
@@ -42,7 +42,7 @@ class TrainedIvfSpec extends AnyFunSuite {
   }
 
   test("trained index: DPP probe; probing every cell equals brute force") {
-    val dir = Files.createTempDirectory("graft-tivf").toString + "/idx"
+    val dir = tempDir("graft-tivf") + "/idx"
     val cents = Kmeans.train(emb, 8, 3)
     Similarity.writeIvfIndexTrained(emb, dir, cents)
     val listing = Files.list(java.nio.file.Paths.get(dir))
@@ -70,7 +70,7 @@ class TrainedIvfSpec extends AnyFunSuite {
   }
 
   test("appendIvf dispatches on the trained sidecar; post-append probe is exact at full probes") {
-    val dir = Files.createTempDirectory("graft-tivf-app").toString + "/idx"
+    val dir = tempDir("graft-tivf-app") + "/idx"
     val base = emb.filter(col("vec_id") % 2 === 0)
     val delta = emb.filter(col("vec_id") % 2 === 1)
     val cents = Kmeans.train(base, 8, 2)
@@ -109,7 +109,7 @@ class TrainedIvfSpec extends AnyFunSuite {
     }
     val signRecall = recall(
       Similarity.ivfTopK(emb, pred, k = 5, cellBits = 3))
-    val dir = Files.createTempDirectory("graft-tivf-rec").toString + "/idx"
+    val dir = tempDir("graft-tivf-rec") + "/idx"
     val cents = Kmeans.train(emb, 8, 3)
     Similarity.writeIvfIndexTrained(emb, dir, cents)
     val p1 = recall(Similarity.ivfTopKIndexedTrained(
@@ -124,7 +124,7 @@ class TrainedIvfSpec extends AnyFunSuite {
   }
 
   test("sign-quantizer index refuses the trained probe; trained index still serves ivfTopKIndexed") {
-    val dir = Files.createTempDirectory("graft-tivf-x").toString + "/idx"
+    val dir = tempDir("graft-tivf-x") + "/idx"
     Similarity.writeIvfIndex(emb, dir, cellBits = 3)
     intercept[IllegalStateException] {
       Similarity.ivfTopKIndexedTrained(spark, dir, col("vec_id") < 8)
